@@ -138,7 +138,7 @@ object BenchScale {
   }
 
   /** Steady-state stream-stream interval-join drain (the Bench
-    * `stream_join` single's twin, parameterized by tier dir): one
+    * `stream_join` entry's twin, parameterized by tier dir): one
     * seeded AvailableNow drain untimed, then the timed second drain
     * over the tier's full click/purchase set. Batch 2 shifts 1000 days
     * — past the 10× tier's 400-day replica span AND the persisted
@@ -168,8 +168,8 @@ object BenchScale {
     (t, appended)
   }
 
-  /** Streaming gold-stage drain (the Bench `streaming_gold` single's
-    * twin): tick size scales with `rep` (16 = the Bench single's tick;
+  /** Streaming gold-stage drain (the Bench `streaming_gold` entry's
+    * twin): tick size scales with `rep` (16 = the Bench entry's tick;
     * 160 = the 10× tick), bronze/silver pre-drained untimed so the
     * timed number isolates the gold stage — dim upserts + fact
     * anti-join append + maintained rollup. Returns (sec, facts
@@ -303,7 +303,7 @@ object BenchScale {
     // Streaming ticks at both tiers (VERDICT r10 #4): stream_join over
     // the replicated events table (10× batch through the watermarked
     // interval join), streaming_gold at a 10× tick size (160 vs the
-    // Bench single's 16 day-replicas). Drain cost should track batch
+    // Bench entry's 16 day-replicas). Drain cost should track batch
     // volume — state is watermark-bounded either way.
     val streamRows = (if (!sectionOn("stream")) Seq.empty else Seq(
       {
@@ -365,7 +365,7 @@ object BenchScale {
     // are rare — so s/merge at the production tier should be ≤ the gate
     // tier's, not 4× it. Corpus prep (the chunk-frequency table) is
     // untimed: it is a fixed one-pass cost shared by any tokenizer
-    // trainer, and the gate's bpe_per_merge singles already include it.
+    // trainer, and the gate's bpe_per_merge entries already include it.
     val bpeTiers = (if (!sectionOn("bpe")) Seq.empty
       else Seq(
         ("bpe_tier_gate", graft.queries.TextOps.BpeRounds),
@@ -384,86 +384,14 @@ object BenchScale {
         (name, rounds, merges.size, sec, sec / merges.size)
     }
 
-    // ------------------------------------------------------------------
-    // Per-entry composition across the round's full runs (the Bench
-    // precedent, VERDICT r10 #2): each tier time keeps its MINIMUM over
-    // the runs merged so far — contention and accumulated-JVM-state
-    // debris only ever slow a run, so the min is the honest cost — and
-    // the ratio is recomputed from the per-tier minima. Tier counts and
-    // contracts are deterministic, so they never need merging. Disabled
-    // via SPARK_GRAFT_NO_MERGE=1 after a code change that legitimately
-    // slows an operator (stale faster numbers would lie).
-    // ------------------------------------------------------------------
-    var mergedRows = rows ++ goldRows ++ streamRows
-    var mergedAnn = annTiers
-    var mergedBpe = bpeTiers
-    var mergeCount = 1
-    // Same code-version guard as Bench (ADVICE r11): per-entry minima
-    // may only compose across runs of IDENTICAL sources.
-    val srcFp = SrcFingerprint.current()
-    val artifactPath = java.nio.file.Paths.get("BENCH_scale.json")
-    if (onlySections.isEmpty && !sys.env.contains("SPARK_GRAFT_NO_MERGE") &&
-        java.nio.file.Files.exists(artifactPath)) try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val old = om.readTree(java.nio.file.Files.readAllBytes(artifactPath))
-      val oldFp = old.path("src_fingerprint").asText("")
-      if (oldFp != srcFp) System.err.println(
-        s"[scale] NOT merging: src fingerprint changed/absent - this run replaces the artifact")
-      else if (old.path("base_sf").asText() == sfDir) {
-        mergeCount = old.path("merge_count").asInt(1) + 1
-        val oq = old.path("queries")
-        mergedRows = mergedRows.map { case (q, a, b, r, na, nb) =>
-          if (oq.has(q)) {
-            val a2 = math.min(a, oq.get(q).path("base_sec").asDouble(a))
-            val b2 = math.min(b, oq.get(q).path("x10_sec").asDouble(b))
-            (q, a2, b2, b2 / a2, na, nb)
-          } else (q, a, b, r, na, nb)
-        }
-        val oa = old.path("ann_tiers")
-        mergedAnn = mergedAnn.map {
-          case (name, n, cells, b, q, split, rk, scf, agr) =>
-          if (oa.has(name) && oa.get(name).path("cells").asInt() == cells) {
-            val ob2 = oa.get(name).path("build_sec").asDouble(b)
-            // the split rides with whichever run supplied the winning
-            // build time (an old min without a recorded split keeps ours)
-            val split2 =
-              if (ob2 < b && oa.get(name).has("build_split")) {
-                import scala.jdk.CollectionConverters._
-                val bs = oa.get(name).path("build_split")
-                bs.fieldNames().asScala.map(f => f -> bs.get(f).asDouble()).toSeq
-              } else split
-            // recall/scanned/agreement are deterministic under a fixed
-            // fingerprint — this run's measurements stand as-is
-            (name, n, cells, math.min(b, ob2),
-              math.min(q, oa.get(name).path("query_sec").asDouble(q)), split2,
-              rk, scf, agr)
-          } else (name, n, cells, b, q, split, rk, scf, agr)
-        }
-        val ob = old.path("bpe_tiers")
-        mergedBpe = mergedBpe.map { case (name, rounds, m, sec, pm) =>
-          if (ob.has(name) && ob.get(name).path("rounds").asInt() == rounds &&
-              ob.get(name).path("merges").asInt() == m) {
-            val s2 = math.min(sec, ob.get(name).path("sec").asDouble(sec))
-            (name, rounds, m, s2, s2 / m)
-          } else (name, rounds, m, sec, pm)
-        }
-        System.err.println(
-          s"[scale] merged per-entry with existing BENCH_scale.json (run $mergeCount)")
-      } else System.err.println(
-        s"[scale] NOT merging: base_sf mismatch (${old.path("base_sf").asText()} vs $sfDir)")
-    } catch {
-      case e: Exception =>
-        System.err.println(s"[scale] merge skipped: ${e.getMessage}")
-    }
-
+    val allRows = rows ++ goldRows ++ streamRows
     val json = "{" +
       s""""rep":$Rep,"base_sf":"$sfDir","build_sec":$buildSec,"cpus":$cpus,""" +
-      s""""merge_count":$mergeCount,"src_fingerprint":"$srcFp",""" +
-      "\"queries\":{" + mergedRows.map { case (q, a, b, r, na, nb) =>
+      "\"queries\":{" + allRows.map { case (q, a, b, r, na, nb) =>
         s""""$q":{"base_sec":$a,"x10_sec":$b,"ratio":$r,""" +
           s""""out_base":$na,"out_x10":$nb}"""
       }.mkString(",") + "}," +
-      "\"ann_tiers\":{" + mergedAnn.map {
+      "\"ann_tiers\":{" + annTiers.map {
         case (name, n, cells, b, q, split, rk, scf, agr) =>
         s""""$name":{"n":$n,"cells":$cells,"nprobe":8,""" +
           s""""build_sec":$b,"query_sec":$q,"build_split":{""" +
@@ -481,7 +409,7 @@ object BenchScale {
       // 3× slack absorbs IO/JIT texture) — n² growth (ratio ≈ 100 for
       // 10× rows) always trips it. Sub-5 s stages are noise-dominated
       // and only reported.
-      "\"ann_stage_ratios\":{" + mergedAnn.sliding(2).collect {
+      "\"ann_stage_ratios\":{" + annTiers.sliding(2).collect {
         case Seq((smName, smCount, smCells, _, _, smSplit, _, _, _),
                  (bgName, bgCount, bgCells, _, _, bgSplit, _, _, _)) =>
           val smM = smSplit.toMap
@@ -499,7 +427,7 @@ object BenchScale {
             stages.map { case (st, r) => s""""$st":${f"$r%.2f"}""" }
               .mkString("\"stages\":{", ",", "}") + "}"
       }.mkString(",") + "}," +
-      "\"bpe_tiers\":{" + mergedBpe.map { case (name, rounds, m, sec, pm) =>
+      "\"bpe_tiers\":{" + bpeTiers.map { case (name, rounds, m, sec, pm) =>
         s""""$name":{"rounds":$rounds,"merges":$m,"sec":$sec,""" +
           s""""sec_per_merge":$pm}"""
       }.mkString(",") + "}}"

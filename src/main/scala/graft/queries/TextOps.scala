@@ -86,7 +86,7 @@ object TextOps {
     */
   private[queries] def fanOutWidth(df: DataFrame, cores: Int): Int = {
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    (bytes / 65536).min(BigInt(cores)).max(BigInt(2)).toInt
+    (bytes / 65536).max(BigInt(2)).min(BigInt(cores)).toInt
   }
 
   private[queries] def fanOutIfNarrow(df: DataFrame, cores: Int): DataFrame = {
@@ -134,7 +134,6 @@ object TextOps {
     */
   private val NumPerms = 16
   private val BandRows = 2
-  private val NumBands = NumPerms / BandRows
 
   /** Buckets larger than this are dropped from candidate generation: a
     * band-hash shared by thousands of docs generates quadratic pairs while
@@ -472,11 +471,8 @@ object TextOps {
     * duplicate-heavy corpora that collapses the quadratic verify stage by
     * the square of the dup factor. This is the standard pipeline
     * composition: exact dedup BEFORE near-dup detection.
-    */
-  private def tokenSetGroups(t: DataFrame, extraKeys: String*): DataFrame =
-    tokenSetGroupsCounted(t, extraKeys: _*)._1
-
-  /** As [[tokenSetGroups]] plus the group COUNT, observed inside the
+    *
+    * Returns the groups plus their COUNT, observed inside the
     * checkpoint job itself (r17): the broadcast gates downstream
     * (minhashRepPairs / expandGroupPairs) each re-counted the pinned
     * frame — one extra serial driver job apiece in pipelines whose
@@ -855,7 +851,7 @@ object TextOps {
           Seq("digest"), "left_semi")
         .select($"doc_id")
       // Exact-dedup-by-token-set FIRST, on both sides — the standard
-      // pipeline composition (see tokenSetGroups): banding and verify
+      // pipeline composition (see tokenSetGroupsCounted): banding and verify
       // run over set representatives (set cardinality), so duplicate
       // sets can't inflate any band bucket past the cap (the first cut
       // banded raw docs and sf0.1's dup-heavy buckets silently
@@ -867,11 +863,11 @@ object TextOps {
       // them concurrently (guide §2.6) — this query is a serial chain of
       // ~10 small jobs whose scheduler latency dominates at gate scale,
       // and every pairwise overlap below removes one link of it
-      val (gIn, gEx) = graft.runner.Par.par2(
-        tIn.groupBy($"toks")
+      val Seq(gIn, gEx) = graft.runner.Par.all(
+        () => tIn.groupBy($"toks")
           .agg(min($"doc_id").as("in_id"), collect_list($"doc_id").as("members"))
           .localCheckpoint(true), // read by banding + verify + member expansion
-        tEx.groupBy($"toks").agg(min($"doc_id").as("ex_id"))
+        () => tEx.groupBy($"toks").agg(min($"doc_id").as("ex_id"))
           .localCheckpoint(true))
       def banding(perms: Int) = {
         // (reps × bands)-cardinality band streams, materialized once: the
@@ -880,12 +876,12 @@ object TextOps {
         // re-runs the full signature computation (at 128 perms that
         // tripled the escalated path's cost).
         // independent band builds (one per side) — concurrent, §2.6
-        val (bIn, bEx) = graft.runner.Par.par2(
-          bandBuckets(minhashSignaturesFromHashedToks(
+        val Seq(bIn, bEx) = graft.runner.Par.all(
+          () => bandBuckets(minhashSignaturesFromHashedToks(
               gIn.select($"in_id".as("doc_id"), $"toks"), perms), perms)
             .select($"doc_id".as("in_id"), $"band", $"bh")
             .localCheckpoint(true),
-          bandBuckets(minhashSignaturesFromHashedToks(
+          () => bandBuckets(minhashSignaturesFromHashedToks(
               gEx.select($"ex_id".as("doc_id"), $"toks"), perms), perms)
             .select($"doc_id".as("ex_id"), $"band", $"bh")
             .localCheckpoint(true))
@@ -947,13 +943,13 @@ object TextOps {
           val oc = broadcast(overCap)
           // per-side cohort extraction + count: two independent
           // checkpoint→count chains, submitted concurrently (§2.6)
-          val ((cohIn, nCI), (cohEx, nCE)) = graft.runner.Par.par2(
-            {
+          val Seq((cohIn, nCI), (cohEx, nCE)) = graft.runner.Par.all(
+            () => {
               val c = bIn.join(oc, Seq("band", "bh"), "left_semi")
                 .select($"in_id").distinct().localCheckpoint(true)
               (c, c.count())
             },
-            {
+            () => {
               val c = bEx.join(oc, Seq("band", "bh"), "left_semi")
                 .select($"ex_id").distinct().localCheckpoint(true)
               (c, c.count())
@@ -980,7 +976,7 @@ object TextOps {
       // verify lookups: broadcast only under the count gate (gIn/gEx are
       // checkpointed, so the counts are cheap scans); a real corpus where
       // set-cardinality ≈ corpus cardinality shuffles on the rep ids
-      val (nIn, nEx) = graft.runner.Par.par2(gIn.count(), gEx.count())
+      val Seq(nIn, nEx) = graft.runner.Par.all(() => gIn.count(), () => gEx.count())
       val dupSets = cands
         .join(gateBroadcast(gIn.select($"in_id", $"toks".as("ti")),
           nIn, BroadcastSetLimit), "in_id")

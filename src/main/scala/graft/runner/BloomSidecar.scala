@@ -61,8 +61,6 @@ class BloomSidecar(spark: SparkSession, sinkPath: String,
 
   private def bloomDir(partDir: String) = new Path(s"$sinkPath/_bloom/$partDir")
 
-  private def dataDir(partDir: String) = new Path(s"$sinkPath/$partDir")
-
   private def bloomFiles(partDir: String): Seq[Path] = {
     val d = bloomDir(partDir)
     val f = fs(d)

@@ -1,7 +1,6 @@
 package graft.runner
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.pipeline._
@@ -74,20 +73,20 @@ object Bulk {
       // concurrently so one build's task tail back-fills cores another
       // leaves idle (guide §2.6) — serially this stage was pure
       // round-trip latency stacked end to end.
-      Par.par4(
+      Par.all(
         // dim_user on the scalable SK path: same (user_sk, user_id)
         // mapping as the window variant, but per-partition-offset
         // assignment — a bulk user dim is the one dim that can reach
         // 10⁸ rows at 100 TB
-        Warehouse.writeDim(Dims.dimUserScalable(silverAll),
+        () => Warehouse.writeDim(Dims.dimUserScalable(silverAll),
           s"$warehouse/dim_user$sfx"),
         // bulk rebuild: the W3 fast path (monotonically_increasing_id) —
         // no global window; downstream joins only by natural key
-        Warehouse.writeDim(
+        () => Warehouse.writeDim(
           Dims.dimFromColumnsFast(silverAll, Seq("event_name"), "event_sk"),
           s"$warehouse/dim_event$sfx"),
-        Warehouse.writeDim(Dims.dimPage(silverAll), s"$warehouse/dim_page$sfx"),
-        {
+        () => Warehouse.writeDim(Dims.dimPage(silverAll), s"$warehouse/dim_page$sfx"),
+        () => {
           val masterPath = recipeMasterPath.getOrElse {
             val p = s"$warehouse/recipe_master$sfx.parquet"
             Dims.writeRecipeMasterFixture(
@@ -130,9 +129,12 @@ object Bulk {
 
     // three independent metadata-cheap count read-backs — concurrent for
     // the same serial-latency reason as the dims stage
-    stage("counts") { Par.par3(
-      Warehouse.read(spark, s"$warehouse/bronze_events$sfx").count(),
-      silverAll.count(),
-      Warehouse.read(spark, s"$warehouse/fact_user_events$sfx").count())}
+    stage("counts") {
+      val Seq(bronzeN, silverN, factN) = Par.all(
+        () => Warehouse.read(spark, s"$warehouse/bronze_events$sfx").count(),
+        () => silverAll.count(),
+        () => Warehouse.read(spark, s"$warehouse/fact_user_events$sfx").count())
+      (bronzeN, silverN, factN)
+    }
   }
 }

@@ -333,7 +333,11 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
 
     // bronzeBatch reads the partition just written — no staging re-read;
     // the two counts are independent read-backs, submitted concurrently
-    stage("counts") { Par.par3(bronzeBatch.count(), silverBatch.count(), factTotal) }
+    stage("counts") {
+      val Seq(bronzeN, silverN) =
+        Par.all(() => bronzeBatch.count(), () => silverBatch.count())
+      (bronzeN, silverN, factTotal)
+    }
   }
 
   /** The gold stage for one batch of silver rows: incremental dim
@@ -385,9 +389,9 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     // end-to-end while the executors idle. Submit them concurrently
     // (guide §2.6 "overlap independent jobs"); the fact build below
     // still waits for all four (facts are written after dims).
-    val (dimUser, dimEvent, dimPage, dimRecipe) = stage("gold_dims") {
-      Par.par4(
-        {
+    val Seq(dimUser, dimEvent, dimPage, dimRecipe) = stage("gold_dims") {
+      Par.all(
+        () => {
           val existingUser = readOrEmpty(dimUserPath, dimUserSchema)
           appendOnly(dimUserPath,
             existingUser.limit(0)
@@ -395,14 +399,14 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
                 allowMissingColumns = true)
               .localCheckpoint(true))
         },
-        upsertDim(dimEventPath, dimEventSchema,
+        () => upsertDim(dimEventPath, dimEventSchema,
           Seq("event_name"), "event_sk",
           silverTodo.where(col("event_name").isNotNull).select("event_name")),
-        upsertDim(dimPagePath, dimPageSchema,
+        () => upsertDim(dimPagePath, dimPageSchema,
           Seq("page_name", "page_url"), "page_sk",
           silverTodo.where(col("page_name").isNotNull || col("page_url").isNotNull)
             .select("page_name", "page_url")),
-        upsertDim(dimRecipePath, dimRecipeSchema,
+        () => upsertDim(dimRecipePath, dimRecipeSchema,
           Seq("recipe_id"), "recipe_sk",
           silverTodo.where(col("prop_recipe_id").isNotNull)
             .select(col("prop_recipe_id").cast("string").as("recipe_id"))))
@@ -580,10 +584,10 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     // sidecars — overlap their rewrite chains (guide §2.6, the same Par
     // pattern as the tick's dim upserts) instead of stacking their
     // read+rewrite+bloom-seed+swap latency end to end
-    Par.par2(
-      compactSink(silverPath, Seq("year", "month", "day"), silverPartCol,
+    Par.all(
+      () => compactSink(silverPath, Seq("year", "month", "day"), silverPartCol,
         maxRecordsPerFile),
-      compactSink(factPath, Seq("created_date"),
+      () => compactSink(factPath, Seq("created_date"),
         concat(lit("created_date="), col("created_date")), maxRecordsPerFile))
     ()
   }

@@ -28,28 +28,23 @@ object Par {
       t
     }))
 
-  /** Evaluate the four thunks concurrently, return their results in
-    * order. Exceptions propagate to the caller (first failure wins).
+  /** Evaluate the thunks concurrently and return their results in
+    * argument order. Every thunk runs to completion before this returns
+    * or throws: on failure the first failing thunk's exception (in
+    * argument order) is rethrown, with any later failures attached as
+    * suppressed. Rethrowing early would leave a sibling still writing on
+    * a daemon thread while the caller unwinds — e.g. one sink's
+    * compaction mid-swap after the other's failed.
     */
-  def par4[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
+  def all[A](thunks: (() => A)*): Seq[A] = {
     implicit val e: ExecutionContext = ec
-    val (fa, fb, fc, fd) = (Future(a), Future(b), Future(c), Future(d))
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-      Await.result(fc, Duration.Inf), Await.result(fd, Duration.Inf))
-  }
-
-  /** Three-way [[par4]]. */
-  def par3[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
-    implicit val e: ExecutionContext = ec
-    val (fa, fb, fc) = (Future(a), Future(b), Future(c))
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf),
-      Await.result(fc, Duration.Inf))
-  }
-
-  /** Two-way [[par4]]. */
-  def par2[A, B](a: => A, b: => B): (A, B) = {
-    implicit val e: ExecutionContext = ec
-    val (fa, fb) = (Future(a), Future(b))
-    (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
+    val futures = thunks.map(t => Future(t()))
+    val done = futures.map(f => Await.ready(f, Duration.Inf).value.get)
+    done.collect { case scala.util.Failure(t) => t } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => done.map(_.get)
+    }
   }
 }

@@ -29,9 +29,17 @@ object StreamTuning {
 
   def statePartitions(spark: SparkSession): Int =
     sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-      .orElse(spark.conf.getOption("spark.graft.stream.statePartitions"))
-      .map(_.toInt)
+      .map(parseParts("SPARK_GRAFT_STREAM_STATE_PARTS", _))
+      .orElse(spark.conf.getOption("spark.graft.stream.statePartitions")
+        .map(parseParts("spark.graft.stream.statePartitions", _)))
       .getOrElse(math.max(1, spark.sparkContext.defaultParallelism / 4))
+
+  /** A positive partition count, or an IllegalArgumentException naming
+    * the setting it came from.
+    */
+  private[streaming] def parseParts(setting: String, raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$setting must be a positive integer, got '$raw'"))
 
   /** Run `body` (a stream start + AvailableNow drain) with
     * spark.sql.shuffle.partitions scoped to [[statePartitions]],

@@ -250,6 +250,13 @@ class PlanSpec extends SparkSpec {
       s"gate added an Exchange over an already-parallel input: $exchanges")
   }
 
+  test("fanOutWidth never exceeds a local[1] session's single core") {
+    val docs = graft.Tables.load(spark, sf, "documents")
+    assert(TextOps.fanOutWidth(docs, 1) <= 1)
+    // at >= 2 cores the floor of 2 still applies
+    assert(TextOps.fanOutWidth(spark.range(1).toDF("x"), 4) == 2)
+  }
+
   test("exchange-count snapshots pin the top heavy queries' plan shapes") {
     // VERDICT r8 #8 / r9 #2: a plan regression on the expensive queries
     // (a lost broadcast → extra shuffle, a lost reuse → extra scan) used
