@@ -26,12 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalRollup {
 
-  /** Single implementation lives in [[Warehouse.withDynamicPartitionOverwrite]]
-    * (ADVICE r9: two verbatim copies of the set/restore logic can drift).
-    */
-  def withDynamicPartitionOverwrite[T](spark: SparkSession)(body: => T): T =
-    Warehouse.withDynamicPartitionOverwrite(spark)(body)
-
   /** Recompute the rollup partitions in `affected` from the fact and
     * dynamic-partition-overwrite them in place. The fact scan carries a
     * STATIC partition filter (affected is a collected handful of
@@ -47,8 +41,6 @@ object IncrementalRollup {
     val updated = agg(factAffected)
     require(updated.columns.contains(partCol),
       s"agg must keep the partition column '$partCol' (partition-local contract)")
-    withDynamicPartitionOverwrite(spark) {
-      updated.write.mode("overwrite").partitionBy(partCol).parquet(rollupPath)
-    }
+    Warehouse.overwritePartitions(updated).partitionBy(partCol).parquet(rollupPath)
   }
 }

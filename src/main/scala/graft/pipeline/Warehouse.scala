@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Partitioned-parquet lakehouse sinks for the medallion layers.
@@ -19,25 +19,15 @@ import org.apache.spark.sql.functions._
   */
 object Warehouse {
 
-  private val OverwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
-
-  /** Run `body` with dynamic partition-overwrite mode, restoring the
-    * session's previous setting afterwards (VERDICT r8 #1: a leaked
-    * `dynamic` silently turns every later full-table
-    * `mode("overwrite").partitionBy(...)` write in the same session
-    * into a partition-only overwrite). Every dynamic-overwrite sink in
-    * the repo goes through this scope — MicroBatchSpec's leak probe
-    * would catch a new unscoped setter.
+  /** Dynamic partition overwrite, per write: the overwrite replaces only
+    * the partitions the batch produces. Set as a write option, never on
+    * the shared session, so no other writer or query planning in
+    * parallel sees it (VERDICT r8 #1: a leaked `dynamic` silently turns
+    * every later full-table `mode("overwrite").partitionBy(...)` write in
+    * the same session into a partition-only overwrite).
     */
-  def withDynamicPartitionOverwrite[T](spark: SparkSession)(body: => T): T = {
-    val old = spark.conf.getOption(OverwriteModeKey)
-    spark.conf.set(OverwriteModeKey, "dynamic")
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(OverwriteModeKey, v)
-      case None    => spark.conf.unset(OverwriteModeKey)
-    }
-  }
+  private[graft] def overwritePartitions(df: DataFrame): DataFrameWriter[Row] =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
 
   /** An overwrite INVALIDATES the sink's append-path bloom sidecar
     * (graft.runner.BloomSidecar): the new partition contents can hold
@@ -63,10 +53,8 @@ object Warehouse {
     */
   def writeBronze(df: DataFrame, path: String, batchId: String): Unit = {
     dropBloomSidecar(df, path)
-    withDynamicPartitionOverwrite(df.sparkSession) {
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").partitionBy("ingestion_date", "batch_id").parquet(path)
-    }
+    overwritePartitions(df.withColumn("batch_id", lit(batchId)))
+      .partitionBy("ingestion_date", "batch_id").parquet(path)
   }
 
   /** Silver: event-time partitioned (year, month, day) — late events land
@@ -74,9 +62,7 @@ object Warehouse {
     */
   def writeSilver(df: DataFrame, path: String): Unit = {
     dropBloomSidecar(df, path)
-    withDynamicPartitionOverwrite(df.sparkSession) {
-      df.write.mode("overwrite").partitionBy("year", "month", "day").parquet(path)
-    }
+    overwritePartitions(df).partitionBy("year", "month", "day").parquet(path)
   }
 
   /** Fact: partitioned by created_date (explicit twin of Iceberg's
@@ -84,10 +70,8 @@ object Warehouse {
     */
   def writeFact(df: DataFrame, path: String): Unit = {
     dropBloomSidecar(df, path)
-    withDynamicPartitionOverwrite(df.sparkSession) {
-      df.withColumn("created_date", to_date(col("created_at")))
-        .write.mode("overwrite").partitionBy("created_date").parquet(path)
-    }
+    overwritePartitions(df.withColumn("created_date", to_date(col("created_at"))))
+      .partitionBy("created_date").parquet(path)
   }
 
   /** Bulk-rebuild variant of [[writeSilver]]: cluster rows to their target
@@ -101,11 +85,9 @@ object Warehouse {
   def writeSilverClustered(df: DataFrame, path: String,
                            filesPerPartition: Int = 2): Unit = {
     dropBloomSidecar(df, path)
-    withDynamicPartitionOverwrite(df.sparkSession) {
-      df.repartition(col("year"), col("month"), col("day"),
-          pmod(xxhash64(col("event_id")), lit(filesPerPartition)))
-        .write.mode("overwrite").partitionBy("year", "month", "day").parquet(path)
-    }
+    overwritePartitions(df.repartition(col("year"), col("month"), col("day"),
+        pmod(xxhash64(col("event_id")), lit(filesPerPartition))))
+      .partitionBy("year", "month", "day").parquet(path)
   }
 
   /** [[writeSilverClustered]] with the event_id dedup FUSED into the
@@ -151,10 +133,8 @@ object Warehouse {
   def writeSilverDedupClustered(parsed: DataFrame, path: String,
                                 filesPerPartition: Int = 2): Unit = {
     dropBloomSidecar(parsed, path)
-    withDynamicPartitionOverwrite(parsed.sparkSession) {
-      dedupClusteredFrame(parsed, filesPerPartition)
-        .write.mode("overwrite").partitionBy("year", "month", "day").parquet(path)
-    }
+    overwritePartitions(dedupClusteredFrame(parsed, filesPerPartition))
+      .partitionBy("year", "month", "day").parquet(path)
   }
 
   /** The fused dedup+clustering frame of [[writeSilverDedupClustered]],
@@ -181,12 +161,10 @@ object Warehouse {
   def writeFactClustered(df: DataFrame, path: String,
                          filesPerPartition: Int = 2): Unit = {
     dropBloomSidecar(df, path)
-    withDynamicPartitionOverwrite(df.sparkSession) {
-      df.withColumn("created_date", to_date(col("created_at")))
+    overwritePartitions(df.withColumn("created_date", to_date(col("created_at")))
         .repartition(col("created_date"),
-          pmod(xxhash64(col("event_id")), lit(filesPerPartition)))
-        .write.mode("overwrite").partitionBy("created_date").parquet(path)
-    }
+          pmod(xxhash64(col("event_id")), lit(filesPerPartition))))
+      .partitionBy("created_date").parquet(path)
   }
 
   /** Small dims: full overwrite (SCD-1 rebuild). */

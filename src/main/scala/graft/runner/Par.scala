@@ -47,4 +47,10 @@ object Par {
       case _ => done.map(_.get)
     }
   }
+
+  /** [[all]] for two thunks of different result types. */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(x, y) = all(() => a, () => b)
+    (x.asInstanceOf[A], y.asInstanceOf[B])
+  }
 }

@@ -43,9 +43,10 @@ object StreamJoin {
     * number a production monitor alerts on when state stops shrinking.
     */
   def run(spark: SparkSession, eventsDir: String, outDir: String,
-          ckptDir: String, watermarkDelay: String = "1 hour"): Long =
-      StreamTuning.withStatePartitions(spark) {
-    val raw = spark.readStream.schema(eventSchema).parquet(eventsDir)
+          ckptDir: String, watermarkDelay: String = "1 hour"): Long = {
+    // the join keeps 4 per-side state stores per batch instead of one
+    // per core (see StreamTuning), on a session the stream owns
+    val raw = StreamTuning.stateSession(spark).readStream.schema(eventSchema).parquet(eventsDir)
     val clicks = raw.where(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
         col("event_id").as("click_id"))
@@ -70,8 +71,7 @@ object StreamJoin {
     q.awaitTermination()
     Option(q.lastProgress).flatMap(p => p.stateOperators.headOption)
       .map(_.numRowsTotal).getOrElse(0L)
-  }  // withStatePartitions scope (see StreamTuning: the join keeps 4
-     // per-side state stores per batch instead of one per core)
+  }
 
   /** Batch twin over the same files (the oracle for the spec). */
   def batchTwin(spark: SparkSession, eventsDir: String): DataFrame = {

@@ -41,19 +41,16 @@ object StreamTuning {
     raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
       s"$setting must be a positive integer, got '$raw'"))
 
-  /** Run `body` (a stream start + AvailableNow drain) with
-    * spark.sql.shuffle.partitions scoped to [[statePartitions]],
-    * restoring the session's previous setting afterwards. Scoped, not
-    * leaked — the same discipline as Warehouse's dynamic-overwrite scope.
+  /** A new session for one stream to own: the caller's settings (the
+    * ones a session may change), with spark.sql.shuffle.partitions set
+    * to [[statePartitions]]. A stream plans and runs on its own session,
+    * so the override never touches the caller's session, where other
+    * threads may be planning.
     */
-  def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, statePartitions(spark).toString)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
+  def stateSession(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) s.conf.set(k, v) }
+    s.conf.set("spark.sql.shuffle.partitions", statePartitions(spark).toString)
+    s
   }
 }

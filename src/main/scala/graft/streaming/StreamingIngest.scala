@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.{BronzeToSilver, StagingToBronze}
+import graft.runner.MicroBatch
 
 /** Structured-Streaming twin of the micro-batch ingest (SURVEY.md §2.9):
   * file-source `readStream` over the staging directory, the same pure
@@ -83,20 +84,17 @@ object StreamingIngest {
               checkpoint: String, maintainRollup: Boolean = false,
               stageSink: Option[scala.collection.mutable.Buffer[(String, Double)]] = None): Unit = {
     val schema = spark.read.parquet(silverPath).schema
-    val mb = new graft.runner.MicroBatch(spark, stagingBase = "", warehouse,
+    val mb = new MicroBatch(spark, stagingBase = "", warehouse,
       maintainRollup = maintainRollup, stageSink = stageSink)
     val q = spark.readStream.schema(schema).parquet(silverPath)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // pin the streamed micro-batch before the multi-action gold
-          // stage (each dim upsert + the fact merge re-reads it)
-          val pinned = batch.localCheckpoint(true)
-          val keys = pinned.select("year", "month", "day").distinct()
-            .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
-          mb.goldFromSilverBatch(pinned, keys)
-          ()
-        }
+        // pin the streamed micro-batch before the multi-action gold stage
+        // (the fact probe, each dim upsert and the fact build read it);
+        // its size and affected partition keys ride the pinning job
+        val (pinned, m) = MicroBatch.pinObserved(batch,
+          count(lit(1)).as("n"), MicroBatch.AffectedKeys)
+        if (m("n") != 0L) mb.goldFromSilverBatch(pinned, MicroBatch.keysOf(m))
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -106,33 +104,33 @@ object StreamingIngest {
 
   /** bronze parquet → silver parquet with watermarked streaming dedup.
     * The dedup's state store runs at [[StreamTuning.statePartitions]]
-    * (scoped shuffle.partitions — see StreamTuning for the measured
-    * A/B: fewer state partitions halve the drain's per-batch
-    * delta-file/snapshot churn at tick-sized state).
+    * (shuffle.partitions of a session the stream owns — see
+    * StreamTuning for the measured A/B: fewer state partitions halve the
+    * drain's per-batch delta-file/snapshot churn at tick-sized state).
     */
   def runSilver(spark: SparkSession, bronzePath: String, silverPath: String,
-                checkpoint: String, watermark: String = "1 hour"): Unit =
-    StreamTuning.withStatePartitions(spark) {
-      val bronzeSchema = spark.read.parquet(bronzePath).schema
-      val bronze = spark.readStream.schema(bronzeSchema).parquet(bronzePath)
-      val silver = BronzeToSilver.parse(bronze)
-        .withWatermark("kst_timestamp", watermark)
-        // WithinWatermark, not plain dropDuplicates: with a dedup key that
-        // excludes the event-time column, plain streaming dropDuplicates
-        // never evicts its state store — unbounded growth on a real stream.
-        // This variant evicts each key once the watermark passes its first
-        // sighting, bounding state to one watermark window of keys, and
-        // still dedups every redelivery inside that window (the reference's
-        // redelivery regime: retries arrive seconds-to-minutes apart, far
-        // inside the 1-hour default).
-        .dropDuplicatesWithinWatermark("event_id")
-      val q = silver.writeStream
-        .format("parquet")
-        .option("path", silverPath)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("year", "month", "day")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+                checkpoint: String, watermark: String = "1 hour"): Unit = {
+    val bronzeSchema = spark.read.parquet(bronzePath).schema
+    val bronze = StreamTuning.stateSession(spark).readStream
+      .schema(bronzeSchema).parquet(bronzePath)
+    val silver = BronzeToSilver.parse(bronze)
+      .withWatermark("kst_timestamp", watermark)
+      // WithinWatermark, not plain dropDuplicates: with a dedup key that
+      // excludes the event-time column, plain streaming dropDuplicates
+      // never evicts its state store — unbounded growth on a real stream.
+      // This variant evicts each key once the watermark passes its first
+      // sighting, bounding state to one watermark window of keys, and
+      // still dedups every redelivery inside that window (the reference's
+      // redelivery regime: retries arrive seconds-to-minutes apart, far
+      // inside the 1-hour default).
+      .dropDuplicatesWithinWatermark("event_id")
+    val q = silver.writeStream
+      .format("parquet")
+      .option("path", silverPath)
+      .option("checkpointLocation", checkpoint)
+      .partitionBy("year", "month", "day")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+  }
 }

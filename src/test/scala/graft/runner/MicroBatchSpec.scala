@@ -711,6 +711,117 @@ class MicroBatchSpec extends SparkSpec {
     assert(spark.read.parquet(s"$wh/silver").count() == 3)
   }
 
+  /** A warm warehouse: two ticks into day 15, each with one late event
+    * dated day 14, so both partitions exist and carry bloom sidecars.
+    * Stages a third interval (returned) with 20 new events, 4 of them by
+    * new users, plus the `extra` lines.
+    */
+  private def warmWarehouse(tag: String, extra: Seq[String] => Seq[String],
+                            maintainRollup: Boolean = false): (MicroBatch, LocalDateTime) = {
+    val staging = tmpDir(s"staging_$tag")
+    val wh = tmpDir(s"wh_$tag")
+    val names = Seq("view_recipe", "click_recipe", "auth_success")
+    def lines(min: Int): Seq[String] =
+      (0 until 20).map(i => raw(s"w$min-$i", s"u$min-${i % 4}",
+        f"2025-09-15T10:$min%02d:${i % 60}%02d.000+09:00", names(i % 3)))
+    val late = (min: Int) => raw(s"late$min", "u-late", "2025-09-14T23:50:00.000+09:00")
+    writeStagingFile(staging, 2025, 9, 15, 10, 0, lines(0) :+ late(0))
+    writeStagingFile(staging, 2025, 9, 15, 10, 15, lines(15) :+ late(15))
+    writeStagingFile(staging, 2025, 9, 15, 10, 30, lines(30) ++ extra(lines(15)))
+    val mb = new MicroBatch(spark, staging, wh, maintainRollup = maintainRollup)
+    mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0))
+    mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 15))
+    (mb, LocalDateTime.of(2025, 9, 15, 10, 30))
+  }
+
+  test("a steady-state covered tick stays within its pinned job budget") {
+    // one line redelivered byte-identically from the previous tick, one
+    // late event into the (covered) previous day
+    val (mb, t) = warmWarehouse("budget",
+      prev => Seq(prev(5), raw("late30", "u-late", "2025-09-14T23:55:00.000+09:00")))
+    assert(mb.silverBloom.covered(Seq("year=2025/month=9/day=14", "year=2025/month=9/day=15")))
+    val (res, p) = TickProbe.during(spark)(mb.runInterval(t))
+    // 22 lines; silver and fact hold 60 day-15 rows and 3 day-14 rows
+    assert(res == ((22L, 63L, 63L)), s"tick returned $res")
+    info(s"steady covered tick: ${p.jobs} jobs, ${p.executions} SQL executions")
+    assert(p.jobs <= MicroBatchSpec.TickJobBudget,
+      s"${p.jobs} jobs > budget ${MicroBatchSpec.TickJobBudget}: ${p.trail.mkString(", ")}")
+    assert(p.executions <= MicroBatchSpec.TickExecutionBudget,
+      s"${p.executions} SQL executions > budget ${MicroBatchSpec.TickExecutionBudget}")
+  }
+
+  test("gold is O(batch): a clean covered tick reads no stored silver or fact row") {
+    val (mb, t) = warmWarehouse("obatch", _ => Nil)
+    val (res, p) = TickProbe.during(spark, roots = Seq(mb.silverPath, mb.factPath))(
+      mb.runInterval(t))
+    assert(res == ((20L, 60L, 60L)), s"tick returned $res")
+    // the returned totals are read-back counts of the affected partitions;
+    // every other action of the tick must leave the stored rows unread
+    assert(p.scans.exists { case (f, n) => f == "count" && n > 0 },
+      s"the probe saw no closing count: ${p.scans}")
+    assert(p.rowsScannedExcept("count") == 0,
+      s"stored rows read outside the closing counts: ${p.scans}")
+  }
+
+  test("a re-run after a crash before fact heals from silver's stored row") {
+    val staging = tmpDir("staging_heal2")
+    val wh = tmpDir("wh_heal2")
+    // one event_id delivered twice with DIFFERENT payloads: the batch
+    // dedup keeps whichever line comes first
+    val a = raw("x1", "u1", "2025-09-15T10:01:00.000+09:00", "view_recipe")
+    val b = raw("x1", "u1", "2025-09-15T10:01:00.000+09:00", "click_recipe")
+    val other = raw("x2", "u2", "2025-09-15T10:02:00.000+09:00", "auth_success")
+    writeStagingFile(staging, 2025, 9, 15, 10, 0, Seq(a, b, other))
+    val mb = new MicroBatch(spark, staging, wh)
+    mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0))
+    val stored = spark.read.parquet(mb.silverPath).where($"event_id" === "x1")
+      .select("event_name").as[String].collect().toSeq
+    assert(stored.size == 1)
+
+    // crash before fact: the fact files are lost (its sidecar survives,
+    // over-approximating), silver and the dims are kept
+    org.apache.commons.io.FileUtils.listFiles(new java.io.File(mb.factPath),
+      Array("parquet"), true).asScala.foreach(f => assert(f.delete()))
+    // the re-run sees the same lines in the other order, so its own dedup
+    // keeps the OTHER payload
+    writeStagingFile(staging, 2025, 9, 15, 10, 0, Seq(b, a, other))
+    val healed = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0))
+    assert(healed == ((3L, 2L, 2L)), s"re-run returned $healed")
+
+    val fact = spark.read.parquet(mb.factPath)
+    val dimE = spark.read.parquet(mb.dimEventPath)
+    val resolved = fact.join(dimE, fact("event_dim_key") === dimE("event_sk"))
+      .select("event_id", "event_name").as[(String, String)].collect().toMap
+    assert(resolved == Map("x1" -> stored.head, "x2" -> "auth_success"))
+    assert(spark.read.parquet(mb.silverPath).count() == 2)
+  }
+
+  test("no shared-session conf changes while a tick or a streaming drain runs") {
+    val keys = Seq("spark.sql.sources.partitionOverwriteMode", "spark.sql.shuffle.partitions")
+    val baseline = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val (mb, t) = warmWarehouse("conf", _ => Nil, maintainRollup = true)
+    val (_, tick) = TickProbe.during(spark, confKeys = keys)(mb.runInterval(t))
+
+    val staging = tmpDir("staging_conf_stream")
+    val wh = tmpDir("wh_conf_stream")
+    Files.write(Paths.get(s"$staging/a.jsonl"), Seq(
+      raw("cs1", "u1", "2025-09-15T10:01:00.000+09:00"),
+      raw("cs2", "u2", "2025-09-15T10:02:00.000+09:00")).mkString("\n").getBytes)
+    StreamingIngest.runBronze(spark, s"$staging/*.jsonl", s"$wh/bronze",
+      s"$wh/ckpt_b", "2025-09-15")
+    val (_, drain) = TickProbe.during(spark, confKeys = keys) {
+      StreamingIngest.runSilver(spark, s"$wh/bronze", s"$wh/silver", s"$wh/ckpt_s")
+      StreamingIngest.runGold(spark, s"$wh/silver", wh, s"$wh/ckpt_g", maintainRollup = true)
+    }
+    assert(spark.read.parquet(s"$wh/fact_user_events").count() == 2)
+    Seq("tick" -> tick, "drain" -> drain).foreach { case (what, p) =>
+      assert(p.confSamples.nonEmpty, s"$what: no SQL execution observed")
+      val changed = p.confSamples.filter(_ != baseline)
+      assert(changed.isEmpty, s"$what changed the caller's session conf: ${changed.distinct}")
+    }
+    assert(keys.map(k => k -> spark.conf.getOption(k)).toMap == baseline)
+  }
+
   test("route-aware tick drains mixed media to the catalog, idempotently") {
     import graft.pipeline.Multimodal
     val staging = tmpDir("stagingmr")
@@ -770,4 +881,13 @@ class MicroBatchSpec extends SparkSpec {
     assert(t2 == ((0L, 0L, 0L)))
     assert(spark.read.parquet(mb.mediaCatalogPath).count() == 7)
   }
+}
+
+object MicroBatchSpec {
+  /** Jobs and SQL executions of the steady-state covered tick above: the
+    * tick's count when the budget was set (77 jobs and 35 executions
+    * before the O(batch) rewrite of the tick).
+    */
+  val TickJobBudget = 37
+  val TickExecutionBudget = 14
 }
