@@ -335,7 +335,9 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
       val Seq(silverN, factN) = Par.all(
         () => readOrEmpty(silverPath, silverNew.schema).where(affectedFilter).count(),
-        () => readOrEmpty(factPath, FactIdSchema).where(factFilterOf(factDates)).count())
+        () => stage("gold_count") {
+          readOrEmpty(factPath, FactIdSchema).where(factFilterOf(factDates)).count()
+        })
       (bronzeN, silverN, factN)
     }
   }
