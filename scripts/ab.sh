@@ -3,7 +3,7 @@
 #
 #   scripts/ab.sh <rev> <workload> [pairs] [seconds]
 #
-# Checks out <rev> with `git worktree` into a scratch directory ("base")
+# Exports <rev> with `git archive` into a scratch directory ("base")
 # and runs `python3 perfbench/run.py --trace 0` from that tree and from
 # this working tree ("head"), pair by pair with the same seed, alternating
 # which side runs first. Each tree builds itself on its first run, outside
@@ -32,8 +32,8 @@ out=$scratch/ab.jsonl
 mkdir -p "$scratch"
 : > "$out"
 
-git -C "$head" worktree add --detach "$base" "$rev" >&2
-trap 'git -C "$head" worktree remove --force "$base"' EXIT
+mkdir -p "$base"
+git -C "$head" archive "$rev" | tar -x -C "$base"
 
 for i in $(seq 0 $((pairs - 1))); do
   seed=$((seed0 + i))

@@ -226,38 +226,22 @@ object Dims {
     * max. Returns only the rows to append — existing SKs are never
     * renumbered, so fact partitions written under older dim states stay
     * joinable forever. The global window runs over *new keys in this batch
-    * only* (per-tick cardinality), never over the full dim.
-    *
-    * `attrs` ride along with a new key and never fork a new SK when they
-    * change. With `by`, the frames hold several dims at once, told apart
-    * by the `by` columns (part of the key): each dim's new keys number
-    * from that dim's own high-water mark, in one query for all of them.
+    * only* (per-tick cardinality), never over the full dim. `attrs` ride
+    * along with a new key; a change to them never forks an SK.
     */
   def dimUpsert(candidates: DataFrame, existing: DataFrame, idCols: Seq[String],
-                sk: String, attrs: Seq[String] = Nil, by: Seq[String] = Nil): DataFrame = {
-    val keys = by ++ idCols
-    val cand = candidates.select((keys ++ attrs).map(col): _*).distinct()
-    val ex = existing.select(keys.map(c => col(c).as(s"__ex_$c")): _*)
-    val cond = keys.map(c => cand(c) <=> ex(s"__ex_$c")).reduce(_ && _)
+                sk: String, attrs: Seq[String] = Nil): DataFrame = {
+    val cand = candidates.select((idCols ++ attrs).map(col): _*).distinct()
+    val ex = existing.select(idCols.map(c => col(c).as(s"__ex_$c")): _*)
+    val cond = idCols.map(c => cand(c) <=> ex(s"__ex_$c")).reduce(_ && _)
     val newKeys = cand.join(ex, cond, "left_anti")
-    val w = Window.partitionBy(by.map(col): _*).orderBy(idCols.map(asc_nulls_first): _*)
-    withHighWater(newKeys.withColumn("__rn", row_number().over(w)), existing, sk, by)
-      .select((by ++ (sk +: idCols) ++ attrs).map(col): _*)
+    // A4 — SKs continue from the existing high-water mark (0 when empty),
+    // computed in-plan as a scalar subquery: no driver round trip first
+    val w = Window.orderBy(idCols.map(asc_nulls_first): _*)
+    newKeys.withColumn(sk, (row_number().over(w) +
+        existing.agg(coalesce(max(col(sk)), lit(0L))).scalar()).cast("long"))
+      .select(((sk +: idCols) ++ attrs).map(col): _*)
   }
-
-  /** A4 — `sk` = `__rn` + the existing dim's high-water mark (0 when
-    * empty), per `by` group. The mark is computed in-plan — a scalar
-    * subquery, or an aggregate joined per group — so the upsert is one
-    * query: no driver round trip to fetch it first.
-    */
-  private def withHighWater(numbered: DataFrame, existing: DataFrame, sk: String,
-                            by: Seq[String] = Nil): DataFrame =
-    if (by.isEmpty)
-      numbered.withColumn(sk,
-        (col("__rn") + existing.agg(coalesce(max(col(sk)), lit(0L))).scalar()).cast("long"))
-    else
-      numbered.join(existing.groupBy(by.map(col): _*).agg(max(col(sk)).as("__hw")), by, "left")
-        .withColumn(sk, (col("__rn") + coalesce(col("__hw"), lit(0L))).cast("long"))
 
   /** J5 + A4 + W2 — incremental dim_user upsert
     * (replay_silver_to_gold.py:200-280): new users = silver users anti-join
@@ -268,10 +252,10 @@ object Dims {
     // NULL-SAFE key match (in dimUpsert): anonymous_id can be null, and
     // plain equality would re-insert such users with a fresh SK on every
     // batch (the SK-forking failure mode)
-    dimUpsert(latestPerUser(silver), existing, UserKeys, "user_sk", UserAttrs)
+    dimUpsert(latestPerUser(silver), existing, Seq("user_id", "anonymous_id"), "user_sk",
+      UserAttrs)
 
-  /** dim_user's natural key and the SCD-1 attributes that ride along. */
-  val UserKeys = Seq("user_id", "anonymous_id")
+  /** dim_user's SCD-1 attributes, which ride along with its key. */
   val UserAttrs = Seq("user_segment", "cooking_style", "ab_test_group")
 
   /** Attribute refresh for an append-only dim (create_dims.py:107-135

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Silver → Gold fact build: the 4 left joins (J1–J4) with their distinct
@@ -39,56 +39,64 @@ object SilverToGold {
       coalesce(split(propAction, ":").getItem(1).cast("bigint"), lit(60L)))
       .otherwise(60L)
 
+  /** One of the fact's dim joins (J1–J4): the dim's SK and natural key,
+    * and the condition over a silver row's and a dim row's columns.
+    */
+  final case class DimJoin(sk: String, naturals: Seq[String],
+                           on: (String => Column, String => Column) => Column) {
+    def matched(n: String): String = s"__${sk}_$n"
+
+    /** `rows` left-joined (broadcast) to `dim`, adding the SK as `as`
+      * (null where the join missed) and the matched naturals as
+      * [[matched]] columns.
+      */
+    def leftJoin(rows: DataFrame, dim: DataFrame, as: String = sk): DataFrame = {
+      val d = dim.select(col(sk).as(as) +: naturals.map(n => col(n).as(matched(n))): _*)
+      rows.join(broadcast(d), on(rows(_), n => d(matched(n))), "left")
+    }
+  }
+
+  // J1 — left join on composite natural key (user_id, anonymous_id)
+  val UserJoin = DimJoin("user_sk", Seq("user_id", "anonymous_id"), (s, d) =>
+    s("user_id") === d("user_id") && s("anonymous_id") === d("anonymous_id"))
+  // J2 — cast-normalized key: both sides compared as string
+  val RecipeJoin = DimJoin("recipe_sk", Seq("recipe_id"), (s, d) =>
+    s("prop_recipe_id").cast("string") === d("recipe_id").cast("string"))
+  // J3 — equi-join with explicit null guard on the key
+  val EventJoin = DimJoin("event_sk", Seq("event_name"), (s, d) =>
+    s("event_name") === d("event_name") && s("event_name").isNotNull)
+  // J4 — null-coalesced compound key + at-least-one-non-null guard
+  val PageJoin = DimJoin("page_sk", Seq("page_name", "page_url"), (s, d) =>
+    coalesce(s("page_name"), lit("")) === coalesce(d("page_name"), lit("")) &&
+      coalesce(s("page_url"), lit("")) === coalesce(d("page_url"), lit("")) &&
+      (s("page_name").isNotNull || s("page_url").isNotNull))
+
   /** Pure transform: silver + 4 dims → fact rows. */
   def buildFact(silver: DataFrame, dimUser: DataFrame, dimRecipe: DataFrame,
-                dimEvent: DataFrame, dimPage: DataFrame): DataFrame = {
-    val s = silver.alias("s")
+                dimEvent: DataFrame, dimPage: DataFrame): DataFrame =
+    factOf(Seq(UserJoin -> dimUser, RecipeJoin -> dimRecipe, EventJoin -> dimEvent,
+        PageJoin -> dimPage)
+      .foldLeft(silver) { case (rows, (j, dim)) => j.leftJoin(rows, dim) })
 
-    // J1 — left join on composite natural key (user_id, anonymous_id)
-    val j1 = s.join(
-      broadcast(dimUser.alias("du")),
-      col("s.user_id") === col("du.user_id") &&
-        col("s.anonymous_id") === col("du.anonymous_id"),
-      "left")
-
-    // J2 — cast-normalized key: both sides compared as string
-    val j2 = j1.join(
-      broadcast(dimRecipe.alias("dr")),
-      col("s.prop_recipe_id").cast("string") === col("dr.recipe_id").cast("string"),
-      "left")
-
-    // J3 — equi-join with explicit null guard on the key
-    val j3 = j2.join(
-      broadcast(dimEvent.alias("de")),
-      (col("s.event_name") === col("de.event_name")) && col("s.event_name").isNotNull,
-      "left")
-
-    // J4 — null-coalesced compound key + at-least-one-non-null guard
-    val j4 = j3.join(
-      broadcast(dimPage.alias("dp")),
-      (coalesce(col("s.page_name"), lit("")) === coalesce(col("dp.page_name"), lit(""))) &&
-        (coalesce(col("s.page_url"), lit("")) === coalesce(col("dp.page_url"), lit(""))) &&
-        (col("s.page_name").isNotNull || col("s.page_url").isNotNull),
-      "left")
-
-    j4.select(
-      col("s.event_id"),
-      coalesce(col("du.user_sk"), lit(0L)).as("user_dim_key"),
-      date_format(col("s.kst_timestamp"), "yyyyMMddHH").cast("bigint").as("time_dim_key"),
-      coalesce(col("dr.recipe_sk"), lit(0L)).as("recipe_dim_key"),
-      coalesce(col("dp.page_sk"), lit(0L)).as("page_dim_key"),
-      coalesce(col("de.event_sk"), lit(0L)).as("event_dim_key"),
+  /** Fact rows from silver rows carrying the four SKs (a null is SK 0). */
+  def factOf(joined: DataFrame): DataFrame =
+    joined.select(
+      col("event_id"),
+      coalesce(col(UserJoin.sk), lit(0L)).as("user_dim_key"),
+      date_format(col("kst_timestamp"), "yyyyMMddHH").cast("bigint").as("time_dim_key"),
+      coalesce(col(RecipeJoin.sk), lit(0L)).as("recipe_dim_key"),
+      coalesce(col(PageJoin.sk), lit(0L)).as("page_dim_key"),
+      coalesce(col(EventJoin.sk), lit(0L)).as("event_dim_key"),
       lit(1).as("event_count"),
-      sessionSeconds(col("s.prop_action")).as("session_duration_seconds"),
+      sessionSeconds(col("prop_action")).as("session_duration_seconds"),
       lit(30L).as("page_view_duration_seconds"),
-      col("s.event_name").isin(ConversionEvents: _*).as("is_conversion"),
+      col("event_name").isin(ConversionEvents: _*).as("is_conversion"),
       lit(1.0).as("conversion_value"),
-      engagementScore(col("s.event_name")).as("engagement_score"),
-      col("s.session_id"),
-      col("s.anonymous_id"),
-      col("s.kst_timestamp").as("created_at"),
-      col("s.kst_timestamp").as("updated_at"))
-  }
+      engagementScore(col("event_name")).as("engagement_score"),
+      col("session_id"),
+      col("anonymous_id"),
+      col("kst_timestamp").as("created_at"),
+      col("kst_timestamp").as("updated_at"))
 
   /** A3 — join-success instrumentation (silver_to_gold_processor.py:299-310):
     * fraction of fact rows whose dim key resolved (non-zero SK).

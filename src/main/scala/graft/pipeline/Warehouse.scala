@@ -58,29 +58,14 @@ object Warehouse {
   }
 
   /** Silver: event-time partitioned (year, month, day) — late events land
-    * in their true partition (README.md:181-188 semantics).
-    */
-  def writeSilver(df: DataFrame, path: String): Unit = {
-    dropBloomSidecar(df, path)
-    overwritePartitions(df).partitionBy("year", "month", "day").parquet(path)
-  }
-
-  /** Fact: partitioned by created_date (explicit twin of Iceberg's
-    * days(created_at) hidden transform).
-    */
-  def writeFact(df: DataFrame, path: String): Unit = {
-    dropBloomSidecar(df, path)
-    overwritePartitions(df.withColumn("created_date", to_date(col("created_at"))))
-      .partitionBy("created_date").parquet(path)
-  }
-
-  /** Bulk-rebuild variant of [[writeSilver]]: cluster rows to their target
-    * partition before writing. Without this every shuffle task holds rows
-    * of every date and the write sprays tasks × dates tiny files (the
-    * reference's 3.74 MB small-file problem, README.md:226). The salt
-    * bounds files per date at `filesPerPartition` while keeping a hot
-    * date from serializing through a single task — raise it with scale so
-    * file sizes stay near the 128 MB compaction target.
+    * in their true partition (README.md:181-188 semantics). A bulk
+    * rebuild clusters rows to their target partition before writing:
+    * without this every shuffle task holds rows of every date and the
+    * write sprays tasks × dates tiny files (the reference's 3.74 MB
+    * small-file problem, README.md:226). The salt bounds files per date
+    * at `filesPerPartition` while keeping a hot date from serializing
+    * through a single task — raise it with scale so file sizes stay near
+    * the 128 MB compaction target.
     */
   def writeSilverClustered(df: DataFrame, path: String,
                            filesPerPartition: Int = 2): Unit = {
@@ -157,7 +142,10 @@ object Warehouse {
         if (keyCols(c)) col(c) else col("__row").getField(c).as(c)): _*)
   }
 
-  /** Bulk-rebuild variant of [[writeFact]] — same clustering rationale. */
+  /** Fact: partitioned by created_date (explicit twin of Iceberg's
+    * days(created_at) hidden transform), clustered as in
+    * [[writeSilverClustered]].
+    */
   def writeFactClustered(df: DataFrame, path: String,
                          filesPerPartition: Int = 2): Unit = {
     dropBloomSidecar(df, path)

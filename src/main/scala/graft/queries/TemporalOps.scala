@@ -88,31 +88,29 @@ object TemporalOps {
         .select($"user_id", expr("unix_micros(ts) div 3600000000").as("hr"), $"value")
       val hourly = ev.groupBy($"user_id", $"hr").agg(max($"value").as("v"))
       // SEGMENT construction instead of grid-join + running window
-      // (r17, guide §2.4): the old plan built the per-user hourly grid
-      // as a second aggregate, LEFT-joined the observations back on
-      // (user_id, hr) and forward-filled through a running
-      // last(ignoreNulls) window — a grid-cardinality exchange + join +
-      // window sort after the hourly aggregate. Equivalent narrow form:
-      // collect each user's (unique-hr) observations once, sort, and
-      // emit per observation the half-open run it forward-fills —
-      // [hr_i, hr_{i+1}) carrying v_i (the last observation closes at
-      // itself, matching the grid's max-hr bound). Same rows bitwise:
-      // hours h0..h1 densely covered, v = last observation ≤ h,
-      // filled ⟺ h is not an observation hour. Two exchanges + the
-      // presentation sort total; per-user state is bounded by the
-      // user's span in hours (same bound the old grid explode had).
+      // (r17, guide §2.4): no grid-cardinality exchange, join or window
+      // sort after the hourly aggregate. Each user's non-null hourly
+      // maxima are collected once and sorted, after a null one at the
+      // user's first hour; each emits the run it forward-fills,
+      // [hr_i, hr_{i+1}) carrying v_i, the last closing at the user's last
+      // hour (empty runs dropped). Same rows as the oracle's
+      // last_value(IGNORE NULLS) over the user's hours: v = last non-null
+      // value ≤ h, filled ⟺ h has no non-null value. Per-user state is
+      // bounded by the user's span in hours.
       val segs = hourly.groupBy($"user_id")
-        .agg(array_sort(collect_list(struct($"hr", $"v"))).as("ha"))
-        .select($"user_id", explode(transform($"ha", (e, i) =>
+        .agg(max($"hr").as("hi"), concat(array(struct(min($"hr").as("hr"),
+            lit(null).cast("double").as("v"))),
+          array_sort(collect_list(when($"v".isNotNull, struct($"hr", $"v"))))).as("ha"))
+        .select($"user_id", explode(filter(transform($"ha", (e, i) =>
           struct(e.getField("hr").as("start"),
-            coalesce(get($"ha", i + 1).getField("hr") - 1,
-              e.getField("hr")).as("end"),
-            e.getField("v").as("v")))).as("seg"))
+            coalesce(get($"ha", i + 1).getField("hr") - 1, $"hi").as("end"),
+            e.getField("v").as("v"))),
+          seg => seg.getField("end") >= seg.getField("start"))).as("seg"))
       segs
         .select($"user_id", $"seg.v".as("v"), $"seg.start".as("start"),
           explode(sequence($"seg.start", $"seg.end")).as("hr"))
         .select($"user_id", ($"hr" * 3600L).as("hour_epoch_s"), $"v",
-          ($"hr" > $"start").as("filled"))
+          ($"hr" > $"start" || $"v".isNull).as("filled"))
         .orderBy($"user_id", $"hour_epoch_s")
     }
   )

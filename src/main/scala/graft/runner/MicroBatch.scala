@@ -29,8 +29,9 @@ import graft.pipeline._
   *      the row count observed on the pin;
   *   3. silver bloom probe pinned; only positives (redeliveries) are
   *      verified against the stored ids;
-  *   4. silver bloom add + append, concurrently with gold's fact marking;
-  *   5. the rest of gold ([[goldFromSilverBatch]]) on this batch's rows;
+  *   4. silver bloom add + append, concurrently with gold's todo pin;
+  *   5. the rest of gold ([[goldFromSilverBatch]]) on this batch's rows:
+  *      no dim upsert unless a row misses a dim;
   *   6. the silver and fact row counts of the affected partitions, run
   *      concurrently (bronze's count came from step 1).
   * Every read uses a schema the tick already knows, so no read runs a
@@ -74,11 +75,12 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
   }
 
   /** The sink at `path` read with a known schema: no schema-inference
-    * job. Only a missing path reads as empty; other failures propagate.
+    * job. Only a missing path reads as empty (a local relation, so joins
+    * against it fold away in planning); other failures propagate.
     */
   private def readOrEmpty(path: String, schema: StructType): DataFrame =
     if (exists(path)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.createDataFrame(java.util.List.of[Row](), schema)
 
   /** A dim sink's full on-disk schema (one schema-inference job), or
     * `narrow` when the sink holds no data file yet.
@@ -88,77 +90,94 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     else try spark.read.parquet(path).schema
     catch { case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => narrow }
 
-  /** A persisted dim: sink, SK, natural key, attributes that ride along,
-    * and how gold's todo rows yield its candidates.
+  /** A persisted dim: its sink, the fact join it serves, a batch row's
+    * natural key (in the join's order) and whether the row has one, and
+    * the SCD-1 attributes that ride along.
     */
-  private case class TickDim(path: String, sk: String, naturals: Seq[String],
-                             candidates: DataFrame => DataFrame, attrs: Seq[String] = Nil) {
-    val schema = StructType(StructField(sk, LongType) +:
-      (naturals ++ attrs).map(StructField(_, StringType)))
+  private case class TickDim(path: String, join: SilverToGold.DimJoin, keys: Seq[Column],
+                             hasKey: Column, attrs: Seq[String] = Nil) {
+    val schema = StructType(StructField(join.sk, LongType) +:
+      (join.naturals ++ attrs).map(StructField(_, StringType)))
+
+    /** A row with a key misses unless its join matched a dim row with
+      * exactly that key, null-safely as [[Dims.dimUpsert]] compares. So
+      * every key the upsert would append is flagged, even where J1 (never
+      * a null `anonymous_id`) or J4 (`("", url)` for `(null, url)`) differ.
+      */
+    val missed = s"__missed_${join.sk}"
+    def missFlag: Column = hasKey && !keys.zip(join.naturals)
+      .map { case (k, n) => k <=> col(join.matched(n)) }.reduce(_ && _)
+
+    /** The keys of the `rows` that missed; with attributes (dim_user),
+      * the latest row of each user that missed.
+      */
+    def candidates(rows: DataFrame): DataFrame =
+      if (attrs.isEmpty)
+        rows.where(col(missed)).select(keys.zip(join.naturals).map { case (k, n) => k.as(n) }: _*)
+      else Dims.latestPerUser(rows)
+        .join(rows.where(col(missed)).select("user_id"), Seq("user_id"), "left_semi")
   }
 
-  /** In the order the fact build takes them: user, event, page, recipe. */
   private val tickDims = Seq(
-    TickDim(dimUserPath, "user_sk", Dims.UserKeys, Dims.latestPerUser(_), Dims.UserAttrs),
-    TickDim(dimEventPath, "event_sk", Seq("event_name"),
-      _.where(col("event_name").isNotNull).select("event_name")),
-    TickDim(dimPagePath, "page_sk", Seq("page_name", "page_url"),
-      _.where(col("page_name").isNotNull || col("page_url").isNotNull)
-        .select("page_name", "page_url")),
-    TickDim(dimRecipePath, "recipe_sk", Seq("recipe_id"),
-      _.where(col("prop_recipe_id").isNotNull)
-        .select(col("prop_recipe_id").cast("string").as("recipe_id"))))
+    TickDim(dimUserPath, SilverToGold.UserJoin, Seq(col("user_id"), col("anonymous_id")),
+      col("user_id").isNotNull, Dims.UserAttrs),
+    TickDim(dimEventPath, SilverToGold.EventJoin, Seq(col("event_name")), col("event_name").isNotNull),
+    TickDim(dimPagePath, SilverToGold.PageJoin, Seq(col("page_name"), col("page_url")),
+      col("page_name").isNotNull || col("page_url").isNotNull),
+    TickDim(dimRecipePath, SilverToGold.RecipeJoin, Seq(col("prop_recipe_id").cast("string")),
+      col("prop_recipe_id").isNotNull))
 
-  /** Append-only dim sink (replay_silver_to_gold.py:265): append `n` new
-    * rows and return the dim's state after it, for the fact join. SKs are
-    * never renumbered, so older fact partitions stay joinable. An empty
-    * append is skipped (the sink stays byte-identical) unless the sink
-    * does not exist yet.
+  /** `rows` left-joined to the four dims as stored, with miss flags. */
+  private def joinStoredDims(rows: DataFrame): DataFrame =
+    tickDims.foldLeft(rows) { (acc, d) =>
+      d.join.leftJoin(acc, readOrEmpty(d.path, d.schema)).withColumn(d.missed, d.missFlag)
+        .drop(d.join.naturals.map(d.join.matched): _*)
+    }
+
+  /** Upserts the dims some `todo` row missed (`m`: the miss counts),
+    * concurrently, and fills the missed SKs from the rows they appended.
     */
-  private def appendDim(path: String, schema: StructType, existing: DataFrame,
-                        appended: DataFrame, n: Long): DataFrame =
-    if (n == 0L && exists(path)) existing
-    else {
+  private def upsertMissed(todo: DataFrame, m: Map[String, Any]): DataFrame = {
+    // a dim whose sink does not exist yet upserts too, creating the sink
+    val upserts = tickDims.filter(d => m(d.missed) != 0L || !exists(d.path))
+    Par.all(upserts.map(d => () => d -> upsertDim(d, todo)): _*)
+      .collect { case (d, (fresh, n)) if n > 0L => d -> fresh }
+      .foldLeft(todo) { case (rows, (d, fresh)) =>
+        // keep a stored SK beside an appended one (only J4 matches both:
+        // ("", url), (null, url)), as a join against the whole dim would
+        val (sk, added) = (col(d.join.sk), col(s"__new_${d.join.sk}"))
+        d.join.leftJoin(rows, fresh, s"__new_${d.join.sk}")
+          .withColumn(d.join.sk, explode(when(added.isNull, array(sk))
+            .when(sk.isNull, array(added)).otherwise(array(sk, added))))
+          .drop(s"__new_${d.join.sk}" +: d.join.naturals.map(d.join.matched): _*)
+      }
+      .drop(tickDims.map(_.missed): _*)
+  }
+
+  /** Append-only dim sink (replay_silver_to_gold.py:265): append the
+    * missed keys the sink lacks, numbered from its high-water mark, and
+    * return them pinned, with their count. SKs are never renumbered, so
+    * older fact partitions stay joinable. An empty append is skipped (the
+    * sink stays byte-identical) unless the sink does not exist yet.
+    */
+  private def upsertDim(d: TickDim, rows: DataFrame): (DataFrame, Long) = {
+    val (appended, m) = pinObserved(
+      Dims.dimUpsert(d.candidates(rows), readOrEmpty(d.path, d.schema),
+        d.join.naturals, d.join.sk, d.attrs),
+      count(lit(1)).as("n"))
+    val n = m("n").asInstanceOf[Long]
+    if (n > 0L || !exists(d.path)) {
       // Null-fill to the sink's FULL on-disk schema: a bulk-seeded dim can
       // hold more columns (dim_recipe's master attributes), and a narrower
       // appended file would win parquet's single-footer schema inference.
       // [[refreshDimRecipeFromMaster]] backfills the nulls later.
-      val full = onDiskSchema(path, schema)
+      val full = onDiskSchema(d.path, d.schema)
       appended.select(full.map(f =>
           if (appended.columns.contains(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)): _*)
-        .write.mode("append").parquet(path)
-      readOrEmpty(path, schema)
+        .write.mode("append").parquet(d.path)
     }
-
-  /** The four dims' upserts as ONE query: candidates and stored rows are
-    * stacked under a dim tag (columns padded to common widths), so the
-    * distinct, anti-join, numbering and high-water marks run once, and
-    * one pin observes each dim's new-key count. Returns each dim's state
-    * after its append, in [[tickDims]] order.
-    */
-  private def upsertDims(todo: DataFrame): Seq[DataFrame] = {
-    def padded(prefix: String, width: Int) = (0 until width).map(j => s"__$prefix$j")
-    val keys = padded("k", tickDims.map(_.naturals.size).max)
-    val attrs = padded("a", tickDims.map(_.attrs.size).max)
-    def stacked(i: Int, d: TickDim, df: DataFrame, extra: Column*): DataFrame = {
-      def cols(names: Seq[String], to: Seq[String]) = to.indices.map(j =>
-        names.lift(j).map(col).getOrElse(lit(null).cast(StringType)).as(to(j)))
-      df.select((lit(i).as("__dim") +: cols(d.naturals, keys)) ++ cols(d.attrs, attrs) ++ extra: _*)
-    }
-    val dims = tickDims.zip(tickDims.map(d => readOrEmpty(d.path, d.schema))).zipWithIndex
-    val (appended, m) = pinObserved(
-      Dims.dimUpsert(
-        dims.map { case ((d, _), i) => stacked(i, d, d.candidates(todo)) }.reduce(_ unionByName _),
-        dims.map { case ((d, ex), i) => stacked(i, d, ex, col(d.sk).as("__sk")) }.reduce(_ unionByName _),
-        keys, "__sk", attrs, by = Seq("__dim")),
-      dims.map { case (_, i) => count(when(col("__dim") === i, 1)).as(s"n$i") }: _*)
-    Par.all(dims.map { case ((d, ex), i) => () =>
-      appendDim(d.path, d.schema, ex, appended.where(col("__dim") === i).select(
-        col("__sk").as(d.sk) +: (d.naturals.zip(keys) ++ d.attrs.zip(attrs))
-          .map { case (n, k) => col(k).as(n) }: _*),
-        m(s"n$i").asInstanceOf[Long])
-    }: _*)
+    (appended, n)
   }
 
   // `bloomExpectedItems` sizes the per-partition sidecar blooms: a
@@ -347,13 +366,14 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     * rows. Shared by [[runInterval]] (the rows it just parsed) and
     * StreamingIngest.runGold (each micro-batch of stored silver rows).
     * Its action chain:
-    *   1. fact bloom probe pinned over the batch (positives verified
-    *      against the stored fact ids, as in [[markExisting]]), the count
-    *      of rows fact lacks observed on the pin;
-    *   2. concurrently: the four dim upserts (one pinned query for all of
-    *      them, high-water marks joined in-plan, new-key counts observed;
-    *      then the appends that are non-empty), and the fact bloom add;
-    *   3. the fact append, built straight from the dim joins;
+    *   1. the batch joined to the four dims as stored, fact-bloom probed
+    *      and pinned (positives verified against the stored fact ids, as
+    *      in [[markExisting]]), with the rows fact lacks and each dim's
+    *      misses among them counted on the pin;
+    *   2. concurrently: the fact bloom add, and per dim that missed an
+    *      upsert pinned (high-water mark in-plan), then appended;
+    *   3. the fact append from the pin, missed SKs filled from the
+    *      appended rows;
     *   4. with `maintainRollup`, the affected dates' rollup partitions.
     *
     * Rows flagged [[Stored]] were already in silver before this batch.
@@ -367,56 +387,57 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
                           affectedKeys: Seq[(Int, Int, Int)]): Unit =
     appendGold(goldTodo(silverBatch, affectedKeys), affectedKeys)
 
-  /** Gold's todo: the rows of `silverBatch` fact lacks, and their count. */
+  /** Gold's todo: the rows of `silverBatch` fact lacks, joined to the
+    * dims in the pin that marks them; `todo` and each dim's misses counted.
+    */
   private def goldTodo(silverBatch: DataFrame,
-                       affectedKeys: Seq[(Int, Int, Int)]): (DataFrame, Long) = {
+                       affectedKeys: Seq[(Int, Int, Int)]): (DataFrame, Map[String, Any]) = {
     val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
     val heals = silverBatch.columns.contains(Stored)
+    def counts(todo: Column): Seq[Column] = count(when(todo, 1)).as("todo") +:
+      tickDims.map(d => count(when(todo && col(d.missed), 1)).as(d.missed))
     stage("gold_todo") {
-      val (marked, m) = markExisting(silverBatch,
+      val (marked, m) = markExisting(joinStoredDims(silverBatch),
         readOrEmpty(factPath, FactIdSchema).where(factFilterOf(factDates)).select("event_id"),
         factBloom, factDates.map(d => s"created_date=$d"),
-        count(when(!col(Present), 1)).as("todo") +:
+        counts(!col(Present)) ++
           (if (heals) Seq(count(when(col(Stored) && !col(Present), 1)).as("heal")) else Nil): _*)
       val missing = marked.where(!col(Present)).drop(Present)
-      val todo =
-        if (!heals) missing
-        else if (m("heal") == 0L) missing.drop(Stored)
-        else missing.where(!col(Stored)).drop(Stored)
-          .unionByName(readOrEmpty(silverPath, missing.drop(Stored).schema)
+      if (!heals) (missing, m)
+      else if (m("heal") == 0L) (missing.drop(Stored), m)
+      else pinObserved(missing.where(!col(Stored)).drop(Stored)
+          .unionByName(joinStoredDims(readOrEmpty(silverPath, silverBatch.drop(Stored).schema)
             .where(affectedFilterOf(affectedKeys))
             .join(broadcast(missing.where(col(Stored)).select("event_id")),
-              Seq("event_id"), "left_semi"))
-          .localCheckpoint(true)
-      (todo, m("todo").asInstanceOf[Long])
+              Seq("event_id"), "left_semi"))),
+        counts(lit(true)): _*)
     }
   }
 
-  /** Gold's dims, fact and rollup for a todo of `todoN` rows. */
-  private def appendGold(todoAndN: (DataFrame, Long), affectedKeys: Seq[(Int, Int, Int)]): Unit = {
-    val (todo, todoN) = todoAndN
+  /** Gold's dims, fact and rollup for a todo with counts `m`. */
+  private def appendGold(todoAndCounts: (DataFrame, Map[String, Any]),
+                         affectedKeys: Seq[(Int, Int, Int)]): Unit = {
+    val (todo, m) = todoAndCounts
     val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
 
     // Only rows that still NEED a fact row: a full re-run writes nothing.
     // A row whose fact exists was processed by a completed tick, so its
     // dim keys are present too (facts are written after dims).
-    if (todoN > 0) {
-      // The dim upserts and the fact bloom add (keyed from todo: the dim
-      // joins are left joins on unique keys) overlap (guide §2.6); the fact
-      // append waits for both — dims and sidecar BEFORE data.
-      val (dims, _) = Par.both(
-        stage("gold_dims")(upsertDims(todo)),
+    if (m("todo") != 0L) {
+      // The dims' upserts and the fact bloom add overlap (guide §2.6);
+      // the fact append waits for both — dims and sidecar BEFORE data.
+      val (rows, _) = Par.both(
+        stage("gold_dims")(upsertMissed(todo, m)),
         stage("gold_fact") {
           factBloom.addBatch(todo.select(
             concat(lit("created_date="), to_date(col("kst_timestamp"))).as("part"),
             col("event_id")))
         })
-      val Seq(dimUser, dimEvent, dimPage, dimRecipe) = dims
 
-      // append-only, built once in the write; created_at = kst_timestamp,
-      // so the affected fact dates ARE the affected silver keys
+      // append-only; created_at = kst_timestamp, so the affected fact
+      // dates ARE the affected silver keys
       stage("gold_fact") {
-        SilverToGold.buildFact(todo, dimUser, dimRecipe, dimEvent, dimPage)
+        SilverToGold.factOf(rows)
           .withColumn("created_date", to_date(col("created_at")))
           .write.mode("append").partitionBy("created_date").parquet(factPath)
       }

@@ -3,6 +3,7 @@ package graft.runner
 import scala.collection.mutable
 
 import org.apache.spark.graftListenerBusBridge
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
@@ -15,11 +16,16 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - `jobs` and `executions`: Spark jobs and SQL executions started,
   *     and `trail`, each in order: an execution's id and call site, or a
   *     job's execution id and final stage name (a failure message);
+  *   - `callStacks`: each SQL execution's call stack, from the first
+  *     frame outside Spark;
   *   - `scans`: per finished action, its name and the rows its file scans
   *     returned from tables under `roots` (final plan, query stages and
   *     subqueries included);
   *   - `confSamples`: the `confKeys` values of the caller's session, read
-  *     as each SQL execution start is delivered to the listener.
+  *     as each SQL execution start is delivered to the listener;
+  *   - `compiles`: classes generated code compiled (Janino), the change in
+  *     `CodegenMetrics.METRIC_COMPILATION_TIME`'s count; a class found in
+  *     Spark's code cache is not compiled again.
   * Spec suites run one at a time in the test JVM, so every event in the
   * window belongs to the block.
   */
@@ -28,8 +34,10 @@ final class TickProbe private (spark: SparkSession, roots: Seq[String],
   var jobs = 0
   val trail = mutable.ArrayBuffer[String]()
   var executions = 0
+  val callStacks = mutable.ArrayBuffer[String]()
   val scans = mutable.ArrayBuffer[(String, Long)]()
   val confSamples = mutable.ArrayBuffer[Map[String, Option[String]]]()
+  var compiles = 0L
 
   private def underRoots(p: org.apache.hadoop.fs.Path): Boolean = {
     val s = p.toUri.getPath
@@ -56,6 +64,7 @@ final class TickProbe private (spark: SparkSession, roots: Seq[String],
         synchronized {
           executions += 1
           confSamples += sample
+          callStacks += x.details
           trail += s"[${x.executionId} ${x.description}]"
         }
       case _ =>
@@ -82,8 +91,10 @@ object TickProbe {
     graftListenerBusBridge.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(p.listener)
     spark.listenerManager.register(p.qeListener)
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     try {
       val r = body
+      p.compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
       graftListenerBusBridge.drain(spark.sparkContext)
       (r, p)
     } finally {
