@@ -13,6 +13,11 @@
 # count for neither) and the medians differ by more than the distance
 # between base's quartiles.
 #
+# For operator_queries it then prints each side's median over pairs of
+# every query's wall in the first (cold) suite, read from the run's
+# artifact (samples.suite_s[0].query_s), to show which query sets the
+# median latency.
+#
 # Environment: AB_SEED (first seed, default 1; pair i uses AB_SEED + i),
 # AB_SCRATCH (scratch directory, default a new temporary one). Raw results
 # stay in $AB_SCRATCH/ab.jsonl, each run's standard error in
@@ -41,9 +46,12 @@ for i in $(seq 0 $((pairs - 1))); do
   for side in $order; do
     if [ "$side" = base ]; then dir=$base; else dir=$head; fi
     echo "[ab] pair $i seed $seed: $side" >&2
-    if line=$(cd "$dir" && python3 perfbench/run.py --workload "$workload" \
-        --seed "$seed" --seconds "$seconds" --trace 0 2> "$scratch/$side-$i.log" | tail -1); then
-      echo "{\"pair\": $i, \"seed\": $seed, \"side\": \"$side\", \"result\": $line}" >> "$out"
+    # run.py prints "[perfbench] artifact: <path>" just before the result line
+    if lines=$(cd "$dir" && python3 perfbench/run.py --workload "$workload" \
+        --seed "$seed" --seconds "$seconds" --trace 0 2> "$scratch/$side-$i.log" | tail -2); then
+      art=$(sed -n 's/^\[perfbench\] artifact: //p' <<< "$lines")
+      echo "{\"pair\": $i, \"seed\": $seed, \"side\": \"$side\", \"artifact\": \"${art:+$dir/$art}\"," \
+        "\"result\": $(tail -1 <<< "$lines")}" >> "$out"
     else
       echo "{\"pair\": $i, \"seed\": $seed, \"side\": \"$side\", \"result\": null}" >> "$out"
     fi
@@ -92,4 +100,19 @@ for m in spec["end_to_end"]:
     print(f"{name:<18} {fmt(bq):<30} {fmt(hq):<30} {wins:>2}/{len(pairs):<7} "
           f"{'yes' if claim else 'no'} (head median {(hq[1] - bq[1]) / bq[1]:+.1%} "
           f"vs base, base IQR {bq[2] - bq[0]:.4g} {m['unit']})")
+
+if workload == "operator_queries":
+    walls = {"base": {}, "head": {}}
+    for r in runs:
+        if not r["result"] or not r.get("artifact"):
+            continue
+        with open(r["artifact"]) as fh:
+            cold = json.load(fh)["samples"]["suite_s"][0]["query_s"]
+        for q, s in cold.items():
+            walls[r["side"]].setdefault(q, []).append(s)
+    med = {s: {q: statistics.median(v) for q, v in w.items()} for s, w in walls.items()}
+    print("cold-suite wall per query (samples.suite_s[0].query_s), median over pairs, s")
+    for q in sorted(set(med["base"]) | set(med["head"]), key=lambda q: -med["base"].get(q, 0)):
+        b, h = med["base"].get(q, float("nan")), med["head"].get(q, float("nan"))
+        print(f"  {q:<24} base {b:<8.3f} head {h:.3f}")
 EOF

@@ -38,16 +38,17 @@ case class BloomMightContain(child: Expression, bloomBytes: Array[Byte])
 
   // Content equality for the serialized bloom: a case-class Array[Byte]
   // field compares by reference, so two semantically identical probes
-  // never compare equal — defeating Catalyst canonicalization and
-  // common-subexpression elimination across the where(probe)/
-  // where(!probe) pair in the tick's anti-join. Perf-only either way.
+  // never compare equal — defeating Catalyst canonicalization and CSE
+  // across the tick anti-join's where(probe)/where(!probe) pair. Catalyst
+  // hashes a plan's expressions many times: the ~1 MB array is hashed
+  // once per instance, and unequal hashes settle `equals`. Perf-only.
+  @transient private lazy val bytesHash: Int = java.util.Arrays.hashCode(bloomBytes)
   override def equals(other: Any): Boolean = other match {
-    case b: BloomMightContain =>
-      child == b.child && java.util.Arrays.equals(bloomBytes, b.bloomBytes)
+    case b: BloomMightContain => child == b.child && bytesHash == b.bytesHash &&
+      java.util.Arrays.equals(bloomBytes, b.bloomBytes)
     case _ => false
   }
-  override def hashCode(): Int =
-    31 * child.hashCode() + java.util.Arrays.hashCode(bloomBytes)
+  override def hashCode(): Int = 31 * child.hashCode() + bytesHash
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case _: StringType => TypeCheckResult.TypeCheckSuccess

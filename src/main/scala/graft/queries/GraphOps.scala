@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
+import graft.runner.MicroBatch.pinObserved
 
 /** Link-graph centrality over the event log — the quality signal the
   * big web-corpus pipelines (CommonCrawl filtering per Fetterman et
@@ -32,14 +33,18 @@ import graft.Tables.load
   * damping 0.85 on small-diameter graphs.
   *
   * Scale design (100 TB of logs, billions of pages): the edge build
-  * is one user-keyed window (never global); each iteration is one
-  * src-keyed shuffled equi-join (ranks ⋈ edges), one dst-keyed
-  * partial agg, and a left join back to the node frame — Pregel's
-  * message pattern as DataFrames, with AQE free to pick the join
-  * strategy per tier. The dangling total and N are 1-row broadcast
-  * frames. Lineage is cut with localCheckpoint each iteration so the
-  * 10-iteration plan never snowballs into a 10-deep join tree
-  * (at cluster scale: reliable checkpoint every few iterations).
+  * is one user-keyed window (never global). One pin before the loop
+  * gives each page its out-weight `outw` (null when dangling) and its
+  * out-edges `adj: array<struct<dst, w>>`, and observes N and the
+  * dangling count. Each round is one page-keyed shuffle, pinned: the
+  * self rows (outw, adj, c = 0) unioned with the messages exploded
+  * from `adj` — Pregel's message pattern as one aggregate. The
+  * teleport + dangling term is a driver literal from the previous
+  * pin's observed dangling sum, so the loop has no join and no
+  * broadcast; each pin cuts lineage (at cluster scale: reliable
+  * checkpoint every few rounds). Trade-off: every round shuffles each
+  * page's adjacency with its rank (as many entries as a per-round
+  * edge shuffle), and a hub's out-edges travel as one row.
   */
 object GraphOps {
 
@@ -56,44 +61,38 @@ object GraphOps {
         .select($"user_id", $"ts", $"event_id",
           get_json_object($"props", "$.k").cast("long").as("page"))
       val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-      val trans = views.withColumn("prev", lag($"page", 1).over(w))
-      val edges = trans
+      val edges = views.withColumn("prev", lag($"page", 1).over(w))
         .where($"prev".isNotNull && $"prev" =!= $"page")
         .groupBy($"prev".as("src"), $"page".as("dst"))
         .agg(count(lit(1)).as("w"))
-        .localCheckpoint(true)
-      val nodes = views.select($"page").distinct().localCheckpoint(true)
-      val outw = edges.groupBy($"src").agg(sum($"w").as("outw"))
-        .localCheckpoint(true)
-      val nn = nodes.agg(count(lit(1)).as("n"))
-
-      var ranks = nodes.crossJoin(broadcast(nn))
-        .select($"page", expr(s"${Scale}L div n").as("r"))
-        .localCheckpoint(true)
+      // every viewed page is a node; a page without out-edges sums no
+      // weight (outw null) and collects an empty adjacency
+      val (graph, g) = pinObserved(
+        views.select($"page").unionByName(
+          edges.select($"src".as("page"), struct($"dst", $"w").as("e")), allowMissingColumns = true)
+          .groupBy($"page")
+          .agg(sum($"e.w").as("outw"), collect_list($"e").as("adj")),
+        count(lit(1)).as("n"), count(when($"outw".isNull, 1)).as("nd"))
+      val n = g("n").asInstanceOf[Long]
+      var ranks = graph.select($"*", lit(Scale / n).as("r"))
+      var dsum = g("nd").asInstanceOf[Long] * (Scale / n)
       for (_ <- 1 to Iters) {
-        // mass parked on dangling nodes (no out-edges) this iteration
-        val dangling = ranks.join(outw, ranks("page") === outw("src"), "left")
-          .where($"outw".isNull)
-          .agg(coalesce(sum($"r"), lit(0L)).as("dsum"))
-        val contribs = edges
-          .join(ranks.select($"page".as("src"), $"r"), Seq("src"))
-          .join(outw, Seq("src"))
-          .groupBy($"dst")
-          .agg(sum(expr("(r * 85 * w) div (100 * outw)")).as("contrib"))
-        ranks = nodes
-          .join(contribs, nodes("page") === contribs("dst"), "left")
-          .crossJoin(broadcast(nn))
-          .crossJoin(broadcast(dangling))
-          .select(nodes("page"),
-            (expr(s"(15 * ${Scale}L) div (100 * n)") +
-              expr("(85 * dsum) div (100 * n)") +
-              coalesce($"contrib", lit(0L))).as("r"))
-          .localCheckpoint(true)
+        val base = (15 * Scale) / (100 * n) + (85 * dsum) / (100 * n)
+        val msgs = ranks.select($"r", $"outw", explode($"adj").as("e"))
+          .select($"e.dst".as("page"), expr("(r * 85 * e.w) div (100 * outw)").as("c"))
+        val (next, m) = pinObserved(
+          ranks.select($"page", $"outw", $"adj", lit(0L).as("c"))
+            .unionByName(msgs, allowMissingColumns = true)
+            .groupBy($"page")
+            .agg(first($"outw", ignoreNulls = true).as("outw"),
+              first($"adj", ignoreNulls = true).as("adj"),
+              (lit(base) + sum($"c")).as("r")),
+          coalesce(sum(when($"outw".isNull, $"r")), lit(0L)).as("dsum"))
+        ranks = next
+        dsum = m("dsum").asInstanceOf[Long]
       }
       ranks
-        .join(outw, ranks("page") === outw("src"), "left")
-        .select($"page", $"r".as("rank_e9"),
-          coalesce($"outw", lit(0L)).as("out_weight"))
+        .select($"page", $"r".as("rank_e9"), coalesce($"outw", lit(0L)).as("out_weight"))
         .orderBy(desc("rank_e9"), $"page")
     }
   )

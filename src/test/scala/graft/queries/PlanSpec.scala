@@ -371,9 +371,7 @@ class PlanSpec extends SparkSpec {
       // same 1-row patterns: the (N_src, N_tgt) totals and the broadcast
       // top-K score threshold (the probability tables themselves are
       // ≤256-row broadcast HASH joins, not BNLJ)
-      "q_dsir_weights",
-      // same 1-row patterns: node count and per-iteration dangling mass
-      "q_pagerank")
+      "q_dsir_weights")
     graft.SparkEntry.queries.keys.foreach { q =>
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")

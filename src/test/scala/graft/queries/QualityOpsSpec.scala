@@ -14,6 +14,23 @@ import graft.SparkSpec
 class QualityOpsSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
+  /** q_pagerank's graph from first principles: every view with the page
+    * its user viewed just before (`prev`, null on a user's first view).
+    */
+  private def views = {
+    import spark.implicits._
+    graft.Tables.load(spark, sf, "events")
+      .where($"event_type" === "view")
+      .select($"user_id", $"ts", $"event_id",
+        get_json_object($"props", "$.k").cast("long").as("page"))
+      .withColumn("prev", lag($"page", 1).over(org.apache.spark.sql.expressions.Window
+        .partitionBy($"user_id").orderBy($"ts", $"event_id")))
+  }
+
+  /** The transitions that are edges: self-loops dropped. */
+  private def transitions =
+    views.where(col("prev").isNotNull && col("prev") =!= col("page"))
+
   test("pagerank: deterministic, positive, mass within the floor-loss bound") {
     val q = graft.queries.GraphOps.queries("q_pagerank")
     val a = q(spark, sf).collect()
@@ -27,16 +44,7 @@ class QualityOpsSpec extends SparkSpec {
     val total = a.map(_.getLong(1)).sum
     val scale = 1000000000L
     val n = a.length
-    import spark.implicits._
-    val views = graft.Tables.load(spark, sf, "events")
-      .where($"event_type" === "view")
-      .select($"user_id", $"ts", $"event_id",
-        get_json_object($"props", "$.k").cast("long").as("page"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val e = views.withColumn("prev", lag($"page", 1).over(w))
-      .where($"prev".isNotNull && $"prev" =!= $"page")
-      .select($"prev", $"page").distinct().count()
+    val e = transitions.select("prev", "page").distinct().count()
     assert(total <= scale)
     assert(total >= scale - 10L * (e + 2L * n) - n,
       s"lost more mass than 10 iterations of floor rounding can explain: $total")
@@ -49,17 +57,7 @@ class QualityOpsSpec extends SparkSpec {
     // rank is exactly teleport + dangling-share, identical across them.
     val dangliest = ranks.where($"out_weight" === 0L)
     if (dangliest.count() > 1) {
-      val inEdges = {
-        val views = graft.Tables.load(spark, sf, "events")
-          .where($"event_type" === "view")
-          .select($"user_id", $"ts", $"event_id",
-            get_json_object($"props", "$.k").cast("long").as("page"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy($"user_id").orderBy($"ts", $"event_id")
-        views.withColumn("prev", lag($"page", 1).over(w))
-          .where($"prev".isNotNull && $"prev" =!= $"page")
-          .select($"page".as("dst")).distinct()
-      }
+      val inEdges = transitions.select($"page".as("dst")).distinct()
       val isolated = dangliest.join(inEdges,
         dangliest("page") === inEdges("dst"), "left_anti")
       val distinctRanks =
@@ -67,6 +65,46 @@ class QualityOpsSpec extends SparkSpec {
       assert(distinctRanks.length <= 1,
         "isolated pages (no in- or out-edges) must share one exact rank")
     }
+  }
+
+  /** q_pagerank at sf0.001 collected, counted in Spark jobs: the graph
+    * pin, one pinned shuffle per round and the final sort.
+    */
+  private val PageRankJobBudget = 28
+
+  test("pagerank: one exchange per round, within its job budget") {
+    val q = graft.queries.GraphOps.queries("q_pagerank")
+    val (rows, p) = graft.runner.TickProbe.during(spark)(q(spark, sf).collect())
+    assert(rows.nonEmpty)
+    assert(p.jobs <= PageRankJobBudget, p.trail.mkString("\n"))
+  }
+
+  test("pagerank: rows equal the integer iteration run on the driver") {
+    val edges = transitions.groupBy("prev", "page").agg(count(lit(1)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    // a null page is a node of its own that no edge reaches
+    val pages = views.select("page").distinct().collect()
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Long])).toSeq
+    val outw = edges.groupMapReduce(_._1)(_._3)(_ + _)
+    val scale = 1000000000L
+    val n = pages.size.toLong
+    var rank = pages.map(_ -> scale / n).toMap
+    for (_ <- 1 to 10) {
+      val dsum = pages.filterNot(_.exists(outw.contains)).map(rank).sum
+      val contrib = edges.groupMapReduce(e => Option(e._2)) {
+        case (src, _, w) => (rank(Some(src)) * 85 * w) / (100 * outw(src))
+      }(_ + _)
+      val base = (15 * scale) / (100 * n) + (85 * dsum) / (100 * n)
+      rank = pages.map(p => p -> (base + contrib.getOrElse(p, 0L))).toMap
+    }
+    val expected = pages
+      .map(p => (p, rank(p), p.flatMap(outw.get).getOrElse(0L)))
+      .sortBy { case (p, r, _) => (-r, p) }
+    val got = graft.queries.GraphOps.queries("q_pagerank")(spark, sf).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1), r.getLong(2)))
+      .toSeq
+    assert(expected.size > 1)
+    assert(got == expected)
   }
 
   test("dsir: en-target scores point at en docs; selection is tie-inclusive top quarter") {

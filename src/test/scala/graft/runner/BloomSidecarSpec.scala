@@ -108,9 +108,12 @@ class BloomSidecarSpec extends SparkSpec {
   test("probe expressions with equal bloom bytes canonicalize equal (CSE-able)") {
     import org.apache.spark.util.sketch.BloomFilter
     import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftbridge
+    def bloom(keys: String*): BloomFilter = {
+      val b = BloomFilter.create(100, 0.01); keys.foreach(b.putString); b
+    }
     def bytes(keys: String*): Array[Byte] = {
-      val b = BloomFilter.create(100, 0.01); keys.foreach(b.putString)
-      val bos = new java.io.ByteArrayOutputStream(); b.writeTo(bos); bos.toByteArray
+      val bos = new java.io.ByteArrayOutputStream(); bloom(keys: _*).writeTo(bos); bos.toByteArray
     }
     val key = Literal("probe-key")
     val e1 = graft.functions.BloomMightContain(key, bytes("a", "b"))
@@ -123,6 +126,15 @@ class BloomSidecarSpec extends SparkSpec {
     assert(e1 == e2 && e1.semanticEquals(e2))
     assert(e1.hashCode == e2.hashCode)
     assert(e1 != e3)
+    // two probes built from one bloom through the Column API are equal,
+    // hash equal, and keep their hash; another key or bloom differs
+    val bf = bloom("a", "b")
+    val (eventId, userId) = (col("event_id"), col("user_id"))
+    def probe(k: org.apache.spark.sql.Column, b: BloomFilter) =
+      graftbridge.toExpression(graft.functions.BloomMightContain(k, b))
+    val (p1, p2) = (probe(eventId, bf), probe(eventId, bf))
+    assert((p1 ne p2) && p1 == p2 && p1.hashCode == p2.hashCode && p1.hashCode == p1.hashCode)
+    assert(p1 != probe(eventId, bloom("a", "c")) && p1 != probe(userId, bf))
   }
 
   test("a pre-sidecar partition is never silently claimed: untrusted adds skip it") {
