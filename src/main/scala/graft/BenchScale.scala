@@ -371,8 +371,7 @@ object BenchScale {
         ("bpe_tier_gate", graft.queries.TextOps.BpeRounds),
         ("bpe_tier_prod", graft.queries.TextOps.BpeRounds * 4))).map {
       case (name, rounds) =>
-        val words = graft.queries.TextOps.bpeWords(spark, sfDir)
-          .localCheckpoint(true)
+        val words = graft.runner.Pin(graft.queries.TextOps.bpeWords(spark, sfDir))
         val t0 = System.nanoTime()
         val (merges, _) = graft.queries.TextOps.bpeInduce(
           spark, words, rounds = rounds)

@@ -111,7 +111,11 @@ object GoldAnalytics {
   }
 
   /** ab_test_kpi_metric.sql — the stacked KPI card rows (pivot, scalar
-    * subqueries, format_number/format, array_agg/array_join).
+    * subqueries, format_number/format, array_agg/array_join). The cards
+    * are scalars over tiny frames, evaluated on the driver (the scalar-
+    * subquery pattern, J10): the per-segment winners are pinned with
+    * every winner-side scalar observed on the pin, and the window's users
+    * and period come from one aggregate — three SQL executions in all.
     */
   def abTestKpiMetric(g: Gold, conversionEvent: String = "click_ads",
                       dateFrom: String = "2025-08-08", dateTo: String = "2025-08-22",
@@ -122,7 +126,6 @@ object GoldAnalytics {
       .join(broadcast(g.dimEvent), col("event_dim_key") === g.dimEvent("event_sk"), "left")
       .where(col("ab_test_group").isin("treatment", "control") &&
         col("date").between(lit(dateFrom).cast("date"), lit(dateTo).cast("date")))
-      .cache()
     val segConv = inWindow.groupBy("user_segment", "ab_test_group")
       .agg((countDistinct(when(col("event_name") === conversionEvent, col("user_dim_key"))) * 100.0 /
         countDistinct(col("user_dim_key"))).as("ad_click_conv_rate"),
@@ -133,29 +136,27 @@ object GoldAnalytics {
       .agg(first(col("ad_click_conv_rate")))
       .withColumnRenamed("treatment", "treatment_rate")
       .withColumnRenamed("control", "control_rate")
-    val winners = pivoted.select(col("user_segment"),
-      when(abs(col("treatment_rate") - col("control_rate")) < 0.1, "tie")
+    val gap = abs(col("treatment_rate") - col("control_rate"))
+    def segmentsWon(winner: String) =
+      collect_list(when(col("winner") === winner, col("user_segment"))).as(winner)
+    val (_, w) = graft.runner.Pin.observed(
+      pivoted.withColumn("winner", when(gap < 0.1, "tie")
         .when(col("treatment_rate") > col("control_rate"), "Treatment")
-        .otherwise("Control").as("winner")).cache()
-
-    // KPI cards are a handful of scalar aggregates over tiny frames —
-    // driver-side evaluation here is the scalar-subquery pattern (J10),
-    // not a data-path collect.
-    val nSeg = winners.count()
-    val tWins = winners.where(col("winner") === "Treatment").count()
+        .otherwise("Control")),
+      count(lit(1)).as("nSeg"), count(when(col("winner") === "Treatment", 1)).as("tWins"),
+      count(when(gap >= 0.1, 1)).as("signif"), segmentsWon("Treatment"),
+      segmentsWon("Control"))
+    val (nSeg, tWins) = (w("nSeg").asInstanceOf[Long], w("tWins").asInstanceOf[Long])
     val winRate = if (nSeg > 0) tWins * 100.0 / nSeg else 0.0
-    val testUsers = inWindow.agg(countDistinct(col("user_dim_key"))).head().getLong(0)
+    val window = inWindow.agg(countDistinct(col("user_dim_key")),
+      min(col("date")).cast("string"), max(col("date")).cast("string")).head()
+    val testUsers = window.getLong(0)
     val totalUsers = g.dimUser.agg(countDistinct(col("user_sk"))).head().getLong(0)
-    val signif = pivoted
-      .where(abs(col("treatment_rate") - col("control_rate")) >= 0.1).count()
-    val periodRow = inWindow.agg(min(col("date")).cast("string"),
-      max(col("date")).cast("string")).head()
     val period =
-      if (periodRow.isNullAt(0)) "no data"
-      else s"${periodRow.getString(0)} ~ ${periodRow.getString(1)}"
+      if (window.isNullAt(1)) "no data"
+      else s"${window.getString(1)} ~ ${window.getString(2)}"
     def segList(winner: String): String = {
-      val segs = winners.where(col("winner") === winner)
-        .select("user_segment").collect().map(_.getString(0)).sorted
+      val segs = w(winner).asInstanceOf[scala.collection.Seq[String]].sorted
       if (segs.isEmpty) "none" else segs.mkString(", ")
     }
     Seq(
@@ -163,7 +164,7 @@ object GoldAnalytics {
       ("total_test_users",
         f"$testUsers%,d (${if (totalUsers > 0) testUsers * 100.0 / totalUsers else 0.0}%.1f%%)",
         "users"),
-      ("significant_segments", signif.toString, "count"),
+      ("significant_segments", w("signif").toString, "count"),
       ("test_period", period, ""),
       ("treatment_winning_segments", segList("Treatment"), ""),
       ("control_winning_segments", segList("Control"), "")

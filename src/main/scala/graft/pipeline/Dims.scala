@@ -97,7 +97,7 @@ object Dims {
     // materialize the sorted frame once: zipWithIndex runs TWO jobs (a
     // per-partition count pass, then the indexed map) and would otherwise
     // recompute the whole sort lineage for the second one
-    val sorted = sortedForSk(df, orderCols).localCheckpoint(true)
+    val sorted = graft.runner.Pin(sortedForSk(df, orderCols))
     val spark = df.sparkSession
     val indexed = sorted.rdd.zipWithIndex().map { case (row, i) =>
       org.apache.spark.sql.Row.fromSeq((i + 1L) +: row.toSeq)

@@ -159,7 +159,7 @@ object RefEventsAdapter {
       // the double JSON encode + double-nested parse runs one pass
       // instead of two (optimization guide §1.2). dropDuplicates still
       // drops half its input — the non-vacuity the flag exists for.
-      val parsed0 = BronzeToSilver.parse(bronze0).localCheckpoint(true)
+      val parsed0 = graft.runner.Pin(BronzeToSilver.parse(bronze0))
       parsed0.unionByName(parsed0).dropDuplicates("event_id")
     }
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
+import graft.runner.Pin
 
 /** The reference's analytics layer (the 21 Trino queries' operator shapes,
   * SURVEY.md §2.3–2.7) re-expressed as DataFrame programs over the driver
@@ -521,12 +522,11 @@ object Analytics {
       // user_id salt term (VERDICT r16 #4) caps files per date per append
       // at 2 while keeping a hot date off a single task at scale —
       // date-only clustering serialized each date through one task.
-      val ticked = ev.join(broadcast(tickFrame), Seq("event_date"))
+      val ticked = Pin(ev.join(broadcast(tickFrame), Seq("event_date"))
         .withColumn("tick", least(
           $"base_tick" + when($"event_id" % 10 === 0, 1).otherwise(0), lit(2)))
         .select($"event_date", $"event_type", $"user_id", $"value", $"tick")
-        .repartition($"event_date", pmod(xxhash64($"user_id"), lit(2)))
-        .localCheckpoint(true)
+        .repartition($"event_date", pmod(xxhash64($"user_id"), lit(2))))
       def agg(fact: DataFrame): DataFrame = fact
         .groupBy($"event_date", $"event_type")
         .agg(count(lit(1)).as("n_events"),
@@ -543,11 +543,10 @@ object Analytics {
       }
       // materialize before the temp warehouse disappears (partition
       // values come back DATE-inferred — cast to match the oracle)
-      val out = s.read.parquet(s"$base/rollup")
+      val out = Pin(s.read.parquet(s"$base/rollup")
         .select($"event_date".cast("string").as("event_date"),
           $"event_type", $"n_events", $"n_users", $"sum_value")
-        .orderBy($"event_date", $"event_type")
-        .localCheckpoint(true)
+        .orderBy($"event_date", $"event_type"))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       out
     },

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
-import graft.runner.MicroBatch.pinObserved
+import graft.runner.Pin
 
 /** Link-graph centrality over the event log — the quality signal the
   * big web-corpus pipelines (CommonCrawl filtering per Fetterman et
@@ -67,7 +67,7 @@ object GraphOps {
         .agg(count(lit(1)).as("w"))
       // every viewed page is a node; a page without out-edges sums no
       // weight (outw null) and collects an empty adjacency
-      val (graph, g) = pinObserved(
+      val (graph, g) = Pin.observed(
         views.select($"page").unionByName(
           edges.select($"src".as("page"), struct($"dst", $"w").as("e")), allowMissingColumns = true)
           .groupBy($"page")
@@ -80,7 +80,7 @@ object GraphOps {
         val base = (15 * Scale) / (100 * n) + (85 * dsum) / (100 * n)
         val msgs = ranks.select($"r", $"outw", explode($"adj").as("e"))
           .select($"e.dst".as("page"), expr("(r * 85 * e.w) div (100 * outw)").as("c"))
-        val (next, m) = pinObserved(
+        val (next, m) = Pin.observed(
           ranks.select($"page", $"outw", $"adj", lit(0L).as("c"))
             .unionByName(msgs, allowMissingColumns = true)
             .groupBy($"page")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
+import graft.runner.Pin
 
 /** Text-analysis / deduplication operators for a training-data pipeline
   * over the `documents` table: exact dedup, near-dup detection (exact
@@ -307,9 +308,8 @@ object TextOps {
       rounds: Int = BpeRounds, batch: Int = BpeBatch, cap: Int = BpeCap)
       : (Seq[(Long, String, String, Long)], DataFrame) = {
     import s.implicits._
-    var seqs = words
-      .select($"token", $"cnt", regexp_replace($"token", "(.)", "[$1]").as("seq"))
-      .localCheckpoint(true)
+    var seqs = Pin(words
+      .select($"token", $"cnt", regexp_replace($"token", "(.)", "[$1]").as("seq")))
     // Spark's sequence(1, n) DESCENDS for n < 1 — filter the
     // single-symbol rows before building pair indices (applies to the
     // initial build AND to delta recounts, where a fully-merged row's
@@ -321,9 +321,8 @@ object TextOps {
         "transform(sequence(1, size(syms) - 1), j -> " +
           "named_struct('a', element_at(syms, j), 'b', element_at(syms, j + 1)))")).as("p"))
       .select($"p.a".as("a"), $"p.b".as("b"), $"cnt".as("pc"))
-    var pairs = pairsOf(seqs)
-      .groupBy($"a", $"b").agg(sum($"pc").as("pc"))
-      .localCheckpoint(true)
+    var pairs = Pin(pairsOf(seqs)
+      .groupBy($"a", $"b").agg(sum($"pc").as("pc")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var i = 1
     var exhausted = false
@@ -347,19 +346,17 @@ object TextOps {
         // One materializing pass: unaffected rows copy through; affected
         // rows get the batch applied and keep their pre-round seq so the
         // delta recount below never rescans the old frame.
-        val next = seqs
+        val next = Pin(seqs
           .select($"token", $"cnt", anyHit.as("hit"),
             when(anyHit, applied).otherwise($"seq").as("seq"),
-            when(anyHit, $"seq").as("old_seq"))
-          .localCheckpoint(true)
+            when(anyHit, $"seq").as("old_seq")))
         val hits = next.where($"hit")
-        pairs = pairs
+        pairs = Pin(pairs
           .unionByName(pairsOf(
             hits.select($"old_seq".as("seq"), (-$"cnt").as("cnt"))))
           .unionByName(pairsOf(hits.select($"seq", $"cnt")))
           .groupBy($"a", $"b").agg(sum($"pc").as("pc"))
-          .where($"pc" =!= 0L)
-          .localCheckpoint(true)
+          .where($"pc" =!= 0L))
         seqs = next.select($"token", $"cnt", $"seq")
         i += 1
       }
@@ -472,40 +469,34 @@ object TextOps {
     * the square of the dup factor. This is the standard pipeline
     * composition: exact dedup BEFORE near-dup detection.
     *
-    * Returns the groups plus their COUNT, observed inside the
-    * checkpoint job itself (r17): the broadcast gates downstream
-    * (minhashRepPairs / expandGroupPairs) each re-counted the pinned
-    * frame — one extra serial driver job apiece in pipelines whose
-    * gate-scale cost is job-chain latency. `Dataset.observe` folds the
-    * count into the materialization action, same as the CC rounds'
-    * convergence metric.
+    * Returns the groups pinned, plus their count observed on the pin:
+    * the broadcast gates downstream (minhashRepPairs / expandGroupPairs)
+    * take it instead of counting the groups in a job of their own. The
+    * groups are set-cardinality (small) and read by 4+ downstream
+    * branches (signatures, both verify sides, both expansion sides,
+    * within-group pairs), so they are materialized once instead of
+    * re-tokenized per branch.
     */
-  private def tokenSetGroupsCounted(t: DataFrame, extraKeys: String*): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val g = t.groupBy((col("toks") +: extraKeys.map(col)): _*)
-      .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("members"))
-      .observe(obs, count(lit(1)).as("n"))
-      // set-cardinality (small), and read by 4+ downstream branches
-      // (signatures, both verify sides, both expansion sides, within-group
-      // pairs) — materialize once instead of re-tokenizing per branch
-      .localCheckpoint(true)
-    (g, obs.get("n").asInstanceOf[Long])
+  private def tokenSetGroupsCounted(t: DataFrame, extraKeys: String*): (DataFrame, Long) =
+    pinCounted(t.groupBy((col("toks") +: extraKeys.map(col)): _*)
+      .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("members")))
+
+  /** `df` pinned, with its row count observed in the pinning job. */
+  private def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val (pinned, m) = Pin.observed(df, count(lit(1)).as("n"))
+    (pinned, m("n").asInstanceOf[Long])
   }
 
   /** Expand verified representative pairs (rep_a, rep_b, jac) plus
     * within-group pairs (identical sets, jac = 1.0) into the full member
     * pair list with doc_a < doc_b. The member-list lookups broadcast only
-    * under [[BroadcastSetLimit]] groups (groups is checkpointed, so the
-    * count gate is one cheap scan); past it they shuffle on rep id —
+    * under [[BroadcastSetLimit]] groups (`nGroups`, observed where the
+    * groups were pinned); past it they shuffle on rep id —
     * set-cardinality ≈ corpus cardinality on real corpora, where a
     * broadcast would OOM.
     */
-  private[queries] def expandGroupPairs(groups: DataFrame, repPairs: DataFrame,
-                                        broadcastLimit: Long = BroadcastSetLimit,
-                                        nGroupsKnown: Long = -1L): DataFrame = {
-    // callers that built `groups` via tokenSetGroupsCounted pass the
-    // observed count; -1 falls back to a count job (cheap: pinned frame)
-    val nGroups = if (nGroupsKnown >= 0L) nGroupsKnown else groups.count()
+  private[queries] def expandGroupPairs(groups: DataFrame, repPairs: DataFrame, nGroups: Long,
+                                        broadcastLimit: Long = BroadcastSetLimit): DataFrame = {
     def gated(df: DataFrame) = gateBroadcast(df, nGroups, broadcastLimit)
     val cross = repPairs
       .join(gated(groups.select(col("rep").as("rep_a"), col("members").as("ma"))), "rep_a")
@@ -521,7 +512,7 @@ object TextOps {
     // materialize before the caller's presentation orderBy: a global sort
     // range-partitions by SAMPLING its input, which would re-run the whole
     // candidate+verify+expansion lineage a second time
-    cross.unionByName(within).localCheckpoint(true)
+    Pin(cross.unionByName(within))
   }
 
   /** Candidate near-dup pairs via LSH banding over minhash signatures. */
@@ -560,8 +551,7 @@ object TextOps {
       .select("band", "bh")
     // (docs × bands)-cardinality, narrow, read by both sides of the pair
     // self-join — materialize so the signature computation runs once
-    val counted = exploded.join(broadcast(overCap), Seq("band", "bh"), "left_anti")
-      .localCheckpoint(true)
+    val counted = Pin(exploded.join(broadcast(overCap), Seq("band", "bh"), "left_anti"))
     val a = counted.alias("a")
     val b = counted.alias("b")
     a.join(b,
@@ -631,26 +621,25 @@ object TextOps {
       .withColumn("jac", col("inter") * 1.0 / (col("la") + col("lb") - col("inter")))
       .where(col("jac") >= 0.9)
       .select(col("a.doc_id").as("rep_a"), col("b.doc_id").as("rep_b"), col("jac"))
-    expandGroupPairs(groups, repPairs, nGroupsKnown = nGroups)
+    expandGroupPairs(groups, repPairs, nGroups)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** LSH-verified near-dup pairs between token-set group representatives:
     * banding over minhash signatures → bucket join → exact-Jaccard verify
     * at ≥ 0.9. The rep/token lookup tables broadcast only under
-    * [[BroadcastSetLimit]] reps (the verify joins then stay map-side);
+    * [[BroadcastSetLimit]] reps (`nGroups`, observed where the groups
+    * were pinned; the verify joins then stay map-side);
     * past it they run as shuffled equi-joins on doc_a/doc_b — on real
     * corpora set-cardinality ≈ corpus cardinality, so the gate is what
     * keeps this path alive at 100 TB. Shared by q_minhash_lsh (expands to
     * member pairs) and q_dup_clusters (connected components over the rep
     * graph).
     */
-  private[queries] def minhashRepPairs(groups: DataFrame,
-                                       broadcastLimit: Long = BroadcastSetLimit,
-                                       nGroupsKnown: Long = -1L): DataFrame = {
+  private[queries] def minhashRepPairs(groups: DataFrame, nGroups: Long,
+                                       broadcastLimit: Long = BroadcastSetLimit): DataFrame = {
     val reps = groups.select(col("rep").as("doc_id"), col("toks"))
-    val nReps = if (nGroupsKnown >= 0L) nGroupsKnown else groups.count()
-    def gated(df: DataFrame) = gateBroadcast(df, nReps, broadcastLimit)
+    def gated(df: DataFrame) = gateBroadcast(df, nGroups, broadcastLimit)
     val cands = lshCandidates(minhashSignaturesFromHashedToks(reps))
     cands
       .join(gated(reps.select(col("doc_id").as("doc_a"), col("toks").as("toks_a"))), "doc_a")
@@ -674,22 +663,18 @@ object TextOps {
     * alternating large-star/small-star algorithm (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond"), with simpler
     * bookkeeping because labels here only ever shrink toward the
-    * component minimum. Labels are eagerly localCheckpoint'd per round
-    * (the iterated plan would otherwise double in depth each pass);
-    * convergence detection is FOLDED INTO that checkpoint action via
-    * `Dataset.observe` — the round's aggregation also counts labels that
-    * strictly shrank, so each round runs exactly one job (the r6 shape
-    * ran a separate label-sum action per round on top of it).
+    * component minimum. Labels are pinned per round (the iterated plan
+    * would otherwise double in depth each pass); convergence detection
+    * is a metric observed on that pin — the round's aggregation also
+    * counts labels that strictly shrank, so each round runs exactly one
+    * job (the r6 shape ran a separate label-sum action per round on top
+    * of it).
     * Returns (id, component) for every node appearing in `edges`.
     */
   private[queries] def connectedComponents(edges: DataFrame): DataFrame = {
-    // edge count observed inside the checkpoint job (r17) — it was a
-    // separate count() job over the pinned frame
-    val obsE = org.apache.spark.sql.Observation()
-    val sym0 = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .observe(obsE, count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    // the edge count is observed on the pin
+    val (sym0, nEdges) = pinCounted(edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
     // Size the round frames' partitioning by edge count: after the
     // exact-dedup collapse a dup graph is usually tiny, and at 32
     // partitions every round pays ~32 near-empty tasks per stage — pure
@@ -697,7 +682,6 @@ object TextOps {
     // a 7.5 s query on a 1.5k-node graph). 500k (long,long) rows ≈ 8 MB
     // per task; graphs past parallelism × that keep the session's
     // partitioning unchanged.
-    val nEdges = obsE.get("n").asInstanceOf[Long]
     val parts = math.max(1L, math.min(
       sym0.rdd.getNumPartitions.toLong, nEdges / 500000L + 1)).toInt
     val sym =
@@ -706,20 +690,17 @@ object TextOps {
     // the init pays anyway: label(id) = min(id, min direct neighbor) —
     // exactly what round 1 over identity labels would produce, one full
     // round (join + checkpoint + convergence roundtrip) cheaper. Node
-    // count (fixed across rounds) is observed inside the same init job
-    // (r17) instead of a follow-up count().
-    val obsN = org.apache.spark.sql.Observation()
-    var labels = sym.groupBy(col("src").as("id"))
+    // count (fixed across rounds) is observed on the init pin.
+    val (init, nNodes) = pinCounted(sym.groupBy(col("src").as("id"))
       .agg(min(least(col("src"), col("dst"))).as("component"))
-      .observe(obsN, count(lit(1)).as("n"))
-      .coalesce(parts)
-      .localCheckpoint(true)
+      .coalesce(parts))
+    var labels = init
     // When the dup graph is small enough (≪ executor memory — 1M
     // (long,long) rows ≈ 16 MB), hint the label side broadcast so every
     // round's join is map-side over the checkpointed edges: one shuffle
     // per round (the groupBy) instead of three. Larger graphs keep the
     // shuffled join — same plan shape, no driver risk.
-    val broadcastLabels = obsN.get("n").asInstanceOf[Long] <= 1000000
+    val broadcastLabels = nNodes <= 1000000
     // One fused join per round: the static propagation edges plus the
     // current label graph's pointer-jump edges (component(id) → id, so
     // id inherits component(component(id)) — the doubling shortcut that
@@ -728,30 +709,22 @@ object TextOps {
     // along both edge kinds resolve through the SAME labels join. Each
     // id's incumbent label rides tagged through the groupBy so the round
     // emits both the new label (min over incumbent + messages — labels
-    // only ever shrink) and the incumbent it replaces; observe() then
-    // counts the strict shrinks inside the job that materializes the
-    // round — no separate convergence action.
-    def propagate(cur: DataFrame, idx: Int, withObs: Boolean)
-        : (DataFrame, Option[org.apache.spark.sql.Observation]) = {
+    // only ever shrink) and the incumbent it replaces (`prev`); the
+    // round's pin then counts the strict shrinks — no separate
+    // convergence action.
+    def propagate(cur: DataFrame): DataFrame = {
       val edges2 = sym.unionByName(
         cur.select(col("component").as("src"), col("id").as("dst")))
       val lab = if (broadcastLabels) broadcast(cur) else cur
       val msgs = edges2.join(lab, edges2("src") === lab("id"))
         .select(col("dst").as("id"), col("component"), lit(false).as("is_prev"))
-      val merged = cur.select(col("id"), col("component"), lit(true).as("is_prev"))
+      cur.select(col("id"), col("component"), lit(true).as("is_prev"))
         .unionByName(msgs)
         .groupBy(col("id"))
         .agg(min(col("component")).as("component"),
           min(when(col("is_prev"), col("component"))).as("prev"))
-      if (!withObs) (merged.select(col("id"), col("component")), None)
-      else {
-        val obs = org.apache.spark.sql.Observation(s"cc_round_$idx")
-        (merged.observe(obs, coalesce(
-            sum(when(col("component") < col("prev"), 1L).otherwise(0L)),
-            lit(0L)).as("changed"))
-          .select(col("id"), col("component")), Some(obs))
-      }
     }
+    val labelCols = Seq(col("id"), col("component"))
     // Tiny graphs (the post-exact-dedup regime these queries live in)
     // FUSE two propagation rounds per materialized job (r17): round A
     // stays lazy inside round B's plan, halving the checkpoint-job count
@@ -766,16 +739,14 @@ object TextOps {
     // didn't has already converged, and a converged extra A-round emits
     // the identical labels.
     val fuseRounds = nEdges <= 500000L
-    var round = 0
     var changed = -1L
     while (changed != 0L) {
-      val base =
-        if (fuseRounds) propagate(labels, round, withObs = false)._1
-        else labels
-      val (next, obsOpt) = propagate(base, round + 1, withObs = true)
-      labels = next.coalesce(parts).localCheckpoint(true)
-      changed = obsOpt.get.get("changed").asInstanceOf[Long]
-      round += 2
+      val base = if (fuseRounds) propagate(labels).select(labelCols: _*) else labels
+      val (next, m) = Pin.observed(propagate(base).coalesce(parts),
+        coalesce(sum(when(col("component") < col("prev"), 1L).otherwise(0L)), lit(0L))
+          .as("changed"))
+      labels = next.select(labelCols: _*)
+      changed = m("changed").asInstanceOf[Long]
     }
     labels
   }
@@ -863,12 +834,11 @@ object TextOps {
       // them concurrently (guide §2.6) — this query is a serial chain of
       // ~10 small jobs whose scheduler latency dominates at gate scale,
       // and every pairwise overlap below removes one link of it
-      val Seq(gIn, gEx) = graft.runner.Par.all(
-        () => tIn.groupBy($"toks")
-          .agg(min($"doc_id").as("in_id"), collect_list($"doc_id").as("members"))
-          .localCheckpoint(true), // read by banding + verify + member expansion
-        () => tEx.groupBy($"toks").agg(min($"doc_id").as("ex_id"))
-          .localCheckpoint(true))
+      // each pinned with its count, which gates the verify broadcasts below
+      val Seq((gIn, nIn), (gEx, nEx)) = graft.runner.Par.all(
+        () => pinCounted(tIn.groupBy($"toks") // read by banding + verify + member expansion
+          .agg(min($"doc_id").as("in_id"), collect_list($"doc_id").as("members"))),
+        () => pinCounted(tEx.groupBy($"toks").agg(min($"doc_id").as("ex_id"))))
       def banding(perms: Int) = {
         // (reps × bands)-cardinality band streams, materialized once: the
         // over-cap aggregate, the escalation probe, and the candidate
@@ -877,24 +847,22 @@ object TextOps {
         // tripled the escalated path's cost).
         // independent band builds (one per side) — concurrent, §2.6
         val Seq(bIn, bEx) = graft.runner.Par.all(
-          () => bandBuckets(minhashSignaturesFromHashedToks(
+          () => Pin(bandBuckets(minhashSignaturesFromHashedToks(
               gIn.select($"in_id".as("doc_id"), $"toks"), perms), perms)
-            .select($"doc_id".as("in_id"), $"band", $"bh")
-            .localCheckpoint(true),
-          () => bandBuckets(minhashSignaturesFromHashedToks(
+            .select($"doc_id".as("in_id"), $"band", $"bh")),
+          () => Pin(bandBuckets(minhashSignaturesFromHashedToks(
               gEx.select($"ex_id".as("doc_id"), $"toks"), perms), perms)
-            .select($"doc_id".as("ex_id"), $"band", $"bh")
-            .localCheckpoint(true))
+            .select($"doc_id".as("ex_id"), $"band", $"bh")))
         // same degenerate-bucket cap as the symmetric path, over both
-        // sides; checkpointed because FOUR consumers read it (emptiness
-        // probe, both cohort extractions, the sub-cap anti-joins) and
-        // each would otherwise re-run the union-aggregate shuffle
-        val overCap = bIn.select($"band", $"bh")
+        // sides; pinned because three consumers read it (both cohort
+        // extractions, the sub-cap anti-joins) and each would otherwise
+        // re-run the union-aggregate shuffle. Its count is the emptiness
+        // probe.
+        val (overCap, nOverCap) = pinCounted(bIn.select($"band", $"bh")
           .unionByName(bEx.select($"band", $"bh"))
           .groupBy($"band", $"bh").agg(count(lit(1)).as("n"))
-          .where($"n" > MaxBucket).select($"band", $"bh")
-          .localCheckpoint(true)
-        (bIn, bEx, overCap)
+          .where($"n" > MaxBucket).select($"band", $"bh"))
+        (bIn, bEx, overCap, nOverCap)
       }
       // Adaptive banding fidelity: an over-cap bucket is DROPPED from
       // candidate generation, so on a degenerate vocabulary (2-row band
@@ -922,7 +890,7 @@ object TextOps {
       //
       // Healthy corpora have no over-cap bucket and pay neither.
       val cands = {
-        val (bIn, bEx, overCap) = banding(NumPerms)
+        val (bIn, bEx, overCap, nOverCap) = banding(NumPerms)
         // dedup=false leaves band-duplicate pairs in the stream: the
         // exact-Jaccard verify is idempotent and, with the merge-walk
         // [[graft.functions.SortedIntersectSize]] kernel, re-scoring a
@@ -938,22 +906,16 @@ object TextOps {
             .select($"in_id", $"ex_id")
           if (dedup) pairs.dropDuplicates() else pairs
         }
-        if (overCap.isEmpty) subCapCands(bIn, bEx, overCap, dedup = true)
+        if (nOverCap == 0L) subCapCands(bIn, bEx, overCap, dedup = true)
         else {
           val oc = broadcast(overCap)
-          // per-side cohort extraction + count: two independent
-          // checkpoint→count chains, submitted concurrently (§2.6)
+          // per-side cohort extraction, each pinned with its count: two
+          // independent pins, submitted concurrently (§2.6)
           val Seq((cohIn, nCI), (cohEx, nCE)) = graft.runner.Par.all(
-            () => {
-              val c = bIn.join(oc, Seq("band", "bh"), "left_semi")
-                .select($"in_id").distinct().localCheckpoint(true)
-              (c, c.count())
-            },
-            () => {
-              val c = bEx.join(oc, Seq("band", "bh"), "left_semi")
-                .select($"ex_id").distinct().localCheckpoint(true)
-              (c, c.count())
-            })
+            () => pinCounted(bIn.join(oc, Seq("band", "bh"), "left_semi")
+              .select($"in_id").distinct()),
+            () => pinCounted(bEx.join(oc, Seq("band", "bh"), "left_semi")
+              .select($"ex_id").distinct()))
           // overflow-safe product bound (counts are driver Longs)
           if (nCI == 0 || nCE <= DirectVerifyPairBudget / nCI) {
             // cohort pairs are unique by construction — no pair-level
@@ -962,7 +924,7 @@ object TextOps {
               .unionByName(cohIn.crossJoin(
                 gateBroadcast(cohEx, nCE, BroadcastSetLimit)))
           } else {
-            val (eIn, eEx, eOc) = banding(EscalatedNumPerms)
+            val (eIn, eEx, eOc, _) = banding(EscalatedNumPerms)
             subCapCands(eIn, eEx, eOc, dedup = true)
           }
         }
@@ -973,10 +935,9 @@ object TextOps {
       // symmetric path's within-group pairs.
       val sameSet = gIn.join(gEx.select($"toks"), Seq("toks"), "left_semi")
         .select($"in_id")
-      // verify lookups: broadcast only under the count gate (gIn/gEx are
-      // checkpointed, so the counts are cheap scans); a real corpus where
-      // set-cardinality ≈ corpus cardinality shuffles on the rep ids
-      val Seq(nIn, nEx) = graft.runner.Par.all(() => gIn.count(), () => gEx.count())
+      // verify lookups: broadcast only under the count gate (the counts
+      // observed on the gIn/gEx pins); a real corpus where set-cardinality
+      // ≈ corpus cardinality shuffles on the rep ids
       val dupSets = cands
         .join(gateBroadcast(gIn.select($"in_id", $"toks".as("ti")),
           nIn, BroadcastSetLimit), "in_id")
@@ -1138,8 +1099,7 @@ object TextOps {
       val docs = load(s, dir, "documents")
       val t = docs.select($"doc_id", hashedToks($"text").as("toks"))
       val (groups, nGroups) = tokenSetGroupsCounted(t)
-      expandGroupPairs(groups, minhashRepPairs(groups, nGroupsKnown = nGroups),
-          nGroupsKnown = nGroups)
+      expandGroupPairs(groups, minhashRepPairs(groups, nGroups), nGroups)
         .orderBy($"doc_a", $"doc_b")
     },
 
@@ -1163,15 +1123,14 @@ object TextOps {
       val t = docs.select($"doc_id", hashedToks($"text").as("toks"))
       val (groups, nGroups) = tokenSetGroupsCounted(t)
       val comp = connectedComponents(
-        minhashRepPairs(groups, nGroupsKnown = nGroups)
+        minhashRepPairs(groups, nGroups)
           .select($"rep_a".as("src"), $"rep_b".as("dst")))
       // members inherit the rep's component; reps with no near-dup edge
       // (and their exact-dup members) form their own cluster
-      val asg = groups
+      val asg = Pin(groups // read twice: size agg + final join
         .join(comp, groups("rep") === comp("id"), "left")
         .select(explode($"members").as("doc_id"),
-          coalesce($"component", $"rep").as("cluster_rep"))
-        .localCheckpoint(true) // read twice: size agg + final join
+          coalesce($"component", $"rep").as("cluster_rep")))
       val sizes = asg.groupBy($"cluster_rep").agg(count(lit(1)).as("cluster_size"))
       asg.join(sizes, "cluster_rep")
         .select($"doc_id", $"cluster_rep", $"cluster_size",
@@ -1287,14 +1246,13 @@ object TextOps {
     // order; every stage is a narrow filter or a keyed aggregate.
     "q_data_funnel" -> { (s, dir) =>
       import s.implicits._
-      val d = load(s, dir, "documents")
+      val d = Pin(load(s, dir, "documents") // four stage aggregates read this narrow frame
         .select($"doc_id", split($"text", " ").as("t"))
         .select($"doc_id",
           size($"t").cast("long").as("n_tokens"),
           size(array_distinct($"t")).cast("long").as("n_uniq"),
           md5(array_join(array_sort(array_distinct($"t")), " ")).as("set_key"),
-          substring(md5(concat(lit("graft-split-v1:"), $"doc_id".cast("string"))), 1, 1).as("h"))
-        .localCheckpoint(true) // four stage aggregates read this narrow frame
+          substring(md5(concat(lit("graft-split-v1:"), $"doc_id".cast("string"))), 1, 1).as("h")))
       val quality = d.where($"n_tokens" >= 30 && $"n_uniq" * 4 >= $"n_tokens")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("set_key").orderBy("doc_id")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
+import graft.runner.Pin
 
 /** Similarity search over the `embeddings` table (64-dim float vectors,
   * unit-normalized by the generator).
@@ -206,15 +207,14 @@ object VectorOps {
       .select(col("vec_id").cast("int").as("cell"), col("v").as("cv"))
     for (_ <- 0 until 2) {
       val assigned = assignCells(cached, centroids)
-      centroids = assigned
+      centroids = Pin(assigned
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cell"), col("pos")).agg(avg(col("x")).as("mx"))
         .groupBy(col("cell"))
         .agg(array_sort(collect_list(struct(col("pos"), col("mx")))).as("pairs"))
-        .select(col("cell"), transform(col("pairs"), p => p.getField("mx")).as("cv"))
         // k rows — materialize so the next Lloyd pass (and the final
         // assignment) doesn't re-execute this pass's whole lineage
-        .localCheckpoint(true)
+        .select(col("cell"), transform(col("pairs"), p => p.getField("mx")).as("cv")))
     }
     centroids
   }
@@ -397,14 +397,13 @@ object VectorOps {
       .select(col("m"), col("vec_id").cast("int").as("cell"), col("sv").as("cv"))
     for (_ <- 0 until 2) {
       val assigned = pqAssign(sub, cents)
-      cents = assigned
+      cents = Pin(assigned
         .select(col("m"), col("cell"), posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy(col("m"), col("cell"), col("pos")).agg(avg(col("x")).as("mx"))
         .groupBy(col("m"), col("cell"))
         .agg(array_sort(collect_list(struct(col("pos"), col("mx")))).as("pairs"))
         .select(col("m"), col("cell"),
-          transform(col("pairs"), p => p.getField("mx")).as("cv"))
-        .localCheckpoint(true)
+          transform(col("pairs"), p => p.getField("mx")).as("cv")))
     }
     cents
   }
@@ -553,7 +552,7 @@ object VectorOps {
     // scratch round-trip instead (columnar, streamed, off-heap — how a
     // production job materializes a stage), deleted by the caller via
     // IvfPqIndex.scratchDir. Tiers at ≤1M keep the faster in-memory
-    // localCheckpoint (measured: parquet pins cost the 100k tier +8 s).
+    // [[Pin]] (measured: parquet pins cost the 100k tier +8 s).
     val scratch: Option[String] =
       if (materialize && nHint > 4000000L)
         Some(java.nio.file.Files.createTempDirectory("graft_ivfpq_pin").toString)
@@ -572,7 +571,7 @@ object VectorOps {
           // granularity costs nothing here.
           df.write.option("parquet.block.size", 16L * 1024 * 1024).parquet(p)
           df.sparkSession.read.parquet(p)
-        case None => df.localCheckpoint(true)
+        case None => Pin(df)
       }
     val assigned = stage("corpus_assign") {
       // big tiers route through the two-level assignment (superK dots +
@@ -779,8 +778,8 @@ object VectorOps {
     var scan: DataFrame = null
     val querySec = sec {
       val (a, sc) = ivfPqQuery(emb, idx, k, nprobe, pred, rerank)
-      ann = a.localCheckpoint(true)
-      scan = sc.localCheckpoint(true)
+      ann = Pin(a)
+      scan = Pin(sc)
     }
     val bf = topK(
       emb.join(broadcast(querySetOf(emb, pred)),
@@ -1043,10 +1042,9 @@ object VectorOps {
         .where(graft.functions.CosineSimilarity($"va", $"vb") >= 0.3)
         .select($"id_a".as("src"), $"id_b".as("dst"))
       val comp = TextOps.connectedComponents(pairs)
-      val asg = emb.select($"vec_id")
+      val asg = Pin(emb.select($"vec_id") // read twice: size agg + final join
         .join(comp, emb("vec_id") === comp("id"), "left")
-        .select($"vec_id", coalesce($"component", $"vec_id").as("cluster_rep"))
-        .localCheckpoint(true) // read twice: size agg + final join
+        .select($"vec_id", coalesce($"component", $"vec_id").as("cluster_rep")))
       val sizes = asg.groupBy($"cluster_rep").agg(count(lit(1)).as("cluster_size"))
       asg.join(sizes, "cluster_rep")
         .select($"vec_id", $"cluster_rep", $"cluster_size",

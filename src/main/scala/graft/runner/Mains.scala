@@ -217,11 +217,11 @@ object ReplayMain {
       val until = LocalDateTime.parse(ticksStr.stripPrefix("catchup:"),
         DateTimeFormatter.ISO_LOCAL_DATE_TIME)
       mb.catchUp(start, until).zipWithIndex.foreach { case ((b, s, f), i) =>
-        println(s"catchup tick $i: bronze=$b silver=$s fact=$f")
+        println(s"catchup tick $i: bronze=$b silver_added=$s fact_added=$f")
       }
     } else {
       mb.runRange(start, ticksStr.toInt).zipWithIndex.foreach { case ((b, s, f), i) =>
-        println(s"tick $i (${start.plusMinutes(15L * i)}): bronze=$b silver=$s fact=$f")
+        println(s"tick $i (${start.plusMinutes(15L * i)}): bronze=$b silver_added=$s fact_added=$f")
       }
     }
     spark.stop()

@@ -31,9 +31,8 @@ import graft.pipeline._
   *      verified against the stored ids;
   *   4. silver bloom add + append, concurrently with gold's todo pin;
   *   5. the rest of gold ([[goldFromSilverBatch]]) on this batch's rows:
-  *      no dim upsert unless a row misses a dim;
-  *   6. the silver and fact row counts of the affected partitions, run
-  *      concurrently (bronze's count came from step 1).
+  *      no dim upsert unless a row misses a dim, and the fact append, its
+  *      row count observed on the write.
   * Every read uses a schema the tick already knows, so no read runs a
   * schema-inference job; MicroBatchSpec pins the tick's job budget.
   */
@@ -161,7 +160,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     * sink stays byte-identical) unless the sink does not exist yet.
     */
   private def upsertDim(d: TickDim, rows: DataFrame): (DataFrame, Long) = {
-    val (appended, m) = pinObserved(
+    val (appended, m) = Pin.observed(
       Dims.dimUpsert(d.candidates(rows), readOrEmpty(d.path, d.schema),
         d.join.naturals, d.join.sk, d.attrs),
       count(lit(1)).as("n"))
@@ -216,15 +215,15 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       // is exact when nothing probes positive — when `metrics` are kept.
       val probe = graft.functions.BloomMightContain.any(
         col("event_id"), sidecar.loadMerged(partDirs))
-      val (flagged, m) = pinObserved(batch.withColumn(Present, probe),
+      val (flagged, m) = Pin.observed(batch.withColumn(Present, probe),
         count(when(col(Present), 1)).as("__pos") +: metrics: _*)
       if (m("__pos") == 0L) (flagged, m)
       else {
         val pos = flagged.where(col(Present)).drop(Present)
         val present = existingIds.join(broadcast(pos.select("event_id")), Seq("event_id"), "left_semi")
-        pinObserved(mark(flagged.drop(Present), broadcast(present)), metrics: _*)
+        Pin.observed(mark(flagged.drop(Present), broadcast(present)), metrics: _*)
       }
-    } else pinObserved(mark(batch, existingIds.join(batch.select("event_id"),
+    } else Pin.observed(mark(batch, existingIds.join(batch.select("event_id"),
       Seq("event_id"), "left_semi")), metrics: _*)
   }
 
@@ -253,9 +252,10 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       col("year") === y && col("month") === m && col("day") === d
     }.reduce(_ || _)
 
-  /** One 15-minute tick. Returns (bronzeRows, silverRows, factRows): the
-    * batch's bronze rows, and the silver and fact rows of the partitions
-    * the batch touched, after the tick.
+  /** One 15-minute tick. Returns the rows it added, each counted by the
+    * job that wrote them: (bronze lines, silver rows appended, fact rows
+    * appended). A fully redelivered batch adds no silver or fact row; J4's
+    * double match can append more fact rows than the batch had new ones.
     */
   def runInterval(start: LocalDateTime): (Long, Long, Long) = {
     val path = StagingToBronze.stagingPathFor(stagingBase, start)
@@ -316,18 +316,18 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     // affected (year, month, day) set (1-2 dates) is observed on the pin
     // and filters the stored-id reads STATICALLY (PartitionFilters).
     val (silverNew, affectedKeys, parsedN) = stage("silver_parse") {
-      val (pinned, m) = pinObserved(BronzeToSilver.transform(bronzeBatch),
+      val (pinned, m) = Pin.observed(BronzeToSilver.transform(bronzeBatch),
         count(lit(1)).as("n"), AffectedKeys)
       (pinned, keysOf(m), m("n").asInstanceOf[Long])
     }
-    val affectedFilter = affectedFilterOf(affectedKeys)
 
     // Mark-then-APPEND, not merge-overwrite: same convergence as a
     // union+dropDuplicates+overwrite, but O(batch rows), not a rewrite of
     // the day partition up to 96×/day.
     val (marked, heldN) = stage("silver_append") {
       val (marked, m) = markExisting(silverNew,
-        readOrEmpty(silverPath, silverNew.schema).where(affectedFilter).select("event_id"),
+        readOrEmpty(silverPath, silverNew.schema).where(affectedFilterOf(affectedKeys))
+          .select("event_id"),
         silverBloom, silverPartDirs(affectedKeys), count(when(col(Present), 1)).as("held"))
       (marked, m("held").asInstanceOf[Long])
     }
@@ -347,18 +347,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       },
       goldTodo(if (heldN == 0L) marked.drop(Present)
                else marked.withColumnRenamed(Present, Stored), affectedKeys))
-    appendGold(todo, affectedKeys)
-
-    // the two read-back counts are independent, so they run concurrently
-    stage("counts") {
-      val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
-      val Seq(silverN, factN) = Par.all(
-        () => readOrEmpty(silverPath, silverNew.schema).where(affectedFilter).count(),
-        () => stage("gold_count") {
-          readOrEmpty(factPath, FactIdSchema).where(factFilterOf(factDates)).count()
-        })
-      (bronzeN, silverN, factN)
-    }
+    (bronzeN, parsedN - heldN, appendGold(todo, affectedKeys))
   }
 
   /** The gold stage for one batch of silver rows: append-only dim
@@ -405,7 +394,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       val missing = marked.where(!col(Present)).drop(Present)
       if (!heals) (missing, m)
       else if (m("heal") == 0L) (missing.drop(Stored), m)
-      else pinObserved(missing.where(!col(Stored)).drop(Stored)
+      else Pin.observed(missing.where(!col(Stored)).drop(Stored)
           .unionByName(joinStoredDims(readOrEmpty(silverPath, silverBatch.drop(Stored).schema)
             .where(affectedFilterOf(affectedKeys))
             .join(broadcast(missing.where(col(Stored)).select("event_id")),
@@ -414,16 +403,18 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     }
   }
 
-  /** Gold's dims, fact and rollup for a todo with counts `m`. */
+  /** Gold's dims, fact and rollup for a todo with counts `m`; returns the
+    * fact rows appended.
+    */
   private def appendGold(todoAndCounts: (DataFrame, Map[String, Any]),
-                         affectedKeys: Seq[(Int, Int, Int)]): Unit = {
+                         affectedKeys: Seq[(Int, Int, Int)]): Long = {
     val (todo, m) = todoAndCounts
     val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
 
     // Only rows that still NEED a fact row: a full re-run writes nothing.
     // A row whose fact exists was processed by a completed tick, so its
     // dim keys are present too (facts are written after dims).
-    if (m("todo") != 0L) {
+    val factN = if (m("todo") == 0L) 0L else {
       // The dims' upserts and the fact bloom add overlap (guide §2.6);
       // the fact append waits for both — dims and sidecar BEFORE data.
       val (rows, _) = Par.both(
@@ -437,9 +428,12 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       // append-only; created_at = kst_timestamp, so the affected fact
       // dates ARE the affected silver keys
       stage("gold_fact") {
+        val obs = Observation()
         SilverToGold.factOf(rows)
           .withColumn("created_date", to_date(col("created_at")))
+          .observe(obs, count(lit(1)).as("n"))
           .write.mode("append").partitionBy("created_date").parquet(factPath)
+        obs.get("n").asInstanceOf[Long]
       }
     }
     // Maintained daily rollup: only the AFFECTED dates are recomputed and
@@ -448,6 +442,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       IncrementalRollup.update(spark, factPath, rollupDailyPath,
         "created_date", factDates.map(_.toString), dailyRollupAgg)
     }
+    factN
   }
 
   /** Partition-local daily KPI rollup over the fact — grouping keys
@@ -629,18 +624,6 @@ object MicroBatch {
 
   private[runner] val FactIdSchema = StructType(Seq(
     StructField("event_id", StringType), StructField("created_date", DateType)))
-
-  /** Materialize `df` (localCheckpoint) and return it with the values of
-    * `metrics`, aggregated in the same job by `Dataset.observe`: a count
-    * or an emptiness probe of a pinned frame costs no job of its own.
-    */
-  private[graft] def pinObserved(df: DataFrame, metrics: Column*): (DataFrame, Map[String, Any]) =
-    if (metrics.isEmpty) (df.localCheckpoint(true), Map.empty)
-    else {
-      val obs = Observation()
-      val pinned = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true)
-      (pinned, obs.get)
-    }
 
   /** The distinct (year, month, day) partition keys of silver rows, as an
     * observable aggregate (rows without a parsed date have no key).

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.{BronzeToSilver, StagingToBronze}
-import graft.runner.MicroBatch
+import graft.runner.{MicroBatch, Pin}
 
 /** Structured-Streaming twin of the micro-batch ingest (SURVEY.md §2.9):
   * file-source `readStream` over the staging directory, the same pure
@@ -92,7 +92,7 @@ object StreamingIngest {
         // pin the streamed micro-batch before the multi-action gold stage
         // (the fact probe, each dim upsert and the fact build read it);
         // its size and affected partition keys ride the pinning job
-        val (pinned, m) = MicroBatch.pinObserved(batch,
+        val (pinned, m) = Pin.observed(batch,
           count(lit(1)).as("n"), MicroBatch.AffectedKeys)
         if (m("n") != 0L) mb.goldFromSilverBatch(pinned, MicroBatch.keysOf(m))
       }

@@ -1,11 +1,10 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.pipeline.{Dims, RefEventsAdapter, Warehouse}
-import graft.runner.Bulk
+import graft.runner.{Bulk, TickProbe}
 
 /** Runs the full 21-query analytics layer over a gold warehouse built by
   * the bulk pipeline from sf0.001 events, with shape + invariant checks
@@ -59,8 +58,13 @@ class GoldAnalyticsSpec extends SparkSpec {
   }
 
   test("ab_test_kpi_metric: six KPI cards with populated values") {
-    val k = GoldAnalytics.abTestKpiMetric(gold, conversionEvent = Convert,
-      dateFrom = "2024-01-01", dateTo = "2024-12-31", minUsers = 2).cache()
+    val g = gold // built outside the probe
+    val (k, p) = TickProbe.during(spark)(GoldAnalytics.abTestKpiMetric(g,
+      conversionEvent = Convert, dateFrom = "2024-01-01", dateTo = "2024-12-31", minUsers = 2))
+    // the winners pin (every winner-side card observed on it), the
+    // window's users and period, and the user dim's size
+    assert(p.executions <= 3, s"${p.executions} SQL executions: ${p.trail.mkString(", ")}")
+    k.cache()
     assert(k.count() == 6)
     assert(k.where($"metric_value".isNull || $"metric_value" === "").count() == 0)
   }

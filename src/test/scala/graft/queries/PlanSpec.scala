@@ -372,12 +372,20 @@ class PlanSpec extends SparkSpec {
       // top-K score threshold (the probability tables themselves are
       // ≤256-row broadcast HASH joins, not BNLJ)
       "q_dsir_weights")
-    graft.SparkEntry.queries.keys.foreach { q =>
-      val p = plan(q)
-      assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
-      if (!bnljIntended(q))
-        assert(!p.contains("BroadcastNestedLoopJoin"),
-          s"$q plans a BroadcastNestedLoopJoin outside the intended set")
-    }
+    // the returned frame's plan, and the plan of every SQL execution that
+    // building it ran: an iterative query's pinned rounds never show in
+    // the returned plan
+    val plansSeen = graft.SparkEntry.queries.keys.map { q =>
+      val (df, run) = graft.runner.TickProbe.during(spark)(graft.SparkEntry.queries(q)(spark, sf))
+      (df.queryExecution.executedPlan.toString +: run.plans).foreach { p =>
+        assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
+        if (!bnljIntended(q))
+          assert(!p.contains("BroadcastNestedLoopJoin"),
+            s"$q plans a BroadcastNestedLoopJoin outside the intended set")
+      }
+      q -> run.plans.size
+    }.toMap
+    // q_pagerank pins its graph and each of its ten rounds
+    assert(plansSeen("q_pagerank") >= 11, s"q_pagerank's pins were not seen: ${plansSeen("q_pagerank")}")
   }
 }

@@ -116,11 +116,12 @@ class TextVectorSpec extends SparkSpec {
     val docs = graft.Tables.load(spark, sf, "documents")
     val t = docs.select($"doc_id",
       array_sort(transform(array_distinct(split($"text", " ")), x => xxhash64(x))).as("toks"))
-    val groups = t.groupBy($"toks")
-      .agg(min($"doc_id").as("rep"), collect_list($"doc_id").as("members"))
-      .localCheckpoint(true)
+    val (groups, g) = graft.runner.Pin.observed(t.groupBy($"toks")
+      .agg(min($"doc_id").as("rep"), collect_list($"doc_id").as("members")),
+      count(lit(1)).as("n"))
+    val nGroups = g("n").asInstanceOf[Long]
     def pairs(limit: Long) = TextOps
-      .expandGroupPairs(groups, TextOps.minhashRepPairs(groups, limit), limit)
+      .expandGroupPairs(groups, TextOps.minhashRepPairs(groups, nGroups, limit), nGroups, limit)
       .select($"doc_a", $"doc_b", $"jac").as[(Long, Long, Double)].collect().toSet
     val viaBroadcast = pairs(Long.MaxValue)
     // Past the gate the hint is dropped and Catalyst sizes the join
@@ -131,7 +132,7 @@ class TextVectorSpec extends SparkSpec {
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         (pairs(0L),
-          TextOps.minhashRepPairs(groups, 0L).queryExecution.executedPlan.toString)
+          TextOps.minhashRepPairs(groups, nGroups, 0L).queryExecution.executedPlan.toString)
       } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedThreshold)
     assert(viaBroadcast.nonEmpty)
     assert(viaShuffle == viaBroadcast,
@@ -146,7 +147,7 @@ class TextVectorSpec extends SparkSpec {
     assert(!shufflePlan.contains("BroadcastNestedLoopJoin"))
     assert(!shufflePlan.contains("CartesianProduct"))
     // and the default gate still broadcasts at this (tiny) scale
-    val broadcastPlan = TextOps.minhashRepPairs(groups)
+    val broadcastPlan = TextOps.minhashRepPairs(groups, nGroups)
       .queryExecution.executedPlan.toString
     assert("BroadcastHashJoin \\[doc_a#".r.findFirstIn(broadcastPlan).isDefined,
       s"default gate should broadcast the rep table at set cardinality:\n$broadcastPlan")

@@ -249,6 +249,7 @@ class BloomSidecarSpec extends SparkSpec {
     val (_, silverN, factN) = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0))
     // bloom-positive but absent → exact verify keeps the row: healed, once
     assert(silverN == 1 && factN == 1)
+    assert(spark.read.parquet(mb.silverPath).count() == 1)
     assert(spark.read.parquet(mb.factPath)
       .where(col("event_id") === "c1").count() == 1)
   }

@@ -21,6 +21,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - `scans`: per finished action, its name and the rows its file scans
   *     returned from tables under `roots` (final plan, query stages and
   *     subqueries included);
+  *   - `plans`: per finished action, its executed physical plan as text
+  *     (a pin's `localCheckpoint` included);
   *   - `confSamples`: the `confKeys` values of the caller's session, read
   *     as each SQL execution start is delivered to the listener;
   *   - `compiles`: classes generated code compiled (Janino), the change in
@@ -36,6 +38,7 @@ final class TickProbe private (spark: SparkSession, roots: Seq[String],
   var executions = 0
   val callStacks = mutable.ArrayBuffer[String]()
   val scans = mutable.ArrayBuffer[(String, Long)]()
+  val plans = mutable.ArrayBuffer[String]()
   val confSamples = mutable.ArrayBuffer[Map[String, Option[String]]]()
   var compiles = 0L
 
@@ -73,8 +76,11 @@ final class TickProbe private (spark: SparkSession, roots: Seq[String],
 
   private val qeListener = new QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
-      val n = Plans.scannedRows(qe)
-      synchronized { scans += funcName -> n }
+      val (n, plan) = (Plans.scannedRows(qe), qe.executedPlan.toString)
+      synchronized {
+        scans += funcName -> n
+        plans += plan
+      }
     }
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
   }
