@@ -137,14 +137,6 @@ object Bench {
       scala.collection.mutable.LinkedHashMap[String, Vector[Seq[(String, Double)]]]()
     def recordStages(name: String, stages: Seq[(String, Double)]): Unit =
       if (name != null) stageReps(name) = stageReps.getOrElse(name, Vector.empty) :+ stages
-    // A tick sink accumulates one entry per stage per micro-batch; sum by
-    // name (first-seen order) so each rep carries one number per stage
-    // however many micro-batches the drain ran.
-    def sumStages(b: Iterable[(String, Double)]): Seq[(String, Double)] = {
-      val m = scala.collection.mutable.LinkedHashMap[String, Double]()
-      b.foreach { case (k, v) => m(k) = m.getOrElse(k, 0.0) + v }
-      m.toSeq
-    }
     /** The one measurement path: [[Reps]] timed reps of `rep`, summarized.
       * A rep returning a negative time failed (registry queries only —
       * a heavyweight's `require` gate throws and stops the bench).
@@ -175,7 +167,7 @@ object Bench {
                   splitName: String = null): Double = {
       import org.apache.spark.sql.functions._
       val wh = java.nio.file.Files.createTempDirectory("graft_bench_wh").toString
-      val stages = scala.collection.mutable.ArrayBuffer[(String, Double)]()
+      var report = graft.runner.RunReport()
       val t = time {
         val events0 = Tables.load(spark, dir, "events")
         val events =
@@ -185,11 +177,10 @@ object Bench {
             .withColumn("event_id", col("event_id") * replicate + col("rep"))
             .drop("rep")
         val raw = graft.pipeline.RefEventsAdapter.toRawJson(events)
-        val (_, _, factN) = graft.runner.Bulk.run(spark, raw, wh, "2024-01-01",
-          stageSink = Some(stages))
-        require(factN > 0)
+        report = graft.runner.Bulk.run(spark, raw, wh, "2024-01-01")
+        require(report.fact > 0)
       }
-      recordStages(splitName, stages.toSeq)
+      recordStages(splitName, report.stages)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(wh))
       // hygiene between passes — including the gc: the 1M pass measured
       // 2x slower when started on a fragmented old gen (r6: 15.9s clean
@@ -289,18 +280,15 @@ object Bench {
         }
       stageMedia(t0, 0)
       stageMedia(t0.plusMinutes(15), mediaPerTick)
-      val stages = scala.collection.mutable.ArrayBuffer[(String, Double)]()
       val mb = new graft.runner.MicroBatch(spark, staging, wh,
-        maintainRollup = rollup, stageSink = Some(stages),
-        mediaStagingBase = mediaBase)
+        maintainRollup = rollup, mediaStagingBase = mediaBase)
       mb.runInterval(t0) // untimed: seeds warehouse + sidecar coverage
-      stages.clear() // attribute only the timed tick
-      var factAfter = 0L
-      val t = time { factAfter = mb.runInterval(t0.plusMinutes(15))._3 }
-      recordStages(splitName, sumStages(stages))
+      var report = graft.runner.RunReport()
+      val t = time { report = mb.runInterval(t0.plusMinutes(15)) }
+      recordStages(splitName, report.stages)
       // a tick that processed nothing measured nothing — fail loudly
       // rather than record a vacuously fast number
-      require(factAfter > 0, s"bench tick (redelivered=$redeliveredHalf) was a no-op")
+      require(report.fact > 0, s"bench tick (redelivered=$redeliveredHalf) was a no-op")
       if (rollup)
         require(spark.read.parquet(mb.rollupDailyPath).count() > 0,
           "bench rollup tick maintained nothing")
@@ -386,11 +374,7 @@ object Bench {
       val day = tickDay()
       def stage(df: DataFrame, sub: String): Unit =
         graft.pipeline.RefEventsAdapter.toRawJson(df).write.text(s"$staging/$sub")
-      def drain(splits: Option[scala.collection.mutable.Buffer[(String, Double)]]): Unit = {
-        def timed(name: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime(); f
-          splits.foreach(_ += name -> (System.nanoTime() - t0) / 1e9)
-        }
+      def drain(timed: graft.runner.StageTimer): Unit = {
         timed("bronze_drain") {
           graft.streaming.StreamingIngest.runBronze(spark, s"$staging/*/part-*",
             s"$wh/bronze", s"$wh/ckpt_b", "2025-09-15")
@@ -405,13 +389,13 @@ object Bench {
         }
       }
       stage(day.where(col("rep") < 8).drop("rep"), "b1")
-      drain(None) // untimed: seeds warehouse + checkpoints + sidecar coverage
+      drain(new graft.runner.StageTimer) // untimed: seeds warehouse + checkpoints + sidecar coverage
       val factBefore = spark.read.parquet(s"$wh/fact_user_events").count()
       stage(day.where(col("rep") >= 8).drop("rep")
         .withColumn("ts", col("ts") + expr("INTERVAL 1 DAY")), "b2")
-      val splits = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-      val t = time { drain(Some(splits)) }
-      recordStages("streaming_tick", sumStages(splits))
+      val drains = new graft.runner.StageTimer
+      val t = time { drain(drains) }
+      recordStages("streaming_tick", drains.splits)
       // the drain must have appended the second batch's facts — a no-op
       // (e.g. rows discarded as late vs the persisted watermark) would
       // record a vacuously fast number
@@ -444,18 +428,18 @@ object Bench {
         graft.streaming.StreamingIngest.runSilver(spark, s"$wh/bronze",
           s"$wh/silver", s"$wh/ckpt_s")
       }
-      def drainGold(sink: Option[scala.collection.mutable.Buffer[(String, Double)]]): Unit =
+      def drainGold(): graft.runner.RunReport =
         graft.streaming.StreamingIngest.runGold(spark, s"$wh/silver", wh,
-          s"$wh/ckpt_g", maintainRollup = true, stageSink = sink)
+          s"$wh/ckpt_g", maintainRollup = true)
       stage(day.where(col("rep") < 8).drop("rep"), "b1")
-      drainIngest(); drainGold(None) // untimed seed
+      drainIngest(); drainGold() // untimed seed
       val factBefore = spark.read.parquet(s"$wh/fact_user_events").count()
       stage(day.where(col("rep") >= 8).drop("rep")
         .withColumn("ts", col("ts") + expr("INTERVAL 1 DAY")), "b2")
       drainIngest() // untimed: isolate the gold stage
-      val splits = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-      val t = time { drainGold(Some(splits)) }
-      recordStages("streaming_gold", sumStages(splits))
+      var report = graft.runner.RunReport()
+      val t = time { report = drainGold() }
+      recordStages("streaming_gold", report.stages)
       require(spark.read.parquet(s"$wh/fact_user_events").count() > factBefore,
         "bench streaming_gold drained nothing")
       require(spark.read.parquet(s"$wh/agg_daily_events").count() > 0,
@@ -490,7 +474,7 @@ object Bench {
       val mb = new graft.runner.MicroBatch(spark, staging, wh)
       val t1 = mb.runInterval(t0)
       val t2 = mb.runInterval(t0.plusMinutes(15))
-      require(t1._3 > 0 && t2._3 > 0,
+      require(t1.fact > 0 && t2.fact > 0,
         s"seed ticks were no-ops: $t1 / $t2")
       def dataFiles(path: String): Int = {
         val p = new org.apache.hadoop.fs.Path(path)
@@ -519,7 +503,7 @@ object Bench {
       val t3 = mb.runInterval(t0.plusMinutes(30))
       // bronze > 0 proves the tick actually read the redelivered files
       // (a path mix-up would no-op and pass the fact check vacuously)
-      require(t3._1 > 0, s"redelivery tick read nothing: $t3")
+      require(t3.bronze > 0, s"redelivery tick read nothing: $t3")
       require(spark.read.parquet(mb.factPath).count() == factBefore,
         "redelivered tick appended duplicate facts after compaction")
       Seq(staging, wh).foreach(d =>

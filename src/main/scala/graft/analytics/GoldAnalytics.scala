@@ -186,9 +186,11 @@ object GoldAnalytics {
       }.head, steps.zipWithIndex.tail.map { case ((_, ev), i) =>
         max(when(col("event_name") === ev, 1).otherwise(0)).as(s"s$i")
       }: _*)
-    val counts = flags.agg(
+    // one row, read by each step's select: pinned, not cached, so nothing
+    // outlives the caller in the session's cache manager
+    val counts = graft.runner.Pin(flags.agg(
       steps.indices.map(i => sum(col(s"s$i")).cast("long").as(s"u$i")).head,
-      steps.indices.tail.map(i => sum(col(s"s$i")).cast("long").as(s"u$i")): _*).cache()
+      steps.indices.tail.map(i => sum(col(s"s$i")).cast("long").as(s"u$i")): _*))
     steps.zipWithIndex.map { case ((label, _), i) =>
       val users = col(s"u$i")
       val prev = if (i == 0) lit(null).cast("long") else col(s"u${i - 1}")

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,16 +40,12 @@ object BronzeToSilver {
     // scales linearly and never collects to the driver.
     parse(bronze).dropDuplicates("event_id")
 
-  /** Parse-quality instrumentation (the reference logs counts at every
-    * stage boundary, bronze_to_silver_iceberg.py:112-113,195): totals,
-    * parse failures (unparseable envelope), and dedup-loss on a parsed
-    * frame — one aggregate pass, no extra scans.
+  /** Parse failures (unparseable envelope: no event_id), as a metric a
+    * job over the parsed, not yet deduplicated, rows observes — the
+    * reference logs this count at the silver boundary
+    * (bronze_to_silver_iceberg.py:112-113,195).
     */
-  def parseStats(parsed: DataFrame): DataFrame =
-    parsed.agg(
-      count(lit(1)).as("n_total"),
-      sum(when(col("event_id").isNull, 1L).otherwise(0L)).as("n_unparseable"),
-      countDistinct(col("event_id")).as("n_distinct_events"))
+  val Unparseable: Column = count(when(col("event_id").isNull, 1)).as("unparseable")
 
   /** Parse + derive without the final dedup — the streaming path applies
     * watermarked dedup instead (bounded state).

@@ -108,15 +108,6 @@ object Dims {
           org.apache.spark.sql.types.LongType, nullable = false) +: sorted.schema.fields))
   }
 
-  /** [[dimFromColumns]] semantics on the scalable SK path. */
-  def dimFromColumnsScalable(silver: DataFrame, idCols: Seq[String], sk: String): DataFrame =
-    withSequentialSk(
-      silver.select(idCols.map(col): _*)
-        .where(col(idCols.head).isNotNull)
-        .distinct(),
-      idCols, sk)
-      .select((sk +: idCols).map(col): _*)
-
   /** [[dimUser]] semantics (SCD-1 + deterministic SK) on the scalable SK
     * path — same (user_sk, user_id) mapping, no single-partition stage.
     */

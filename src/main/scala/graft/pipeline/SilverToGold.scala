@@ -98,14 +98,10 @@ object SilverToGold {
       col("kst_timestamp").as("created_at"),
       col("kst_timestamp").as("updated_at"))
 
-  /** A3 — join-success instrumentation (silver_to_gold_processor.py:299-310):
-    * fraction of fact rows whose dim key resolved (non-zero SK).
+  /** A3 — join success (silver_to_gold_processor.py:299-310), as metrics
+    * a fact write observes: per dim, the fact rows left at SK 0 (no key,
+    * or a key the dim lacked).
     */
-  def joinSuccess(fact: DataFrame): DataFrame =
-    fact.agg(
-      count(lit(1)).as("n_rows"),
-      sum(when(col("user_dim_key") =!= 0, 1).otherwise(0)).as("user_joined"),
-      sum(when(col("recipe_dim_key") =!= 0, 1).otherwise(0)).as("recipe_joined"),
-      sum(when(col("event_dim_key") =!= 0, 1).otherwise(0)).as("event_joined"),
-      sum(when(col("page_dim_key") =!= 0, 1).otherwise(0)).as("page_joined"))
+  val SkZero: Seq[Column] = Seq("user", "recipe", "page", "event").map(d =>
+    count(when(col(s"${d}_dim_key") === 0L, 1)).as(s"dim_$d"))
 }

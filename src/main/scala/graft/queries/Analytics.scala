@@ -508,8 +508,8 @@ object Analytics {
       val tickFrame = s.createDataFrame(
         dates.zipWithIndex.map { case (d, i) => (d, i * 3 / dates.length) }.toSeq
       ).toDF("event_date", "base_tick")
-      // pinned once: each of the three ticks runs TWO actions over this
-      // frame (the batch append write + the affected-dates collect) — six
+      // pinned once: each of the three ticks reads this frame (the batch
+      // append write, which also observes the affected dates) — three
       // full events-scan + broadcast-join re-runs without the checkpoint
       // (guide §1.2). The pin holds events-cardinality × 5 narrow columns
       // on executor storage (MEMORY_AND_DISK, spillable): ~50 B/row, so
@@ -535,9 +535,10 @@ object Analytics {
       (0 to 2).foreach { t =>
         val batch = ticked.where($"tick" === t)
           .select($"event_date", $"event_type", $"user_id", $"value")
-        batch.write.mode("append").partitionBy("event_date").parquet(factPath)
-        val affected = batch.select($"event_date").distinct().as[String]
-          .collect().toSeq // bounded: dates touched by one tick
+        // the dates the append touched, observed on the append itself
+        val (_, m) = Pin.observing(batch, collect_set($"event_date").as("dates"))(
+          _.write.mode("append").partitionBy("event_date").parquet(factPath))
+        val affected = m("dates").asInstanceOf[scala.collection.Seq[String]].toSeq.sorted
         graft.pipeline.IncrementalRollup.update(
           s, factPath, s"$base/rollup", "event_date", affected, agg)
       }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
-import graft.runner.Pin
+import graft.runner.{Pin, StageTimer}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors,
   * unit-normalized by the generator).
@@ -507,16 +507,11 @@ object VectorOps {
     // Java-serialized read-back of spilled localCheckpoint blocks, even
     // with data-sized 50k-row partitions. The parquet scratch pin below
     // is the fix: columnar, streamed, off-heap both ways.)
-    val stages = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     // In materialize mode every stage below ends in an EAGER node
     // (localCheckpoint), so wrapping it in stage() yields an honest
     // per-stage wall split; in lazy mode stage() just labels zero-cost
-    // plan construction and the Seq stays out of the artifact.
-    def stage[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      stages += name -> (System.nanoTime() - t0) / 1e9
-      r
-    }
+    // plan construction and the splits stay out of the artifact.
+    val stage = new StageTimer
     // coarse quantizer trains on the sample (assignment covers the
     // corpus). Pinned ONCE here (cells × dim rows — tiny): the
     // hierarchical super-Lloyd, membership join, empty-membership
@@ -629,7 +624,7 @@ object VectorOps {
         .agg(count(lit(1)).as("cell_n")))
     }
     IvfPqIndex(cents, books, codes, cellSizes,
-      if (materialize) stages.toSeq else Nil, scratch)
+      if (materialize) stage.splits else Nil, scratch)
   }
 
   def annIvfPqWithScan(emb: DataFrame, k: Int, cells: Int, nprobe: Int,

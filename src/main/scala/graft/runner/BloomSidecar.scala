@@ -59,29 +59,14 @@ class BloomSidecar(spark: SparkSession, sinkPath: String,
 
   private def fs(p: Path) = p.getFileSystem(hconf)
 
-  private def bloomDir(partDir: String) = new Path(s"$sinkPath/_bloom/$partDir")
-
-  private def bloomFiles(partDir: String): Seq[Path] = {
-    val d = bloomDir(partDir)
-    val f = fs(d)
-    if (!f.exists(d)) Seq.empty
-    else f.listStatus(d).toSeq.filter(_.getPath.getName.endsWith(".bloom")).map(_.getPath)
-  }
+  private def bloomFiles(partDir: String): Seq[Path] =
+    BloomSidecar.bloomFilesIn(hconf, sinkPath, partDir)
 
   /** Keys inserted past this budget saturate the fixed-size bloom; the
     * fast path then does more exact-verify work than the plain anti-join
     * it replaces, so saturated partitions report uncovered.
     */
   private val saturationItems = 2 * expectedItems
-
-  /** Inserted-key count carried in a bloom file's name; a legacy file
-    * without the suffix reads 0 — the count is fallback telemetry, and
-    * under-reading it only delays the fallback, never breaks correctness
-    * (positives are always exactly verified).
-    */
-  private def fileCount(p: Path): Long =
-    "_n(\\d+)\\.bloom$".r.findFirstMatchIn(p.getName)
-      .map(_.group(1).toLong).getOrElse(0L)
 
   /** Every listed partition carries at least one bloom file (and so, by
     * the write-order invariant, its blooms cover every row in it) AND its
@@ -90,7 +75,7 @@ class BloomSidecar(spark: SparkSession, sinkPath: String,
   def covered(partDirs: Seq[String]): Boolean =
     partDirs.nonEmpty && partDirs.forall { d =>
       val files = bloomFiles(d)
-      files.nonEmpty && files.map(fileCount).sum <= saturationItems
+      files.nonEmpty && files.map(BloomSidecar.fileCountOf).sum <= saturationItems
     }
 
   /** All bloom files of the listed partitions (a partition mid-roll
@@ -184,6 +169,11 @@ object BloomSidecar {
     else f.listStatus(d).toSeq.filter(_.getPath.getName.endsWith(".bloom")).map(_.getPath)
   }
 
+  /** Inserted-key count carried in a bloom file's name; a legacy file
+    * without the suffix reads 0 — the count is fallback telemetry, and
+    * under-reading it only delays the fallback, never breaks correctness
+    * (positives are always exactly verified).
+    */
   private def fileCountOf(p: Path): Long =
     "_n(\\d+)\\.bloom$".r.findFirstMatchIn(p.getName)
       .map(_.group(1).toLong).getOrElse(0L)

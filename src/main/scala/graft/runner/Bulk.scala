@@ -1,6 +1,6 @@
 package graft.runner
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline._
@@ -16,7 +16,9 @@ import graft.pipeline._
 object Bulk {
 
   /** Full medallion pass from raw JSON lines. Writes partitioned parquet
-    * into `warehouse` and returns (bronze, silver, fact) row counts.
+    * into `warehouse` and reports the rows each layer wrote, each counted
+    * by its writing job (on a fresh warehouse, the table sizes), with the
+    * parse failures, each dim's rows and the fact rows left at SK 0.
     *
     * `recipeMasterPath`: parquet master file for dim_recipe
     * (create_dims.py:107-135 reads it from S3). When absent, a
@@ -28,34 +30,30 @@ object Bulk {
           ingestionDate: String,
           recipeMasterPath: Option[String] = None,
           tableSuffix: String = "",
-          seedBlooms: Boolean = false,
-          stageSink: Option[scala.collection.mutable.Buffer[(String, Double)]] = None)
-      : (Long, Long, Long) = {
-    // per-stage wall attribution (VERDICT r11 #3): each stage below ends
-    // in a write/count ACTION, so the split is an honest decomposition a
-    // slow run can be diagnosed from (staging parse+bronze write vs
-    // silver shuffle vs dim builds vs fact join vs count read-backs)
-    def stage[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      stageSink.foreach(_ += name -> (System.nanoTime() - t0) / 1e9)
-      r
-    }
+          seedBlooms: Boolean = false): RunReport = {
+    // each stage below ends in its writes, so the split is an honest
+    // decomposition a slow run can be diagnosed from (staging parse +
+    // bronze write vs silver shuffle vs dim builds vs fact join)
+    val stage = new StageTimer
     val sfx = tableSuffix
-    stage("bronze") {
-      val bronze = StagingToBronze.enrich(rawLines, "bulk.jsonl", ingestionDate)
-      Warehouse.writeBronze(bronze, s"$warehouse/bronze_events$sfx",
-        batchId = ingestionDate.replace("-", "") + "0000")
+    def written(df: DataFrame, metrics: Column*)(write: DataFrame => Unit): Map[String, Long] =
+      RunReport.counts(Pin.observing(df, metrics: _*)(write)._2)
+
+    val bronzeN = stage("bronze") {
+      written(StagingToBronze.enrich(rawLines, "bulk.jsonl", ingestionDate), Pin.Rows)(
+        Warehouse.writeBronze(_, s"$warehouse/bronze_events$sfx",
+          batchId = ingestionDate.replace("-", "") + "0000"))("n")
     }
 
-    stage("silver") {
+    val (silverN, parseM) = stage("silver") {
       // dedup FUSED into the clustering exchange: the parsed silver is
       // shuffled ONCE by (year, month, day, salt(event_id)) — byte-
       // identical redeliveries co-locate there — instead of once for
       // dropDuplicates(event_id) and again for the clustered write
       // (guide §2.4; plan went 2 Exchange → 1 over the full silver).
-      val parsed = BronzeToSilver.parse(
-        Warehouse.read(spark, s"$warehouse/bronze_events$sfx"))
-      Warehouse.writeSilverDedupClustered(parsed, s"$warehouse/user_events_silver$sfx")
+      Pin.observing(BronzeToSilver.parse(Warehouse.read(spark, s"$warehouse/bronze_events$sfx")),
+        BronzeToSilver.Unparseable)(
+        Warehouse.writeSilverDedupClustered(_, s"$warehouse/user_events_silver$sfx"))
     }
 
     // NOT cached: this is a parquet read-back, and the five consumers
@@ -66,47 +64,45 @@ object Bulk {
     // a 1.9× GC-thrash regression (BENCH_r05 medallion_e2e_1m 92→177 s);
     // pruned columnar re-scans are cheaper than the cache at every scale.
     val silverAll = Warehouse.read(spark, s"$warehouse/user_events_silver$sfx")
-    stage("dims") {
+    val dims = stage("dims") {
       // The four dim builds are independent multi-action chains (scans of
       // pruned silver columns, window/zipWithIndex passes, a master-
       // fixture write + read-back, four dim writes); build AND write them
       // concurrently so one build's task tail back-fills cores another
       // leaves idle (guide §2.6) — serially this stage was pure
       // round-trip latency stacked end to end.
+      def dim(name: String, df: => DataFrame): () => (String, Long) = () =>
+        name -> written(df, Pin.Rows)(Warehouse.writeDim(_, s"$warehouse/$name$sfx"))("n")
       Par.all(
         // dim_user on the scalable SK path: same (user_sk, user_id)
         // mapping as the window variant, but per-partition-offset
         // assignment — a bulk user dim is the one dim that can reach
         // 10⁸ rows at 100 TB
-        () => Warehouse.writeDim(Dims.dimUserScalable(silverAll),
-          s"$warehouse/dim_user$sfx"),
+        dim("dim_user", Dims.dimUserScalable(silverAll)),
         // bulk rebuild: the W3 fast path (monotonically_increasing_id) —
         // no global window; downstream joins only by natural key
-        () => Warehouse.writeDim(
-          Dims.dimFromColumnsFast(silverAll, Seq("event_name"), "event_sk"),
-          s"$warehouse/dim_event$sfx"),
-        () => Warehouse.writeDim(Dims.dimPage(silverAll), s"$warehouse/dim_page$sfx"),
-        () => {
+        dim("dim_event", Dims.dimFromColumnsFast(silverAll, Seq("event_name"), "event_sk")),
+        dim("dim_page", Dims.dimPage(silverAll)),
+        dim("dim_recipe", {
           val masterPath = recipeMasterPath.getOrElse {
             val p = s"$warehouse/recipe_master$sfx.parquet"
             Dims.writeRecipeMasterFixture(
               silverAll.select(col("prop_recipe_id").as("recipe_id")), p)
             p
           }
-          Warehouse.writeDim(
-            Dims.dimRecipeFromMaster(spark.read.parquet(masterPath)),
-            s"$warehouse/dim_recipe$sfx")
-        })
+          Dims.dimRecipeFromMaster(spark.read.parquet(masterPath))
+        })).toMap
     }
 
-    stage("fact") {
-      val fact = SilverToGold.buildFact(
-        silverAll,
-        Warehouse.read(spark, s"$warehouse/dim_user$sfx"),
-        Warehouse.read(spark, s"$warehouse/dim_recipe$sfx"),
-        Warehouse.read(spark, s"$warehouse/dim_event$sfx"),
-        Warehouse.read(spark, s"$warehouse/dim_page$sfx"))
-      Warehouse.writeFactClustered(fact, s"$warehouse/fact_user_events$sfx")
+    val fact = stage("fact") {
+      written(SilverToGold.buildFact(
+          silverAll,
+          Warehouse.read(spark, s"$warehouse/dim_user$sfx"),
+          Warehouse.read(spark, s"$warehouse/dim_recipe$sfx"),
+          Warehouse.read(spark, s"$warehouse/dim_event$sfx"),
+          Warehouse.read(spark, s"$warehouse/dim_page$sfx")),
+        Pin.Rows +: SilverToGold.SkZero: _*)(
+        Warehouse.writeFactClustered(_, s"$warehouse/fact_user_events$sfx"))
     }
 
     // Optionally seed the micro-batch anti-join bloom sidecars (one
@@ -127,14 +123,8 @@ object Bulk {
         trusted = true)
     }
 
-    // three independent metadata-cheap count read-backs — concurrent for
-    // the same serial-latency reason as the dims stage
-    stage("counts") {
-      val Seq(bronzeN, silverN, factN) = Par.all(
-        () => Warehouse.read(spark, s"$warehouse/bronze_events$sfx").count(),
-        () => silverAll.count(),
-        () => Warehouse.read(spark, s"$warehouse/fact_user_events$sfx").count())
-      (bronzeN, silverN, factN)
-    }
+    RunReport(stage.splits, bronze = bronzeN, silver = silverN, fact = fact("n"),
+      unparseable = parseM("unparseable").asInstanceOf[Long],
+      dimAppended = dims, skZero = fact - "n")
   }
 }

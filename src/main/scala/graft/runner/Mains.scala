@@ -58,9 +58,9 @@ object BulkMain {
     val date = a.lift(2).getOrElse(java.time.LocalDate.now().toString)
     val spark = RunnerSession.build("graft-bulk")
     val raw = spark.read.text(rawPath)
-    val (b, s, f) = Bulk.run(spark, raw, warehouse, date,
+    val r = Bulk.run(spark, raw, warehouse, date,
       tableSuffix = RunnerEnv.tableSuffix(testMode))
-    println(s"bulk complete: bronze=$b silver=$s fact=$f")
+    println(s"bulk complete: bronze=${r.bronze} silver=${r.silver} fact=${r.fact}")
     spark.stop()
   }
 }
@@ -216,12 +216,13 @@ object ReplayMain {
     if (ticksStr.startsWith("catchup:")) {
       val until = LocalDateTime.parse(ticksStr.stripPrefix("catchup:"),
         DateTimeFormatter.ISO_LOCAL_DATE_TIME)
-      mb.catchUp(start, until).zipWithIndex.foreach { case ((b, s, f), i) =>
-        println(s"catchup tick $i: bronze=$b silver_added=$s fact_added=$f")
+      mb.catchUp(start, until).zipWithIndex.foreach { case (r, i) =>
+        println(s"catchup tick $i: bronze=${r.bronze} silver_added=${r.silver} fact_added=${r.fact}")
       }
     } else {
-      mb.runRange(start, ticksStr.toInt).zipWithIndex.foreach { case ((b, s, f), i) =>
-        println(s"tick $i (${start.plusMinutes(15L * i)}): bronze=$b silver_added=$s fact_added=$f")
+      mb.runRange(start, ticksStr.toInt).zipWithIndex.foreach { case (r, i) =>
+        println(s"tick $i (${start.plusMinutes(15L * i)}): " +
+          s"bronze=${r.bronze} silver_added=${r.silver} fact_added=${r.fact}")
       }
     }
     spark.stop()

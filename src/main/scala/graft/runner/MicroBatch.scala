@@ -3,7 +3,7 @@ package graft.runner
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,25 +35,13 @@ import graft.pipeline._
   *      row count observed on the write.
   * Every read uses a schema the tick already knows, so no read runs a
   * schema-inference job; MicroBatchSpec pins the tick's job budget.
+  * Each tick returns a [[RunReport]] of what those jobs observed.
   */
 class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
                  tableSuffix: String = "",
-                 bloomExpectedItems: Long = 1L << 20,
                  maintainRollup: Boolean = false,
-                 stageSink: Option[scala.collection.mutable.Buffer[(String, Double)]] = None,
                  mediaStagingBase: Option[String] = None) {
   import MicroBatch._
-
-  /** Per-stage wall attribution: with a sink, each named stage appends
-    * (name, seconds); the bench sums by name.
-    */
-  private def stage[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    // stages of one tick can overlap (see runInterval)
-    stageSink.foreach(s => s.synchronized(s += name -> (System.nanoTime() - t0) / 1e9))
-    r
-  }
 
   val bronzePath = s"$warehouse/bronze_events$tableSuffix"
   val mediaCatalogPath = s"$warehouse/media_catalog$tableSuffix"
@@ -89,12 +77,12 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     else try spark.read.parquet(path).schema
     catch { case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => narrow }
 
-  /** A persisted dim: its sink, the fact join it serves, a batch row's
-    * natural key (in the join's order) and whether the row has one, and
-    * the SCD-1 attributes that ride along.
+  /** A persisted dim: its name and sink, the fact join it serves, a batch
+    * row's natural key (in the join's order) and whether the row has one,
+    * and the SCD-1 attributes that ride along.
     */
-  private case class TickDim(path: String, join: SilverToGold.DimJoin, keys: Seq[Column],
-                             hasKey: Column, attrs: Seq[String] = Nil) {
+  private case class TickDim(name: String, path: String, join: SilverToGold.DimJoin,
+                             keys: Seq[Column], hasKey: Column, attrs: Seq[String] = Nil) {
     val schema = StructType(StructField(join.sk, LongType) +:
       (join.naturals ++ attrs).map(StructField(_, StringType)))
 
@@ -118,12 +106,12 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
   }
 
   private val tickDims = Seq(
-    TickDim(dimUserPath, SilverToGold.UserJoin, Seq(col("user_id"), col("anonymous_id")),
+    TickDim("dim_user", dimUserPath, SilverToGold.UserJoin, Seq(col("user_id"), col("anonymous_id")),
       col("user_id").isNotNull, Dims.UserAttrs),
-    TickDim(dimEventPath, SilverToGold.EventJoin, Seq(col("event_name")), col("event_name").isNotNull),
-    TickDim(dimPagePath, SilverToGold.PageJoin, Seq(col("page_name"), col("page_url")),
+    TickDim("dim_event", dimEventPath, SilverToGold.EventJoin, Seq(col("event_name")), col("event_name").isNotNull),
+    TickDim("dim_page", dimPagePath, SilverToGold.PageJoin, Seq(col("page_name"), col("page_url")),
       col("page_name").isNotNull || col("page_url").isNotNull),
-    TickDim(dimRecipePath, SilverToGold.RecipeJoin, Seq(col("prop_recipe_id").cast("string")),
+    TickDim("dim_recipe", dimRecipePath, SilverToGold.RecipeJoin, Seq(col("prop_recipe_id").cast("string")),
       col("prop_recipe_id").isNotNull))
 
   /** `rows` left-joined to the four dims as stored, with miss flags. */
@@ -134,13 +122,14 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     }
 
   /** Upserts the dims some `todo` row missed (`m`: the miss counts),
-    * concurrently, and fills the missed SKs from the rows they appended.
+    * concurrently, and fills the missed SKs from the rows they appended;
+    * also returns the keys appended per dim.
     */
-  private def upsertMissed(todo: DataFrame, m: Map[String, Any]): DataFrame = {
+  private def upsertMissed(todo: DataFrame, m: Map[String, Any]): (DataFrame, Map[String, Long]) = {
     // a dim whose sink does not exist yet upserts too, creating the sink
     val upserts = tickDims.filter(d => m(d.missed) != 0L || !exists(d.path))
-    Par.all(upserts.map(d => () => d -> upsertDim(d, todo)): _*)
-      .collect { case (d, (fresh, n)) if n > 0L => d -> fresh }
+    val appended = Par.all(upserts.map(d => () => d -> upsertDim(d, todo)): _*)
+    val rows = appended.collect { case (d, (fresh, n)) if n > 0L => d -> fresh }
       .foldLeft(todo) { case (rows, (d, fresh)) =>
         // keep a stored SK beside an appended one (only J4 matches both:
         // ("", url), (null, url)), as a join against the whole dim would
@@ -151,6 +140,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
           .drop(s"__new_${d.join.sk}" +: d.join.naturals.map(d.join.matched): _*)
       }
       .drop(tickDims.map(_.missed): _*)
+    (rows, appended.map { case (d, (_, n)) => d.name -> n }.toMap)
   }
 
   /** Append-only dim sink (replay_silver_to_gold.py:265): append the
@@ -179,14 +169,10 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     (appended, n)
   }
 
-  // `bloomExpectedItems` sizes the per-partition sidecar blooms: a
-  // deployment whose day partitions run ~10^9 rows should raise it (or
-  // accept the saturation fallback to the exact anti-join — see
-  // [[BloomSidecar.covered]]).
-  private[runner] val silverBloom =
-    new BloomSidecar(spark, silverPath, bloomExpectedItems)
-  private[runner] val factBloom =
-    new BloomSidecar(spark, factPath, bloomExpectedItems)
+  // a day partition past the sidecar's capacity falls back to the exact
+  // anti-join ([[BloomSidecar.covered]])
+  private[runner] val silverBloom = new BloomSidecar(spark, silverPath)
+  private[runner] val factBloom = new BloomSidecar(spark, factPath)
 
   /** `batch` plus a boolean [[Present]] column (is the row's event_id
     * among `existingIds`, the affected partitions' stored ids), pinned,
@@ -227,13 +213,6 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       Seq("event_id"), "left_semi")), metrics: _*)
   }
 
-  /** Rows of `batch` whose `event_id` the affected partitions lack. */
-  private[runner] def antiJoinExisting(batch: DataFrame, existingIds: => DataFrame,
-                                       sidecar: BloomSidecar,
-                                       partDirs: Seq[String]): DataFrame =
-    markExisting(batch, existingIds, sidecar, partDirs)._1
-      .where(!col(Present)).drop(Present)
-
   /** Hive-style partition directory names, as partitionBy writes them. */
   private def silverPartDirs(keys: Seq[(Int, Int, Int)]): Seq[String] =
     keys.map { case (y, m, d) => s"year=$y/month=$m/day=$d" }
@@ -252,12 +231,14 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       col("year") === y && col("month") === m && col("day") === d
     }.reduce(_ || _)
 
-  /** One 15-minute tick. Returns the rows it added, each counted by the
-    * job that wrote them: (bronze lines, silver rows appended, fact rows
-    * appended). A fully redelivered batch adds no silver or fact row; J4's
-    * double match can append more fact rows than the batch had new ones.
+  /** One 15-minute tick. Its report counts the rows it added, each by
+    * the job that wrote them: bronze lines, silver rows appended, fact
+    * rows appended. A fully redelivered batch adds no silver or fact row;
+    * J4's double match can append more fact rows than the batch had new
+    * ones.
     */
-  def runInterval(start: LocalDateTime): (Long, Long, Long) = {
+  def runInterval(start: LocalDateTime): RunReport = {
+    val stage = new StageTimer
     val path = StagingToBronze.stagingPathFor(stagingBase, start)
     val ingestionDate = start.toLocalDate.format(dateFmt)
     val batchId = start.format(batchFmt)
@@ -295,16 +276,14 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     // still publishes its catalog partition).
     val raw =
       try StagingToBronze.readStaging(spark, path)
-      catch { case _: AnalysisException => return (0L, 0L, 0L) }
+      catch { case _: AnalysisException => return RunReport(stage.splits) }
     val bronzeN = stage("bronze") {
-      val obs = Observation()
-      Warehouse.overwritePartitions(StagingToBronze.enrich(raw, path, ingestionDate)
-          .withColumn("batch_id", lit(batchId))
-          .observe(obs, count(lit(1)).as("n")))
-        .partitionBy("ingestion_date", "batch_id").parquet(bronzePath)
-      obs.get("n").asInstanceOf[Long]
+      Pin.observing(StagingToBronze.enrich(raw, path, ingestionDate)
+          .withColumn("batch_id", lit(batchId)), Pin.Rows)(
+        Warehouse.overwritePartitions(_).partitionBy("ingestion_date", "batch_id")
+          .parquet(bronzePath))._2("n").asInstanceOf[Long]
     }
-    if (bronzeN == 0L) return (0L, 0L, 0L)
+    if (bronzeN == 0L) return RunReport(stage.splits)
 
     // --- bronze → silver: read back only this batch's partition (P3),
     // by its directory, so the read lists one partition, not the table
@@ -314,12 +293,13 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
 
     // The parsed batch is pinned ONCE; every later step reads it. The
     // affected (year, month, day) set (1-2 dates) is observed on the pin
-    // and filters the stored-id reads STATICALLY (PartitionFilters).
-    val (silverNew, affectedKeys, parsedN) = stage("silver_parse") {
-      val (pinned, m) = Pin.observed(BronzeToSilver.transform(bronzeBatch),
-        count(lit(1)).as("n"), AffectedKeys)
-      (pinned, keysOf(m), m("n").asInstanceOf[Long])
+    // and filters the stored-id reads STATICALLY (PartitionFilters); the
+    // parse failures are observed below the dedup, which merges them.
+    val ((silverNew, m), parseM) = stage("silver_parse") {
+      Pin.observing(BronzeToSilver.parse(bronzeBatch), BronzeToSilver.Unparseable)(parsed =>
+        Pin.observed(parsed.dropDuplicates("event_id"), Pin.Rows, AffectedKeys))
     }
+    val (affectedKeys, parsedN) = (keysOf(m), m("n").asInstanceOf[Long])
 
     // Mark-then-APPEND, not merge-overwrite: same convergence as a
     // union+dropDuplicates+overwrite, but O(batch rows), not a rewrite of
@@ -346,8 +326,10 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
         }
       },
       goldTodo(if (heldN == 0L) marked.drop(Present)
-               else marked.withColumnRenamed(Present, Stored), affectedKeys))
-    (bronzeN, parsedN - heldN, appendGold(todo, affectedKeys))
+               else marked.withColumnRenamed(Present, Stored), affectedKeys, stage))
+    appendGold(todo, affectedKeys, stage).copy(stages = stage.splits,
+      bronze = bronzeN, silver = parsedN - heldN,
+      unparseable = parseM("unparseable").asInstanceOf[Long], held = heldN)
   }
 
   /** The gold stage for one batch of silver rows: append-only dim
@@ -373,14 +355,17 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     * the streaming query's replay of the uncommitted micro-batch.
     */
   def goldFromSilverBatch(silverBatch: DataFrame,
-                          affectedKeys: Seq[(Int, Int, Int)]): Unit =
-    appendGold(goldTodo(silverBatch, affectedKeys), affectedKeys)
+                          affectedKeys: Seq[(Int, Int, Int)]): RunReport = {
+    val stage = new StageTimer
+    appendGold(goldTodo(silverBatch, affectedKeys, stage), affectedKeys, stage)
+      .copy(stages = stage.splits)
+  }
 
   /** Gold's todo: the rows of `silverBatch` fact lacks, joined to the
     * dims in the pin that marks them; `todo` and each dim's misses counted.
     */
-  private def goldTodo(silverBatch: DataFrame,
-                       affectedKeys: Seq[(Int, Int, Int)]): (DataFrame, Map[String, Any]) = {
+  private def goldTodo(silverBatch: DataFrame, affectedKeys: Seq[(Int, Int, Int)],
+                       stage: StageTimer): (DataFrame, Map[String, Any]) = {
     val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
     val heals = silverBatch.columns.contains(Stored)
     def counts(todo: Column): Seq[Column] = count(when(todo, 1)).as("todo") +:
@@ -403,21 +388,22 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     }
   }
 
-  /** Gold's dims, fact and rollup for a todo with counts `m`; returns the
-    * fact rows appended.
+  /** Gold's dims, fact and rollup for a todo with counts `m`; reports the
+    * fact rows appended and the per-dim counts.
     */
   private def appendGold(todoAndCounts: (DataFrame, Map[String, Any]),
-                         affectedKeys: Seq[(Int, Int, Int)]): Long = {
+                         affectedKeys: Seq[(Int, Int, Int)], stage: StageTimer): RunReport = {
     val (todo, m) = todoAndCounts
     val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
+    val missed = tickDims.map(d => d.name -> m(d.missed).asInstanceOf[Long]).toMap
 
     // Only rows that still NEED a fact row: a full re-run writes nothing.
     // A row whose fact exists was processed by a completed tick, so its
     // dim keys are present too (facts are written after dims).
-    val factN = if (m("todo") == 0L) 0L else {
+    val gold = if (m("todo") == 0L) RunReport(dimMissed = missed) else {
       // The dims' upserts and the fact bloom add overlap (guide §2.6);
       // the fact append waits for both — dims and sidecar BEFORE data.
-      val (rows, _) = Par.both(
+      val ((rows, appended), _) = Par.both(
         stage("gold_dims")(upsertMissed(todo, m)),
         stage("gold_fact") {
           factBloom.addBatch(todo.select(
@@ -427,14 +413,14 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
 
       // append-only; created_at = kst_timestamp, so the affected fact
       // dates ARE the affected silver keys
-      stage("gold_fact") {
-        val obs = Observation()
-        SilverToGold.factOf(rows)
-          .withColumn("created_date", to_date(col("created_at")))
-          .observe(obs, count(lit(1)).as("n"))
-          .write.mode("append").partitionBy("created_date").parquet(factPath)
-        obs.get("n").asInstanceOf[Long]
+      val f = stage("gold_fact") {
+        Pin.observing(SilverToGold.factOf(rows)
+            .withColumn("created_date", to_date(col("created_at"))),
+          Pin.Rows +: SilverToGold.SkZero: _*)(
+          _.write.mode("append").partitionBy("created_date").parquet(factPath))._2
       }
+      RunReport(fact = f("n").asInstanceOf[Long], dimMissed = missed,
+        dimAppended = appended, skZero = RunReport.counts(f - "n"))
     }
     // Maintained daily rollup: only the AFFECTED dates are recomputed and
     // overwritten, converging to a full rebuild (IncrementalRollupSpec).
@@ -442,7 +428,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       IncrementalRollup.update(spark, factPath, rollupDailyPath,
         "created_date", factDates.map(_.toString), dailyRollupAgg)
     }
-    factN
+    gold
   }
 
   /** Partition-local daily KPI rollup over the fact — grouping keys
@@ -461,7 +447,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
           .cast("double").as("sum_engagement"))
 
   /** Run a sequence of 15-min intervals in order (the DAG's catchup loop). */
-  def runRange(start: LocalDateTime, ticks: Int): Seq[(Long, Long, Long)] =
+  def runRange(start: LocalDateTime, ticks: Int): Seq[RunReport] =
     (0 until ticks).map(i => runInterval(start.plusMinutes(15L * i)))
 
   /** Highest interval stamp already present in the bronze sink (None when
@@ -491,7 +477,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     * converges when nothing was lost. A fresh warehouse seeds from
     * `default`.
     */
-  def catchUp(default: LocalDateTime, until: LocalDateTime): Seq[(Long, Long, Long)] = {
+  def catchUp(default: LocalDateTime, until: LocalDateTime): Seq[RunReport] = {
     val first = lastProcessedInterval().getOrElse(default)
     val ticks = java.time.Duration.between(first, until).toMinutes / 15
     // Skip intervals with no staging files via a driver-side glob probe
@@ -603,7 +589,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     // here data + blooms publish atomically in the swap below, and the
     // next tick's fast path keeps working (no false negatives — the
     // blooms are built from exactly the rows being published).
-    new BloomSidecar(spark, tmp.toString, bloomExpectedItems).addBatch(
+    new BloomSidecar(spark, tmp.toString).addBatch(
       spark.read.parquet(tmp.toString)
         .select(partExpr.as("part"), col("event_id")),
       trusted = true)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** Watermarked streaming deduplication — the streaming twin of the batch
   * exact-dedup pass (`q_exact_dedup`) and of the micro-batch runner's
-  * anti-join redelivery guard (`MicroBatch.antiJoinExisting`): an
+  * anti-join redelivery guard (`MicroBatch.markExisting`): an
   * at-least-once upstream (Kafka-shaped redelivery, crawler re-fetches)
   * deduplicated ON ARRIVAL with `dropDuplicatesWithinWatermark`, so
   * exactly one row per key ever reaches the sink.

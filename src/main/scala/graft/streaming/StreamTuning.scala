@@ -20,26 +20,13 @@ import org.apache.spark.sql.SparkSession
   * defaultParallelism / 4 keeps one state task per 4 cores (a 15-minute
   * tick's state volume never needs a task per core, and fewer stores =
   * fewer per-batch files), so a 400-core deployment still gets 100
-  * state partitions. Deployments with heavier per-tick state raise it
-  * via SPARK_GRAFT_STREAM_STATE_PARTS or
-  * spark.graft.stream.statePartitions — the count is pinned into the
-  * sink's checkpoint at first batch, so choose before seeding.
+  * state partitions. The count is pinned into the sink's checkpoint at
+  * first batch.
   */
 object StreamTuning {
 
   def statePartitions(spark: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS")
-      .map(parseParts("SPARK_GRAFT_STREAM_STATE_PARTS", _))
-      .orElse(spark.conf.getOption("spark.graft.stream.statePartitions")
-        .map(parseParts("spark.graft.stream.statePartitions", _)))
-      .getOrElse(math.max(1, spark.sparkContext.defaultParallelism / 4))
-
-  /** A positive partition count, or an IllegalArgumentException naming
-    * the setting it came from.
-    */
-  private[streaming] def parseParts(setting: String, raw: String): Int =
-    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
-      s"$setting must be a positive integer, got '$raw'"))
+    math.max(1, spark.sparkContext.defaultParallelism / 4)
 
   /** A new session for one stream to own: the caller's settings (the
     * ones a session may change), with spark.sql.shuffle.partitions set

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.{BronzeToSilver, StagingToBronze}
-import graft.runner.{MicroBatch, Pin}
+import graft.runner.{MicroBatch, Pin, RunReport}
 
 /** Structured-Streaming twin of the micro-batch ingest (SURVEY.md §2.9):
   * file-source `readStream` over the staging directory, the same pure
@@ -78,28 +78,29 @@ object StreamingIngest {
     * verbatim. With `maintainRollup` the continuous gold composition
     * also maintains the daily-KPI rollup per micro-batch
     * (IncrementalRollup.update over the batch's affected dates) —
-    * the EP1 gold-tick semantics, streaming-native.
+    * the EP1 gold-tick semantics, streaming-native. Returns the drained
+    * micro-batches' reports, summed.
     */
   def runGold(spark: SparkSession, silverPath: String, warehouse: String,
-              checkpoint: String, maintainRollup: Boolean = false,
-              stageSink: Option[scala.collection.mutable.Buffer[(String, Double)]] = None): Unit = {
+              checkpoint: String, maintainRollup: Boolean = false): RunReport = {
     val schema = spark.read.parquet(silverPath).schema
-    val mb = new MicroBatch(spark, stagingBase = "", warehouse,
-      maintainRollup = maintainRollup, stageSink = stageSink)
+    val mb = new MicroBatch(spark, stagingBase = "", warehouse, maintainRollup = maintainRollup)
+    // added to on the stream's thread; the read below follows its end
+    var report = RunReport()
     val q = spark.readStream.schema(schema).parquet(silverPath)
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // pin the streamed micro-batch before the multi-action gold stage
         // (the fact probe, each dim upsert and the fact build read it);
         // its size and affected partition keys ride the pinning job
-        val (pinned, m) = Pin.observed(batch,
-          count(lit(1)).as("n"), MicroBatch.AffectedKeys)
-        if (m("n") != 0L) mb.goldFromSilverBatch(pinned, MicroBatch.keysOf(m))
+        val (pinned, m) = Pin.observed(batch, Pin.Rows, MicroBatch.AffectedKeys)
+        if (m("n") != 0L) report += mb.goldFromSilverBatch(pinned, MicroBatch.keysOf(m))
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+    report
   }
 
   /** bronze parquet → silver parquet with watermarked streaming dedup.

@@ -84,12 +84,14 @@ class BronzeToSilverSpec extends SparkSpec {
     assert(silver.where(col("event_id") === "good").count() == 1)
   }
 
-  test("parse-quality instrumentation counts totals, failures, distinct events") {
+  test("a bulk pass reports lines, parse failures and silver rows") {
     val lines = Seq(rawEvent("e1"), rawEvent("e1"), rawEvent("e2"), "garbage")
-    val stats = BronzeToSilver.parseStats(BronzeToSilver.parse(toBronze(lines))).head()
-    assert(stats.getAs[Long]("n_total") == 4L)
-    assert(stats.getAs[Long]("n_unparseable") == 1L)
-    assert(stats.getAs[Long]("n_distinct_events") == 2L)
+    val r = graft.runner.Bulk.run(spark, lines.toDF("value"), tmpDir("parse_quality"),
+      "2025-09-15")
+    assert(r.bronze == 4L)
+    assert(r.unparseable == 1L)
+    // e1, e2, and the one row the dedup merges unparseable lines into
+    assert(r.silver == 3L)
   }
 
   test("null/absent nested payloads project as nulls") {

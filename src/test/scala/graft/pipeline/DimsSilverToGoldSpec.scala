@@ -66,15 +66,21 @@ class DimsSilverToGoldSpec extends SparkSpec {
     assert(dt.select("time_dim_key").distinct().count() == 72)
   }
 
+  /** The fact build's dims over [[silver]]: (user, recipe, event, page);
+    * dim_user lacks u3.
+    */
+  private def dims(s: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = (
+    Dims.dimUser(s.where($"user_id".isin("u1", "u2"))),
+    s.where($"prop_recipe_id".isNotNull)
+      .select($"prop_recipe_id".cast("string").as("recipe_id")).distinct()
+      .withColumn("recipe_sk", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy("recipe_id")).cast("long")),
+    Dims.dimEvent(s), Dims.dimPage(s))
+
   test("fact build: no fanout, SK-0 defaults on misses, metric expressions") {
     val s = silver()
-    val fact = SilverToGold.buildFact(s,
-      Dims.dimUser(s.where($"user_id".isin("u1", "u2"))),
-      s.where($"prop_recipe_id".isNotNull)
-        .select($"prop_recipe_id".cast("string").as("recipe_id")).distinct()
-        .withColumn("recipe_sk", row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy("recipe_id")).cast("long")),
-      Dims.dimEvent(s), Dims.dimPage(s)).cache()
+    val (du, dr, de, dp) = dims(s)
+    val fact = SilverToGold.buildFact(s, du, dr, de, dp).cache()
 
     assert(fact.count() == 4) // left joins on unique dim keys never fan out
     // u3 not in dim_user → SK 0
@@ -92,11 +98,25 @@ class DimsSilverToGoldSpec extends SparkSpec {
     assert(one("e1", "session_duration_seconds").getLong(0) == 45L)
     assert(one("e2", "session_duration_seconds").getLong(0) == 60L) // "cl" → default
     assert(one("e4", "session_duration_seconds").getLong(0) == 60L) // "badformat" → default
+  }
 
-    val js = SilverToGold.joinSuccess(fact).head()
-    assert(js.getAs[Long]("n_rows") == 4L)
-    assert(js.getAs[Long]("user_joined") == 3L)
-    assert(js.getAs[Long]("event_joined") == 4L)
+  test("A3 join success: gold's report counts joins, appended keys and SK-0 rows") {
+    val s = silver()
+    val wh = tmpDir("a3")
+    val (du, dr, de, dp) = dims(s)
+    Seq("dim_user" -> du, "dim_recipe" -> dr, "dim_event" -> de, "dim_page" -> dp)
+      .foreach { case (n, d) => d.write.parquet(s"$wh/$n") }
+    val r = new graft.runner.MicroBatch(spark, "", wh)
+      .goldFromSilverBatch(s, Seq((2025, 9, 15)))
+    assert(r.fact == 4L)
+    // rows that joined the stored dims: u3 is the one user dim_user lacks
+    assert(r.fact - r.dimMissed("dim_user") == 3L)
+    assert(r.fact - r.dimMissed("dim_event") == 4L)
+    // the tick appends u3 before it writes the fact, so only rows with no
+    // key keep SK 0: e3 has no recipe, e4 neither page field
+    assert(r.dimAppended("dim_user") == 1L)
+    assert(r.skZero == Map("dim_user" -> 0L, "dim_event" -> 0L,
+      "dim_recipe" -> 1L, "dim_page" -> 1L))
   }
 
   test("refreshAttributes: null-safe keys, master wins incl. genuine nulls, schema widens") {

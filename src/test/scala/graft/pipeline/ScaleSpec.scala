@@ -263,7 +263,7 @@ class ScaleSpec extends SparkSpec {
     val df = spark.range(20000)
       .select(concat(lit("u"), format_string("%06d", ($"id" * 7919) % 20000)).as("k"))
       .distinct()
-    val scalable = Dims.dimFromColumnsScalable(df, Seq("k"), "sk").cache()
+    val scalable = Dims.withSequentialSk(df, Seq("k"), "sk").select("sk", "k").cache()
     val n = scalable.count()
     // dense 1..n, unique
     assert(scalable.select("sk").distinct().count() == n)
@@ -274,7 +274,7 @@ class ScaleSpec extends SparkSpec {
     assert(scalable.except(window).count() == 0)
     assert(window.except(scalable).count() == 0)
     // deterministic across runs
-    val again = Dims.dimFromColumnsScalable(df, Seq("k"), "sk")
+    val again = Dims.withSequentialSk(df, Seq("k"), "sk").select("sk", "k")
     assert(scalable.except(again).count() == 0)
     // and the SQL stage of the assignment never funnels the dim through a
     // single partition: range exchange + local sort, no global window
@@ -298,7 +298,7 @@ class ScaleSpec extends SparkSpec {
       .withColumn("event_id", $"event_id" * replicate + $"rep")
       .drop("rep")
     val raw = RefEventsAdapter.toRawJson(events)
-    val (bronzeN, silverN, factN) = graft.runner.Bulk.run(spark, raw, wh, "2024-01-01")
+    val (bronzeN, silverN, factN) = graft.runner.Bulk.run(spark, raw, wh, "2024-01-01").rows
     assert(bronzeN >= silverN && silverN > 0 && factN == silverN,
       s"bulk counts off: bronze=$bronzeN silver=$silverN fact=$factN")
     assert(silverN > 500000L, s"replication produced only $silverN silver rows")

@@ -290,15 +290,36 @@ class PlanSpec extends SparkSpec {
       "q_incr_dedup" -> (7, 10),
       // banded candidate generation + bounded label propagation rounds
       "q_dup_clusters" -> (3, 0))
-    expected.foreach { case (q, (expShuffle, expBroadcast)) =>
+    def shape(p: String): (Int, Int) =
+      ("Exchange (hashpartitioning|rangepartitioning|SinglePartition)".r.findAllIn(p).size,
+        "BroadcastExchange".r.findAllIn(p).size)
+    expected.foreach { case (q, exp) =>
       val p = plan(q)
-      val sh = "Exchange (hashpartitioning|rangepartitioning|SinglePartition)"
-        .r.findAllIn(p).size
-      val bc = "BroadcastExchange".r.findAllIn(p).size
-      assert((sh, bc) == ((expShuffle, expBroadcast)),
-        s"$q plan shape changed: shuffle=$sh (want $expShuffle), " +
-          s"broadcast=$bc (want $expBroadcast) — re-review the plan " +
-          s"before updating this snapshot:\n$p")
+      assert(shape(p) == exp,
+        s"$q plan shape changed: (shuffle, broadcast) = ${shape(p)}, want $exp — " +
+          s"re-review the plan before updating this snapshot:\n$p")
+    }
+    // An iterative query pins its rounds, so the returned frame's plan
+    // never shows them: these count the exchanges of every plan the
+    // build ran (each executed plan as text, AQE's initial and final
+    // plans both), pins included.
+    val builds = Map(
+      // candidate pins, the edge pin, initial labels and the fused
+      // label-propagation rounds, each joining the broadcast labels to
+      // the pinned edges
+      "q_dup_clusters" -> (30, 25),
+      // the graph pin (3 shuffles), then one page-keyed shuffle per
+      // round (10), each counted in the final and the initial plan, and
+      // the returned frame's sort
+      "q_pagerank" -> (27, 0))
+    builds.foreach { case (q, exp) =>
+      val (df, run) = graft.runner.TickProbe.during(spark)(graft.SparkEntry.queries(q)(spark, sf))
+      val plans = df.queryExecution.executedPlan.toString +: run.plans
+      val (sh, bc) = plans.map(shape).reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+      assert((sh, bc) == exp,
+        s"$q build's plan shapes changed: (shuffle, broadcast) = ${(sh, bc)} over " +
+          s"${plans.size} plans, want $exp — re-review the plans before updating " +
+          s"this snapshot:\n${plans.mkString("\n")}".take(20000))
     }
   }
 

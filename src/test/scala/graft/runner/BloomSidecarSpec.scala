@@ -2,6 +2,7 @@ package graft.runner
 
 import java.time.LocalDateTime
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -216,14 +217,16 @@ class BloomSidecarSpec extends SparkSpec {
     // must not run AT ALL (the 100-TB claim, pinned deterministically —
     // the short-circuit is explicit, not an AQE artifact)
     val clean = Seq("new1", "new2", "new3").toDF("event_id")
-    val kept = mb.antiJoinExisting(clean, existing, sc, Seq(part))
-    assert(kept.collect().map(_.getString(0)).sorted.toSeq == Seq("new1", "new2", "new3"))
+    def kept(batch: DataFrame) =
+      mb.markExisting(batch, existing, sc, Seq(part))._1.where(!col(MicroBatch.Present)).select("event_id")
+    val keptClean = kept(clean)
+    assert(keptClean.collect().map(_.getString(0)).sorted.toSeq == Seq("new1", "new2", "new3"))
     assert(reads.value == 0, "clean tick must not read existing partitions")
 
     // a redelivered id flips to the verify path: the scan runs, bounded,
     // and exactly the duplicate is dropped
     val redelivered = Seq("old2", "new4").toDF("event_id")
-    val kept2 = mb.antiJoinExisting(redelivered, existing, sc, Seq(part))
+    val kept2 = kept(redelivered)
     assert(kept2.collect().map(_.getString(0)).toSeq == Seq("new4"))
     assert(reads.value > 0)
   }
@@ -246,7 +249,7 @@ class BloomSidecarSpec extends SparkSpec {
     mb.silverBloom.addBatch(keyed("year=2025/month=9/day=15" -> "c1"))
     mb.factBloom.addBatch(keyed("created_date=2025-09-15" -> "c1"))
 
-    val (_, silverN, factN) = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0))
+    val (_, silverN, factN) = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0)).rows
     // bloom-positive but absent → exact verify keeps the row: healed, once
     assert(silverN == 1 && factN == 1)
     assert(spark.read.parquet(mb.silverPath).count() == 1)
@@ -283,7 +286,7 @@ class BloomSidecarSpec extends SparkSpec {
     val wh = tmpDir("bloom_bulk_wh")
     val events = graft.Tables.load(spark, "/root/testdata/sf0.001", "events").limit(50)
     val raw = graft.pipeline.RefEventsAdapter.toRawJson(events)
-    val (_, silverN, _) = Bulk.run(spark, raw, wh, "2024-01-01", seedBlooms = true)
+    val silverN = Bulk.run(spark, raw, wh, "2024-01-01", seedBlooms = true).silver
     assert(silverN > 0)
 
     val mb = new MicroBatch(spark, staging, wh)

@@ -45,11 +45,16 @@ class MicroBatchSpec extends SparkSpec {
 
     val mb = new MicroBatch(spark, staging, wh)
     val t1 = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0))
-    assert(t1 == ((3L, 2L, 2L))) // 3 raw lines, 2 deduped, 2 fact rows
+    assert(t1.rows == ((3L, 2L, 2L))) // 3 raw lines, 2 deduped, 2 fact rows
 
     val t2 = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 15))
     // 2 lines; only e3 is new (the e2 redelivery is deduped across batches)
-    assert(t2 == ((2L, 1L, 1L)))
+    assert(t2.rows == ((2L, 1L, 1L)))
+    // the report says why: one row silver already held, none unparseable;
+    // u2 missed dim_user and was appended, and every fact row joined
+    assert(t2.held == 1L && t2.unparseable == 0L)
+    assert(t2.dimMissed("dim_user") == 1L && t2.dimAppended("dim_user") == 1L)
+    assert(t2.skZero("dim_user") == 0L && t2.skZero("dim_event") == 0L)
     // silver/fact totals now 3: e1, e2, e3
     assert(Warehouse.read(spark, mb.silverPath).count() == 3)
     assert(Warehouse.read(spark, mb.factPath).count() == 3)
@@ -61,13 +66,13 @@ class MicroBatchSpec extends SparkSpec {
 
     // re-run tick 2: nothing changes (idempotent dynamic overwrite + merge)
     val t2again = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 15))
-    assert(t2again == ((2L, 0L, 0L)))
+    assert(t2again.rows == ((2L, 0L, 0L)) && t2again.held == 2L)
     assert(Warehouse.read(spark, mb.silverPath).count() == 3)
     assert(Warehouse.read(spark, mb.factPath).count() == 3)
     assert(Warehouse.read(spark, mb.dimUserPath).count() == 2)
 
     // empty interval short-circuits
-    assert(mb.runInterval(LocalDateTime.of(2025, 9, 15, 11, 0)) == ((0L, 0L, 0L)))
+    assert(mb.runInterval(LocalDateTime.of(2025, 9, 15, 11, 0)).rows == ((0L, 0L, 0L)))
   }
 
   test("dim SKs stay stable across ticks; old fact partitions stay joinable") {
@@ -416,7 +421,7 @@ class MicroBatchSpec extends SparkSpec {
     // and appends them; tick-1 fact files are untouched, dims unchanged
     val healed = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 15))
     // silver held both rows; the two lost fact rows are appended again
-    assert(healed == ((2L, 0L, 2L)), s"re-run returned $healed")
+    assert(healed.rows == ((2L, 0L, 2L)), s"re-run returned $healed")
     val fact = spark.read.parquet(mb.factPath)
     assert(fact.count() == 3)
     assert(tick1Files.subsetOf(factFiles()))
@@ -508,7 +513,7 @@ class MicroBatchSpec extends SparkSpec {
       raw("c0-1", "u0", "2025-09-15T10:01:00.000+09:00"), // pre-compaction redelivery
       raw("cnew", "u9", "2025-09-15T11:01:00.000+09:00")))
     val t = mb.runInterval(LocalDateTime.of(2025, 9, 15, 11, 0))
-    assert(t == ((2L, 1L, 1L)), s"tick after compaction: $t")
+    assert(t.rows == ((2L, 1L, 1L)), s"tick after compaction: $t")
     assert(Warehouse.read(spark, mb.silverPath).count() == 9)
     assert(Warehouse.read(spark, mb.factPath).count() == 9)
   }
@@ -746,7 +751,8 @@ class MicroBatchSpec extends SparkSpec {
     val (res, p) = TickProbe.during(spark)(mb.runInterval(t))
     // 22 lines, 21 of them new; silver and fact hold 60 day-15 rows and 3
     // day-14 rows
-    assert(res == ((22L, 21L, 21L)), s"tick returned $res")
+    assert(res.rows == ((22L, 21L, 21L)), s"tick returned $res")
+    assert(res.held == 1L && res.unparseable == 0L, s"tick returned $res")
     Seq(mb.silverPath, mb.factPath).foreach(path =>
       assert(Warehouse.read(spark, path).count() == 63, path))
     info(s"steady covered tick: ${p.jobs} jobs, ${p.executions} SQL executions")
@@ -760,7 +766,7 @@ class MicroBatchSpec extends SparkSpec {
     val (mb, t) = warmWarehouse("obatch", _ => Nil)
     val (res, p) = TickProbe.during(spark, roots = Seq(mb.silverPath, mb.factPath))(
       mb.runInterval(t))
-    assert(res == ((20L, 20L, 20L)), s"tick returned $res")
+    assert(res.rows == ((20L, 20L, 20L)), s"tick returned $res")
     // the returned counts are observed on the writes: no action of the
     // tick reads the stored rows
     assert(p.rowsScannedExcept() == 0, s"stored rows read: ${p.scans}")
@@ -792,7 +798,7 @@ class MicroBatchSpec extends SparkSpec {
     // keeps the OTHER payload
     writeStagingFile(staging, 2025, 9, 15, 10, 0, Seq(b, a, other))
     val healed = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0))
-    assert(healed == ((3L, 0L, 2L)), s"re-run returned $healed")
+    assert(healed.rows == ((3L, 0L, 2L)), s"re-run returned $healed")
     assert(spark.read.parquet(mb.factPath).count() == 2)
 
     val fact = spark.read.parquet(mb.factPath)
@@ -880,7 +886,7 @@ class MicroBatchSpec extends SparkSpec {
     val compiles = (1 until 4).map { k =>
       val (res, p) = TickProbe.during(spark)(
         mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 15 * k)))
-      assert(res == ((20L, 20L, 20L)), s"tick $k returned $res")
+      assert(res.rows == ((20L, 20L, 20L)), s"tick $k returned $res")
       Seq(mb.silverPath, mb.factPath).foreach(path =>
         assert(spark.read.parquet(path).count() == 20L * (k + 1), s"tick $k: $path"))
       assert(!p.callStacks.exists(_.contains("MicroBatch.upsertDim")),
@@ -970,13 +976,11 @@ class MicroBatchSpec extends SparkSpec {
       Multimodal.wavBytes(10, 2, 16000, 16, 5, _ => 7.toByte))
     Files.write(mdir.resolve("7.bin"), "not media at all".getBytes("UTF-8"))
 
-    val stages = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    val mb = new MicroBatch(spark, staging, wh, stageSink = Some(stages),
-      mediaStagingBase = Some(mediaStaging))
+    val mb = new MicroBatch(spark, staging, wh, mediaStagingBase = Some(mediaStaging))
     val t1 = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 0))
-    assert(t1._3 == 1L) // the events side of the tick is unaffected
-    // the tick's stage split names the route stage explicitly
-    assert(stages.exists(_._1 == "media_route"))
+    assert(t1.fact == 1L) // the events side of the tick is unaffected
+    // the tick's report names the route stage explicitly
+    assert(t1.stages.exists(_._1 == "media_route"))
 
     val catalog = spark.read.parquet(mb.mediaCatalogPath)
     val byId = catalog
@@ -1005,7 +1009,7 @@ class MicroBatchSpec extends SparkSpec {
     Files.createDirectories(mdir2)
     Files.write(mdir2.resolve("8.bin"), Multimodal.pngBytes(11, 12))
     val t2 = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, 15))
-    assert(t2 == ((0L, 0L, 0L)))
+    assert(t2.rows == ((0L, 0L, 0L)))
     assert(spark.read.parquet(mb.mediaCatalogPath).count() == 7)
   }
 }
