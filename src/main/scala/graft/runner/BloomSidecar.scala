@@ -57,11 +57,6 @@ class BloomSidecar(spark: SparkSession, sinkPath: String,
 
   private val hconf = spark.sparkContext.hadoopConfiguration
 
-  private def fs(p: Path) = p.getFileSystem(hconf)
-
-  private def bloomFiles(partDir: String): Seq[Path] =
-    BloomSidecar.bloomFilesIn(hconf, sinkPath, partDir)
-
   /** Keys inserted past this budget saturate the fixed-size bloom; the
     * fast path then does more exact-verify work than the plain anti-join
     * it replaces, so saturated partitions report uncovered.
@@ -74,7 +69,7 @@ class BloomSidecar(spark: SparkSession, sinkPath: String,
     */
   def covered(partDirs: Seq[String]): Boolean =
     partDirs.nonEmpty && partDirs.forall { d =>
-      val files = bloomFiles(d)
+      val files = BloomSidecar.bloomFilesIn(hconf, sinkPath, d)
       files.nonEmpty && files.map(BloomSidecar.fileCountOf).sum <= saturationItems
     }
 
@@ -82,8 +77,8 @@ class BloomSidecar(spark: SparkSession, sinkPath: String,
     * contributes both files; their union over-approximates — safe).
     */
   def load(partDirs: Seq[String]): Seq[BloomFilter] =
-    partDirs.flatMap(bloomFiles).map { p =>
-      val in = fs(p).open(p)
+    partDirs.flatMap(BloomSidecar.bloomFilesIn(hconf, sinkPath, _)).map { p =>
+      val in = p.getFileSystem(hconf).open(p)
       try BloomFilter.readFrom(in) finally in.close()
     }
 

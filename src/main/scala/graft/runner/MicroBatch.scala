@@ -81,8 +81,9 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     * row's natural key (in the join's order) and whether the row has one,
     * and the SCD-1 attributes that ride along.
     */
-  private case class TickDim(name: String, path: String, join: SilverToGold.DimJoin,
-                             keys: Seq[Column], hasKey: Column, attrs: Seq[String] = Nil) {
+  private case class TickDim(name: String, join: SilverToGold.DimJoin, keys: Seq[Column],
+                             hasKey: Column, attrs: Seq[String] = Nil) {
+    val path = s"$warehouse/$name$tableSuffix"
     val schema = StructType(StructField(join.sk, LongType) +:
       (join.naturals ++ attrs).map(StructField(_, StringType)))
 
@@ -106,12 +107,12 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
   }
 
   private val tickDims = Seq(
-    TickDim("dim_user", dimUserPath, SilverToGold.UserJoin, Seq(col("user_id"), col("anonymous_id")),
+    TickDim("dim_user", SilverToGold.UserJoin, Seq(col("user_id"), col("anonymous_id")),
       col("user_id").isNotNull, Dims.UserAttrs),
-    TickDim("dim_event", dimEventPath, SilverToGold.EventJoin, Seq(col("event_name")), col("event_name").isNotNull),
-    TickDim("dim_page", dimPagePath, SilverToGold.PageJoin, Seq(col("page_name"), col("page_url")),
+    TickDim("dim_event", SilverToGold.EventJoin, Seq(col("event_name")), col("event_name").isNotNull),
+    TickDim("dim_page", SilverToGold.PageJoin, Seq(col("page_name"), col("page_url")),
       col("page_name").isNotNull || col("page_url").isNotNull),
-    TickDim("dim_recipe", dimRecipePath, SilverToGold.RecipeJoin, Seq(col("prop_recipe_id").cast("string")),
+    TickDim("dim_recipe", SilverToGold.RecipeJoin, Seq(col("prop_recipe_id").cast("string")),
       col("prop_recipe_id").isNotNull))
 
   /** `rows` left-joined to the four dims as stored, with miss flags. */

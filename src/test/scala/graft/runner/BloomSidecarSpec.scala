@@ -216,11 +216,10 @@ class BloomSidecarSpec extends SparkSpec {
     // all-new batch: bloom-negative across the board → the O(day) scan
     // must not run AT ALL (the 100-TB claim, pinned deterministically —
     // the short-circuit is explicit, not an AQE artifact)
+    def kept(batch: DataFrame): DataFrame = mb.markExisting(batch, existing, sc, Seq(part))
+      ._1.where(!col(MicroBatch.Present)).select("event_id")
     val clean = Seq("new1", "new2", "new3").toDF("event_id")
-    def kept(batch: DataFrame) =
-      mb.markExisting(batch, existing, sc, Seq(part))._1.where(!col(MicroBatch.Present)).select("event_id")
-    val keptClean = kept(clean)
-    assert(keptClean.collect().map(_.getString(0)).sorted.toSeq == Seq("new1", "new2", "new3"))
+    assert(kept(clean).collect().map(_.getString(0)).sorted.toSeq == Seq("new1", "new2", "new3"))
     assert(reads.value == 0, "clean tick must not read existing partitions")
 
     // a redelivered id flips to the verify path: the scan runs, bounded,
