@@ -39,40 +39,32 @@ class CatalogBulkSpec extends SparkSpec {
     assert(StagingToBronze.listFilesModifiedIn(spark, s"$dir/missing", 0, now).isEmpty)
   }
 
-  test("a bulk pass reports what its writes observed and runs no count action") {
-    val wh = tmpDir("bulkreport")
-    val events = graft.Tables.load(spark, "/root/testdata/sf0.001", "events").limit(200)
-    val raw = RefEventsAdapter.toRawJson(events)
-    val (r, run) = graft.runner.TickProbe.during(spark)(
-      Bulk.run(spark, raw.unionByName(raw), wh, "2024-01-01"))
-    assert(run.scans.count(_._1 == "count") == 0, run.scans.map(_._1).mkString(", "))
-    assert(r.rows == ((400L, 200L, 200L)))
-    assert(r.stages.map(_._1) == Seq("bronze", "silver", "dims", "fact"))
-    assert(r.unparseable == 0L)
-    Seq("dim_user", "dim_event", "dim_page", "dim_recipe").foreach(d =>
-      assert(r.dimAppended(d) == Warehouse.read(spark, s"$wh/$d").count(), d))
-    // SK 0 only where a row has no key: every event has a name and a user
-    assert(r.skZero("dim_event") == 0L && r.skZero("dim_user") == 0L)
-    val fact = Warehouse.read(spark, s"$wh/fact_user_events")
-    Seq("page", "recipe").foreach(d =>
-      assert(r.skZero(s"dim_$d") == fact.where(col(s"${d}_dim_key") === 0).count(), d))
-  }
-
   test("bulk rebuild: full medallion pass over adapter-generated raw lines") {
     val wh = tmpDir("bulkwh")
     val events = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
     val raw = RefEventsAdapter.toRawJson(events)
-    val (b, s, f) = Bulk.run(spark, raw.unionByName(raw), wh, "2024-01-01").rows
+    val (r, run) = graft.runner.TickProbe.during(spark)(
+      Bulk.run(spark, raw.unionByName(raw), wh, "2024-01-01"))
+    val (b, s, f) = r.rows
     assert(b == 2000L) // doubled raw preserved in bronze (raw layer keeps dups)
     assert(s == 1000L) // silver deduped
     assert(f == 1000L) // fact 1:1 with silver
-    // dims exist and have unique SKs
+    // the report's counts ride the writes: the pass runs no count action
+    assert(run.scans.count(_._1 == "count") == 0, run.scans.map(_._1).mkString(", "))
+    assert(r.stages.map(_._1) == Seq("bronze", "silver", "dims", "fact"))
+    assert(r.unparseable == 0L)
+    // dims exist and have unique SKs; the report counts their rows
     val du = Warehouse.read(spark, s"$wh/dim_user")
     assert(du.count() == du.select("user_sk").distinct().count())
-    // fact joins resolved: every event_name is in dim_event (non-zero SK)
+    Seq("dim_user", "dim_event", "dim_page", "dim_recipe").foreach(d =>
+      assert(r.dimAppended(d) == Warehouse.read(spark, s"$wh/$d").count(), d))
+    // fact joins resolved: every event_name is in dim_event (non-zero SK),
+    // and the report's SK-0 counts match the fact table's
     val fact = Warehouse.read(spark, s"$wh/fact_user_events")
     assert(fact.where($"event_dim_key" === 0).count() == 0)
     assert(fact.where($"user_dim_key" === 0).count() == 0)
+    Seq("user", "event", "page", "recipe").foreach(d =>
+      assert(r.skZero(s"dim_$d") == fact.where(col(s"${d}_dim_key") === 0).count(), d))
     // clustered bulk writes bound the small-file spray: at most
     // filesPerPartition (2) parquet files per date partition, instead of
     // one per (shuffle task × date)

@@ -84,12 +84,4 @@ class IncrementalRollupSpec extends SparkSpec {
       Seq.empty, identity)
     assert(!new java.io.File(s"$base/roll").exists())
   }
-
-  test("q_incr_rollup observes each tick's dates on its append: one collect per build") {
-    // the only collect is the calendar of dates the ticks are cut from;
-    // each tick's affected dates ride its append job
-    val (_, run) = graft.runner.TickProbe.during(spark)(
-      graft.SparkEntry.queries("q_incr_rollup")(spark, "/root/testdata/sf0.001"))
-    assert(run.scans.count(_._1 == "collect") == 1, run.scans.map(_._1).mkString(", "))
-  }
 }

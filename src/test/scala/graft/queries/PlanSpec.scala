@@ -323,6 +323,14 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q_incr_rollup observes each tick's dates on its append: one collect per build") {
+    // the only collect is the calendar of dates the ticks are cut from;
+    // each tick's affected dates ride its append job
+    val (_, run) = graft.runner.TickProbe.during(spark)(
+      graft.SparkEntry.queries("q_incr_rollup")(spark, sf))
+    assert(run.scans.count(_._1 == "collect") == 1, run.scans.map(_._1).mkString(", "))
+  }
+
   test("multimodal decode/sample/route plans stay narrow: no hash shuffle") {
     // Every multimodal stage is a per-partition parse or a byte-range
     // slice of the row's own payload — at 100 TB the payload bytes must
