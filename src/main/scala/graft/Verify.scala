@@ -46,6 +46,8 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
+    // the state stores' maintenance timer needs the SparkEnv: stop it first
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     spark.stop()
   }
 }

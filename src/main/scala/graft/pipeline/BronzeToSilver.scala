@@ -38,7 +38,7 @@ object BronzeToSilver {
     // 100 TB this is a hash-partitioned exchange with map-side partial
     // dedup (Catalyst plans dropDuplicates as a hash aggregate), which
     // scales linearly and never collects to the driver.
-    parse(bronze).dropDuplicates("event_id")
+    parse(bronze).where(Parsed).dropDuplicates("event_id")
 
   /** Parse failures (unparseable envelope: no event_id), as a metric a
     * job over the parsed, not yet deduplicated, rows observes — the
@@ -46,6 +46,12 @@ object BronzeToSilver {
     * (bronze_to_silver_iceberg.py:112-113,195).
     */
   val Unparseable: Column = count(when(col("event_id").isNull, 1)).as("unparseable")
+
+  /** The rows that parsed, kept above the job observing [[Unparseable]]:
+    * the event_id dedup would merge a pass's unparseable lines into one
+    * silver (and fact) row.
+    */
+  val Parsed: Column = col("event_id").isNotNull
 
   /** Parse + derive without the final dedup — the streaming path applies
     * watermarked dedup instead (bounded state).

@@ -160,7 +160,7 @@ object RefEventsAdapter {
       // instead of two (optimization guide §1.2). dropDuplicates still
       // drops half its input — the non-vacuity the flag exists for.
       val parsed0 = graft.runner.Pin(BronzeToSilver.parse(bronze0))
-      parsed0.unionByName(parsed0).dropDuplicates("event_id")
+      parsed0.unionByName(parsed0).where(BronzeToSilver.Parsed).dropDuplicates("event_id")
     }
   }
 }

@@ -99,7 +99,7 @@ object Warehouse {
     * WarehouseDedupSpec pins this chosen behavior on a cross-date
     * duplicate. Callers feeding a stream that MUTATES payloads on
     * redelivery must route through the unfused transform + clustered
-    * write instead. Input must be the PARSED (pre-dedup) silver.
+    * write instead. Input: the PARSED silver (unparsed rows drop here).
     *
     * Dedup semantics within a group are `dropDuplicates`' own:
     * dropDuplicates IS an aggregate keyed on event_id taking first() of
@@ -135,7 +135,7 @@ object Warehouse {
     val salt = pmod(xxhash64(col("event_id")), lit(filesPerPartition))
     val keyCols = Set("event_id", "year", "month", "day")
     val others = parsed.columns.filterNot(keyCols)
-    parsed
+    parsed.where(BronzeToSilver.Parsed)
       .repartition(col("year"), col("month"), col("day"), salt)
       .groupBy(col("year"), col("month"), col("day"), salt.as("__salt"),
         col("event_id"))

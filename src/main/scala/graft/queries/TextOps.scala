@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
@@ -58,15 +58,6 @@ object TextOps {
     * DuckDB-hash-oracle contract (re-verified 162/162 after this
     * change at sf0.001 and sf0.01).
     *
-    * GATED on observed scan parallelism (VERDICT r16 #3): at 100 TB
-    * `documents` is thousands of row groups and the scan parallelizes
-    * on its own — an unconditional round-robin there is a full extra
-    * network pass of the corpus in nine query plans. The fan-out fires
-    * only when the scan reports fewer partitions than the data-sized
-    * width — the single-row-group fixture cure, not a scale tax.
-    * (PlanSpec pins both sides: fixture input gains exactly one
-    * round-robin Exchange; a many-partition input gains none.)
-    *
     * WIDTH is data-sized, not core-count-sized (r17): blanket
     * repartition(cores) put ~15 docs on each of 32 tasks at the gate
     * corpus — tasks of tens of ms whose scheduling overhead exceeded
@@ -90,6 +81,13 @@ object TextOps {
     (bytes / 65536).max(BigInt(2)).min(BigInt(cores)).toInt
   }
 
+  /** `df` round-robin repartitioned to [[fanOutWidth]] only when it has
+    * fewer partitions (VERDICT r16 #3): at 100 TB the scan parallelizes on
+    * its own, and a round-robin there is a full extra network pass
+    * (PlanSpec pins both sides). The count is the plan's before AQE, so
+    * this never fires on a frame whose plan ends in a shuffle that AQE
+    * coalesces at run time; off a pin it is the pin's real count.
+    */
   private[queries] def fanOutIfNarrow(df: DataFrame, cores: Int): DataFrame = {
     val target = fanOutWidth(df, cores)
     if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
@@ -515,50 +513,59 @@ object TextOps {
     Pin(cross.unionByName(within))
   }
 
-  /** Candidate near-dup pairs via LSH banding over minhash signatures. */
-  def lshCandidates(sigs: DataFrame): DataFrame = lshCandidates(sigs, MaxBucket)
-
-  /** As [[lshCandidates]] with an explicit bucket cap — a test seam
-    * (package-private so production callers can't bypass the cap).
-    */
-  /** (doc_id, band, band-hash) bucket stream of a signature frame — the
+  /** (doc_id, band, bh, bhs) bucket rows of a signature frame — the
     * banding half of LSH, shared by the symmetric candidate join and the
-    * asymmetric incoming-vs-corpus join (q_incr_dedup).
+    * asymmetric incoming-vs-corpus join (q_incr_dedup). `bhs` holds all
+    * of the doc's band hashes, for [[bucketPairs]].
     */
-  private[queries] def bandBuckets(sigs: DataFrame): DataFrame =
-    bandBuckets(sigs, NumPerms)
-
   private[queries] def bandBuckets(sigs: DataFrame, numPerms: Int): DataFrame = {
-    val bands = (0 until numPerms / BandRows).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until BandRows).map(r =>
-          element_at(col("sig"), b * BandRows + r + 1)): _*).as("bh"))
-    }
-    sigs.select(col("doc_id"), explode(array(bands: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
+    val bhs = (0 until numPerms / BandRows).map(b =>
+      xxhash64((0 until BandRows).map(r => element_at(col("sig"), b * BandRows + r + 1)): _*))
+    sigs.select(col("*"), array(bhs: _*).as("bhs")).drop("sig")
+      .select(col("*"), posexplode(col("bhs")).as(Seq("band", "bh")))
   }
 
+  /** Band → hashes of the buckets holding over `maxBucket` rows: degenerate
+    * band hashes, a small set, observed on the pin of their aggregate.
+    */
+  private def overCapBuckets(buckets: DataFrame, maxBucket: Int): Map[Int, Seq[Long]] =
+    Pin.observed(buckets.groupBy(col("band"), col("bh")).agg(count(lit(1)).as("n"))
+        .where(col("n") > maxBucket), collect_list(struct(col("band"), col("bh"))).as("oc"))
+      ._2("oc").asInstanceOf[scala.collection.Seq[Row]].toSeq.groupMap(_.getInt(0))(_.getLong(1))
+
+  /** The rows of a (band, bh) stream whose bucket is under the cap. */
+  private def underCapRows(overCap: Map[Int, Seq[Long]]): Column =
+    overCap.map { case (j, hs) => col("band") =!= j || !col("bh").isin(hs: _*) }
+      .foldLeft(lit(true))(_ && _)
+
+  /** Row pairs of bucket streams `a` and `b` (aliased so) sharing a bucket
+    * under the cap, each pair once: only from the lowest band in which its
+    * docs share a bucket under the cap (one side's hashes decide it).
+    */
+  private def bucketPairs(a: DataFrame, b: DataFrame, overCap: Map[Int, Seq[Long]],
+                          nBands: Int): DataFrame = {
+    val (bhsA, bhsB) = (col("a.bhs"), col("b.bhs"))
+    val metBefore = (0 until nBands).map { j =>
+      val under = overCap.get(j).fold(lit(true))(hs => !bhsA(j).isin(hs: _*))
+      col("a.band") > j && bhsA(j) === bhsB(j) && under
+    }.reduce(_ || _)
+    a.where(underCapRows(overCap)).alias("a").join(b.where(underCapRows(overCap)).alias("b"),
+      col("a.band") === col("b.band") && col("a.bh") === col("b.bh") && !metBefore)
+  }
+
+  /** Candidate near-dup pairs via LSH banding over a (doc_id, sig, …)
+    * frame: the [[bucketPairs]] of its bucket rows (aliased `a` and `b`,
+    * a.doc_id < b.doc_id, the frame's other columns on each side), each
+    * once, so no pair dedup runs. The rows are fanned out before their
+    * pin, so the join and all that follows it is not one task. The cap
+    * is a test seam (package-private so production callers can't bypass it).
+    */
   private[queries] def lshCandidates(sigs: DataFrame, maxBucket: Int): DataFrame = {
-    val exploded = bandBuckets(sigs)
-    // cap degenerate buckets before the quadratic pair expansion. The
-    // over-cap bucket LIST is tiny (degenerate band-hashes, not docs), so
-    // aggregate it and anti-join it back broadcast — one cheap side
-    // channel instead of a windowed count that shuffles the full exploded
-    // (doc, band) set twice.
-    val overCap = exploded.groupBy(col("band"), col("bh"))
-      .agg(count(lit(1)).as("bucket_n"))
-      .where(col("bucket_n") > maxBucket)
-      .select("band", "bh")
-    // (docs × bands)-cardinality, narrow, read by both sides of the pair
-    // self-join — materialize so the signature computation runs once
-    val counted = Pin(exploded.join(broadcast(overCap), Seq("band", "bh"), "left_anti"))
-    val a = counted.alias("a")
-    val b = counted.alias("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    // read by the over-cap aggregate and both self-join sides
+    val buckets = Pin(fanOutIfNarrow(bandBuckets(sigs, NumPerms),
+      sigs.sparkSession.sparkContext.defaultParallelism))
+    bucketPairs(buckets, buckets, overCapBuckets(buckets, maxBucket), NumPerms / BandRows)
+      .where(col("a.doc_id") < col("b.doc_id"))
   }
 
   /** SimHash locality: two docs at unigram Jaccard ≥ 0.9 differ in at
@@ -595,8 +602,8 @@ object TextOps {
     * single (lang, source) bucket IS the corpus, and an uncapped
     * self-join there is quadratic. Legitimate near-dup clusters are
     * small; a bucket that populous carries no routing signal — route such
-    * corpora through [[lshCandidates]] instead. Same aggregate +
-    * broadcast-anti-join side channel as the LSH cap.
+    * corpora through [[lshCandidates]] instead. The over-cap buckets are
+    * aggregated and anti-joined back broadcast.
     */
   private[queries] def neardupJaccard(docs: DataFrame, maxBucket: Int): DataFrame = {
     val t = docs.select(col("doc_id"), col("lang"), col("source"),
@@ -634,14 +641,18 @@ object TextOps {
     * corpora set-cardinality ≈ corpus cardinality, so the gate is what
     * keeps this path alive at 100 TB. Shared by q_minhash_lsh (expands to
     * member pairs) and q_dup_clusters (connected components over the rep
-    * graph).
+    * graph). Candidates come once each ([[lshCandidates]]), so neither
+    * the verify's input nor its output needs a dedup.
     */
   private[queries] def minhashRepPairs(groups: DataFrame, nGroups: Long,
                                        broadcastLimit: Long = BroadcastSetLimit): DataFrame = {
     val reps = groups.select(col("rep").as("doc_id"), col("toks"))
     def gated(df: DataFrame) = gateBroadcast(df, nGroups, broadcastLimit)
-    val cands = lshCandidates(minhashSignaturesFromHashedToks(reps))
-    cands
+    // exact length filter (Jaccard ≤ min/max set size) before the lookups
+    lshCandidates(reps.select(col("doc_id"), size(col("toks")).as("n"),
+        graft.functions.MinHashSignature(col("toks"), NumPerms).as("sig")), MaxBucket)
+      .where(least(col("a.n"), col("b.n")) * 10 >= greatest(col("a.n"), col("b.n")) * 9)
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .join(gated(reps.select(col("doc_id").as("doc_a"), col("toks").as("toks_a"))), "doc_a")
       .join(gated(reps.select(col("doc_id").as("doc_b"), col("toks").as("toks_b"))), "doc_b")
       .withColumn("inter",
@@ -672,20 +683,24 @@ object TextOps {
     * Returns (id, component) for every node appearing in `edges`.
     */
   private[queries] def connectedComponents(edges: DataFrame): DataFrame = {
-    // the edge count is observed on the pin
-    val (sym0, nEdges) = pinCounted(edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
+    // both directions in one pass over `edges` (a union runs their
+    // lineage twice); the count is observed on the pin. The null filter
+    // is a constraint the pin keeps (a generator passes none through):
+    // without it the rounds infer null filters that break exchange reuse.
+    val (sym0, nEdges) = pinCounted(edges.select(inline(array(
+        struct(col("src"), col("dst")), struct(col("dst").as("src"), col("src").as("dst")))))
+      .where(col("src").isNotNull && col("dst").isNotNull))
     // Size the round frames' partitioning by edge count: after the
     // exact-dedup collapse a dup graph is usually tiny, and at 32
     // partitions every round pays ~32 near-empty tasks per stage — pure
     // scheduler latency that dominated q_dup_clusters (r6: CC ≈ 4.6 s of
     // a 7.5 s query on a 1.5k-node graph). 500k (long,long) rows ≈ 8 MB
     // per task; graphs past parallelism × that keep the session's
-    // partitioning unchanged.
+    // partitioning unchanged. A coalesce to 1 also spares the init's
+    // groupBy an exchange.
     val parts = math.max(1L, math.min(
       sym0.rdd.getNumPartitions.toLong, nEdges / 500000L + 1)).toInt
-    val sym =
-      if (parts < sym0.rdd.getNumPartitions) sym0.coalesce(parts) else sym0
+    val sym = sym0.coalesce(parts)
     // Init fuses the first propagation round into the node-dedup shuffle
     // the init pays anyway: label(id) = min(id, min direct neighbor) —
     // exactly what round 1 over identity labels would produce, one full
@@ -849,20 +864,14 @@ object TextOps {
         val Seq(bIn, bEx) = graft.runner.Par.all(
           () => Pin(bandBuckets(minhashSignaturesFromHashedToks(
               gIn.select($"in_id".as("doc_id"), $"toks"), perms), perms)
-            .select($"doc_id".as("in_id"), $"band", $"bh")),
+            .select($"doc_id".as("in_id"), $"band", $"bh", $"bhs")),
           () => Pin(bandBuckets(minhashSignaturesFromHashedToks(
               gEx.select($"ex_id".as("doc_id"), $"toks"), perms), perms)
-            .select($"doc_id".as("ex_id"), $"band", $"bh")))
-        // same degenerate-bucket cap as the symmetric path, over both
-        // sides; pinned because three consumers read it (both cohort
-        // extractions, the sub-cap anti-joins) and each would otherwise
-        // re-run the union-aggregate shuffle. Its count is the emptiness
-        // probe.
-        val (overCap, nOverCap) = pinCounted(bIn.select($"band", $"bh")
-          .unionByName(bEx.select($"band", $"bh"))
-          .groupBy($"band", $"bh").agg(count(lit(1)).as("n"))
-          .where($"n" > MaxBucket).select($"band", $"bh"))
-        (bIn, bEx, overCap, nOverCap)
+            .select($"doc_id".as("ex_id"), $"band", $"bh", $"bhs")))
+        // the symmetric path's cap, over both sides; empty = no escalation
+        val overCap = overCapBuckets(
+          bIn.select($"band", $"bh").unionByName(bEx.select($"band", $"bh")), MaxBucket)
+        (bIn, bEx, overCap, perms / BandRows)
       }
       // Adaptive banding fidelity: an over-cap bucket is DROPPED from
       // candidate generation, so on a degenerate vocabulary (2-row band
@@ -880,9 +889,8 @@ object TextOps {
       //      ends in cohort → verified directly) or in a sub-cap one
       //      (kept); only a pair colliding in ZERO of 8 bands is missed,
       //      P ≤ (1-0.9²)⁸ ≈ 2e-6. And it is far cheaper: measured at
-      //      sf0.1, escalated banding emitted 6.5M pre-dedup candidate
-      //      rows deduping to 2.1M of the 3.4M possible pairs — a mega
-      //      dedup shuffle to approximate the 3.0M-pair cohort product.
+      //      sf0.1, escalated banding emitted 2.1M of the 3.4M possible
+      //      pairs to approximate the 3.0M-pair cohort product.
       //  (b) ESCALATED RE-BAND (the 100-TB fallback): a cohort too big
       //      to product re-bands at EscalatedNumPerms, where every true
       //      pair gets 64 bucket chances instead of 8 (measured 0
@@ -890,42 +898,25 @@ object TextOps {
       //
       // Healthy corpora have no over-cap bucket and pay neither.
       val cands = {
-        val (bIn, bEx, overCap, nOverCap) = banding(NumPerms)
-        // dedup=false leaves band-duplicate pairs in the stream: the
-        // exact-Jaccard verify is idempotent and, with the merge-walk
-        // [[graft.functions.SortedIntersectSize]] kernel, re-scoring a
-        // ≤8×-duplicated pair costs less than the dropDuplicates shuffle
-        // that would remove it. The healthy path keeps the dedup — at
-        // 100 TB its verify joins shuffle on rep ids, and a pre-deduped
-        // pair stream is 8× less shuffle input there.
-        def subCapCands(i: DataFrame, e: DataFrame, oc: DataFrame,
-                        dedup: Boolean) = {
-          val pairs = i.join(broadcast(oc), Seq("band", "bh"), "left_anti")
-            .join(e.join(broadcast(oc), Seq("band", "bh"), "left_anti"),
-              Seq("band", "bh"))
-            .select($"in_id", $"ex_id")
-          if (dedup) pairs.dropDuplicates() else pairs
-        }
-        if (nOverCap == 0L) subCapCands(bIn, bEx, overCap, dedup = true)
+        val (bIn, bEx, overCap, nBands) = banding(NumPerms)
+        val subCapCands = bucketPairs(bIn, bEx, overCap, nBands).select($"in_id", $"ex_id")
+        if (overCap.isEmpty) subCapCands
         else {
-          val oc = broadcast(overCap)
+          val over = !underCapRows(overCap)
           // per-side cohort extraction, each pinned with its count: two
           // independent pins, submitted concurrently (§2.6)
           val Seq((cohIn, nCI), (cohEx, nCE)) = graft.runner.Par.all(
-            () => pinCounted(bIn.join(oc, Seq("band", "bh"), "left_semi")
-              .select($"in_id").distinct()),
-            () => pinCounted(bEx.join(oc, Seq("band", "bh"), "left_semi")
-              .select($"ex_id").distinct()))
+            () => pinCounted(bIn.where(over).select($"in_id").distinct()),
+            () => pinCounted(bEx.where(over).select($"ex_id").distinct()))
           // overflow-safe product bound (counts are driver Longs)
           if (nCI == 0 || nCE <= DirectVerifyPairBudget / nCI) {
-            // cohort pairs are unique by construction — no pair-level
-            // dedup needed before the (idempotent) exact-Jaccard verify
-            subCapCands(bIn, bEx, overCap, dedup = false)
-              .unionByName(cohIn.crossJoin(
-                gateBroadcast(cohEx, nCE, BroadcastSetLimit)))
+            // a cohort pair also met under the cap is verified twice
+            // (the exact-Jaccard verify is idempotent)
+            subCapCands.unionByName(cohIn.crossJoin(
+              gateBroadcast(cohEx, nCE, BroadcastSetLimit)))
           } else {
-            val (eIn, eEx, eOc, _) = banding(EscalatedNumPerms)
-            subCapCands(eIn, eEx, eOc, dedup = true)
+            val (eIn, eEx, eOc, eBands) = banding(EscalatedNumPerms)
+            bucketPairs(eIn, eEx, eOc, eBands).select($"in_id", $"ex_id")
           }
         }
       }

@@ -295,10 +295,11 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     // The parsed batch is pinned ONCE; every later step reads it. The
     // affected (year, month, day) set (1-2 dates) is observed on the pin
     // and filters the stored-id reads STATICALLY (PartitionFilters); the
-    // parse failures are observed below the dedup, which merges them.
+    // parse failures are observed below the filter that drops them.
     val ((silverNew, m), parseM) = stage("silver_parse") {
       Pin.observing(BronzeToSilver.parse(bronzeBatch), BronzeToSilver.Unparseable)(parsed =>
-        Pin.observed(parsed.dropDuplicates("event_id"), Pin.Rows, AffectedKeys))
+        Pin.observed(parsed.where(BronzeToSilver.Parsed).dropDuplicates("event_id"),
+          Pin.Rows, AffectedKeys))
     }
     val (affectedKeys, parsedN) = (keysOf(m), m("n").asInstanceOf[Long])
 

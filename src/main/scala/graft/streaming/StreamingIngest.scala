@@ -114,7 +114,7 @@ object StreamingIngest {
     val bronzeSchema = spark.read.parquet(bronzePath).schema
     val bronze = StreamTuning.stateSession(spark).readStream
       .schema(bronzeSchema).parquet(bronzePath)
-    val silver = BronzeToSilver.parse(bronze)
+    val silver = BronzeToSilver.parse(bronze).where(BronzeToSilver.Parsed)
       .withWatermark("kst_timestamp", watermark)
       // WithinWatermark, not plain dropDuplicates: with a dedup key that
       // excludes the event-time column, plain streaming dropDuplicates

@@ -90,8 +90,8 @@ class BronzeToSilverSpec extends SparkSpec {
       "2025-09-15")
     assert(r.bronze == 4L)
     assert(r.unparseable == 1L)
-    // e1, e2, and the one row the dedup merges unparseable lines into
-    assert(r.silver == 3L)
+    // e1 and e2: the unparseable line is counted, never written
+    assert(r.silver == 2L)
   }
 
   test("null/absent nested payloads project as nulls") {

@@ -287,7 +287,9 @@ class PlanSpec extends SparkSpec {
       // snapshot pins shape, not cost)
       "q_ann_ivfpq" -> (19, 19),
       // banding + budget-gated cohort escalation + new-vs-corpus join
-      "q_incr_dedup" -> (7, 10),
+      // (each candidate pair once, from its first band under the cap:
+      // no pair dedup, and the cap is a filter, not two anti-joins)
+      "q_incr_dedup" -> (6, 8),
       // banded candidate generation + bounded label propagation rounds
       "q_dup_clusters" -> (3, 0))
     def shape(p: String): (Int, Int) =
@@ -304,10 +306,12 @@ class PlanSpec extends SparkSpec {
     // build ran (each executed plan as text, AQE's initial and final
     // plans both), pins included.
     val builds = Map(
-      // candidate pins, the edge pin, initial labels and the fused
-      // label-propagation rounds, each joining the broadcast labels to
-      // the pinned edges
-      "q_dup_clusters" -> (30, 25),
+      // the groups pin, the over-cap bucket aggregate, the edge pin
+      // (candidates once each: no pair-dedup shuffle, no over-cap
+      // anti-join, one pass for both edge directions), initial labels
+      // and the fused label-propagation rounds, each joining the
+      // broadcast labels to the pinned edges
+      "q_dup_clusters" -> (27, 19),
       // the graph pin (3 shuffles), then one page-keyed shuffle per
       // round (10), each counted in the final and the initial plan, and
       // the returned frame's sort
@@ -329,6 +333,18 @@ class PlanSpec extends SparkSpec {
     val (_, run) = graft.runner.TickProbe.during(spark)(
       graft.SparkEntry.queries("q_incr_rollup")(spark, sf))
     assert(run.scans.count(_._1 == "collect") == 1, run.scans.map(_._1).mkString(", "))
+  }
+
+  test("q_minhash_lsh emits each candidate pair once: no aggregate keyed on the pair") {
+    // the banding's first-kept-band rule makes candidates unique; an
+    // aggregate keyed on (doc_a, doc_b) in any plan the build ran means a
+    // pair dedup is back on the candidate stream
+    val (df, run) = graft.runner.TickProbe.during(spark)(
+      graft.SparkEntry.queries("q_minhash_lsh")(spark, sf))
+    val pairAgg = """Aggregate\(keys=\[doc_a#\d+L?, doc_b#\d+L?\]""".r
+    (df.queryExecution.executedPlan.toString +: run.plans).foreach { p =>
+      assert(pairAgg.findFirstIn(p).isEmpty, s"an aggregate keyed on the candidate pair:\n$p")
+    }
   }
 
   test("multimodal decode/sample/route plans stay narrow: no hash shuffle") {

@@ -251,6 +251,19 @@ class TextVectorSpec extends SparkSpec {
     assert(graft.queries.TextOps.lshCandidates(sigs, 1000).count() == 60L * 59 / 2)
   }
 
+  test("lsh emits each pair once, from its first shared band under the cap") {
+    // docs 1, 2, 3 share band 0's bucket (over a cap of 2, so dropped);
+    // docs 1 and 2 also share band 3. Every other slot is unique per doc.
+    def sig(doc: Long): Seq[Long] = (0 until 16).map { i =>
+      if (i < 2) 7L else if ((i == 6 || i == 7) && doc != 3L) 99L else doc * 1000 + i
+    }
+    val sigs = Seq(1L, 2L, 3L).map(d => (d, sig(d))).toDF("doc_id", "sig")
+    val got = graft.queries.TextOps.lshCandidates(sigs, 2)
+      .select($"a.doc_id", $"b.doc_id").as[(Long, Long)].collect().toSeq
+    // band 0 is the pair's lowest SHARED band, but not its lowest KEPT one
+    assert(got == Seq((1L, 2L)))
+  }
+
   test("ann-ivf: valid ranking, recall at least as useful as random cells") {
     val brute = VectorOps.annBruteForce(embCorpus, 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet

@@ -75,6 +75,25 @@ class MicroBatchSpec extends SparkSpec {
     assert(mb.runInterval(LocalDateTime.of(2025, 9, 15, 11, 0)).rows == ((0L, 0L, 0L)))
   }
 
+  test("unparseable lines are counted by their tick, never written to silver or fact") {
+    val staging = tmpDir("staging_garbage")
+    val wh = tmpDir("wh_garbage")
+    writeStagingFile(staging, 2025, 9, 15, 10, 0, Seq(
+      raw("g1", "u1", "2025-09-15T10:01:00.000+09:00"), "not json at all"))
+    writeStagingFile(staging, 2025, 9, 15, 10, 15, Seq(
+      raw("g2", "u1", "2025-09-15T10:16:00.000+09:00"), """{"event_id":"half"""))
+    val mb = new MicroBatch(spark, staging, wh)
+    // each tick: 2 bronze lines, 1 parse failure, 1 silver and 1 fact row
+    Seq(0, 15).foreach { min =>
+      val t = mb.runInterval(LocalDateTime.of(2025, 9, 15, 10, min))
+      assert(t.rows == ((2L, 1L, 1L)) && t.unparseable == 1L, s"tick $min: $t")
+    }
+    val silver = Warehouse.read(spark, mb.silverPath).select("event_id").as[String]
+    assert(silver.collect().toSeq.sorted == Seq("g1", "g2"))
+    val fact = Warehouse.read(spark, mb.factPath).select("event_id").as[String]
+    assert(fact.collect().toSeq.sorted == Seq("g1", "g2"))
+  }
+
   test("dim SKs stay stable across ticks; old fact partitions stay joinable") {
     val staging = tmpDir("staging5")
     val wh = tmpDir("wh5")
