@@ -96,10 +96,6 @@ object Bench {
     // localCheckpoint lineage-truncation notice from the intentional
     // checkpoint+unpersist hygiene between queries. Bench-only: the specs
     // and production mains keep full warnings.
-    // CacheManager's "already cached" WARN is likewise benign here: each
-    // rep re-derives the same logical plan, so an in-query persist()
-    // re-registers a plan the previous rep cached — intended reuse (the
-    // per-query release below still drops it after).
     // The two streaming per-file WARN floods matter doubly here: beyond
     // burying signal, the streaming entries emit THOUSANDS of lines per
     // drain and the sandbox relays our stderr at real CPU cost — r12
@@ -107,7 +103,6 @@ object Bench {
     Seq("org.apache.spark.sql.execution.window.WindowExec",
         "org.apache.spark.rdd.MapPartitionsRDD",
         "org.apache.spark.rdd.ParallelCollectionRDD",
-        "org.apache.spark.sql.execution.CacheManager",
         "org.apache.spark.sql.execution.streaming.checkpointing.ChecksumCheckpointFileManager",
         "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider").foreach { l =>
       org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -127,7 +122,6 @@ object Bench {
 
     def releaseAll(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
       System.gc()
     }
 
@@ -659,15 +653,13 @@ object Bench {
               System.err.println(s"[bench] $name: ${e.getMessage}"); -1.0
           }
         }
-        // drop this query's cached/checkpointed blocks so the suite's
-        // queries don't accumulate block-manager pressure that skews later
-        // timings (each query's later reps can still reuse its own cache).
-        // BLOCKING release + clearCache: the r4 bench showed non-blocking
+        // drop this query's pinned blocks so the suite's queries don't
+        // accumulate block-manager pressure that skews later timings.
+        // BLOCKING release: the r4 bench showed non-blocking
         // unpersist lets localCheckpoint debris from the heavy text queries
         // pile up in the old gen, and every late-run query then pays the
         // mixed-GC bill (narrow maps inflated 4-14x).
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        spark.catalog.clearCache()
         // r4's regression class, as a failing check instead of a slow tail:
         // nothing may survive the release — a query that leaks storage
         // taxes every later timing with its GC bill.

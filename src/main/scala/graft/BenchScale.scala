@@ -243,7 +243,6 @@ object BenchScale {
       df.write.format("noop").mode("overwrite").save()
     def releaseAll(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
       System.gc()
     }
     def timeQuery(name: String, dir: String): (Double, Long) = {

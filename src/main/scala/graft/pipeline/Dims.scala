@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
 
 /** Dimension builds for the gold star schema (create_dims.py:59-180).
   *
@@ -60,21 +61,6 @@ object Dims {
 
   def dimEvent(silver: DataFrame): DataFrame =
     dimFromColumns(silver, Seq("event_name"), "event_sk")
-
-  /** W3 — the reference-parity SK path: `monotonically_increasing_id`
-    * (create_dims.py:78). Fully parallel (no global window/shuffle), but
-    * SKs are non-contiguous and partition-layout dependent — fine for a
-    * full rebuild where downstream only joins by natural key, wrong for
-    * anything that must be reproducible across runs. [[dimFromColumns]]
-    * is the deterministic default; this exists for bulk rebuilds where
-    * the window's single-partition pass on a huge dim would matter.
-    */
-  def dimFromColumnsFast(silver: DataFrame, idCols: Seq[String], sk: String): DataFrame =
-    silver.select(idCols.map(col): _*)
-      .where(col(idCols.head).isNotNull)
-      .distinct()
-      .withColumn(sk, monotonically_increasing_id() + 1L)
-      .select((sk +: idCols).map(col): _*)
 
   /** The sorted stage of [[withSequentialSk]], exposed package-private so
     * the spec can assert its physical plan parallelizes (range exchange +
@@ -147,6 +133,13 @@ object Dims {
       col("dish_type"), col("ingredient_type"), col("method_type"),
       col("situation_type"), col("difficulty"),
       col("cooking_time").cast("int").as("cooking_time"))
+
+  /** The attributes [[recipeMasterAttrs]] gives dim_recipe beyond its key,
+    * as the master export types them.
+    */
+  val RecipeMasterAttrs: Seq[StructField] =
+    Seq("recipe_name", "dish_type", "ingredient_type", "method_type", "situation_type",
+      "difficulty").map(StructField(_, StringType)) :+ StructField("cooking_time", IntegerType)
 
   def dimRecipeFromMaster(master: DataFrame): DataFrame = {
     val w = Window.orderBy("recipe_id")

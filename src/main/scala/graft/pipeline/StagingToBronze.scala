@@ -25,22 +25,6 @@ object StagingToBronze {
       f"day=${start.getDayOfMonth}%02d/hour=${start.getHour}%02d/minute=$m%02d/*.json"
   }
 
-  /** S9 — list staging files whose modification time falls in
-    * [startMs, endMs), via the Hadoop FileSystem API directly (the
-    * reference goes through py4j for the same listStatus call,
-    * replay_staging_to_bronze.py:68-116).
-    */
-  def listFilesModifiedIn(spark: SparkSession, dir: String,
-                          startMs: Long, endMs: Long): Seq[String] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq
-      .filter(st => st.isFile && st.getModificationTime >= startMs &&
-        st.getModificationTime < endMs)
-      .map(_.getPath.toString)
-  }
-
   /** P1/P2 — rename `value`→`raw_event_string`, enrich with source file +
     * ingestion stamps. `ingestionDate` is the batch's logical date so
     * re-runs are deterministic (current_timestamp is audit-only).

@@ -57,11 +57,10 @@ object Analytics {
     // literal segment_type columns via unionByName.
     "q_dau_rollup" -> { (s, dir) =>
       import s.implicits._
-      // cache only the columns the four levels need — caching the full
-      // frame would pin every column in memory and defeat scan pruning
-      val e = enriched(s, dir)
-        .select($"d", $"user_id", $"user_segment", $"cooking_style", $"ab_grp")
-        .cache()
+      // pin only the columns the four levels need — pinning the full
+      // frame would hold every column in memory and defeat scan pruning
+      val e = Pin(enriched(s, dir)
+        .select($"d", $"user_id", $"user_segment", $"cooking_style", $"ab_grp"))
       def level(segType: String, segCol: org.apache.spark.sql.Column) =
         e.groupBy($"d", segCol.as("segment_value"))
           .agg(countDistinct($"user_id").as("dau"), count(lit(1)).as("n_events"))

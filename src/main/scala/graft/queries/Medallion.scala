@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables.load
 import graft.pipeline._
+import graft.runner.Pin
 
 /** Medallion-pipeline operators as oracle-checkable queries over the
   * driver `events` testdata (SURVEY.md §2.1–2.4, §2.8).
@@ -102,8 +103,10 @@ object Medallion {
     // on event_id like every dedup in the pipeline.
     "q_silver_array_props" -> { (s, dir) =>
       import s.implicits._
-      val silver = RefEventsAdapter.toSilver(load(s, dir, "events"), duplicate = true)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      // read by the three rejoins: pinned to the columns they read
+      val silver = Pin(RefEventsAdapter.toSilver(load(s, dir, "events"), duplicate = true)
+        .select($"event_id", $"prop_selected_filters", $"prop_displayed_recipe_ids",
+          $"prop_targeting_tags"))
       def rejoin(arr: String, outN: String, outCsv: String): DataFrame =
         silver.select($"event_id", posexplode_outer(col(arr)).as(Seq("p", "v")))
           .groupBy($"event_id")
@@ -171,12 +174,13 @@ object Medallion {
     // so the J1 miss path (SK 0) is exercised non-vacuously.
     "q_fact_build" -> { (s, dir) =>
       import s.implicits._
-      // Serialized storage, not the default deserialized cache: the full
-      // adapter-silver parse is reused by 4 dim builds + the fact join, but
-      // deserialized rows of the whole table thrash the pinned 8g heap
-      // (BENCH_r05: this query 2.4→13.2 s on the cache level alone).
-      val silver = RefEventsAdapter.toSilver(load(s, dir, "events"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      // read by 4 dim builds + the fact join: pinned to the columns they
+      // read (holding the whole parsed table thrashed the 8g heap,
+      // BENCH_r05: this query 2.4→13.2 s)
+      val silver = Pin(RefEventsAdapter.toSilver(load(s, dir, "events"))
+        .select($"event_id", $"event_name", $"session_id", $"user_id", $"anonymous_id",
+          $"user_segment", $"cooking_style", $"ab_test_group", $"kst_timestamp",
+          $"page_name", $"page_url", $"prop_recipe_id", $"prop_action"))
       // dim_user deliberately excludes user_id % 5 == 0 so the J1 miss
       // path (coalesce → SK 0) is exercised non-vacuously.
       val dimUser = Dims.dimUser(silver.where(
@@ -215,9 +219,9 @@ object Medallion {
       import s.implicits._
       // duplicate=false: dedup is already exercised by q_silver_parse;
       // this query is about the upsert composition (halves the parse cost)
-      // serialized for the same heap reason as q_fact_build above
-      val silver = RefEventsAdapter.toSilver(load(s, dir, "events"), duplicate = false)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      // read by both dim builds. Pinned whole: a projection here prunes
+      // into the unpinned parse and measured 2.4× slower (sf0.1, 4 cores)
+      val silver = Pin(RefEventsAdapter.toSilver(load(s, dir, "events"), duplicate = false))
       val existing = Dims.dimUser(silver.where($"event_name" === "auth_success"))
       val appended = Dims.dimUserUpsert(silver, existing)
       existing.withColumn("is_new", lit(false))

@@ -1,6 +1,8 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.Tables.load
@@ -84,13 +86,30 @@ object TextOps {
   /** `df` round-robin repartitioned to [[fanOutWidth]] only when it has
     * fewer partitions (VERDICT r16 #3): at 100 TB the scan parallelizes on
     * its own, and a round-robin there is a full extra network pass
-    * (PlanSpec pins both sides). The count is the plan's before AQE, so
-    * this never fires on a frame whose plan ends in a shuffle that AQE
-    * coalesces at run time; off a pin it is the pin's real count.
+    * (PlanSpec pins both sides). The count is [[numPartitions]]: the
+    * plan's before AQE, so this never fires on a frame whose plan ends in
+    * a shuffle that AQE coalesces at run time; off a pin it is the pin's
+    * real count.
     */
   private[queries] def fanOutIfNarrow(df: DataFrame, cores: Int): DataFrame = {
     val target = fanOutWidth(df, cores)
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+    if (numPartitions(df) >= target) df else df.repartition(target)
+  }
+
+  /** `df`'s partition count, read off its physical plan, so it runs no
+    * SQL execution (`Dataset.rdd` runs one to plan the frame): a shuffle's
+    * count (before AQE), else through narrow nodes the leaves' — a file
+    * scan's splits, a pin's partitions.
+    */
+  private[queries] def numPartitions(df: DataFrame): Int = {
+    def of(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => of(a.inputPlan)
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      case r: RDDScanExec => r.rdd.getNumPartitions
+      case _ if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
+      case _ => p.children.map(of).sum
+    }
+    of(df.queryExecution.executedPlan)
   }
 
   private def bigramSurprise(s: SparkSession, dir: String): DataFrame = {
@@ -476,14 +495,8 @@ object TextOps {
     * re-tokenized per branch.
     */
   private def tokenSetGroupsCounted(t: DataFrame, extraKeys: String*): (DataFrame, Long) =
-    pinCounted(t.groupBy((col("toks") +: extraKeys.map(col)): _*)
+    Pin.counted(t.groupBy((col("toks") +: extraKeys.map(col)): _*)
       .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("members")))
-
-  /** `df` pinned, with its row count observed in the pinning job. */
-  private def pinCounted(df: DataFrame): (DataFrame, Long) = {
-    val (pinned, m) = Pin.observed(df, count(lit(1)).as("n"))
-    (pinned, m("n").asInstanceOf[Long])
-  }
 
   /** Expand verified representative pairs (rep_a, rep_b, jac) plus
     * within-group pairs (identical sets, jac = 1.0) into the full member
@@ -687,7 +700,7 @@ object TextOps {
     // lineage twice); the count is observed on the pin. The null filter
     // is a constraint the pin keeps (a generator passes none through):
     // without it the rounds infer null filters that break exchange reuse.
-    val (sym0, nEdges) = pinCounted(edges.select(inline(array(
+    val (sym0, nEdges) = Pin.counted(edges.select(inline(array(
         struct(col("src"), col("dst")), struct(col("dst").as("src"), col("src").as("dst")))))
       .where(col("src").isNotNull && col("dst").isNotNull))
     // Size the round frames' partitioning by edge count: after the
@@ -699,14 +712,14 @@ object TextOps {
     // partitioning unchanged. A coalesce to 1 also spares the init's
     // groupBy an exchange.
     val parts = math.max(1L, math.min(
-      sym0.rdd.getNumPartitions.toLong, nEdges / 500000L + 1)).toInt
+      numPartitions(sym0).toLong, nEdges / 500000L + 1)).toInt
     val sym = sym0.coalesce(parts)
     // Init fuses the first propagation round into the node-dedup shuffle
     // the init pays anyway: label(id) = min(id, min direct neighbor) —
     // exactly what round 1 over identity labels would produce, one full
     // round (join + checkpoint + convergence roundtrip) cheaper. Node
     // count (fixed across rounds) is observed on the init pin.
-    val (init, nNodes) = pinCounted(sym.groupBy(col("src").as("id"))
+    val (init, nNodes) = Pin.counted(sym.groupBy(col("src").as("id"))
       .agg(min(least(col("src"), col("dst"))).as("component"))
       .coalesce(parts))
     var labels = init
@@ -851,9 +864,9 @@ object TextOps {
       // and every pairwise overlap below removes one link of it
       // each pinned with its count, which gates the verify broadcasts below
       val Seq((gIn, nIn), (gEx, nEx)) = graft.runner.Par.all(
-        () => pinCounted(tIn.groupBy($"toks") // read by banding + verify + member expansion
+        () => Pin.counted(tIn.groupBy($"toks") // read by banding + verify + member expansion
           .agg(min($"doc_id").as("in_id"), collect_list($"doc_id").as("members"))),
-        () => pinCounted(tEx.groupBy($"toks").agg(min($"doc_id").as("ex_id"))))
+        () => Pin.counted(tEx.groupBy($"toks").agg(min($"doc_id").as("ex_id"))))
       def banding(perms: Int) = {
         // (reps × bands)-cardinality band streams, materialized once: the
         // over-cap aggregate, the escalation probe, and the candidate
@@ -906,8 +919,8 @@ object TextOps {
           // per-side cohort extraction, each pinned with its count: two
           // independent pins, submitted concurrently (§2.6)
           val Seq((cohIn, nCI), (cohEx, nCE)) = graft.runner.Par.all(
-            () => pinCounted(bIn.where(over).select($"in_id").distinct()),
-            () => pinCounted(bEx.where(over).select($"ex_id").distinct()))
+            () => Pin.counted(bIn.where(over).select($"in_id").distinct()),
+            () => Pin.counted(bEx.where(over).select($"ex_id").distinct()))
           // overflow-safe product bound (counts are driver Longs)
           if (nCI == 0 || nCE <= DirectVerifyPairBudget / nCI) {
             // a cohort pair also met under the cap is verified twice

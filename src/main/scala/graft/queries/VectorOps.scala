@@ -202,11 +202,11 @@ object VectorOps {
     * arrival order and yield bitwise-different centroids per subplan
     * (ADVICE r13 #4).
     */
-  private[queries] def lloydCentroids(cached: DataFrame, cells: Int): DataFrame = {
-    var centroids = cached.orderBy(col("vec_id")).limit(cells)
+  private[queries] def lloydCentroids(emb: DataFrame, cells: Int): DataFrame = {
+    var centroids = emb.orderBy(col("vec_id")).limit(cells)
       .select(col("vec_id").cast("int").as("cell"), col("v").as("cv"))
     for (_ <- 0 until 2) {
-      val assigned = assignCells(cached, centroids)
+      val assigned = assignCells(emb, centroids)
       centroids = Pin(assigned
         .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cell"), col("pos")).agg(avg(col("x")).as("mx"))
@@ -231,10 +231,10 @@ object VectorOps {
     * (~5/6 of q_ann_ivfpq_scale's 344 s); the narrow form shuffles
     * nothing.
     */
-  private[queries] def assignCells(cached: DataFrame, cents: DataFrame): DataFrame = {
+  private[queries] def assignCells(emb: DataFrame, cents: DataFrame): DataFrame = {
     val packed = cents.agg(
       array_sort(collect_list(struct(col("cell"), col("cv")))).as("es"))
-    cached.crossJoin(broadcast(packed))
+    emb.crossJoin(broadcast(packed))
       .select(col("vec_id"), col("v"),
         graft.functions.NearestCell(col("v"), col("es")).as("cell"))
   }
@@ -262,10 +262,10 @@ object VectorOps {
     * only pays past that.
     */
   private[queries] def assignCellsHierarchical(
-      cached: DataFrame, cents: DataFrame,
+      emb: DataFrame, cents: DataFrame,
       superK: Int = 64, memberR: Int = 4): DataFrame = {
     val nCells = cents.count()
-    if (nCells < 4L * superK) return assignCells(cached, cents)
+    if (nCells < 4L * superK) return assignCells(emb, cents)
     val superCents = lloydCentroids(
       cents.select(col("cell").cast("long").as("vec_id"), col("cv").as("v")),
       superK)
@@ -295,7 +295,7 @@ object VectorOps {
     // tier; sorting BEFORE it spills a 5.5 GB sorter per pass just to
     // keep a one-slot memo hot.) The final projection consumes sub_es
     // from the broadcast row without ever copying it into an output row.
-    cached.crossJoin(broadcast(superPacked))
+    emb.crossJoin(broadcast(superPacked))
       .withColumn("super", graft.functions.NearestCell(col("v"), col("ses")))
       .drop("ses")
       .join(broadcast(packedBySuper), Seq("super"), "left")
@@ -307,11 +307,13 @@ object VectorOps {
           .as("cell"))
   }
 
+  /** IVF top-k over `emb`, which the Lloyd passes, the assignment and the
+    * query probes each read: callers pass a pinned corpus.
+    */
   def annIvf(emb: DataFrame, k: Int, cells: Int = 8, nprobe: Int = 3): DataFrame = {
-    val cached = emb.cache()
-    val cents = broadcast(lloydCentroids(cached, cells))
+    val cents = broadcast(lloydCentroids(emb, cells))
 
-    val corpus = assignCells(cached, cents)
+    val corpus = assignCells(emb, cents)
 
     // NARROW probe routing (r17, same as ivfPqQuery): centroids pack to
     // one broadcast cell-sorted array and each query row sorts its
@@ -321,7 +323,7 @@ object VectorOps {
     // zero shuffle instead of an exchange + sort on queries×cells rows.
     val centsPacked = cents.agg(
       array_sort(collect_list(struct(col("cell"), col("cv")))).as("pes"))
-    val queryProbes = cached.where(col("vec_id") < 3).crossJoin(broadcast(centsPacked))
+    val queryProbes = emb.where(col("vec_id") < 3).crossJoin(broadcast(centsPacked))
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         slice(array_sort(transform(col("pes"), e => struct(
           (-graft.functions.CosineSimilarity(col("v"), e.getField("cv"))).as("negd"),
@@ -482,13 +484,41 @@ object VectorOps {
     */
   private[queries] case class IvfPqIndex(cents: DataFrame, books: DataFrame,
                                          codes: DataFrame, cellSizes: DataFrame,
-                                         stageSec: Seq[(String, Double)] = Nil,
-                                         scratchDir: Option[String] = None)
+                                         stageSec: Seq[(String, Double)] = Nil)
+
+  /** Vectors past which an ANN tier materializes through parquet scratch
+    * ([[pinLarge]]) instead of an in-memory [[Pin]].
+    */
+  private val ScratchPinRows = 4000000L
+
+  /** `df` materialized for reuse: a [[Pin]], or with `scratch` a parquet
+    * round-trip into `scratch/name`. Past [[ScratchPinRows]] vectors
+    * in-memory pins OOM'd the 8 GB heap twice — first in MemoryStore
+    * unroll, then in the Java-serialized read-back of spilled blocks,
+    * even with data-sized 50k-row partitions — so the large tiers pin
+    * columnar, streamed and off-heap both ways, as a production job
+    * materializes a stage (measured: parquet pins cost the 100k tier
+    * +8 s, so smaller tiers keep the in-memory pin). 16 MB row groups:
+    * each concurrent writer task buffers one row group on-heap before
+    * flushing (the default 128 MB × 32 writers was itself an OOM at the
+    * 10M tier); a scratch pin is read back once, sequentially, so the
+    * granularity costs nothing. The read-back takes the written schema,
+    * so it infers none. The caller deletes `scratch`.
+    */
+  private def pinLarge(df: DataFrame, scratch: Option[String], name: String): DataFrame =
+    scratch match {
+      case None => Pin(df)
+      case Some(dir) =>
+        df.write.option("parquet.block.size", 16L * 1024 * 1024).parquet(s"$dir/$name")
+        df.sparkSession.read.schema(df.schema).parquet(s"$dir/$name")
+    }
 
   /** Index-build phase (train + encode). `materialize = true`
     * checkpoints the code table and cell sizes — the scale-tier bench
     * uses it to time build and query separately; the registry gate
-    * keeps the single lazy plan. With `trainPred`, BOTH quantizers
+    * keeps the single lazy plan. `scratch` (big tiers only) routes the
+    * build's pins through parquet ([[pinLarge]]) and its coarse
+    * assignment through [[assignCellsHierarchical]]. With `trainPred`, BOTH quantizers
     * train on the sampled rows only (the faiss regime — coarse
     * centroids AND PQ codebooks train on ≤10⁵-ish sampled vectors /
     * residuals regardless of corpus size; VERDICT r11 #6): training
@@ -497,16 +527,10 @@ object VectorOps {
     * corpus-linear. Without `trainPred`, training covers the corpus —
     * the small-gate path, bit-identical to previous rounds.
     */
-  private def ivfPqBuild(cached: DataFrame, cells: Int,
+  private def ivfPqBuild(emb: DataFrame, cells: Int,
                          trainPred: Option[Column],
                          materialize: Boolean,
-                         nHint: Long = -1L): IvfPqIndex = {
-    // (The 10M-tier OOM history, for the next reader: in-memory pins of
-    // the 10M-row assigned table and its ×PqM exploded residuals OOM'd
-    // the 8 GB heap twice — first in MemoryStore unroll, then in the
-    // Java-serialized read-back of spilled localCheckpoint blocks, even
-    // with data-sized 50k-row partitions. The parquet scratch pin below
-    // is the fix: columnar, streamed, off-heap both ways.)
+                         scratch: Option[String] = None): IvfPqIndex = {
     // In materialize mode every stage below ends in an EAGER node
     // (localCheckpoint), so wrapping it in stage() yields an honest
     // per-stage wall split; in lazy mode stage() just labels zero-cost
@@ -529,7 +553,7 @@ object VectorOps {
     // invariant (every subplan reads the SAME centroid bytes) rides on
     // the helper's pin.
     val cents = stage("coarse_train") {
-      broadcast(lloydCentroids(trainPred.map(cached.where).getOrElse(cached), cells))
+      broadcast(lloydCentroids(trainPred.map(emb.where).getOrElse(emb), cells))
     }
     // In the materialized (scale-tier) build, pin the two expensive
     // intermediates: without this, the full-corpus coarse assignment
@@ -539,35 +563,11 @@ object VectorOps {
     // cell sizes (measured: 4× of the 1M tier's 23-minute build was
     // exactly this recomputation). The registry gate keeps the single
     // lazy plan (its exchange counts are snapshot-pinned and its corpus
-    // is small enough that recomputation is cheaper than pinning). Pin
-    // MECHANISM matters at the 10M tier: localCheckpoint blocks that
-    // spill round-trip through Java object serialization on read-back,
-    // whose transient object graphs OOM'd the 8 GB heap even at 50k-row
-    // partitions — big tiers (nHint > 4M vectors) pin through a parquet
-    // scratch round-trip instead (columnar, streamed, off-heap — how a
-    // production job materializes a stage), deleted by the caller via
-    // IvfPqIndex.scratchDir. Tiers at ≤1M keep the faster in-memory
-    // [[Pin]] (measured: parquet pins cost the 100k tier +8 s).
-    val scratch: Option[String] =
-      if (materialize && nHint > 4000000L)
-        Some(java.nio.file.Files.createTempDirectory("graft_ivfpq_pin").toString)
-      else None
+    // is small enough that recomputation is cheaper than pinning).
     var pinN = 0
     def pin(df: DataFrame): DataFrame =
       if (!materialize) df
-      else scratch match {
-        case Some(dir) =>
-          pinN += 1
-          val p = s"$dir/pin_$pinN"
-          // 16 MB row groups: each of the 32 concurrent writer tasks
-          // buffers one row group on-heap before flushing — the default
-          // 128 MB × 32 writers was itself an OOM at the 10M tier.
-          // Scratch pins are re-read once sequentially, so row-group
-          // granularity costs nothing here.
-          df.write.option("parquet.block.size", 16L * 1024 * 1024).parquet(p)
-          df.sparkSession.read.parquet(p)
-        case None => Pin(df)
-      }
+      else { pinN += 1; pinLarge(df, scratch, s"pin_$pinN") }
     val assigned = stage("corpus_assign") {
       // big tiers route through the two-level assignment (superK dots +
       // member-cell argmax instead of the full n × cells wall); the
@@ -575,8 +575,8 @@ object VectorOps {
       // parquet-pin path: columnar read-back streams, so partition
       // width no longer risks read-back OOM, and the shuffle would
       // move the full 64-dim vectors (~6 GB at 10M) for nothing.
-      val a = if (scratch.isDefined) assignCellsHierarchical(cached, cents)
-              else assignCells(cached, cents)
+      val a = if (scratch.isDefined) assignCellsHierarchical(emb, cents)
+              else assignCells(emb, cents)
       pin(a)
     }
     // residuals r = v - centroid(cell): the PQ trains on what the coarse
@@ -623,23 +623,25 @@ object VectorOps {
       pin(assigned.groupBy(col("cell").as("ivf_cell"))
         .agg(count(lit(1)).as("cell_n")))
     }
-    IvfPqIndex(cents, books, codes, cellSizes,
-      if (materialize) stage.splits else Nil, scratch)
+    IvfPqIndex(cents, books, codes, cellSizes, if (materialize) stage.splits else Nil)
   }
 
+  /** [[annIvfPq]] with explicit index parameters. `emb` is read by the
+    * training passes, the encode and the query: callers pass a pinned
+    * corpus.
+    */
   def annIvfPqWithScan(emb: DataFrame, k: Int, cells: Int, nprobe: Int,
                        queryPred: Column,
                        trainPred: Option[Column] = None): (DataFrame, DataFrame) = {
-    val cached = emb.cache()
-    val idx = ivfPqBuild(cached, cells, trainPred, materialize = false)
-    ivfPqQuery(cached, idx, k, nprobe, queryPred)
+    val idx = ivfPqBuild(emb, cells, trainPred, materialize = false)
+    ivfPqQuery(emb, idx, k, nprobe, queryPred)
   }
 
   /** Query phase over a built index: probe routing, ADC over probed
     * codes, exact re-rank of the shortlist, and the per-query scanned
     * count.
     */
-  private def ivfPqQuery(cached: DataFrame, idx: IvfPqIndex, k: Int,
+  private def ivfPqQuery(emb: DataFrame, idx: IvfPqIndex, k: Int,
                          nprobe: Int, queryPred: Column,
                          rerank: Int = PqRerank)
       : (DataFrame, DataFrame) = {
@@ -657,7 +659,7 @@ object VectorOps {
     // a queries×cells frame in every query run.
     val centsPacked = cents.agg(
       array_sort(collect_list(struct(col("cell"), col("cv")))).as("pes"))
-    val queryProbes = cached.where(queryPred).crossJoin(broadcast(centsPacked))
+    val queryProbes = emb.where(queryPred).crossJoin(broadcast(centsPacked))
       .select(col("vec_id").as("query_id"),
         slice(array_sort(transform(col("pes"), e => struct(
           (-graft.functions.CosineSimilarity(col("v"), e.getField("cv"))).as("negd"),
@@ -669,7 +671,7 @@ object VectorOps {
     // per-(query, subspace, code) partial dots vs the RAW query
     // sub-vectors (dot(q, r) decomposes directly — no query residual
     // needed per cell, so one table serves every probed cell)
-    val table = subVectors(cached.where(queryPred))
+    val table = subVectors(emb.where(queryPred))
       .select(col("vec_id").as("query_id"), col("m"), col("sv"))
       .join(broadcast(books), Seq("m"))
       .select(col("query_id"), col("m"), col("cell").as("code"),
@@ -687,8 +689,8 @@ object VectorOps {
       .where(col("rr") <= rerank)
       .select(col("query_id"), col("vec_id"))
     val scored = shortlist
-      .join(cached, Seq("vec_id"))
-      .join(broadcast(querySetOf(cached, queryPred)), Seq("query_id"))
+      .join(emb, Seq("vec_id"))
+      .join(broadcast(querySetOf(emb, queryPred)), Seq("query_id"))
       .withColumn("cos", graft.functions.CosineSimilarity(col("qv"), col("v")))
     val scan = queryProbes.join(idx.cellSizes, Seq("ivf_cell"))
       .groupBy(col("query_id")).agg(sum(col("cell_n")).as("n_scanned"))
@@ -729,21 +731,18 @@ object VectorOps {
                         cells: Int, nprobe: Int,
                         nQueries: Int = AnnScaleQueries, k: Int = 5,
                         minHits: Int = 3): AnnTierStats = {
-    // Storage level scales with the tier: the deserialized columnar
-    // cache is right up to ~1M vectors, but a 10M × 64-double corpus is
-    // ~5 GB raw — at that size BOTH in-memory levels OOM'd the 8 GB
-    // bench heap in MemoryStore unroll (putIteratorAsBytes buffers each
-    // partition's serialized batches in memory before spilling; 32
-    // concurrent ~160 MB unrolls > heap). DISK_ONLY streams batches to
-    // disk with one bounded builder per task — the corpus materializes
-    // once and every subsequent scan reads the (page-cached) local
-    // blocks, which is exactly how a 100-TB corpus behaves: you don't
-    // pin it in RAM, you re-read columnar storage.
-    val emb = scaledCorpus(s, dir, rep).persist(
-      if (rep >= 1000) org.apache.spark.storage.StorageLevel.DISK_ONLY
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = emb.count() // fixture materialization, outside both timings
+    // The corpus is pinned once, outside both timings, as the build pins
+    // its stages: past ScratchPinRows vectors through parquet scratch
+    // (a 10M × 64-double corpus is ~5 GB raw — you don't pin it in RAM,
+    // you re-read columnar storage), else in memory.
     val nBase = load(s, dir, "embeddings").count()
+    val scratch =
+      if (nBase * rep > ScratchPinRows)
+        Some(java.nio.file.Files.createTempDirectory("graft_ivfpq_pin").toString)
+      else None
+    val (emb, m) = Pin.observing(scaledCorpus(s, dir, rep), Pin.Rows)(
+      pinLarge(_, scratch, "corpus"))
+    val n = m("n").asInstanceOf[Long]
     val pred = col("vec_id") < nQueries.toLong
     def sec(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -756,7 +755,7 @@ object VectorOps {
     val trainN = math.max(nBase, 2L * cells)
     val buildSec = sec {
       idx = ivfPqBuild(emb, cells, trainPred = Some(col("vec_id") < trainN),
-        materialize = true, nHint = n)
+        materialize = true, scratch)
     }
     // Re-rank depth must cover the near-tie multiplicity: the fixture
     // puts `rep` near-identical replicas in every base's cluster, and
@@ -812,8 +811,7 @@ object VectorOps {
     val assignAgreement =
       if (agreeRow.getLong(1) == 0) 0.0
       else agreeRow.getLong(0).toDouble / agreeRow.getLong(1)
-    emb.unpersist()
-    idx.scratchDir.foreach(d =>
+    scratch.foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     AnnTierStats(n, buildSec, querySec, recallFailures, scanFailures,
       idx.stageSec, recallAtK, scannedFrac, assignAgreement)
@@ -827,10 +825,11 @@ object VectorOps {
     * measured the fixed-8-cell form at 60× time for 10× data, the
     * defining quadratic smell. Every gate sf still resolves to 8 cells
     * (≤2048 vectors), so the oracle contracts are count-identical; the
-    * corpus count feeding the cell formula is a bounded driver scalar.
+    * corpus count `n` feeding the cell formula is a bounded driver scalar,
+    * observed where the caller pinned `emb` (read by the Lloyd passes and
+    * both pair sides).
     */
-  def semDedupRemoved(emb: DataFrame, targetCellSize: Long = 256): DataFrame = {
-    val n = emb.count()
+  def semDedupRemoved(emb: DataFrame, n: Long, targetCellSize: Long = 256): DataFrame = {
     val cells = math.max(8L, (n + targetCellSize - 1) / targetCellSize).toInt
     val cents = broadcast(lloydCentroids(emb, cells))
     val assigned = assignCells(emb, cents)
@@ -847,8 +846,10 @@ object VectorOps {
     * the CONTRACT's oracle anchor and is quadratic by definition — at
     * scale tiers only the production path's cost is the claim).
     */
-  def semDedupProduction(s: SparkSession, dir: String): DataFrame =
-    semDedupRemoved(corpusOf(s, dir).cache())
+  def semDedupProduction(s: SparkSession, dir: String): DataFrame = {
+    val (emb, n) = Pin.counted(corpusOf(s, dir))
+    semDedupRemoved(emb, n)
+  }
 
   /** Recall contract vs the in-query brute-force baseline: per query,
     * the ANN path must return exactly k rows and hit at least `minHits`
@@ -889,7 +890,7 @@ object VectorOps {
     // data-adaptive quantizer recalls far better than hyperplane LSH on
     // this corpus — that is the point of having both).
     "q_ann_ivf" -> { (s, dir) =>
-      val emb = corpusOf(s, dir)
+      val emb = Pin(corpusOf(s, dir))
       recallContract(annIvf(emb, 5), annBruteForce(emb, 5), minHits = 4)
     },
 
@@ -901,7 +902,7 @@ object VectorOps {
     // case); floor pinned at 2 with margin. PqK/PqM/PqRerank are the
     // recall-vs-memory knobs.
     "q_ann_pq" -> { (s, dir) =>
-      val emb = corpusOf(s, dir).cache()
+      val emb = Pin(corpusOf(s, dir))
       recallContract(annPq(emb, 5), annBruteForce(emb, 5), minHits = 2)
     },
 
@@ -914,7 +915,7 @@ object VectorOps {
     // for both stages at once (measured 2-5/5 across sfs — cell
     // truncation loses what flat-PQ ADC would re-find).
     "q_ann_ivfpq" -> { (s, dir) =>
-      val emb = corpusOf(s, dir).cache()
+      val emb = Pin(corpusOf(s, dir))
       recallContract(annIvfPq(emb, 5), annBruteForce(emb, 5), minHits = 2)
     },
 
@@ -931,7 +932,7 @@ object VectorOps {
     // when recall happens to survive). Integer-exact bound: n_scanned ×
     // cells ≤ 2 × nprobe × n_corpus.
     "q_ann_ivfpq_scale" -> { (s, dir) =>
-      val emb = scaledCorpus(s, dir).cache()
+      val (emb, n) = Pin.counted(scaledCorpus(s, dir))
       // replica 0 of the first AnnScaleQueries bases (replica-major ids)
       val pred = col("vec_id") < AnnScaleQueries.toLong
       // train the coarse quantizer on the replica-0 base sample (the
@@ -951,13 +952,11 @@ object VectorOps {
           col("vec_id") =!= col("query_id"))
           .withColumn("cos",
             graft.functions.CosineSimilarity(col("qv"), col("v"))), 5)
-      val n = emb.agg(count(lit(1)).as("n_corpus"))
       recallContract(ann, bf, minHits = 3)
         .join(scan, Seq("query_id"), "left")
-        .crossJoin(broadcast(n))
-        .select(col("query_id"), col("k"), col("n_corpus"), col("recall_ok"),
+        .select(col("query_id"), col("k"), lit(n).as("n_corpus"), col("recall_ok"),
           (coalesce(col("n_scanned"), lit(0L)) * AnnScaleCells.toLong <=
-            lit(2L) * AnnScaleProbes.toLong * col("n_corpus"))
+            lit(2L * AnnScaleProbes * n))
             .as("scanned_frac_ok"))
         .orderBy(col("query_id"))
     },
@@ -1061,8 +1060,8 @@ object VectorOps {
     // scatter true pairs across cells, the worst case — clustered real
     // embeddings concentrate them, which is the paper's premise).
     "q_semdedup" -> { (s, dir) =>
-      val emb = corpusOf(s, dir).cache()
-      val semRemoved = semDedupRemoved(emb)
+      val (emb, n) = Pin.counted(corpusOf(s, dir))
+      val semRemoved = semDedupRemoved(emb, n)
       val ea = emb.select(col("vec_id").as("id_a"), col("v").as("va"))
       val eb = emb.select(col("vec_id").as("id_b"), col("v").as("vb"))
       val exactRemoved = ea.join(eb, col("id_b") < col("id_a"))
@@ -1244,8 +1243,8 @@ object VectorOps {
     // isotropic data's tiny eigengap is the worst case for power
     // iteration and makes strict ordering meaningless).
     "q_embed_pca" -> { (s, dir) =>
-      val emb = corpusOf(s, dir).cache()
-      val n = emb.count().toDouble
+      val (emb, nRows) = Pin.counted(corpusOf(s, dir))
+      val n = nRows.toDouble
       val e1 = emb.select(col("v"), posexplode(col("v")).as(Seq("i", "x")))
       val upper = e1.select(col("i"), col("x"), posexplode(col("v")).as(Seq("j", "y")))
         .where(col("j") >= col("i"))

@@ -79,9 +79,7 @@ object Bulk {
         // assignment — a bulk user dim is the one dim that can reach
         // 10⁸ rows at 100 TB
         dim("dim_user", Dims.dimUserScalable(silverAll)),
-        // bulk rebuild: the W3 fast path (monotonically_increasing_id) —
-        // no global window; downstream joins only by natural key
-        dim("dim_event", Dims.dimFromColumnsFast(silverAll, Seq("event_name"), "event_sk")),
+        dim("dim_event", Dims.dimEvent(silverAll)),
         dim("dim_page", Dims.dimPage(silverAll)),
         dim("dim_recipe", {
           val masterPath = recipeMasterPath.getOrElse {

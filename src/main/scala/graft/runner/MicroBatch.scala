@@ -69,23 +69,19 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     if (exists(path)) spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(java.util.List.of[Row](), schema)
 
-  /** A dim sink's full on-disk schema (one schema-inference job), or
-    * `narrow` when the sink holds no data file yet.
-    */
-  private def onDiskSchema(path: String, narrow: StructType): StructType =
-    if (!exists(path)) narrow
-    else try spark.read.parquet(path).schema
-    catch { case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => narrow }
-
   /** A persisted dim: its name and sink, the fact join it serves, a batch
     * row's natural key (in the join's order) and whether the row has one,
-    * and the SCD-1 attributes that ride along.
+    * the SCD-1 attributes that ride along, and the columns only a bulk
+    * build fills (`filled`).
     */
   private case class TickDim(name: String, join: SilverToGold.DimJoin, keys: Seq[Column],
-                             hasKey: Column, attrs: Seq[String] = Nil) {
+                             hasKey: Column, attrs: Seq[String] = Nil,
+                             filled: Seq[StructField] = Nil) {
     val path = s"$warehouse/$name$tableSuffix"
     val schema = StructType(StructField(join.sk, LongType) +:
       (join.naturals ++ attrs).map(StructField(_, StringType)))
+    /** The sink's full schema, which every append is written to. */
+    val stored = StructType(schema ++ filled)
 
     /** A row with a key misses unless its join matched a dim row with
       * exactly that key, null-safely as [[Dims.dimUpsert]] compares. So
@@ -113,7 +109,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     TickDim("dim_page", SilverToGold.PageJoin, Seq(col("page_name"), col("page_url")),
       col("page_name").isNotNull || col("page_url").isNotNull),
     TickDim("dim_recipe", SilverToGold.RecipeJoin, Seq(col("prop_recipe_id").cast("string")),
-      col("prop_recipe_id").isNotNull))
+      col("prop_recipe_id").isNotNull, filled = Dims.RecipeMasterAttrs))
 
   /** `rows` left-joined to the four dims as stored, with miss flags. */
   private def joinStoredDims(rows: DataFrame): DataFrame =
@@ -151,18 +147,15 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     * sink stays byte-identical) unless the sink does not exist yet.
     */
   private def upsertDim(d: TickDim, rows: DataFrame): (DataFrame, Long) = {
-    val (appended, m) = Pin.observed(
+    val (appended, n) = Pin.counted(
       Dims.dimUpsert(d.candidates(rows), readOrEmpty(d.path, d.schema),
-        d.join.naturals, d.join.sk, d.attrs),
-      count(lit(1)).as("n"))
-    val n = m("n").asInstanceOf[Long]
+        d.join.naturals, d.join.sk, d.attrs))
     if (n > 0L || !exists(d.path)) {
-      // Null-fill to the sink's FULL on-disk schema: a bulk-seeded dim can
-      // hold more columns (dim_recipe's master attributes), and a narrower
-      // appended file would win parquet's single-footer schema inference.
+      // Null-filled to the sink's full schema: a bulk-seeded dim_recipe
+      // holds the master's attributes, and a narrower appended file could
+      // win parquet's single-footer schema inference.
       // [[refreshDimRecipeFromMaster]] backfills the nulls later.
-      val full = onDiskSchema(d.path, d.schema)
-      appended.select(full.map(f =>
+      appended.select(d.stored.map(f =>
           if (appended.columns.contains(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)): _*)
         .write.mode("append").parquet(d.path)

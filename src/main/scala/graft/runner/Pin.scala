@@ -27,6 +27,12 @@ object Pin {
     if (metrics.isEmpty) (apply(df), Map.empty)
     else observing(df, metrics: _*)(apply)
 
+  /** `df`, materialized, with its row count observed in the same job. */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val (pinned, m) = observed(df, Rows)
+    (pinned, m("n").asInstanceOf[Long])
+  }
+
   /** Runs `action` over `df` — a write of it, or a pin of a frame built
     * on it — and returns its result with the values of `metrics` over
     * `df`'s rows, aggregated in the job the action runs. The action must

@@ -123,20 +123,18 @@ class NearestCellSpec extends SparkSpec {
   }
 
   test("runs inside whole-stage codegen") {
-    // cache the corpus frame, as assignCells' callers do: without the
-    // InMemoryRelation boundary Catalyst collapses the float→double
-    // transform() HOF into the same projection, and a projection
-    // containing a CodegenFallback HOF falls back wholesale
+    // pin the corpus frame, as assignCells' callers do: without the pin's
+    // boundary Catalyst collapses the float→double transform() HOF into
+    // the same projection, and a projection containing a CodegenFallback
+    // HOF falls back wholesale
     val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
-      .cache()
-    emb.count()
+      .transform(graft.runner.Pin(_))
     val es = array(struct(lit(0).as("cell"),
       array((0 until 64).map(_ => lit(0.1)): _*).as("cv")))
     val df = emb.select(NearestCell($"v", es).as("cell"))
     assert("""\*\(\d+\) Project \[nearestcell""".r
       .findFirstIn(df.queryExecution.executedPlan.toString).isDefined,
       df.queryExecution.executedPlan.toString.take(400))
-    emb.unpersist()
   }
 }

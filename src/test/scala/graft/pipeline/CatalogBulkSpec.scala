@@ -1,43 +1,15 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.runner.Bulk
 
-/** Catalog DDL (S7/S8), saveAsTable sinks (S5/S6), mtime file listing
-  * (S9), and the EP2 bulk rebuild.
+/** The EP2 bulk rebuild, its master-built dim_recipe, and co-bucketed
+  * catalog tables.
   */
 class CatalogBulkSpec extends SparkSpec {
   import spark.implicits._
-
-  test("database DDL + partitioned table DDL + append/overwrite + refresh") {
-    spark.sql("DROP DATABASE IF EXISTS graft_test_db CASCADE")
-    Catalog.ensureDatabase(spark, "graft_test_db")
-    Catalog.ensureSilverTable(spark, "graft_test_db.silver_ddl")
-    // dim overwrite sink
-    val dim = Seq((1L, "u1"), (2L, "u2")).toDF("user_sk", "user_id")
-    Catalog.overwriteTable(dim, "graft_test_db.dim_t")
-    assert(spark.table("graft_test_db.dim_t").count() == 2)
-    Catalog.overwriteTable(dim.where($"user_sk" === 1L), "graft_test_db.dim_t")
-    assert(spark.table("graft_test_db.dim_t").count() == 1)
-    Catalog.refresh(spark, "graft_test_db.dim_t")
-    assert(spark.catalog.tableExists("graft_test_db.silver_ddl"))
-  }
-
-  test("mtime-window file listing picks only files modified in the interval") {
-    val dir = tmpDir("mtime")
-    Files.write(Paths.get(s"$dir/old.jsonl"), "x".getBytes)
-    Files.write(Paths.get(s"$dir/new.jsonl"), "y".getBytes)
-    Files.setLastModifiedTime(Paths.get(s"$dir/old.jsonl"),
-      java.nio.file.attribute.FileTime.fromMillis(1000000L))
-    val now = System.currentTimeMillis()
-    val listed = StagingToBronze.listFilesModifiedIn(spark, dir, now - 3600000L, now + 3600000L)
-    assert(listed.size == 1 && listed.head.endsWith("new.jsonl"))
-    assert(StagingToBronze.listFilesModifiedIn(spark, s"$dir/missing", 0, now).isEmpty)
-  }
 
   test("bulk rebuild: full medallion pass over adapter-generated raw lines") {
     val wh = tmpDir("bulkwh")
@@ -58,6 +30,10 @@ class CatalogBulkSpec extends SparkSpec {
     assert(du.count() == du.select("user_sk").distinct().count())
     Seq("dim_user", "dim_event", "dim_page", "dim_recipe").foreach(d =>
       assert(r.dimAppended(d) == Warehouse.read(spark, s"$wh/$d").count(), d))
+    // dim_event's SKs are deterministic: 1..n in event_name order
+    val de = Warehouse.read(spark, s"$wh/dim_event").orderBy("event_name")
+      .select("event_sk").as[Long].collect().toSeq
+    assert(de.nonEmpty && de == (1L to de.size.toLong), s"dim_event SKs $de")
     // fact joins resolved: every event_name is in dim_event (non-zero SK),
     // and the report's SK-0 counts match the fact table's
     val fact = Warehouse.read(spark, s"$wh/fact_user_events")
@@ -92,7 +68,7 @@ class CatalogBulkSpec extends SparkSpec {
 
   test("co-bucketed join and aggregation plan with zero shuffle exchanges") {
     spark.sql("DROP DATABASE IF EXISTS graft_bucket_db CASCADE")
-    Catalog.ensureDatabase(spark, "graft_bucket_db")
+    spark.sql("CREATE DATABASE graft_bucket_db")
     val events = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select($"user_id", $"event_type", $"value")
     val users = events.groupBy($"user_id")

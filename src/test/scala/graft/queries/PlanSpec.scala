@@ -284,8 +284,12 @@ class PlanSpec extends SparkSpec {
       // the narrow assignCells form (tiny single-partition exchanges
       // that replaced corpus×cells row_number window shuffles — node
       // count rose 17→19 while runtime fell 7.8→5.9 s at sf0.1; the
-      // snapshot pins shape, not cost)
-      "q_ann_ivfpq" -> (19, 19),
+      // snapshot pins shape, not cost). 19 → 17 when the corpus became a
+      // pin: over the cached corpus Spark injected a runtime bloom filter
+      // (a bloom_filter_agg subquery, one SinglePartition exchange) into
+      // the query-probe filter of both the ANN and the baseline plan; a
+      // pin's scan gets none
+      "q_ann_ivfpq" -> (17, 19),
       // banding + budget-gated cohort escalation + new-vs-corpus join
       // (each candidate pair once, from its first band under the cap:
       // no pair dedup, and the cap is a filter, not two anti-joins)
@@ -324,6 +328,19 @@ class PlanSpec extends SparkSpec {
         s"$q build's plan shapes changed: (shuffle, broadcast) = ${(sh, bc)} over " +
           s"${plans.size} plans, want $exp — re-review the plans before updating " +
           s"this snapshot:\n${plans.mkString("\n")}".take(20000))
+    }
+  }
+
+  test("the queries that reuse a frame pin it: nothing stays in the CacheManager") {
+    // a cache registers its plan in the session's CacheManager, where no
+    // query releases it and later plans that happen to match read it.
+    // What other suites cached in the shared session is theirs.
+    spark.catalog.clearCache()
+    Seq("q_dau_rollup", "q_silver_array_props", "q_fact_build", "q_dim_upsert",
+      "q_ann_ivf", "q_ann_pq", "q_ann_ivfpq", "q_ann_ivfpq_scale", "q_semdedup",
+      "q_embed_pca").foreach { q =>
+      graft.SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
+      assert(spark.sharedState.cacheManager.isEmpty, s"$q left a plan in the CacheManager")
     }
   }
 
@@ -372,8 +389,7 @@ class PlanSpec extends SparkSpec {
       // per-query baseline (and the recall-contract baseline inside the
       // ANN queries, whose probe/centroid sides are broadcast k-row tables)
       "q_ann_topk", "q_ann_lsh", "q_ann_ivf", "q_ann_pq", "q_ann_ivfpq",
-      // scale-tier twin: same broadcast query-set × corpus baseline plus
-      // the 1-row corpus-count broadcast
+      // scale-tier twin: same broadcast query-set × corpus baseline
       "q_ann_ivfpq_scale",
       // same broadcast-queries × corpus-scan baseline, labels attached
       // (the _ann twin carries the same in-query exact baseline plus
