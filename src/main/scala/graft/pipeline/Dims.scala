@@ -114,14 +114,6 @@ object Dims {
       .select("page_sk", "page_name", "page_url")
   }
 
-  /** dim_recipe from a Parquet master file, reference shape
-    * (create_dims.py:107-135 reads total_recipes.parquet with columns
-    * id, name, dish_type, ingredient_type, method_type, situation_type,
-    * difficulty, cooking_time and renames id/name). SKs by deterministic
-    * row_number over recipe_id — the repo's reproducible-SK convention
-    * (the reference's monotonically_increasing_id is layout-dependent);
-    * master cardinality is ~10^4, far under window-bottleneck scale.
-    */
   /** The recipe master's attribute projection keyed by natural key —
     * shared by the bulk build ([[dimRecipeFromMaster]]) and the
     * append-only dim's attribute refresh ([[refreshAttributes]]).
@@ -141,6 +133,14 @@ object Dims {
     Seq("recipe_name", "dish_type", "ingredient_type", "method_type", "situation_type",
       "difficulty").map(StructField(_, StringType)) :+ StructField("cooking_time", IntegerType)
 
+  /** dim_recipe from a Parquet master file, reference shape
+    * (create_dims.py:107-135 reads total_recipes.parquet with columns
+    * id, name, dish_type, ingredient_type, method_type, situation_type,
+    * difficulty, cooking_time and renames id/name). SKs by deterministic
+    * row_number over recipe_id — the repo's reproducible-SK convention
+    * (the reference's monotonically_increasing_id is layout-dependent);
+    * master cardinality is ~10^4, far under window-bottleneck scale.
+    */
   def dimRecipeFromMaster(master: DataFrame): DataFrame = {
     val w = Window.orderBy("recipe_id")
     recipeMasterAttrs(master)

@@ -199,9 +199,4 @@ object Scale {
     } finally keep.fold(df.sparkSession.conf.unset(sampleKey))(
       df.sparkSession.conf.set(sampleKey, _))
   }
-
-  /** Two-column overload (historical signature). */
-  def zorderWrite(df: DataFrame, a: String, b: String, outPath: String,
-                  files: Int): Unit =
-    zorderWrite(df, Seq(a, b), outPath, files)
 }

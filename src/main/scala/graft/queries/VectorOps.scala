@@ -110,11 +110,11 @@ object VectorOps {
     * coarse Lloyd quantizer and the PQ codebooks sees k different
     * clusters. Base-major ids put 50 copies of base 0 in the seed set —
     * the coarse quantizer collapsed and both scale contracts failed.
-    * nBase is the fixture table's row count — a bounded driver scalar,
-    * same class as the Lloyd argmax.
+    * Returns the corpus with nBase, the fixture table's row count — a
+    * bounded driver scalar, same class as the Lloyd argmax.
     */
   private[queries] def scaledCorpus(s: SparkSession, dir: String,
-                                    rep: Int = AnnScaleRep): DataFrame = {
+                                    rep: Int): (DataFrame, Long) = {
     val base = load(s, dir, "embeddings")
       .select(col("vec_id").cast("long").as("base_id"),
         asDouble(col("embedding")).as("bv"))
@@ -132,19 +132,25 @@ object VectorOps {
     // fetch order varies run over run). Downstream consumers don't
     // depend on it: seed selection is order-insensitive
     // (orderBy(vec_id).limit), and the recall contracts carry slack.
-    base.repartition(col("base_id"))
+    (base.repartition(col("base_id"))
       .withColumn("r", explode(sequence(lit(0), lit(rep - 1))))
       .withColumn("vec_id", col("r") * nBase + col("base_id"))
       .select(col("vec_id"),
         transform(sequence(lit(1), lit(Dim)), d =>
           element_at(col("bv"), d) +
             (pmod(col("vec_id") * 31 + d.cast("long") * 7, lit(1009)) - lit(504))
-              .cast("double") / lit(60000.0)).as("v"))
+              .cast("double") / lit(60000.0)).as("v")), nBase)
   }
 
-  /** The query set under `pred` as (query_id, qv). */
-  private def querySetOf(emb: DataFrame,
-                         pred: Column = DefaultQueryPred): DataFrame =
+  /** The query set under `pred` as (query_id, qv). The ANN entries pin
+    * it once and hand the pin to the probe router, the ADC table, the
+    * re-rank and the exact baseline: no plan then carries a selective
+    * filter over a corpus scan, which is what makes Spark inject a
+    * runtime bloom filter that filters nothing (its creation and
+    * application sides would be the same few query rows).
+    */
+  private[queries] def querySetOf(emb: DataFrame,
+                                  pred: Column = DefaultQueryPred): DataFrame =
     emb.where(pred)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
 
@@ -155,14 +161,25 @@ object VectorOps {
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"))
   }
 
-  /** Brute-force cosine top-k: broadcast queries × corpus scan, per-query
+  /** Brute-force dot-product top-k of each query in `queries` (a
+    * [[querySetOf]] frame): broadcast queries × corpus scan, per-query
     * top-k via window. Linear in corpus size — the per-query baseline.
     */
-  def annBruteForce(emb: DataFrame, k: Int): DataFrame = {
-    val scored = emb.join(broadcast(querySetOf(emb)), col("vec_id") =!= col("query_id"))
+  def annBruteForce(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .withColumn("cos", dot(col("qv"), col("v")))
     topK(scored, k)
   }
+
+  /** [[annBruteForce]] ranked by cosine, the similarity the ANN re-rank
+    * uses: the scale fixture's replicas are near-ties with non-unit
+    * norms, so a dot-ranked baseline would diverge for reasons unrelated
+    * to the ANN path (the q_hard_negatives_ann lesson, which that
+    * fixture is deliberately sensitive enough to expose).
+    */
+  private def cosineTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topK(emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+      .withColumn("cos", graft.functions.CosineSimilarity(col("qv"), col("v"))), k)
 
   /** LSH-bucketed ANN with multi-probe: corpus vectors hashed to sign-bit
     * buckets once; each query probes its own bucket plus every Hamming-1
@@ -183,41 +200,48 @@ object VectorOps {
     topK(scored, k)
   }
 
-  /** IVF-style ANN: deterministic coarse quantizer (first-k vectors as
-    * seeds, two Lloyd refinement passes — all DataFrame ops, only the k
-    * centroids ever touch the driver), corpus assigned to its nearest
-    * centroid, each query probes the `nprobe` closest cells. The scale
-    * path when hyperplane LSH recall is poor: cells adapt to the data.
+  /** Centroid rows (cell, cv) packed into ONE cell-sorted entry array:
+    * the broadcast side of every [[graft.functions.NearestCell]] kernel
+    * and of the probe router, so a corpus row meets all centroids as an
+    * inline loop instead of a ×cells row blowup.
     */
-  /** Deterministic k-means fit: seed = first `cells` vectors by id, two
-    * Lloyd passes (assign → element-wise mean). Only ever `cells` rows —
-    * broadcastable by construction; each pass is one corpus-linear
-    * assignment plus a (cell, dim)-keyed mean, no driver math.
+  private val packedCells: Column =
+    array_sort(collect_list(struct(col("cell"), col("cv"))))
+
+  /** Deterministic k-means from `seeds` (keys…, cell, cv): two Lloyd
+    * passes, each assigning every point to its nearest centroid
+    * (`assign(points, cents)` adds `cell`) and moving each centroid to
+    * the element-wise mean of its points' `vec` column. Only ever
+    * seed-count rows — broadcastable by construction; each pass is one
+    * point-linear assignment plus a (keys, cell, pos)-keyed mean, no
+    * driver math.
     *
-    * CONTRACT: the returned frame is eagerly localCheckpointed (the
-    * trailing pin of the final Lloyd pass), so every downstream
-    * re-evaluation — however many subplans reference it — reads the SAME
-    * materialized centroid values, bitwise. Without the pin, a re-run of
-    * the mean aggregation could fold floats in a different shuffle
-    * arrival order and yield bitwise-different centroids per subplan
-    * (ADVICE r13 #4).
+    * CONTRACT: each pass ends in a pin, so every downstream
+    * re-evaluation — however many subplans reference the result — reads
+    * the SAME materialized centroid values, bitwise. Without the pin, a
+    * re-run of the mean aggregation could fold floats in a different
+    * shuffle arrival order and yield bitwise-different centroids per
+    * subplan. Seeds stay lazy: a narrow filter/limit
+    * over the caller's pinned frame re-evaluates to the same rows.
     */
-  private[queries] def lloydCentroids(emb: DataFrame, cells: Int): DataFrame = {
-    var centroids = emb.orderBy(col("vec_id")).limit(cells)
-      .select(col("vec_id").cast("int").as("cell"), col("v").as("cv"))
-    for (_ <- 0 until 2) {
-      val assigned = assignCells(emb, centroids)
-      centroids = Pin(assigned
-        .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos")).agg(avg(col("x")).as("mx"))
-        .groupBy(col("cell"))
+  private def lloyd(points: DataFrame, seeds: DataFrame, vec: String, keys: Column*)(
+      assign: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    (0 until 2).foldLeft(seeds) { (cents, _) =>
+      val byCell = keys :+ col("cell")
+      Pin(assign(points, cents)
+        .select(byCell :+ posexplode(col(vec)).as(Seq("pos", "x")): _*)
+        .groupBy(byCell :+ col("pos"): _*).agg(avg(col("x")).as("mx"))
+        .groupBy(byCell: _*)
         .agg(array_sort(collect_list(struct(col("pos"), col("mx")))).as("pairs"))
-        // k rows — materialize so the next Lloyd pass (and the final
-        // assignment) doesn't re-execute this pass's whole lineage
-        .select(col("cell"), transform(col("pairs"), p => p.getField("mx")).as("cv")))
+        .select(byCell :+ transform(col("pairs"), p => p.getField("mx")).as("cv"): _*))
     }
-    centroids
-  }
+
+  /** Coarse k-means fit (cell, cv): seeds are the first `cells` vectors
+    * by id, assignment is [[assignCells]].
+    */
+  private[queries] def lloydCentroids(emb: DataFrame, cells: Int): DataFrame =
+    lloyd(emb, emb.orderBy(col("vec_id")).limit(cells)
+      .select(col("vec_id").cast("int").as("cell"), col("v").as("cv")), "v")(assignCells)
 
   /** Nearest-cell assignment as a NARROW map (the pqAssign pattern):
     * the centroid frame packs to ONE cell-sorted entry array,
@@ -231,13 +255,10 @@ object VectorOps {
     * (~5/6 of q_ann_ivfpq_scale's 344 s); the narrow form shuffles
     * nothing.
     */
-  private[queries] def assignCells(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val packed = cents.agg(
-      array_sort(collect_list(struct(col("cell"), col("cv")))).as("es"))
-    emb.crossJoin(broadcast(packed))
+  private[queries] def assignCells(emb: DataFrame, cents: DataFrame): DataFrame =
+    emb.crossJoin(broadcast(cents.agg(packedCells.as("es"))))
       .select(col("vec_id"), col("v"),
         graft.functions.NearestCell(col("v"), col("es")).as("cell"))
-  }
 
   /** Two-level (hierarchical) coarse assignment — the IMI/coarse-of-
     * coarse trick that removes the n × cells term from IVF builds at
@@ -269,23 +290,18 @@ object VectorOps {
     val superCents = lloydCentroids(
       cents.select(col("cell").cast("long").as("vec_id"), col("cv").as("v")),
       superK)
-      .select(col("cell").as("super"), col("cv").as("scv"))
     // membership: every cell joins its memberR nearest supers, so a
     // vector routed to super s sees all cells for which s is a top-R
     // super — the overlap that makes near-boundary assignments agree
     // with the exact argmax
-    val member = cents.crossJoin(broadcast(superCents))
+    val member = cents
+      .crossJoin(broadcast(superCents.select(col("cell").as("super"), col("cv").as("scv"))))
       .withColumn("d", graft.functions.CosineSimilarity(col("cv"), col("scv")))
       .withColumn("rn", row_number().over(
         Window.partitionBy("cell").orderBy(desc("d"), asc("super"))))
       .where(col("rn") <= memberR)
       .select(col("super"), col("cell"), col("cv"))
-    val packedBySuper = member.groupBy(col("super"))
-      .agg(array_sort(collect_list(struct(col("cell"), col("cv")))).as("sub_es"))
-    val superPacked = superCents.agg(array_sort(collect_list(
-      struct(col("super").as("cell"), col("scv").as("cv")))).as("ses"))
-    val fullPacked = cents.agg(
-      array_sort(collect_list(struct(col("cell"), col("cv")))).as("full_es"))
+    val packedBySuper = member.groupBy(col("super")).agg(packedCells.as("sub_es"))
     // No row clustering needed before the membership join: NearestCell's
     // per-thread unpack memo is an LRU sized for the whole superK-way
     // member-array working set, so rows can interleave supers freely.
@@ -295,11 +311,11 @@ object VectorOps {
     // tier; sorting BEFORE it spills a 5.5 GB sorter per pass just to
     // keep a one-slot memo hot.) The final projection consumes sub_es
     // from the broadcast row without ever copying it into an output row.
-    emb.crossJoin(broadcast(superPacked))
+    emb.crossJoin(broadcast(superCents.agg(packedCells.as("ses"))))
       .withColumn("super", graft.functions.NearestCell(col("v"), col("ses")))
       .drop("ses")
       .join(broadcast(packedBySuper), Seq("super"), "left")
-      .crossJoin(broadcast(fullPacked))
+      .crossJoin(broadcast(cents.agg(packedCells.as("full_es"))))
       .select(col("vec_id"), col("v"),
         when(col("sub_es").isNotNull,
           graft.functions.NearestCell(col("v"), col("sub_es")))
@@ -307,33 +323,42 @@ object VectorOps {
           .as("cell"))
   }
 
-  /** IVF top-k over `emb`, which the Lloyd passes, the assignment and the
-    * query probes each read: callers pass a pinned corpus.
+  /** The probe router: each query's `nprobe` nearest cells, as
+    * (query_id, qv, ivf_cell, qcdot) with qcdot = dot(q, centroid). The
+    * centroids pack to one broadcast array and each query row sorts its
+    * per-cell (−similarity, cell, qcdot) structs inline, keeping the
+    * first nprobe — max similarity, ties to the lowest cell, with no
+    * shuffle (a row_number window paid an exchange + sort on a
+    * queries×cells frame). A query's probes are distinct cells.
     */
-  def annIvf(emb: DataFrame, k: Int, cells: Int = 8, nprobe: Int = 3): DataFrame = {
-    val cents = broadcast(lloydCentroids(emb, cells))
+  private def probeCells(queries: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    queries.crossJoin(broadcast(cents.agg(packedCells.as("pes"))))
+      .select(col("query_id"), col("qv"),
+        explode(slice(array_sort(transform(col("pes"), e => struct(
+          (-graft.functions.CosineSimilarity(col("qv"), e.getField("cv"))).as("negd"),
+          e.getField("cell").as("cell"),
+          dot(col("qv"), e.getField("cv")).as("qcdot")))), 1, nprobe)).as("p"))
+      .select(col("query_id"), col("qv"), col("p.cell").as("ivf_cell"),
+        col("p.qcdot").as("qcdot"))
 
-    val corpus = assignCells(emb, cents)
+  /** The gate's IVF index: cells and probes per query. */
+  private[queries] val IvfCells = 8
+  private[queries] val IvfProbes = 3
 
-    // NARROW probe routing (r17, same as ivfPqQuery): centroids pack to
-    // one broadcast cell-sorted array and each query row sorts its
-    // per-cell (−similarity, cell) structs inline, keeping the first
-    // nprobe — identical selection and tie-break (max similarity, ties
-    // to the lowest cell) as the row_number window it replaces, with
-    // zero shuffle instead of an exchange + sort on queries×cells rows.
-    val centsPacked = cents.agg(
-      array_sort(collect_list(struct(col("cell"), col("cv")))).as("pes"))
-    val queryProbes = emb.where(col("vec_id") < 3).crossJoin(broadcast(centsPacked))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        slice(array_sort(transform(col("pes"), e => struct(
-          (-graft.functions.CosineSimilarity(col("v"), e.getField("cv"))).as("negd"),
-          e.getField("cell").as("cell")))), 1, nprobe).as("probes"))
-      .select(col("query_id"), col("qv"), explode(col("probes")).as("p"))
-      .select(col("query_id"), col("qv"), col("p.cell").as("cell"))
-
-    val scored = corpus.join(broadcast(queryProbes), Seq("cell"))
+  /** IVF-style ANN: deterministic coarse quantizer (first-k vectors as
+    * seeds, two Lloyd refinement passes — all DataFrame ops, only the k
+    * centroids ever touch the driver), corpus assigned to its nearest
+    * centroid, each query probes the [[IvfProbes]] closest of
+    * [[IvfCells]] cells. The scale path when hyperplane LSH recall is
+    * poor: cells adapt to the data. `emb` is read by the Lloyd passes,
+    * the assignment and the scoring, and `queries` ([[querySetOf]]) by
+    * the router and the baseline: callers pass pins.
+    */
+  def annIvf(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val cents = broadcast(lloydCentroids(emb, IvfCells))
+    val scored = assignCells(emb, cents).withColumnRenamed("cell", "ivf_cell")
+      .join(broadcast(probeCells(queries, cents, IvfProbes)), Seq("ivf_cell"))
       .where(col("vec_id") =!= col("query_id"))
-      .dropDuplicates("query_id", "vec_id")
       .withColumn("cos", graft.functions.CosineSimilarity(col("qv"), col("v")))
     topK(scored, k)
   }
@@ -350,141 +375,96 @@ object VectorOps {
   private val PqK = 32
   private val PqRerank = 50
 
-  /** (vec_id, m, sv): each vector split into its PqM sub-vectors. */
-  private[queries] def subVectors(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), col("v"),
-        explode(sequence(lit(0), lit(PqM - 1))).as("m"))
-      .select(col("vec_id"), col("m"),
-        slice(col("v"), col("m") * PqSubDim + 1, lit(PqSubDim)).as("sv"))
+  /** `df` with its vector column `v` split into its PqM sub-vectors: one
+    * row per (row, m) with sub-vector `sv`, the other columns kept.
+    */
+  private[queries] def subVectors(df: DataFrame, v: String): DataFrame =
+    df.select(col("*"), explode(sequence(lit(0), lit(PqM - 1))).as("m"))
+      .select(df.columns.toSeq.filter(_ != v).map(col) :+ col("m") :+
+        slice(col(v), col("m") * PqSubDim + 1, lit(PqSubDim)).as("sv"): _*)
 
   /** Nearest-codebook-cell assignment as a NARROW map: the (m, cell,
     * cv) codebook packs to one cell-sorted entry array per subspace
-    * (PqM rows), broadcast-joined on m, and the argmin runs inline via
-    * a codegen'd transform + array_min over (distance, cell) structs —
-    * each entry's squared distance is computed exactly ONCE (the fold
-    * form this replaces evaluated it twice per entry, in the WHEN and
-    * again in the THEN — ADVICE r8), and struct ordering (d, then c)
-    * keeps the lowest cell on ties. No shuffle, no per-candidate row
-    * blowup — the join+window form this replaces shuffled corpus×PqK
-    * rows through three sort windows and measured ~3× slower
-    * end-to-end.
+    * (PqM rows), broadcast-joined on m, and the fused native L2 argmin
+    * (NearestCellSpec pins its bit-parity with the transform + array_min
+    * chain it replaced, which paid an interpreted lambda + struct alloc
+    * per (row, entry)) keeps the lowest cell on ties. No shuffle, no
+    * per-candidate row blowup — the join+window form before it shuffled
+    * corpus×PqK rows through three sort windows.
     */
-  private[queries] def pqAssign(sub: DataFrame, books: DataFrame): DataFrame = {
-    val packed = books.groupBy(col("m"))
-      .agg(array_sort(collect_list(struct(col("cell"), col("cv")))).as("es"))
-    sub.join(broadcast(packed), Seq("m"))
-      // fused native argmin (NearestCellSpec pins bit-parity with the
-      // transform+array_min chain this replaces — the composed HOF paid
-      // an interpreted lambda + struct alloc per (row, entry): ~80 s of
-      // q_ann_ivfpq_scale's encode passes at 800k×32 entries)
+  private[queries] def pqAssign(sub: DataFrame, books: DataFrame): DataFrame =
+    sub.join(broadcast(books.groupBy(col("m")).agg(packedCells.as("es"))), Seq("m"))
       .withColumn("cell", graft.functions.NearestCell.l2(col("sv"), col("es")))
       .drop("es")
-  }
 
   /** Per-subspace deterministic k-means codebooks (m, cell, cv): seeds
-    * are the first PqK vectors' sub-vectors, two Lloyd passes, all M
-    * subspaces trained in ONE frame. Only ever PqM×PqK rows —
-    * broadcastable by construction; assignment is the narrow
-    * [[pqAssign]] fold, so each pass shuffles only the (m, cell, pos)
-    * mean aggregate.
+    * are the first PqK vectors' sub-vectors, all M subspaces trained in
+    * ONE frame by the same Lloyd loop as the coarse quantizer, with the
+    * [[pqAssign]] kernel. Only ever PqM×PqK rows — broadcastable by
+    * construction; each pass shuffles only the (m, cell, pos) mean.
     */
-  private[queries] def pqCodebooks(sub: DataFrame): DataFrame = {
-    // seeds stay LAZY (r17): they are a narrow filter+select over the
-    // caller's (cached/pinned) frame — bitwise-deterministic on
-    // re-evaluation, unlike the per-pass mean aggregates below whose
-    // checkpoints ARE load-bearing (ADVICE r13 #4). The checkpoint here
-    // bought nothing but one more serial driver job in a query whose
-    // gate-scale cost is almost entirely job-chain latency.
-    var cents = sub.where(col("vec_id") < PqK)
-      .select(col("m"), col("vec_id").cast("int").as("cell"), col("sv").as("cv"))
-    for (_ <- 0 until 2) {
-      val assigned = pqAssign(sub, cents)
-      cents = Pin(assigned
-        .select(col("m"), col("cell"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("m"), col("cell"), col("pos")).agg(avg(col("x")).as("mx"))
-        .groupBy(col("m"), col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mx")))).as("pairs"))
-        .select(col("m"), col("cell"),
-          transform(col("pairs"), p => p.getField("mx")).as("cv")))
-    }
-    cents
-  }
+  private[queries] def pqCodebooks(sub: DataFrame): DataFrame =
+    lloyd(sub, sub.where(col("vec_id") < PqK)
+      .select(col("m"), col("vec_id").cast("int").as("cell"), col("sv").as("cv")),
+      "sv", col("m"))(pqAssign)
 
-  /** PQ-ADC ANN with exact re-rank: encode the corpus once (nearest
-    * codebook cell per subspace, ties to the lowest cell), build each
-    * query's partial-dot table against the same codebooks, then approx
-    * dot(q, x) = Σ_m table(m, code_x[m]) — a (m, code)-keyed equi-join
-    * of the narrow code table against the broadcast 3×PqM×PqK lookup,
-    * summed per (query, vector) with map-side partial aggregation. The
-    * corpus-wide scan touches only codes; full-precision vectors are
-    * read solely for the per-query PqRerank shortlist.
+  /** ADC with exact re-rank, the query side of both PQ and IVF-PQ. Each
+    * probe row (query_id, qv, ivf_cell, qcdot) gets its PqM×PqK
+    * partial-dot table against the codebooks and meets only the codes
+    * (vec_id, ivf_cell, m, code) of its cell, in one equi-join against
+    * the broadcast table: dot(q, x) = dot(q, c_cell) + dot(q, r_x) ≈
+    * qcdot + Σ_m dot(q_m, codebook(m, code_x_m)). The partial dots are
+    * taken against the RAW query sub-vectors (dot(q, r) decomposes
+    * directly — no query residual per cell). The top `depth` per query
+    * by that estimate are read at full precision and ranked by cosine:
+    * raw vectors are read only for the shortlist, so at a billion
+    * vectors the full-precision reads drop from N to queries × depth.
+    * Flat PQ is the one-cell case: every code in cell 0, whose centroid
+    * is zero (qcdot 0, residual = vector).
     */
-  def annPq(emb: DataFrame, k: Int,
-            queryPred: Column = DefaultQueryPred): DataFrame = {
-    val sub = subVectors(emb)
-    val books = pqCodebooks(sub)
-    val codes = pqAssign(sub, books)
-      .select(col("vec_id"), col("m"), col("cell").as("code"))
-    val table = subVectors(emb.where(queryPred))
-      .select(col("vec_id").as("query_id"), col("m"), col("sv"))
-      .join(broadcast(books), Seq("m"))
-      .select(col("query_id"), col("m"), col("cell").as("code"),
-        dot(col("sv"), col("cv")).as("pdot"))
-    val approx = codes.join(broadcast(table), Seq("m", "code"))
+  private def adcRerank(emb: DataFrame, queries: DataFrame, probes: DataFrame,
+                        books: DataFrame, codes: DataFrame,
+                        k: Int, depth: Int): DataFrame = {
+    val table = subVectors(probes, "qv").join(broadcast(books), Seq("m"))
+      .select(col("query_id"), col("ivf_cell"), col("qcdot"), col("m"),
+        col("cell").as("code"), dot(col("sv"), col("cv")).as("pdot"))
+    val shortlist = codes.join(broadcast(table), Seq("ivf_cell", "m", "code"))
       .where(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
-      .agg(sum(col("pdot")).as("adc"))
-    // shortlist + exact re-rank (the standard ADC+re-rank design): the
-    // code scan nominates PqRerank candidates per query, raw vectors are
-    // read ONLY for that bounded shortlist — at a billion vectors the
-    // full-precision reads drop from N to queries×PqRerank.
-    val shortlist = approx
+      .agg((max(col("qcdot")) + sum(col("pdot"))).as("adc"))
       .withColumn("rr", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("adc"), asc("vec_id"))))
-      .where(col("rr") <= PqRerank)
+      .where(col("rr") <= depth)
       .select(col("query_id"), col("vec_id"))
-    val scored = shortlist
+    topK(shortlist
       .join(emb, Seq("vec_id"))
-      .join(broadcast(querySetOf(emb, queryPred)), Seq("query_id"))
-      .withColumn("cos", graft.functions.CosineSimilarity(col("qv"), col("v")))
-    topK(scored, k)
+      .join(broadcast(queries), Seq("query_id"))
+      .withColumn("cos", graft.functions.CosineSimilarity(col("qv"), col("v"))), k)
   }
 
-  /** IVF-PQ composition (Jégou et al. 2011 §IV — the actual
-    * billion-vector design): the coarse IVF quantizer bounds the SCAN
-    * (a query touches only its `nprobe` probed cells), per-vector
-    * RESIDUAL product-quantization codes bound the MEMORY (the probed
-    * scan reads PqM byte-sized codes per vector, never raw floats), and
-    * ADC scores codes through per-query lookup tables with one exact
-    * re-rank over the PqRerank shortlist. Decomposition: dot(q, x) =
-    * dot(q, c_cell) + dot(q, r_x) ≈ dot(q, c_cell) + Σ_m dot(q_m,
-    * codebook(m, code_x_m)) — the residual tables are the same
-    * broadcast-sized frames as [[annPq]]'s, the cell restriction is the
-    * same equi-join as [[annIvf]]'s. At a billion vectors this is the
-    * only composition where BOTH the bytes read and the rows scanned
-    * per query stay bounded.
+  /** PQ-ADC ANN with exact re-rank: train the codebooks on the corpus'
+    * sub-vectors, encode the corpus once (nearest codebook cell per
+    * subspace, ties to the lowest cell), and score through
+    * [[adcRerank]] with every vector in the one cell every query probes.
+    * The corpus-wide scan touches only codes. `emb` and `queries`
+    * ([[querySetOf]]) are each read more than once: callers pass pins.
     */
-  def annIvfPq(emb: DataFrame, k: Int, cells: Int = 8, nprobe: Int = 3): DataFrame =
-    annIvfPqWithScan(emb, k, cells, nprobe, DefaultQueryPred)._1
+  def annPq(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val sub = subVectors(emb, "v")
+    val books = pqCodebooks(sub)
+    val codes = pqAssign(sub, books)
+      .select(col("vec_id"), lit(0).as("ivf_cell"), col("m"), col("cell").as("code"))
+    val probes = queries.select(col("query_id"), col("qv"), lit(0).as("ivf_cell"),
+      lit(0.0).as("qcdot"))
+    adcRerank(emb, queries, probes, books, codes, k, PqRerank)
+  }
 
-  /** [[annIvfPq]] plus its per-query SCAN diagnostic: (top-k frame,
-    * (query_id, n_scanned) frame), where n_scanned is the number of
-    * corpus vectors in the query's probed cells — the rows whose codes
-    * the ADC join reads. n_scanned / corpus is the scanned fraction the
-    * scale contract (q_ann_ivfpq_scale) bounds: the property that makes
-    * IVF-PQ a billion-vector design is precisely that this stays ≈
-    * nprobe/cells instead of 1.
-    */
   /** The trained IVF-PQ index: broadcast-sized coarse centroids and PQ
     * codebooks plus the corpus-cardinality code table and per-cell
     * sizes — everything a query needs, nothing of the raw vectors.
-    * `stageSec` carries the build-phase attribution when the build was
-    * materialized (coarse train / corpus assign / residual explode /
-    * codebook train / encode), empty for the lazy registry-gate build.
     */
   private[queries] case class IvfPqIndex(cents: DataFrame, books: DataFrame,
-                                         codes: DataFrame, cellSizes: DataFrame,
-                                         stageSec: Seq[(String, Double)] = Nil)
+                                         codes: DataFrame, cellSizes: DataFrame)
 
   /** Vectors past which an ANN tier materializes through parquet scratch
     * ([[pinLarge]]) instead of an in-memory [[Pin]].
@@ -513,204 +493,102 @@ object VectorOps {
         df.sparkSession.read.schema(df.schema).parquet(s"$dir/$name")
     }
 
-  /** Index-build phase (train + encode). `materialize = true`
-    * checkpoints the code table and cell sizes — the scale-tier bench
-    * uses it to time build and query separately; the registry gate
-    * keeps the single lazy plan. `scratch` (big tiers only) routes the
-    * build's pins through parquet ([[pinLarge]]) and its coarse
-    * assignment through [[assignCellsHierarchical]]. With `trainPred`, BOTH quantizers
+  /** Index build (train + encode), one path for every caller. It pins
+    * what more than one consumer reads, through [[pinLarge]]: the
+    * coarse assignment (read by the training residuals, the encode and
+    * the cell sizes — left lazy, the n × cells argmax re-ran inside each
+    * PQ Lloyd pass and again in the final plan) and the training
+    * residuals (read by both PQ Lloyd passes). The codes and cell sizes
+    * stay lazy: a gate query reads each once; a caller that reads them
+    * more often pins them. `scratch` (big tiers only) routes the pins
+    * through parquet and the coarse assignment through
+    * [[assignCellsHierarchical]]. With `trainPred`, BOTH quantizers
     * train on the sampled rows only (the faiss regime — coarse
     * centroids AND PQ codebooks train on ≤10⁵-ish sampled vectors /
     * residuals regardless of corpus size; VERDICT r11 #6): training
     * cost is sample-bounded and only the two assignment passes (coarse
     * cell + PQ encode, both the fused narrow NearestCell kernel) stay
-    * corpus-linear. Without `trainPred`, training covers the corpus —
-    * the small-gate path, bit-identical to previous rounds.
+    * corpus-linear. Without `trainPred`, training covers the corpus.
+    * Every stage ends in a pin, so `stage` times each honestly.
     */
-  private def ivfPqBuild(emb: DataFrame, cells: Int,
-                         trainPred: Option[Column],
-                         materialize: Boolean,
-                         scratch: Option[String] = None): IvfPqIndex = {
-    // In materialize mode every stage below ends in an EAGER node
-    // (localCheckpoint), so wrapping it in stage() yields an honest
-    // per-stage wall split; in lazy mode stage() just labels zero-cost
-    // plan construction and the splits stay out of the artifact.
-    val stage = new StageTimer
+  private def ivfPqBuild(emb: DataFrame, cells: Int, trainPred: Option[Column],
+                         scratch: Option[String], stage: StageTimer): IvfPqIndex = {
     // coarse quantizer trains on the sample (assignment covers the
-    // corpus). Pinned ONCE here (cells × dim rows — tiny): the
-    // hierarchical super-Lloyd, membership join, empty-membership
-    // fallback array, residual subtraction, and the caller's probe join
-    // all re-read this frame in separate subplans, and identical
-    // centroid VALUES across those reads is what keeps the index
-    // internally consistent (ADVICE r13 #4). lloydCentroids already
-    // returns an eagerly localCheckpointed frame; the explicit pin makes
-    // the invariant a property of THIS function, not of its helper's
-    // implementation detail.
-    // lloydCentroids CONTRACTS (scaladoc) that its return is already
-    // eagerly localCheckpointed — re-pinning it here was one more
-    // serial driver job on an 8-row frame in a query path whose
-    // gate-scale cost is job-chain latency (r17). The consistency
-    // invariant (every subplan reads the SAME centroid bytes) rides on
-    // the helper's pin.
+    // corpus); lloydCentroids' pinned return keeps every subplan on the
+    // same centroid bytes, which keeps the index internally consistent
     val cents = stage("coarse_train") {
       broadcast(lloydCentroids(trainPred.map(emb.where).getOrElse(emb), cells))
     }
-    // In the materialized (scale-tier) build, pin the two expensive
-    // intermediates: without this, the full-corpus coarse assignment
-    // (the n × cells × dim argmax — 65 GMACs at the 1M tier) and the
-    // residual sub-vector explode re-run FOUR times — once per
-    // pqCodebooks Lloyd pass, once for the final code table, once for
-    // cell sizes (measured: 4× of the 1M tier's 23-minute build was
-    // exactly this recomputation). The registry gate keeps the single
-    // lazy plan (its exchange counts are snapshot-pinned and its corpus
-    // is small enough that recomputation is cheaper than pinning).
-    var pinN = 0
-    def pin(df: DataFrame): DataFrame =
-      if (!materialize) df
-      else { pinN += 1; pinLarge(df, scratch, s"pin_$pinN") }
+    // No repartition on the parquet-pin path: columnar read-back
+    // streams, so partition width no longer risks read-back OOM, and the
+    // shuffle would move the full 64-dim vectors (~6 GB at 10M) for
+    // nothing.
     val assigned = stage("corpus_assign") {
-      // big tiers route through the two-level assignment (superK dots +
-      // member-cell argmax instead of the full n × cells wall); the
-      // tier contracts gate the approximation. No repartition on the
-      // parquet-pin path: columnar read-back streams, so partition
-      // width no longer risks read-back OOM, and the shuffle would
-      // move the full 64-dim vectors (~6 GB at 10M) for nothing.
-      val a = if (scratch.isDefined) assignCellsHierarchical(emb, cents)
-              else assignCells(emb, cents)
-      pin(a)
+      pinLarge(if (scratch.isDefined) assignCellsHierarchical(emb, cents)
+               else assignCells(emb, cents), scratch, "assigned")
     }
     // residuals r = v - centroid(cell): the PQ trains on what the coarse
     // quantizer could NOT explain — the variance left per cell is far
     // smaller than the raw corpus variance, which is why residual codes
-    // quantize better than raw-vector codes at the same bit budget
-    val resid = assigned.join(cents, Seq("cell"))
+    // quantize better than raw-vector codes at the same bit budget.
+    // The exploded residuals stay lazy (pinning the full ×PqM table was
+    // the largest 10M build stage, an O(n·PqM) round-trip written once
+    // and read once): the encode fuses residual-subtract → slice →
+    // argmin into one narrow pass over the pinned assignment.
+    val subR = subVectors(assigned.join(cents, Seq("cell"))
       .select(col("vec_id"), col("cell").as("ivf_cell"),
-        zip_with(col("v"), col("cv"), (x, c) => x - c).as("v"))
-    // Exploded residual sub-vectors stay LAZY (VERDICT r14 #6): pinning
-    // the full ×PqM exploded table was the largest 10M build stage
-    // (16.6 s — an O(n·PqM) parquet round-trip of sub-vector arrays
-    // written once and read once). Both consumers do better without it:
-    // codebook training only ever reads the SAMPLE's residuals (pinned
-    // below, so the two Lloyd passes don't recompute it), and the final
-    // encode fuses residual-subtract → slice → NearestCell argmin into
-    // ONE narrow streamed pass over the already-pinned `assigned` —
-    // recomputing the subtraction per row is pure codegen'd arithmetic,
-    // strictly cheaper than materializing it through scratch parquet.
-    // Determinism holds because both reads derive from the SAME pinned
-    // frames (assigned + localCheckpointed cents).
-    val subR = resid.select(col("vec_id"), col("ivf_cell"),
-        explode(sequence(lit(0), lit(PqM - 1))).as("m"), col("v"))
-      .select(col("vec_id"), col("ivf_cell"), col("m"),
-        slice(col("v"), col("m") * PqSubDim + 1, lit(PqSubDim)).as("sv"))
+        zip_with(col("v"), col("cv"), (x, c) => x - c).as("v")), "v")
     // codebooks train on the SAMPLE's residuals only (trainPred rides on
-    // vec_id, which subR retains) — at the 1M tier this removes three
-    // corpus-wide pqAssign/mean passes, leaving the single final encode.
-    // The stage pins sample-sized data, so its cost is bounded by the
-    // training-sample budget, not the corpus.
-    val subRTrain = stage("residual_explode") {
-      pin(trainPred.map(subR.where).getOrElse(subR))
+    // vec_id, which subR retains), so this pin is sample-sized
+    val train = stage("residual_explode") {
+      pinLarge(trainPred.map(subR.where).getOrElse(subR), scratch, "train")
     }
     val books = stage("books_train") {
-      pqCodebooks(subRTrain.select(col("vec_id"), col("m"), col("sv")))
+      pqCodebooks(train.select(col("vec_id"), col("m"), col("sv")))
     }
     // (vec_id, ivf_cell, m, code): the complete on-disk representation —
     // PqM small ints + one cell id per vector
-    val codes = stage("encode") {
-      pin(pqAssign(subR, books)
-        .select(col("vec_id"), col("ivf_cell"), col("m"), col("cell").as("code")))
-    }
-    val cellSizes = stage("cell_sizes") {
-      pin(assigned.groupBy(col("cell").as("ivf_cell"))
-        .agg(count(lit(1)).as("cell_n")))
-    }
-    IvfPqIndex(cents, books, codes, cellSizes, if (materialize) stage.splits else Nil)
+    IvfPqIndex(cents, books,
+      pqAssign(subR, books)
+        .select(col("vec_id"), col("ivf_cell"), col("m"), col("cell").as("code")),
+      assigned.groupBy(col("cell").as("ivf_cell")).agg(count(lit(1)).as("cell_n")))
   }
 
-  /** [[annIvfPq]] with explicit index parameters. `emb` is read by the
-    * training passes, the encode and the query: callers pass a pinned
-    * corpus.
+  /** Query phase over a built index: [[probeCells]] routing, then
+    * [[adcRerank]] over the probed cells' codes, plus the per-query
+    * scanned count (query_id, n_scanned): the corpus vectors in the
+    * query's probed cells, the rows whose codes the ADC join reads.
     */
-  def annIvfPqWithScan(emb: DataFrame, k: Int, cells: Int, nprobe: Int,
-                       queryPred: Column,
-                       trainPred: Option[Column] = None): (DataFrame, DataFrame) = {
-    val idx = ivfPqBuild(emb, cells, trainPred, materialize = false)
-    ivfPqQuery(emb, idx, k, nprobe, queryPred)
-  }
-
-  /** Query phase over a built index: probe routing, ADC over probed
-    * codes, exact re-rank of the shortlist, and the per-query scanned
-    * count.
-    */
-  private def ivfPqQuery(emb: DataFrame, idx: IvfPqIndex, k: Int,
-                         nprobe: Int, queryPred: Column,
-                         rerank: Int = PqRerank)
-      : (DataFrame, DataFrame) = {
-    val cents = idx.cents
-    val books = idx.books
-    val codes = idx.codes
-    // each query probes its nprobe nearest cells, carrying the exact
-    // dot(q, centroid) term of the decomposition. NARROW form (r17):
-    // the centroids pack to one broadcast cell-sorted array (the
-    // assignCells pattern) and each query row sorts its per-cell
-    // (−similarity, cell, qcdot) structs inline and keeps the first
-    // nprobe — same selection and tie-break (max similarity, ties to
-    // the lowest cell) as the row_number window it replaces, with zero
-    // shuffle; the windowed form paid an exchange + sort round trip on
-    // a queries×cells frame in every query run.
-    val centsPacked = cents.agg(
-      array_sort(collect_list(struct(col("cell"), col("cv")))).as("pes"))
-    val queryProbes = emb.where(queryPred).crossJoin(broadcast(centsPacked))
-      .select(col("vec_id").as("query_id"),
-        slice(array_sort(transform(col("pes"), e => struct(
-          (-graft.functions.CosineSimilarity(col("v"), e.getField("cv"))).as("negd"),
-          e.getField("cell").as("cell"),
-          dot(col("v"), e.getField("cv")).as("qcdot")))), 1, nprobe).as("probes"))
-      .select(col("query_id"), explode(col("probes")).as("p"))
-      .select(col("query_id"), col("p.cell").as("ivf_cell"),
-        col("p.qcdot").as("qcdot"))
-    // per-(query, subspace, code) partial dots vs the RAW query
-    // sub-vectors (dot(q, r) decomposes directly — no query residual
-    // needed per cell, so one table serves every probed cell)
-    val table = subVectors(emb.where(queryPred))
-      .select(col("vec_id").as("query_id"), col("m"), col("sv"))
-      .join(broadcast(books), Seq("m"))
-      .select(col("query_id"), col("m"), col("cell").as("code"),
-        dot(col("sv"), col("cv")).as("pdot"))
-
-    val approx = codes
-      .join(broadcast(queryProbes), Seq("ivf_cell")) // probed cells only
-      .join(broadcast(table), Seq("query_id", "m", "code"))
-      .where(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg((max(col("qcdot")) + sum(col("pdot"))).as("adc"))
-    val shortlist = approx
-      .withColumn("rr", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("adc"), asc("vec_id"))))
-      .where(col("rr") <= rerank)
-      .select(col("query_id"), col("vec_id"))
-    val scored = shortlist
-      .join(emb, Seq("vec_id"))
-      .join(broadcast(querySetOf(emb, queryPred)), Seq("query_id"))
-      .withColumn("cos", graft.functions.CosineSimilarity(col("qv"), col("v")))
-    val scan = queryProbes.join(idx.cellSizes, Seq("ivf_cell"))
+  private def ivfPqQuery(emb: DataFrame, queries: DataFrame, idx: IvfPqIndex,
+                         k: Int, nprobe: Int, rerank: Int): (DataFrame, DataFrame) = {
+    val probes = probeCells(queries, idx.cents, nprobe)
+    val scan = probes.join(idx.cellSizes, Seq("ivf_cell"))
       .groupBy(col("query_id")).agg(sum(col("cell_n")).as("n_scanned"))
-    (topK(scored, k), scan)
+    (adcRerank(emb, queries, probes, idx.books, idx.codes, k, rerank), scan)
   }
 
-  /** Scale-tier IVF-PQ measurement with a build/query time split
-    * (VERDICT r10 #5): replicate the sf's embeddings `rep`× (100k at
-    * rep=50, 1M at rep=500 over sf0.1), TIME the index build (coarse
-    * train on the replica-0 sample + full-corpus assignment + residual
-    * codebooks + code table, materialized) separately from the query
-    * pass (probe routing + ADC over probed codes + re-rank,
-    * materialized), then CHECK — untimed — the same two contracts as
-    * q_ann_ivfpq_scale: per-query recall ≥ `minHits` of the exact
-    * cosine top-k, and the integer-exact scanned-fraction bound
-    * n_scanned × cells ≤ 2 × nprobe × n. Returns (n_corpus, build_sec,
-    * query_sec, recall_failures, scan_failures, build_stage_split). The
-    * caller treats any failure as a bench error — a fast broken index
-    * measures nothing.
+  /** IVF-PQ composition (Jégou et al. 2011 §IV — the actual
+    * billion-vector design): the coarse IVF quantizer bounds the SCAN
+    * (a query touches only its `nprobe` probed cells), per-vector
+    * RESIDUAL product-quantization codes bound the MEMORY (the probed
+    * scan reads PqM byte-sized codes per vector, never raw floats), and
+    * ADC scores codes with one exact re-rank over the PqRerank
+    * shortlist — [[annIvf]]'s router and [[annPq]]'s ADC, composed. At
+    * a billion vectors this is the only composition where BOTH the
+    * bytes read and the rows scanned per query stay bounded.
+    *
+    * Returns (top-k frame, (query_id, n_scanned) frame). n_scanned /
+    * corpus is the scanned fraction the scale contract
+    * (q_ann_ivfpq_scale) bounds: the property that makes IVF-PQ a
+    * billion-vector design is precisely that this stays ≈ nprobe/cells
+    * instead of 1. `emb` and `queries` ([[querySetOf]]) are each read
+    * more than once: callers pass pins.
     */
+  def annIvfPq(emb: DataFrame, queries: DataFrame, k: Int, cells: Int, nprobe: Int,
+               trainPred: Option[Column]): (DataFrame, DataFrame) =
+    ivfPqQuery(emb, queries, ivfPqBuild(emb, cells, trainPred, None, new StageTimer),
+      k, nprobe, PqRerank)
+
   /** Measured per-tier evidence beyond the pass/fail contracts (VERDICT
     * r14 #3): the numbers a reviewer needs to judge the approximation,
     * not just trust it. `recallAtK` is the measured mean fraction of
@@ -727,6 +605,18 @@ object VectorOps {
                           recallAtK: Double, scannedFrac: Double,
                           assignAgreement: Double)
 
+  /** Scale-tier IVF-PQ measurement with a build/query time split:
+    * replicate the sf's embeddings `rep`× (100k at rep=50, 1M at
+    * rep=500 over sf0.1), TIME the index build (coarse
+    * train on the replica-0 sample + full-corpus assignment + residual
+    * codebooks + code table, materialized) separately from the query
+    * pass (probe routing + ADC over probed codes + re-rank,
+    * materialized), then CHECK — untimed — the same two contracts as
+    * q_ann_ivfpq_scale: per-query recall ≥ `minHits` of the exact
+    * cosine top-k, and the integer-exact scanned-fraction bound
+    * n_scanned × cells ≤ 2 × nprobe × n. The caller treats any failure
+    * as a bench error — a fast broken index measures nothing.
+    */
   def annIvfPqScaleTier(s: SparkSession, dir: String, rep: Int,
                         cells: Int, nprobe: Int,
                         nQueries: Int = AnnScaleQueries, k: Int = 5,
@@ -735,27 +625,28 @@ object VectorOps {
     // its stages: past ScratchPinRows vectors through parquet scratch
     // (a 10M × 64-double corpus is ~5 GB raw — you don't pin it in RAM,
     // you re-read columnar storage), else in memory.
-    val nBase = load(s, dir, "embeddings").count()
+    val (corpus, nBase) = scaledCorpus(s, dir, rep)
     val scratch =
       if (nBase * rep > ScratchPinRows)
         Some(java.nio.file.Files.createTempDirectory("graft_ivfpq_pin").toString)
       else None
-    val (emb, m) = Pin.observing(scaledCorpus(s, dir, rep), Pin.Rows)(
-      pinLarge(_, scratch, "corpus"))
+    val (emb, m) = Pin.observing(corpus, Pin.Rows)(pinLarge(_, scratch, "corpus"))
     val n = m("n").asInstanceOf[Long]
-    val pred = col("vec_id") < nQueries.toLong
-    def sec(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    def timed[T](f: => T): (T, Double) = {
+      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
-    var idx: IvfPqIndex = null
     // Training sample: at least one full replica (every distinct base
     // location represented), and at least 2 points per requested cell so
     // Lloyd never has more centroids than training vectors (the 10M
     // tier's 2048 cells vs the 2000-vector replica-0 sample).
     val trainN = math.max(nBase, 2L * cells)
-    val buildSec = sec {
-      idx = ivfPqBuild(emb, cells, trainPred = Some(col("vec_id") < trainN),
-        materialize = true, scratch)
+    val stage = new StageTimer
+    val (idx, buildSec) = timed {
+      val built = ivfPqBuild(emb, cells, Some(col("vec_id") < trainN), scratch, stage)
+      // the query pass reads the codes and the scan diagnostic the cell
+      // sizes: pinned here, so the build's time covers them
+      built.copy(codes = stage("encode")(pinLarge(built.codes, scratch, "codes")),
+        cellSizes = stage("cell_sizes")(pinLarge(built.cellSizes, scratch, "cell_sizes")))
     }
     // Re-rank depth must cover the near-tie multiplicity: the fixture
     // puts `rep` near-identical replicas in every base's cluster, and
@@ -768,18 +659,12 @@ object VectorOps {
     // a 50-candidate shortlist holds ~10% of the tie set and recall
     // collapses to ~chance — measured: 20/20 queries below the floor.
     val rerank = math.max(PqRerank, 2 * rep)
-    var ann: DataFrame = null
-    var scan: DataFrame = null
-    val querySec = sec {
-      val (a, sc) = ivfPqQuery(emb, idx, k, nprobe, pred, rerank)
-      ann = Pin(a)
-      scan = Pin(sc)
+    val ((queries, ann, scan), querySec) = timed {
+      val q = Pin(querySetOf(emb, col("vec_id") < nQueries.toLong))
+      val (a, sc) = ivfPqQuery(emb, q, idx, k, nprobe, rerank)
+      (q, Pin(a), Pin(sc))
     }
-    val bf = topK(
-      emb.join(broadcast(querySetOf(emb, pred)),
-        col("vec_id") =!= col("query_id"))
-        .withColumn("cos",
-          graft.functions.CosineSimilarity(col("qv"), col("v"))), k)
+    val bf = cosineTopK(emb, queries, k)
     val recallFailures = recallContract(ann, bf, minHits)
       .where(!col("recall_ok")).count()
     val scanFailures = scan
@@ -814,7 +699,7 @@ object VectorOps {
     scratch.foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
     AnnTierStats(n, buildSec, querySec, recallFailures, scanFailures,
-      idx.stageSec, recallAtK, scannedFrac, assignAgreement)
+      stage.splits, recallAtK, scannedFrac, assignAgreement)
   }
 
   /** Production SemDeDup path (Abbas et al. 2023): Lloyd cells → the
@@ -874,7 +759,8 @@ object VectorOps {
     // Brute-force cosine top-5. Output ids only — rank order is
     // float-robust (neighbor gaps >> ulp), values are not.
     "q_ann_topk" -> { (s, dir) =>
-      annBruteForce(corpusOf(s, dir), 5).orderBy(col("query_id"), col("rank"))
+      val emb = corpusOf(s, dir)
+      annBruteForce(emb, querySetOf(emb), 5).orderBy(col("query_id"), col("rank"))
     },
 
     // LSH ANN recall contract: ≥1 of the true top-5 per query. Random
@@ -883,7 +769,7 @@ object VectorOps {
     // routing finds true neighbors", the plane count is the scaling knob.
     "q_ann_lsh" -> { (s, dir) =>
       val emb = corpusOf(s, dir)
-      recallContract(annLsh(emb, 5), annBruteForce(emb, 5), minHits = 1)
+      recallContract(annLsh(emb, 5), annBruteForce(emb, querySetOf(emb), 5), minHits = 1)
     },
 
     // IVF ANN recall contract: ≥4 of the true top-5 per query (the
@@ -891,7 +777,8 @@ object VectorOps {
     // this corpus — that is the point of having both).
     "q_ann_ivf" -> { (s, dir) =>
       val emb = Pin(corpusOf(s, dir))
-      recallContract(annIvf(emb, 5), annBruteForce(emb, 5), minHits = 4)
+      val q = Pin(querySetOf(emb))
+      recallContract(annIvf(emb, q, 5), annBruteForce(emb, q, 5), minHits = 4)
     },
 
     // PQ-ADC+re-rank ANN recall contract vs the exact top-5: 8×32
@@ -903,7 +790,8 @@ object VectorOps {
     // recall-vs-memory knobs.
     "q_ann_pq" -> { (s, dir) =>
       val emb = Pin(corpusOf(s, dir))
-      recallContract(annPq(emb, 5), annBruteForce(emb, 5), minHits = 2)
+      val q = Pin(querySetOf(emb))
+      recallContract(annPq(emb, q, 5), annBruteForce(emb, q, 5), minHits = 2)
     },
 
     // IVF-PQ composed ANN recall contract vs the exact top-5: coarse
@@ -916,7 +804,9 @@ object VectorOps {
     // truncation loses what flat-PQ ADC would re-find).
     "q_ann_ivfpq" -> { (s, dir) =>
       val emb = Pin(corpusOf(s, dir))
-      recallContract(annIvfPq(emb, 5), annBruteForce(emb, 5), minHits = 2)
+      val q = Pin(querySetOf(emb))
+      val (ann, _) = annIvfPq(emb, q, 5, IvfCells, IvfProbes, trainPred = None)
+      recallContract(ann, annBruteForce(emb, q, 5), minHits = 2)
     },
 
     // IVF-PQ at SCALE-TIER parameters on the replicated AnnScaleRep×
@@ -932,27 +822,16 @@ object VectorOps {
     // when recall happens to survive). Integer-exact bound: n_scanned ×
     // cells ≤ 2 × nprobe × n_corpus.
     "q_ann_ivfpq_scale" -> { (s, dir) =>
-      val (emb, n) = Pin.counted(scaledCorpus(s, dir))
+      val (corpus, nBase) = scaledCorpus(s, dir, AnnScaleRep)
+      val (emb, n) = Pin.counted(corpus)
       // replica 0 of the first AnnScaleQueries bases (replica-major ids)
-      val pred = col("vec_id") < AnnScaleQueries.toLong
-      // train the coarse quantizer on the replica-0 base sample (the
-      // first nBase ids) — the faiss regime: training cost is sample-
-      // bounded, only the single assignment pass is corpus-linear
-      val nBase = load(s, dir, "embeddings").count()
-      val (ann, scan) = annIvfPqWithScan(emb, 5,
-        cells = AnnScaleCells, nprobe = AnnScaleProbes, pred,
+      val q = Pin(querySetOf(emb, col("vec_id") < AnnScaleQueries.toLong))
+      // train on the replica-0 base sample (the first nBase ids) — the
+      // faiss regime: training cost is sample-bounded, only the
+      // assignment passes are corpus-linear
+      val (ann, scan) = annIvfPq(emb, q, 5, AnnScaleCells, AnnScaleProbes,
         trainPred = Some(col("vec_id") < nBase))
-      // baseline ranks by the SAME similarity the ANN re-rank uses
-      // (cosine): the replicas are near-ties with non-unit norms, so a
-      // dot-ranked baseline diverges for reasons unrelated to the ANN
-      // path — the ADVICE-r9 q_hard_negatives_ann lesson, which this
-      // fixture is deliberately sensitive enough to expose
-      val bf = topK(
-        emb.join(broadcast(querySetOf(emb, pred)),
-          col("vec_id") =!= col("query_id"))
-          .withColumn("cos",
-            graft.functions.CosineSimilarity(col("qv"), col("v"))), 5)
-      recallContract(ann, bf, minHits = 3)
+      recallContract(ann, cosineTopK(emb, q, 5), minHits = 3)
         .join(scan, Seq("query_id"), "left")
         .select(col("query_id"), col("k"), lit(n).as("n_corpus"), col("recall_ok"),
           (coalesce(col("n_scanned"), lit(0L)) * AnnScaleCells.toLong <=
@@ -1172,10 +1051,9 @@ object VectorOps {
       val emb = load(s, dir, "embeddings")
         .select(col("vec_id"), asDouble(col("embedding")).as("v"),
           col("label").cast("long").as("label"))
-      val pred = col("vec_id") < 20
-      val q = emb.where(pred)
+      val q = Pin(emb.where(col("vec_id") < 20)
         .select(col("vec_id").as("query_id"), col("v").as("qv"),
-          col("label").as("qlabel"))
+          col("label").as("qlabel")))
       // exact baseline — q_hard_negatives' shape, but ranked by COSINE
       // (the same similarity annPq's candidate re-rank orders by), so the
       // agreement floors measure candidate-generation quality only: with
@@ -1196,7 +1074,8 @@ object VectorOps {
       // ANN candidates: the PQ code scan nominates, exact re-rank
       // orders — so min rank per (query, label-side) IS the candidate
       // argmax by true cosine, no re-scoring needed
-      val cand = annPq(emb.select(col("vec_id"), col("v")), PqRerank, pred)
+      val cand = annPq(emb.select(col("vec_id"), col("v")),
+        q.select(col("query_id"), col("qv")), PqRerank)
       val wa = Window.partitionBy(col("query_id"), col("same"))
         .orderBy(asc("rank"))
       val ann = cand

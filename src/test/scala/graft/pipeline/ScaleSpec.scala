@@ -154,7 +154,7 @@ class ScaleSpec extends SparkSpec {
       (($"id" * 40503L) % n % 256).as("a"), // Fibonacci-ish scramble
       (($"id" * 40503L) % n / 256).cast("long").as("b"))
     val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    Scale.zorderWrite(df, "a", "b", dir, files = 16)
+    Scale.zorderWrite(df, Seq("a", "b"), dir, files = 16)
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("part-")).map(_.getAbsolutePath).toSeq
     assert(files.size >= 12, s"range partitioning produced ${files.size} files")

@@ -23,7 +23,7 @@ object AnnAssignProbe {
     def sec(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    val corpus = VectorOps.scaledCorpus(spark, sf, rep).cache()
+    val corpus = VectorOps.scaledCorpus(spark, sf, rep)._1.cache()
     val n = corpus.count()
     val cents = corpus.limit(cells)
       .select(col("vec_id").cast("int").as("cell"), col("v").as("cv"))

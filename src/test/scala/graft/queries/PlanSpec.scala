@@ -288,8 +288,15 @@ class PlanSpec extends SparkSpec {
       // pin: over the cached corpus Spark injected a runtime bloom filter
       // (a bloom_filter_agg subquery, one SinglePartition exchange) into
       // the query-probe filter of both the ANN and the baseline plan; a
-      // pin's scan gets none
-      "q_ann_ivfpq" -> (17, 19),
+      // pin's scan gets none. (17, 19) → (13, 15): the recall contract
+      // reads the ANN frame twice, and each copy lost three things — the
+      // coarse centroid packing (SinglePartition + IdentityBroadcast) of
+      // the corpus assignment the encode recomputed (now a build pin),
+      // the remaining bloom_filter_agg subquery (SinglePartition; the
+      // query set is a pin), and the probe rows' own broadcast (they
+      // join the ADC table on the query side, so the codes meet one
+      // broadcast keyed on (ivf_cell, m, code))
+      "q_ann_ivfpq" -> (13, 15),
       // banding + budget-gated cohort escalation + new-vs-corpus join
       // (each candidate pair once, from its first band under the cap:
       // no pair dedup, and the cap is a filter, not two anti-joins)
@@ -319,7 +326,13 @@ class PlanSpec extends SparkSpec {
       // the graph pin (3 shuffles), then one page-keyed shuffle per
       // round (10), each counted in the final and the initial plan, and
       // the returned frame's sort
-      "q_pagerank" -> (27, 0))
+      "q_pagerank" -> (27, 0),
+      // the corpus and query-set pins (no exchange), the two coarse
+      // Lloyd passes, the pinned corpus assignment and training
+      // residuals, the two PQ Lloyd passes (their means and codebook
+      // packings), then the returned frame: the encode, every
+      // codebook/probe/query-side join broadcast
+      "q_ann_ivfpq" -> (37, 27))
     builds.foreach { case (q, exp) =>
       val (df, run) = graft.runner.TickProbe.during(spark)(graft.SparkEntry.queries(q)(spark, sf))
       val plans = df.queryExecution.executedPlan.toString +: run.plans
@@ -342,6 +355,36 @@ class PlanSpec extends SparkSpec {
       graft.SparkEntry.queries(q)(spark, sf).write.format("noop").mode("overwrite").save()
       assert(spark.sharedState.cacheManager.isEmpty, s"$q left a plan in the CacheManager")
     }
+  }
+
+  test("the ANN queries plan no runtime bloom filter over their query set") {
+    // a selective filter over a corpus scan on both sides of a query-id
+    // join makes Spark inject a bloom_filter_agg subquery whose creation
+    // and application sides are the same few query rows: a job that
+    // filters nothing. The pinned query set leaves no such filter.
+    Seq("q_ann_pq", "q_ann_ivfpq").foreach { q =>
+      val (df, run) = graft.runner.TickProbe.during(spark)(graft.SparkEntry.queries(q)(spark, sf))
+      (df.queryExecution.executedPlan.toString +: run.plans).foreach { p =>
+        assert(!p.contains("bloom_filter_agg"), s"$q plans a runtime bloom filter:\n$p")
+      }
+    }
+  }
+
+  test("q_ann_ivfpq assigns the corpus to its coarse cells once") {
+    // the cosine NearestCell kernel runs in the two coarse Lloyd passes
+    // (each ends in a mean) and in the one corpus assignment; the PQ
+    // Lloyd passes (the L2 kernel), the encode and the query read the
+    // pinned assignment
+    val (df, run) = graft.runner.TickProbe.during(spark)(
+      graft.SparkEntry.queries("q_ann_ivfpq")(spark, sf))
+    val cosine = """nearestcell\([^()]*, false\)""".r
+    val l2 = """nearestcell\([^()]*, true\)""".r
+    val (lloyd, assign) = (df.queryExecution.executedPlan.toString +: run.plans)
+      .filter(cosine.findFirstIn(_).isDefined)
+      .partition(p => p.contains("avg(") && l2.findFirstIn(p).isEmpty)
+    assert(lloyd.size == 2, s"coarse Lloyd passes: ${lloyd.size}")
+    assert(assign.size == 1,
+      s"the coarse assignment ran in ${assign.size} plans:\n${assign.mkString("\n")}".take(20000))
   }
 
   test("q_incr_rollup observes each tick's dates on its append: one collect per build") {

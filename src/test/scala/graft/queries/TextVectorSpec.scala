@@ -190,7 +190,7 @@ class TextVectorSpec extends SparkSpec {
   }
 
   test("ann-lsh: results are a valid subset ranking; multi-probe recall is useful") {
-    val brute = VectorOps.annBruteForce(embCorpus, 5)
+    val brute = VectorOps.annBruteForce(embCorpus, VectorOps.querySetOf(embCorpus), 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val lsh = VectorOps.annLsh(embCorpus, 5).cache()
     // ranks are contiguous starting at 1 per query
@@ -265,9 +265,9 @@ class TextVectorSpec extends SparkSpec {
   }
 
   test("ann-ivf: valid ranking, recall at least as useful as random cells") {
-    val brute = VectorOps.annBruteForce(embCorpus, 5)
+    val brute = VectorOps.annBruteForce(embCorpus, VectorOps.querySetOf(embCorpus), 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val ivf = VectorOps.annIvf(embCorpus, 5).cache()
+    val ivf = VectorOps.annIvf(embCorpus, VectorOps.querySetOf(embCorpus), 5).cache()
     val ranks = ivf.groupBy("query_id").agg(min("rank").as("mn"), max("rank").as("mx"),
       count(lit(1)).as("n")).collect()
     ranks.foreach { r =>
@@ -356,8 +356,10 @@ class TextVectorSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .select($"query_id", $"neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val ann = pairs(VectorOps.annIvfPq(emb, 5))
-    val bf = pairs(VectorOps.annBruteForce(emb, 5))
+    val q = VectorOps.querySetOf(emb)
+    val ann = pairs(VectorOps.annIvfPq(emb, q, 5, VectorOps.IvfCells, VectorOps.IvfProbes,
+      trainPred = None)._1)
+    val bf = pairs(VectorOps.annBruteForce(emb, q, 5))
     assert(bf.keySet == ann.keySet && bf.nonEmpty)
     bf.foreach { case (q, truth) =>
       val hits = (ann(q) & truth).size
@@ -386,7 +388,7 @@ class TextVectorSpec extends SparkSpec {
       .groupBy($"query_id")
       .agg(max(when($"same", $"vec_id")).as("pos_id"),
         max(when(!$"same", $"vec_id")).as("neg_id"))
-    val cand = VectorOps.annPq(emb.select($"vec_id", $"v"), 50, pred)
+    val cand = VectorOps.annPq(emb.select($"vec_id", $"v"), VectorOps.querySetOf(emb, pred), 50)
     val wa = Window.partitionBy($"query_id", $"same").orderBy($"rank".asc)
     val ann = cand
       .join(emb.select($"vec_id".as("neighbor_id"), $"label"), Seq("neighbor_id"))
@@ -476,7 +478,7 @@ class TextVectorSpec extends SparkSpec {
     // membership overlap (memberR=2) keeps that rare — but it must never
     // drop or null a row (the empty-membership fallback), and bulk
     // agreement is what makes the tier's recall contracts hold.
-    val emb = VectorOps.scaledCorpus(spark, sf, rep = 50).cache()
+    val emb = VectorOps.scaledCorpus(spark, sf, rep = 50)._1.cache()
     val cents = VectorOps.lloydCentroids(emb.where($"vec_id" < 512), 256)
       .localCheckpoint(true)
     val exact = VectorOps.assignCells(emb, cents)
