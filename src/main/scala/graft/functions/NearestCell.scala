@@ -30,8 +30,8 @@ import org.apache.spark.sql.types._
   * expression runs the whole argmax as one fused primitive loop
   * (cosine arithmetic copied verbatim from [[CosineSimilarity]], so
   * selection is bit-identical).
-  */
-/** `l2 = true` switches the metric to MINIMUM squared Euclidean
+  *
+  * `l2 = true` switches the metric to MINIMUM squared Euclidean
   * distance (sequential left fold of (x−y)², mirroring the
   * `aggregate(zip_with(...))` chain of the pqAssign form it replaces;
   * ties to the lowest cell) — the PQ codebook-assignment kernel.

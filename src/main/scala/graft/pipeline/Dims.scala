@@ -1,66 +1,123 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-/** Dimension builds for the gold star schema (create_dims.py:59-180).
+import SilverToGold.DimJoin
+
+/** The gold star schema's dims (create_dims.py:59-180), each declared
+  * once in a catalog that the bulk build, the tick's upsert and the fact
+  * builds all read.
   *
   * Surrogate keys: the reference uses `monotonically_increasing_id`
   * (create_dims.py:78) which is partition-dependent and therefore
-  * non-deterministic across runs/cluster layouts. We assign SKs with
-  * `row_number` over the natural key instead — deterministic, testable,
-  * and stable under re-runs (SURVEY.md §7.5 risk 2). For a full rebuild
-  * the global row_number is a single-pass window; dimension cardinality
-  * (users/recipes/pages) is orders of magnitude below fact cardinality,
-  * so the single-partition window over the *deduplicated dim candidates*
-  * is not a 100 TB bottleneck (dims are ~10^3..10^6 rows). SKs start at 1;
-  * 0 is reserved as the "join missed" default (silver_to_gold_processor
-  * .py:272-276).
+  * non-deterministic across runs/cluster layouts (SURVEY.md §7.5 risk 2).
+  * A full build numbers a dim's rows 1..n in natural-key order, ascending
+  * with nulls first ([[Dim.build]]), with no single-partition stage; the
+  * tick appends new keys above the dim's high-water mark
+  * ([[dimUpsert]]) and never renumbers. 0 is reserved as the "join
+  * missed" default (silver_to_gold_processor.py:272-276).
   */
 object Dims {
 
-  /** W1 — SCD Type 1: latest record per user by a deterministic recency
-    * order (create_dims.py:67-74 orders by processed_at; we order by the
-    * caller-supplied event-time column + event_id tiebreak so results are
-    * reproducible).
+  /** A persisted dim: its name, the fact join it serves, a silver row's
+    * natural key (in the join's order) and whether the row has one, the
+    * SCD-1 attributes that ride along with a key, and the columns only its
+    * master fills (`filled`).
     */
-  def latestPerUser(silver: DataFrame, orderCol: String = "kst_timestamp"): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy(desc(orderCol), desc("event_id"))
+  final case class Dim(name: String, join: DimJoin, keys: Seq[Column], hasKey: Column,
+                       attrs: Seq[String] = Nil, filled: Seq[StructField] = Nil) {
+    def path(warehouse: String, suffix: String): String = s"$warehouse/$name$suffix"
+    val schema = StructType(StructField(join.sk, LongType) +:
+      (join.naturals ++ attrs).map(StructField(_, StringType)))
+    /** The sink's full schema, which every append is written to. */
+    val stored = StructType(schema ++ filled)
+
+    private def naturalsOf(rows: DataFrame): DataFrame =
+      rows.select(keys.zip(join.naturals).map { case (k, n) => k.as(n) }: _*)
+
+    /** One row per natural key among the `rows` that have one; with
+      * attributes (dim_user), each user's latest row.
+      */
+    def members(rows: DataFrame): DataFrame =
+      if (attrs.isEmpty) naturalsOf(rows.where(hasKey)).distinct() else latestPerUser(rows)
+
+    /** The full build: `members` numbered 1..n in natural-key order,
+      * ascending with nulls first. SK = global sort rank, as
+      * `row_number` over the naturals would give, but no stage funnels
+      * the dim through one task ([[withSequentialSk]]).
+      */
+    def build(members: DataFrame): DataFrame =
+      withSequentialSk(members, join.naturals, join.sk)
+
+    /** The `candidates` `existing` lacks, numbered above its high-water
+      * mark ([[dimUpsert]]).
+      */
+    def upsert(candidates: DataFrame, existing: DataFrame): DataFrame =
+      dimUpsert(candidates, existing, join.naturals, join.sk, attrs)
+
+    /** A row with a key misses unless its join matched a dim row with
+      * exactly that key, null-safely as [[dimUpsert]] compares. So every
+      * key the upsert would append is flagged, even where J1 (never a null
+      * `anonymous_id`) or J4 (`("", url)` for `(null, url)`) differ.
+      */
+    val missed = s"__missed_${join.sk}"
+    def missFlag: Column = hasKey && !keys.zip(join.naturals)
+      .map { case (k, n) => k <=> col(join.matched(n)) }.reduce(_ && _)
+
+    /** The keys of the `rows` that missed; with attributes (dim_user),
+      * the latest row of each user that missed.
+      */
+    def candidates(rows: DataFrame): DataFrame =
+      if (attrs.isEmpty) naturalsOf(rows.where(col(missed)))
+      else latestPerUser(rows)
+        .join(rows.where(col(missed)).select("user_id"), Seq("user_id"), "left_semi")
+  }
+
+  // J1 — left join on composite natural key (user_id, anonymous_id)
+  val User = Dim("dim_user", DimJoin("user_sk", Seq("user_id", "anonymous_id"), (s, d) =>
+      s("user_id") === d("user_id") && s("anonymous_id") === d("anonymous_id")),
+    Seq(col("user_id"), col("anonymous_id")), col("user_id").isNotNull,
+    attrs = Seq("user_segment", "cooking_style", "ab_test_group"))
+  // J3 — equi-join with explicit null guard on the key
+  val Event = Dim("dim_event", DimJoin("event_sk", Seq("event_name"), (s, d) =>
+      s("event_name") === d("event_name") && s("event_name").isNotNull),
+    Seq(col("event_name")), col("event_name").isNotNull)
+  // J4 — null-coalesced compound key + at-least-one-non-null guard
+  val Page = Dim("dim_page", DimJoin("page_sk", Seq("page_name", "page_url"), (s, d) =>
+      coalesce(s("page_name"), lit("")) === coalesce(d("page_name"), lit("")) &&
+        coalesce(s("page_url"), lit("")) === coalesce(d("page_url"), lit("")) &&
+        (s("page_name").isNotNull || s("page_url").isNotNull)),
+    Seq(col("page_name"), col("page_url")), col("page_name").isNotNull || col("page_url").isNotNull)
+  // J2 — cast-normalized key: both sides compared as string. Its
+  // attributes come from the recipe master, typed as the master export
+  // types them ([[recipeMasterAttrs]]).
+  val Recipe = Dim("dim_recipe", DimJoin("recipe_sk", Seq("recipe_id"), (s, d) =>
+      s("prop_recipe_id").cast("string") === d("recipe_id").cast("string")),
+    Seq(col("prop_recipe_id").cast("string")), col("prop_recipe_id").isNotNull,
+    filled = Seq("recipe_name", "dish_type", "ingredient_type", "method_type",
+      "situation_type", "difficulty").map(StructField(_, StringType)) :+
+      StructField("cooking_time", IntegerType))
+
+  /** The catalog, in the order the fact build joins it. */
+  val All: Seq[Dim] = Seq(User, Event, Page, Recipe)
+
+  /** W1 — SCD Type 1: latest record per user by a deterministic recency
+    * order (create_dims.py:67-74 orders by processed_at; we order by
+    * event time + event_id tiebreak so results are reproducible). One row
+    * per user_id, so the rows are distinct as they stand.
+    */
+  def latestPerUser(silver: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(desc("kst_timestamp"), desc("event_id"))
     silver
-      .select("user_id", "anonymous_id", "user_segment", "cooking_style",
-        "ab_test_group", orderCol, "event_id")
-      .where(col("user_id").isNotNull)
+      .select((User.join.naturals ++ User.attrs :+ "kst_timestamp" :+ "event_id").map(col): _*)
+      .where(User.hasKey)
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
-      .drop("rn", orderCol, "event_id")
-      .distinct()
+      .drop("rn", "kst_timestamp", "event_id")
   }
-
-  /** dim_user: SCD-1 latest per user + deterministic SK. */
-  def dimUser(silver: DataFrame): DataFrame = {
-    val w = Window.orderBy("user_id", "anonymous_id")
-    latestPerUser(silver)
-      .withColumn("user_sk", row_number().over(w).cast("long"))
-      .select("user_sk", "user_id", "anonymous_id", "user_segment",
-        "cooking_style", "ab_test_group")
-  }
-
-  /** A2 + SK — generic small dim from distinct candidate columns
-    * (create_dims.py:99-104). First id column must be non-null.
-    */
-  def dimFromColumns(silver: DataFrame, idCols: Seq[String], sk: String): DataFrame = {
-    val w = Window.orderBy(idCols.map(col): _*)
-    silver.select(idCols.map(col): _*)
-      .where(col(idCols.head).isNotNull)
-      .distinct()
-      .withColumn(sk, row_number().over(w).cast("long"))
-      .select((sk +: idCols).map(col): _*)
-  }
-
-  def dimEvent(silver: DataFrame): DataFrame =
-    dimFromColumns(silver, Seq("event_name"), "event_sk")
 
   /** The sorted stage of [[withSequentialSk]], exposed package-private so
     * the spec can assert its physical plan parallelizes (range exchange +
@@ -75,9 +132,8 @@ object Dims {
     * zipWithIndex pass (per-partition counts + cumulative offsets — the
     * classic two-pass dense-rank). SK = global sort rank, bit-identical
     * to `row_number().over(Window.orderBy(orderCols))`, but every stage
-    * is parallel — this is the 10⁸-row-dim path (a 100 TB clickstream's
-    * user dim), where the global-window variant would funnel the whole
-    * dim through one task.
+    * is parallel — a 100 TB clickstream's user dim reaches 10⁸ rows, where
+    * a global window would funnel the whole dim through one task.
     */
   def withSequentialSk(df: DataFrame, orderCols: Seq[String], sk: String): DataFrame = {
     // materialize the sorted frame once: zipWithIndex runs TWO jobs (a
@@ -89,72 +145,25 @@ object Dims {
       org.apache.spark.sql.Row.fromSeq((i + 1L) +: row.toSeq)
     }
     spark.createDataFrame(indexed,
-      org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField(sk,
-          org.apache.spark.sql.types.LongType, nullable = false) +: sorted.schema.fields))
+      StructType(StructField(sk, LongType, nullable = false) +: sorted.schema.fields))
   }
 
-  /** [[dimUser]] semantics (SCD-1 + deterministic SK) on the scalable SK
-    * path — same (user_sk, user_id) mapping, no single-partition stage.
-    */
-  def dimUserScalable(silver: DataFrame): DataFrame =
-    withSequentialSk(latestPerUser(silver), Seq("user_id", "anonymous_id"), "user_sk")
-      .select("user_sk", "user_id", "anonymous_id", "user_segment",
-        "cooking_style", "ab_test_group")
-
-  /** dim_page keeps rows where at least one of (page_name, page_url) is
-    * set — matches the J4 join guard.
-    */
-  def dimPage(silver: DataFrame): DataFrame = {
-    val w = Window.orderBy(asc_nulls_first("page_name"), asc_nulls_first("page_url"))
-    silver.select("page_name", "page_url")
-      .where(col("page_name").isNotNull || col("page_url").isNotNull)
-      .distinct()
-      .withColumn("page_sk", row_number().over(w).cast("long"))
-      .select("page_sk", "page_name", "page_url")
-  }
-
-  /** The recipe master's attribute projection keyed by natural key —
-    * shared by the bulk build ([[dimRecipeFromMaster]]) and the
-    * append-only dim's attribute refresh ([[refreshAttributes]]).
+  /** The recipe master's attribute projection keyed by natural key
+    * (create_dims.py:107-135 reads total_recipes.parquet with columns id,
+    * name, dish_type, ingredient_type, method_type, situation_type,
+    * difficulty, cooking_time and renames id/name): dim_recipe's
+    * members in a bulk build, and the attributes the append-only dim's
+    * refresh ([[refreshAttributes]]) takes.
     */
   def recipeMasterAttrs(master: DataFrame): DataFrame =
-    master.select(
-      col("id").cast("string").as("recipe_id"),
-      col("name").as("recipe_name"),
-      col("dish_type"), col("ingredient_type"), col("method_type"),
-      col("situation_type"), col("difficulty"),
-      col("cooking_time").cast("int").as("cooking_time"))
-
-  /** The attributes [[recipeMasterAttrs]] gives dim_recipe beyond its key,
-    * as the master export types them.
-    */
-  val RecipeMasterAttrs: Seq[StructField] =
-    Seq("recipe_name", "dish_type", "ingredient_type", "method_type", "situation_type",
-      "difficulty").map(StructField(_, StringType)) :+ StructField("cooking_time", IntegerType)
-
-  /** dim_recipe from a Parquet master file, reference shape
-    * (create_dims.py:107-135 reads total_recipes.parquet with columns
-    * id, name, dish_type, ingredient_type, method_type, situation_type,
-    * difficulty, cooking_time and renames id/name). SKs by deterministic
-    * row_number over recipe_id — the repo's reproducible-SK convention
-    * (the reference's monotonically_increasing_id is layout-dependent);
-    * master cardinality is ~10^4, far under window-bottleneck scale.
-    */
-  def dimRecipeFromMaster(master: DataFrame): DataFrame = {
-    val w = Window.orderBy("recipe_id")
-    recipeMasterAttrs(master)
-      .withColumn("recipe_sk", row_number().over(w).cast("long"))
-      .select("recipe_sk", "recipe_id", "recipe_name", "dish_type",
-        "ingredient_type", "method_type", "situation_type", "difficulty",
-        "cooking_time")
-  }
+    master.select(col("id").cast("string").as("recipe_id") +: Recipe.filled.map(f =>
+      col(if (f.name == "recipe_name") "name" else f.name).cast(f.dataType).as(f.name)): _*)
 
   /** Deterministic recipe-master FIXTURE with the reference master file's
     * schema (total_recipes.parquet shape) — the zero-egress stand-in for
     * the S3 master: attributes derive reproducibly from the id. Written
     * as a real parquet file so the master-read path
-    * ([[dimRecipeFromMaster]]) is always exercised, never special-cased.
+    * ([[recipeMasterAttrs]]) is always exercised, never special-cased.
     * Input: any frame with a `recipe_id` column (string or numeric).
     */
   def writeRecipeMasterFixture(recipeIds: DataFrame, path: String): Unit = {
@@ -226,21 +235,6 @@ object Dims {
         existing.agg(coalesce(max(col(sk)), lit(0L))).scalar()).cast("long"))
       .select(((sk +: idCols) ++ attrs).map(col): _*)
   }
-
-  /** J5 + A4 + W2 — incremental dim_user upsert
-    * (replay_silver_to_gold.py:200-280): new users = silver users anti-join
-    * existing dim; SKs continue from the existing high-water mark via
-    * global row_number. Returns the rows to append.
-    */
-  def dimUserUpsert(silver: DataFrame, existing: DataFrame): DataFrame =
-    // NULL-SAFE key match (in dimUpsert): anonymous_id can be null, and
-    // plain equality would re-insert such users with a fresh SK on every
-    // batch (the SK-forking failure mode)
-    dimUpsert(latestPerUser(silver), existing, Seq("user_id", "anonymous_id"), "user_sk",
-      UserAttrs)
-
-  /** dim_user's SCD-1 attributes, which ride along with its key. */
-  val UserAttrs = Seq("user_segment", "cooking_style", "ab_test_group")
 
   /** Attribute refresh for an append-only dim (create_dims.py:107-135
     * semantics, applied in place): rows keep their SK and natural key;

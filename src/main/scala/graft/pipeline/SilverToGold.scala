@@ -39,8 +39,9 @@ object SilverToGold {
       coalesce(split(propAction, ":").getItem(1).cast("bigint"), lit(60L)))
       .otherwise(60L)
 
-  /** One of the fact's dim joins (J1–J4): the dim's SK and natural key,
-    * and the condition over a silver row's and a dim row's columns.
+  /** One of the fact's dim joins (J1–J4, declared with their dims in
+    * [[Dims]]): the dim's SK and natural key, and the condition over a
+    * silver row's and a dim row's columns.
     */
   final case class DimJoin(sk: String, naturals: Seq[String],
                            on: (String => Column, String => Column) => Column) {
@@ -56,37 +57,21 @@ object SilverToGold {
     }
   }
 
-  // J1 — left join on composite natural key (user_id, anonymous_id)
-  val UserJoin = DimJoin("user_sk", Seq("user_id", "anonymous_id"), (s, d) =>
-    s("user_id") === d("user_id") && s("anonymous_id") === d("anonymous_id"))
-  // J2 — cast-normalized key: both sides compared as string
-  val RecipeJoin = DimJoin("recipe_sk", Seq("recipe_id"), (s, d) =>
-    s("prop_recipe_id").cast("string") === d("recipe_id").cast("string"))
-  // J3 — equi-join with explicit null guard on the key
-  val EventJoin = DimJoin("event_sk", Seq("event_name"), (s, d) =>
-    s("event_name") === d("event_name") && s("event_name").isNotNull)
-  // J4 — null-coalesced compound key + at-least-one-non-null guard
-  val PageJoin = DimJoin("page_sk", Seq("page_name", "page_url"), (s, d) =>
-    coalesce(s("page_name"), lit("")) === coalesce(d("page_name"), lit("")) &&
-      coalesce(s("page_url"), lit("")) === coalesce(d("page_url"), lit("")) &&
-      (s("page_name").isNotNull || s("page_url").isNotNull))
-
-  /** Pure transform: silver + 4 dims → fact rows. */
-  def buildFact(silver: DataFrame, dimUser: DataFrame, dimRecipe: DataFrame,
-                dimEvent: DataFrame, dimPage: DataFrame): DataFrame =
-    factOf(Seq(UserJoin -> dimUser, RecipeJoin -> dimRecipe, EventJoin -> dimEvent,
-        PageJoin -> dimPage)
-      .foldLeft(silver) { case (rows, (j, dim)) => j.leftJoin(rows, dim) })
+  /** Pure transform: silver + the catalog's four dims (`dim` gives each
+    * one's rows) → fact rows.
+    */
+  def buildFact(silver: DataFrame, dim: Dims.Dim => DataFrame): DataFrame =
+    factOf(Dims.All.foldLeft(silver)((rows, d) => d.join.leftJoin(rows, dim(d))))
 
   /** Fact rows from silver rows carrying the four SKs (a null is SK 0). */
   def factOf(joined: DataFrame): DataFrame =
     joined.select(
       col("event_id"),
-      coalesce(col(UserJoin.sk), lit(0L)).as("user_dim_key"),
+      coalesce(col(Dims.User.join.sk), lit(0L)).as("user_dim_key"),
       date_format(col("kst_timestamp"), "yyyyMMddHH").cast("bigint").as("time_dim_key"),
-      coalesce(col(RecipeJoin.sk), lit(0L)).as("recipe_dim_key"),
-      coalesce(col(PageJoin.sk), lit(0L)).as("page_dim_key"),
-      coalesce(col(EventJoin.sk), lit(0L)).as("event_dim_key"),
+      coalesce(col(Dims.Recipe.join.sk), lit(0L)).as("recipe_dim_key"),
+      coalesce(col(Dims.Page.join.sk), lit(0L)).as("page_dim_key"),
+      coalesce(col(Dims.Event.join.sk), lit(0L)).as("event_dim_key"),
       lit(1).as("event_count"),
       sessionSeconds(col("prop_action")).as("session_duration_seconds"),
       lit(30L).as("page_view_duration_seconds"),

@@ -30,30 +30,16 @@ import graft.runner.Bulk
   */
 object GoldE2E {
 
-  /** One bulk-built warehouse per (session, sfDir), memoized: every
-    * q_gold_* dashboard reads the SAME star schema, paying the medallion
-    * build once per verify run instead of once per query. (Driver-local
-    * state only — the map holds a temp-dir path, not DataFrames.)
+  /** The star schema every q_gold_* dashboard reads: one bulk build per
+    * (session, sfDir) ([[DirMemo]]), not one per query.
     */
-  private val builtWh = scala.collection.concurrent.TrieMap[(String, String), String]()
-
   private def gold(s: SparkSession, dir: String): Gold = {
-    val wh = builtWh.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val w = java.nio.file.Files.createTempDirectory("graft_gold_e2e").toString
-      // delete on JVM exit — a verify/test session otherwise leaks a full
-      // medallion warehouse on disk per (session, sfDir)
-      sys.addShutdownHook(
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(w)))
-      Bulk.run(s, RefEventsAdapter.toRawJson(load(s, dir, "events")), w, "2024-01-01")
-      w
-    })
-    Gold(
-      fact = Warehouse.read(s, s"$wh/fact_user_events"),
-      dimUser = Warehouse.read(s, s"$wh/dim_user"),
-      dimRecipe = Warehouse.read(s, s"$wh/dim_recipe"),
-      dimEvent = Warehouse.read(s, s"$wh/dim_event"),
-      dimPage = Warehouse.read(s, s"$wh/dim_page"),
-      dimTime = Dims.dimTime(s, "2024-01-01 00:00:00", "2024-02-29 23:00:00"))
+    val wh = DirMemo(s, dir, "gold_e2e")(
+      Bulk.run(s, RefEventsAdapter.toRawJson(load(s, dir, "events")), _, "2024-01-01"))
+    def read(d: Dims.Dim) = Warehouse.read(s, d.path(wh, ""))
+    Gold(Warehouse.read(s, s"$wh/fact_user_events"), read(Dims.User), read(Dims.Recipe),
+      read(Dims.Event), read(Dims.Page),
+      Dims.dimTime(s, "2024-01-01 00:00:00", "2024-02-29 23:00:00"))
   }
 
   /** The fact build's engagement lookup (silver_to_gold_processor.py:

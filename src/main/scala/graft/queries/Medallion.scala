@@ -182,18 +182,13 @@ object Medallion {
           $"user_segment", $"cooking_style", $"ab_test_group", $"kst_timestamp",
           $"page_name", $"page_url", $"prop_recipe_id", $"prop_action"))
       // dim_user deliberately excludes user_id % 5 == 0 so the J1 miss
-      // path (coalesce → SK 0) is exercised non-vacuously.
-      val dimUser = Dims.dimUser(silver.where(
-        $"event_name" === "auth_success" && $"user_id".cast("long") % 5 =!= 0))
-      val dimRecipe = {
-        val w = Window.orderBy("recipe_id")
-        silver.where($"prop_recipe_id".isNotNull)
-          .select($"prop_recipe_id".cast("string").as("recipe_id")).distinct()
-          .withColumn("recipe_sk", row_number().over(w).cast("long"))
-      }
-      val dimEvent = Dims.dimEvent(silver)
-      val dimPage = Dims.dimPage(silver)
-      val fact = SilverToGold.buildFact(silver, dimUser, dimRecipe, dimEvent, dimPage)
+      // path (coalesce → SK 0) is exercised non-vacuously; dim_recipe
+      // holds the silver's recipe ids
+      val dims = Dims.All.map { d =>
+        d -> d.build(d.members(if (d ne Dims.User) silver else silver.where(
+          $"event_name" === "auth_success" && $"user_id".cast("long") % 5 =!= 0)))
+      }.toMap
+      val (fact, dimEvent) = (SilverToGold.buildFact(silver, dims), dims(Dims.Event))
       fact
         .join(broadcast(dimEvent), fact("event_dim_key") === dimEvent("event_sk"), "left")
         .groupBy($"event_name")
@@ -213,8 +208,8 @@ object Medallion {
     },
 
     // J5 + A4 + W2 + U1 — incremental dim upsert: existing dim = signup
-    // users; anti-join finds the rest; SKs continue from the high-water
-    // mark via global row_number.
+    // users, fully built; anti-join finds the rest; SKs continue from the
+    // high-water mark via a row_number over the new keys.
     "q_dim_upsert" -> { (s, dir) =>
       import s.implicits._
       // duplicate=false: dedup is already exercised by q_silver_parse;
@@ -222,8 +217,8 @@ object Medallion {
       // read by both dim builds. Pinned whole: a projection here prunes
       // into the unpinned parse and measured 2.4× slower (sf0.1, 4 cores)
       val silver = Pin(RefEventsAdapter.toSilver(load(s, dir, "events"), duplicate = false))
-      val existing = Dims.dimUser(silver.where($"event_name" === "auth_success"))
-      val appended = Dims.dimUserUpsert(silver, existing)
+      val existing = Dims.User.build(Dims.User.members(silver.where($"event_name" === "auth_success")))
+      val appended = Dims.User.upsert(Dims.User.members(silver), existing)
       existing.withColumn("is_new", lit(false))
         .unionByName(appended.withColumn("is_new", lit(true)))
         .select($"user_sk", $"user_id", $"anonymous_id", $"is_new")

@@ -32,24 +32,11 @@ import graft.Tables.load
   *    per-lang token totals as the hash anchor.
   *
   * Like the q_gold_* entries, each drained sink is memoized per
-  * (session, sfDir) — the registry functions may be invoked repeatedly
-  * (bench double-runs, PlanSpec sweeps) and the drain is the expensive,
-  * already-side-effect-idempotent part. Temp dirs die with the JVM.
+  * (session, sfDir) ([[DirMemo]]) — the registry functions may be invoked
+  * repeatedly (bench double-runs, PlanSpec sweeps) and the drain is the
+  * expensive, already-side-effect-idempotent part.
   */
 object StreamingParity {
-
-  private val drained =
-    scala.collection.concurrent.TrieMap[(String, String, String), String]()
-
-  private def memo(s: SparkSession, dir: String, op: String)
-                  (drain: String => Unit): String =
-    drained.getOrElseUpdate((s.sparkContext.applicationId, dir, op), {
-      val base = java.nio.file.Files.createTempDirectory(s"graft_$op").toString
-      sys.addShutdownHook(
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)))
-      drain(base)
-      base
-    })
 
   /** Events fixture columns shared by dedup and sessionize. */
   private def eventsFixture(s: SparkSession, dir: String): DataFrame =
@@ -74,7 +61,7 @@ object StreamingParity {
     // the oracle is simply the events table (event_id is unique there;
     // doubled input + broken dedup = doubled rows = row-count FAIL).
     "q_stream_dedup_parity" -> { (s, dir) =>
-      val base = memo(s, dir, "sdedup") { b =>
+      val base = DirMemo(s, dir, "sdedup") { b =>
         val ev = eventsFixture(s, dir)
         ev.write.mode("append").parquet(s"$b/src")
         ev.write.mode("append").parquet(s"$b/src")
@@ -95,7 +82,7 @@ object StreamingParity {
     // batch gaps-and-islands sessionization over the same second-
     // truncated timestamps.
     "q_stream_sessionize_parity" -> { (s, dir) =>
-      val base = memo(s, dir, "ssess") { b =>
+      val base = DirMemo(s, dir, "ssess") { b =>
         val src = s"$b/src"
         val ev = eventsFixture(s, dir).select(col("user_id"), col("ts"), col("event_type"))
         ev.write.mode("append").parquet(src)
@@ -128,7 +115,7 @@ object StreamingParity {
     // admissible and the emitted match set equals the batch interval
     // join exactly — which is what the oracle recomputes.
     "q_stream_join_parity" -> { (s, dir) =>
-      val base = memo(s, dir, "sjoin") { b =>
+      val base = DirMemo(s, dir, "sjoin") { b =>
         eventsFixture(s, dir)
           .where(col("event_type").isin("click", "purchase"))
           .write.mode("append").parquet(s"$b/src")
@@ -151,7 +138,7 @@ object StreamingParity {
     // per-lang token totals and heavy-token counts; the oracle pins the
     // booleans TRUE.
     "q_stream_topk_parity" -> { (s, dir) =>
-      val base = memo(s, dir, "stopk") { b =>
+      val base = DirMemo(s, dir, "stopk") { b =>
         load(s, dir, "documents")
           .select(col("doc_id").cast("long").as("doc_id"), col("text"), col("lang"))
           .write.mode("append").parquet(s"$b/src")
@@ -203,7 +190,7 @@ object StreamingParity {
     // them before aggregation (never in the sink). Oracle: the same dim
     // + join + date_trunc('day') rollup, relationally.
     "q_stream_enrich_parity" -> { (s, dir) =>
-      val base = memo(s, dir, "senrich") { b =>
+      val base = DirMemo(s, dir, "senrich") { b =>
         val ev = eventsFixture(s, dir)
         ev.write.mode("append").parquet(s"$b/src")
         ev.groupBy(col("user_id"))
@@ -242,7 +229,7 @@ object StreamingParity {
     // drive. Oracle: batch gaps-and-islands with the same gap, payload
     // recomputed relationally.
     "q_stream_state_parity" -> { (s, dir) =>
-      val base = memo(s, dir, "sstate") { b =>
+      val base = DirMemo(s, dir, "sstate") { b =>
         val ev = eventsFixture(s, dir).select(
           col("user_id"), col("ts"), col("event_type"), col("event_id"),
           (col("value").cast("decimal(18,4)") * 10000).cast("long").as("value_q"))

@@ -41,13 +41,6 @@ object TextOps {
   private def hashedToks(text: Column): Column =
     array_sort(transform(toks(text), t => xxhash64(t)))
 
-  /** Shared bigram-LM scoring chain (q_bigram_lm + q_ppl_buckets): the
-    * md5 train split, held-out OOV plants, lag-window adjacency,
-    * unigram/bigram train counts, and the integer-bitlen conditional
-    * surprise with Katz-shaped backoff. Returns one UNORDERED row per
-    * doc: (doc_id, n_bigrams, n_backoff, surp_sum, mean_surprise).
-    * See q_bigram_lm's registry comment for the arithmetic contract.
-    */
   /** The documents fixture is ONE parquet row group → ONE scan
     * partition: every narrow tokenize/hash/gram-explode stage would
     * otherwise run on a single core of local[N] until its first
@@ -112,6 +105,13 @@ object TextOps {
     of(df.queryExecution.executedPlan)
   }
 
+  /** Shared bigram-LM scoring chain (q_bigram_lm + q_ppl_buckets): the
+    * md5 train split, held-out OOV plants, lag-window adjacency,
+    * unigram/bigram train counts, and the integer-bitlen conditional
+    * surprise with Katz-shaped backoff. Returns one UNORDERED row per
+    * doc: (doc_id, n_bigrams, n_backoff, surp_sum, mean_surprise).
+    * See q_bigram_lm's registry comment for the arithmetic contract.
+    */
   private def bigramSurprise(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val split1 = substring(md5(concat(lit("graft-split-v1:"), $"doc_id".cast("string"))), 1, 1)
@@ -231,24 +231,6 @@ object TextOps {
       .groupBy($"token").agg(count(lit(1)).as("cnt"))
   }
 
-  /** Batched BPE merge induction (Sennrich et al. 2016, parallelized
-    * per round): per round, count adjacent symbol pairs corpus-wide
-    * ONCE, rank the top-[[BpeCap]] candidates by (count DESC, pair
-    * ASC), keep those that share no symbol — and no concatenated
-    * merge-result symbol — with ANY higher-ranked candidate in the
-    * window (the conservative disjointness rule, expressible as one
-    * NOT EXISTS in the oracle), and commit up to `batch` of them in
-    * rank order via chained codegen'd replaces over the bracket-framed
-    * symbol string — disjoint merges are order-independent, so one
-    * vocab pass applies the whole batch. `batch = 1` degenerates to
-    * classic sequential BPE (rank-1 never has a higher conflict).
-    * Returns the learned merges (rank = global merge index, pc = the
-    * pair's count at its ROUND's start) and the final (token, cnt,
-    * seq) vocabulary frame. Per round: one vocab-cardinality aggregate
-    * + one narrow map; driver data is the ≤Cap-row candidate window
-    * (same bounded pattern as the Lloyd argmax) — sequential rounds
-    * drop ~batch× vs one-merge-per-pass.
-    */
   /** The per-round batch selection rule, shared verbatim by the engine
     * and (as a per-round recursive CTE) the generated oracle: walk the
     * rank-ordered candidate window greedily, selecting a pair iff it
@@ -280,33 +262,44 @@ object TextOps {
     selected.toSeq
   }
 
-  /** One induction per (session, sfDir), persisted to a temp parquet
-    * pair (merges / final vocab) — q_bpe_merges and q_bpe_encode both
-    * need the identical induction, and at 708 merges it is the most
-    * expensive registry computation; parquet (not cached frames)
-    * because the bench unpersists every RDD between queries, which
-    * would sever a memoized localCheckpoint lineage (the GoldE2E
-    * warehouse-memo pattern). Temp dirs die with the JVM.
+  /** One induction per (session, sfDir) ([[DirMemo]]), persisted to a
+    * parquet pair (merges / final vocab) — q_bpe_merges and q_bpe_encode
+    * both need the identical induction, and at 708 merges it is the most
+    * expensive registry computation; parquet (not cached frames) because
+    * the bench unpersists every RDD between queries, which would sever a
+    * memoized localCheckpoint lineage.
     */
-  private val bpeMemo = scala.collection.concurrent.TrieMap[(String, String), String]()
-
   private[graft] def bpeInduceShared(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val base = bpeMemo.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val b = java.nio.file.Files.createTempDirectory("graft_bpe").toString
-      sys.addShutdownHook(
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(b)))
+    val base = DirMemo(s, dir, "bpe") { b =>
       val (merges, vocab) = bpeInduce(s, bpeWords(s, dir), rounds = BpeGateRounds)
       import s.implicits._
       merges.toDF("rank", "a", "b", "pc").coalesce(1)
         .write.mode("overwrite").parquet(s"$b/merges")
       vocab.coalesce(1).write.mode("overwrite").parquet(s"$b/vocab")
-      b
-    })
+    }
     (s.read.parquet(s"$base/merges"), s.read.parquet(s"$base/vocab"))
   }
 
-  /** Incremental batched BPE (VERDICT r10 #3): the corpus-wide pair
+  /** Batched BPE merge induction (Sennrich et al. 2016, parallelized
+    * per round): per round, count adjacent symbol pairs corpus-wide
+    * ONCE, rank the top-[[BpeCap]] candidates by (count DESC, pair
+    * ASC), keep those that share no symbol — and no concatenated
+    * merge-result symbol — with ANY higher-ranked candidate in the
+    * window (the conservative disjointness rule, expressible as one
+    * NOT EXISTS in the oracle), and commit up to `batch` of them in
+    * rank order via chained codegen'd replaces over the bracket-framed
+    * symbol string — disjoint merges are order-independent, so one
+    * vocab pass applies the whole batch. `batch = 1` degenerates to
+    * classic sequential BPE (rank-1 never has a higher conflict).
+    * Returns the learned merges (rank = global merge index, pc = the
+    * pair's count at its ROUND's start) and the final (token, cnt,
+    * seq) vocabulary frame. Per round: one vocab-cardinality aggregate
+    * + one narrow map; driver data is the ≤Cap-row candidate window
+    * (same bounded pattern as the Lloyd argmax) — sequential rounds
+    * drop ~batch× vs one-merge-per-pass.
+    *
+    * Incremental (VERDICT r10 #3): the corpus-wide pair
     * counts are MAINTAINED across rounds instead of re-aggregated from
     * the full vocabulary every round. Only rows containing a committed
     * merge's `[a][b]` pattern change their pair multiset — the

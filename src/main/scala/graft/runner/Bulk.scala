@@ -64,41 +64,29 @@ object Bulk {
     // a 1.9× GC-thrash regression (BENCH_r05 medallion_e2e_1m 92→177 s);
     // pruned columnar re-scans are cheaper than the cache at every scale.
     val silverAll = Warehouse.read(spark, s"$warehouse/user_events_silver$sfx")
+    // dim_recipe's members come from its master (create_dims.py:107-135),
+    // the other dims' from silver
+    def members(d: Dims.Dim): DataFrame =
+      if (d ne Dims.Recipe) d.members(silverAll)
+      else Dims.recipeMasterAttrs(spark.read.parquet(recipeMasterPath.getOrElse {
+        val p = s"$warehouse/recipe_master$sfx.parquet"
+        Dims.writeRecipeMasterFixture(silverAll.select(col("prop_recipe_id").as("recipe_id")), p)
+        p
+      }))
     val dims = stage("dims") {
       // The four dim builds are independent multi-action chains (scans of
-      // pruned silver columns, window/zipWithIndex passes, a master-
+      // pruned silver columns, sort + zipWithIndex passes, a master-
       // fixture write + read-back, four dim writes); build AND write them
       // concurrently so one build's task tail back-fills cores another
       // leaves idle (guide §2.6) — serially this stage was pure
       // round-trip latency stacked end to end.
-      def dim(name: String, df: => DataFrame): () => (String, Long) = () =>
-        name -> written(df, Pin.Rows)(Warehouse.writeDim(_, s"$warehouse/$name$sfx"))("n")
-      Par.all(
-        // dim_user on the scalable SK path: same (user_sk, user_id)
-        // mapping as the window variant, but per-partition-offset
-        // assignment — a bulk user dim is the one dim that can reach
-        // 10⁸ rows at 100 TB
-        dim("dim_user", Dims.dimUserScalable(silverAll)),
-        dim("dim_event", Dims.dimEvent(silverAll)),
-        dim("dim_page", Dims.dimPage(silverAll)),
-        dim("dim_recipe", {
-          val masterPath = recipeMasterPath.getOrElse {
-            val p = s"$warehouse/recipe_master$sfx.parquet"
-            Dims.writeRecipeMasterFixture(
-              silverAll.select(col("prop_recipe_id").as("recipe_id")), p)
-            p
-          }
-          Dims.dimRecipeFromMaster(spark.read.parquet(masterPath))
-        })).toMap
+      Par.all(Dims.All.map(d => () => d.name ->
+        written(d.build(members(d)), Pin.Rows)(Warehouse.writeDim(_, d.path(warehouse, sfx)))("n")): _*)
+        .toMap
     }
 
     val fact = stage("fact") {
-      written(SilverToGold.buildFact(
-          silverAll,
-          Warehouse.read(spark, s"$warehouse/dim_user$sfx"),
-          Warehouse.read(spark, s"$warehouse/dim_recipe$sfx"),
-          Warehouse.read(spark, s"$warehouse/dim_event$sfx"),
-          Warehouse.read(spark, s"$warehouse/dim_page$sfx")),
+      written(SilverToGold.buildFact(silverAll, d => Warehouse.read(spark, d.path(warehouse, sfx))),
         Pin.Rows +: SilverToGold.SkZero: _*)(
         Warehouse.writeFactClustered(_, s"$warehouse/fact_user_events$sfx"))
     }

@@ -65,15 +65,6 @@ object BulkMain {
   }
 }
 
-/** Incremental replay: `runMain graft.runner.ReplayMain <stagingBase>
-  * <warehouse> <startIsoMinute> <ticks|catchup:untilIsoMinute>
-  * [--test-mode]` — EP1, the 15-minute loop
-  * (dags/replay_september_15min_dag.py semantics, in-process). The
-  * `catchup:` form recovers missed ticks: it resumes after the bronze
-  * sink's high-water interval (or seeds from <startIsoMinute> on a fresh
-  * warehouse) and processes every 15-min tick up to the given instant,
-  * in order — the DAG's catchup=True + max_active_runs=1 guarantees.
-  */
 /** The "tick every 15 minutes until stopped" daemon loop, factored so a
   * spec can drive simulated ticks through the exact loop body the daemon
   * runs (clock and sleep are injected; the production main passes wall
@@ -201,6 +192,15 @@ object CompactMain {
   }
 }
 
+/** Incremental replay: `runMain graft.runner.ReplayMain <stagingBase>
+  * <warehouse> <startIsoMinute> <ticks|catchup:untilIsoMinute>
+  * [--test-mode]` — EP1, the 15-minute loop
+  * (dags/replay_september_15min_dag.py semantics, in-process). The
+  * `catchup:` form recovers missed ticks: it resumes after the bronze
+  * sink's high-water interval (or seeds from <startIsoMinute> on a fresh
+  * warehouse) and processes every 15-min tick up to the given instant,
+  * in order — the DAG's catchup=True + max_active_runs=1 guarantees.
+  */
 object ReplayMain {
   def main(args: Array[String]): Unit = {
     val (a, testMode) = RunnerEnv.split(args)

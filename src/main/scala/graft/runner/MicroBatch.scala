@@ -48,10 +48,10 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
   val silverPath = s"$warehouse/user_events_silver$tableSuffix"
   val factPath = s"$warehouse/fact_user_events$tableSuffix"
   val rollupDailyPath = s"$warehouse/agg_daily_events$tableSuffix"
-  val dimUserPath = s"$warehouse/dim_user$tableSuffix"
-  val dimEventPath = s"$warehouse/dim_event$tableSuffix"
-  val dimPagePath = s"$warehouse/dim_page$tableSuffix"
-  val dimRecipePath = s"$warehouse/dim_recipe$tableSuffix"
+  val dimUserPath = pathOf(Dims.User)
+  val dimEventPath = pathOf(Dims.Event)
+  val dimPagePath = pathOf(Dims.Page)
+  val dimRecipePath = pathOf(Dims.Recipe)
 
   private val dateFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd")
   private val batchFmt = DateTimeFormatter.ofPattern("yyyyMMddHHmm")
@@ -69,52 +69,12 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     if (exists(path)) spark.read.schema(schema).parquet(path)
     else spark.createDataFrame(java.util.List.of[Row](), schema)
 
-  /** A persisted dim: its name and sink, the fact join it serves, a batch
-    * row's natural key (in the join's order) and whether the row has one,
-    * the SCD-1 attributes that ride along, and the columns only a bulk
-    * build fills (`filled`).
-    */
-  private case class TickDim(name: String, join: SilverToGold.DimJoin, keys: Seq[Column],
-                             hasKey: Column, attrs: Seq[String] = Nil,
-                             filled: Seq[StructField] = Nil) {
-    val path = s"$warehouse/$name$tableSuffix"
-    val schema = StructType(StructField(join.sk, LongType) +:
-      (join.naturals ++ attrs).map(StructField(_, StringType)))
-    /** The sink's full schema, which every append is written to. */
-    val stored = StructType(schema ++ filled)
-
-    /** A row with a key misses unless its join matched a dim row with
-      * exactly that key, null-safely as [[Dims.dimUpsert]] compares. So
-      * every key the upsert would append is flagged, even where J1 (never
-      * a null `anonymous_id`) or J4 (`("", url)` for `(null, url)`) differ.
-      */
-    val missed = s"__missed_${join.sk}"
-    def missFlag: Column = hasKey && !keys.zip(join.naturals)
-      .map { case (k, n) => k <=> col(join.matched(n)) }.reduce(_ && _)
-
-    /** The keys of the `rows` that missed; with attributes (dim_user),
-      * the latest row of each user that missed.
-      */
-    def candidates(rows: DataFrame): DataFrame =
-      if (attrs.isEmpty)
-        rows.where(col(missed)).select(keys.zip(join.naturals).map { case (k, n) => k.as(n) }: _*)
-      else Dims.latestPerUser(rows)
-        .join(rows.where(col(missed)).select("user_id"), Seq("user_id"), "left_semi")
-  }
-
-  private val tickDims = Seq(
-    TickDim("dim_user", SilverToGold.UserJoin, Seq(col("user_id"), col("anonymous_id")),
-      col("user_id").isNotNull, Dims.UserAttrs),
-    TickDim("dim_event", SilverToGold.EventJoin, Seq(col("event_name")), col("event_name").isNotNull),
-    TickDim("dim_page", SilverToGold.PageJoin, Seq(col("page_name"), col("page_url")),
-      col("page_name").isNotNull || col("page_url").isNotNull),
-    TickDim("dim_recipe", SilverToGold.RecipeJoin, Seq(col("prop_recipe_id").cast("string")),
-      col("prop_recipe_id").isNotNull, filled = Dims.RecipeMasterAttrs))
+  private def pathOf(d: Dims.Dim): String = d.path(warehouse, tableSuffix)
 
   /** `rows` left-joined to the four dims as stored, with miss flags. */
   private def joinStoredDims(rows: DataFrame): DataFrame =
-    tickDims.foldLeft(rows) { (acc, d) =>
-      d.join.leftJoin(acc, readOrEmpty(d.path, d.schema)).withColumn(d.missed, d.missFlag)
+    Dims.All.foldLeft(rows) { (acc, d) =>
+      d.join.leftJoin(acc, readOrEmpty(pathOf(d), d.schema)).withColumn(d.missed, d.missFlag)
         .drop(d.join.naturals.map(d.join.matched): _*)
     }
 
@@ -124,7 +84,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     */
   private def upsertMissed(todo: DataFrame, m: Map[String, Any]): (DataFrame, Map[String, Long]) = {
     // a dim whose sink does not exist yet upserts too, creating the sink
-    val upserts = tickDims.filter(d => m(d.missed) != 0L || !exists(d.path))
+    val upserts = Dims.All.filter(d => m(d.missed) != 0L || !exists(pathOf(d)))
     val appended = Par.all(upserts.map(d => () => d -> upsertDim(d, todo)): _*)
     val rows = appended.collect { case (d, (fresh, n)) if n > 0L => d -> fresh }
       .foldLeft(todo) { case (rows, (d, fresh)) =>
@@ -136,7 +96,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
             .when(sk.isNull, array(added)).otherwise(array(sk, added))))
           .drop(s"__new_${d.join.sk}" +: d.join.naturals.map(d.join.matched): _*)
       }
-      .drop(tickDims.map(_.missed): _*)
+      .drop(Dims.All.map(_.missed): _*)
     (rows, appended.map { case (d, (_, n)) => d.name -> n }.toMap)
   }
 
@@ -146,11 +106,9 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     * older fact partitions stay joinable. An empty append is skipped (the
     * sink stays byte-identical) unless the sink does not exist yet.
     */
-  private def upsertDim(d: TickDim, rows: DataFrame): (DataFrame, Long) = {
-    val (appended, n) = Pin.counted(
-      Dims.dimUpsert(d.candidates(rows), readOrEmpty(d.path, d.schema),
-        d.join.naturals, d.join.sk, d.attrs))
-    if (n > 0L || !exists(d.path)) {
+  private def upsertDim(d: Dims.Dim, rows: DataFrame): (DataFrame, Long) = {
+    val (appended, n) = Pin.counted(d.upsert(d.candidates(rows), readOrEmpty(pathOf(d), d.schema)))
+    if (n > 0L || !exists(pathOf(d))) {
       // Null-filled to the sink's full schema: a bulk-seeded dim_recipe
       // holds the master's attributes, and a narrower appended file could
       // win parquet's single-footer schema inference.
@@ -158,7 +116,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
       appended.select(d.stored.map(f =>
           if (appended.columns.contains(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)): _*)
-        .write.mode("append").parquet(d.path)
+        .write.mode("append").parquet(pathOf(d))
     }
     (appended, n)
   }
@@ -364,7 +322,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
     val heals = silverBatch.columns.contains(Stored)
     def counts(todo: Column): Seq[Column] = count(when(todo, 1)).as("todo") +:
-      tickDims.map(d => count(when(todo && col(d.missed), 1)).as(d.missed))
+      Dims.All.map(d => count(when(todo && col(d.missed), 1)).as(d.missed))
     stage("gold_todo") {
       val (marked, m) = markExisting(joinStoredDims(silverBatch),
         readOrEmpty(factPath, FactIdSchema).where(factFilterOf(factDates)).select("event_id"),
@@ -390,7 +348,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
                          affectedKeys: Seq[(Int, Int, Int)], stage: StageTimer): RunReport = {
     val (todo, m) = todoAndCounts
     val factDates = affectedKeys.map { case (y, m, d) => dateOf(y, m, d) }
-    val missed = tickDims.map(d => d.name -> m(d.missed).asInstanceOf[Long]).toMap
+    val missed = Dims.All.map(d => d.name -> m(d.missed).asInstanceOf[Long]).toMap
 
     // Only rows that still NEED a fact row: a full re-run writes nothing.
     // A row whose fact exists was processed by a completed tick, so its
@@ -523,7 +481,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     val dim = spark.read.parquet(dimRecipePath)
     val attrs = Dims.recipeMasterAttrs(spark.read.parquet(masterPath))
     swapOverwrite(dimRecipePath,
-      Dims.refreshAttributes(dim, attrs, Seq("recipe_id")))
+      Dims.refreshAttributes(dim, attrs, Dims.Recipe.join.naturals))
   }
 
   /** SCD-1 attribute re-sync for the append-only dim_user. Incremental
@@ -539,7 +497,7 @@ class MicroBatch(spark: SparkSession, stagingBase: String, warehouse: String,
     val dim = spark.read.parquet(dimUserPath)
     val attrs = Dims.latestPerUser(spark.read.parquet(silverPath))
     swapOverwrite(dimUserPath,
-      Dims.refreshAttributes(dim, attrs, Seq("user_id", "anonymous_id")))
+      Dims.refreshAttributes(dim, attrs, Dims.User.join.naturals))
   }
 
   /** Scheduled small-file compaction of the append-only event sinks —

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -66,6 +67,39 @@ class CatalogBulkSpec extends SparkSpec {
       dr("cooking_time") =!= master("cooking_time")).count() == 0)
   }
 
+  test("a bulk pass's dims equal a row_number over their naturals, nulls first") {
+    // the reference SK rule, computed here from the pass's own silver (and
+    // dim_recipe's from its master): SKs 1..n in natural-key order,
+    // ascending with nulls first, over one row per key
+    val wh = tmpDir("bulkdims")
+    val events = graft.Tables.load(spark, "/root/testdata/sf0.001", "events")
+    Bulk.run(spark, RefEventsAdapter.toRawJson(events), wh, "2024-01-01")
+    val silver = Warehouse.read(spark, s"$wh/user_events_silver")
+    val master = spark.read.parquet(s"$wh/recipe_master.parquet")
+    def numbered(rows: org.apache.spark.sql.DataFrame, sk: String, naturals: String*) =
+      rows.withColumn(sk, row_number().over(Window.orderBy(naturals.map(asc_nulls_first): _*))
+        .cast("long"))
+    val latest = Window.partitionBy("user_id").orderBy(desc("kst_timestamp"), desc("event_id"))
+    val reference = Map(
+      "dim_user" -> numbered(silver.where($"user_id".isNotNull)
+        .withColumn("rn", row_number().over(latest)).where($"rn" === 1)
+        .select("user_id", "anonymous_id", "user_segment", "cooking_style", "ab_test_group"),
+        "user_sk", "user_id", "anonymous_id"),
+      "dim_event" -> numbered(silver.where($"event_name".isNotNull).select("event_name").distinct(),
+        "event_sk", "event_name"),
+      "dim_page" -> numbered(silver.where($"page_name".isNotNull || $"page_url".isNotNull)
+        .select("page_name", "page_url").distinct(), "page_sk", "page_name", "page_url"),
+      "dim_recipe" -> numbered(master.select($"id".cast("string").as("recipe_id"),
+        $"name".as("recipe_name"), $"dish_type", $"ingredient_type", $"method_type",
+        $"situation_type", $"difficulty", $"cooking_time".cast("int")), "recipe_sk", "recipe_id"))
+    reference.foreach { case (d, ref) =>
+      val built = Warehouse.read(spark, s"$wh/$d")
+      val want = ref.select(built.columns.map(col): _*)
+      assert(built.count() > 0 && built.count() == want.count(), d)
+      assert(built.exceptAll(want).isEmpty && want.exceptAll(built).isEmpty, d)
+    }
+  }
+
   test("co-bucketed join and aggregation plan with zero shuffle exchanges") {
     spark.sql("DROP DATABASE IF EXISTS graft_bucket_db CASCADE")
     spark.sql("CREATE DATABASE graft_bucket_db")
@@ -120,7 +154,7 @@ class CatalogBulkSpec extends SparkSpec {
       (3L, "kimchi_stew", "stew", "meat", "boil", "party", "hard", 60))
       .toDF("id", "name", "dish_type", "ingredient_type", "method_type",
         "situation_type", "difficulty", "cooking_time")
-    val dim = Dims.dimRecipeFromMaster(master)
+    val dim = Dims.Recipe.build(Dims.recipeMasterAttrs(master))
     assert(dim.columns.toSeq == Seq("recipe_sk", "recipe_id", "recipe_name",
       "dish_type", "ingredient_type", "method_type", "situation_type",
       "difficulty", "cooking_time"))

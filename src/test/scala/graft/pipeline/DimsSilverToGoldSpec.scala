@@ -26,8 +26,11 @@ class DimsSilverToGoldSpec extends SparkSpec {
     "kst_timestamp", "page_name", "page_url", "user_segment", "cooking_style",
     "ab_test_group", "prop_recipe_id", "prop_action")
 
+  /** `d`'s full build over `rows`. */
+  private def full(d: Dims.Dim, rows: DataFrame): DataFrame = d.build(d.members(rows))
+
   test("SCD-1 dim_user keeps the latest row per user, SKs dense & unique") {
-    val du = Dims.dimUser(silver())
+    val du = full(Dims.User, silver())
     assert(du.count() == 3)
     // u1's latest event (e2, 11:00) carries segment 'casual'
     assert(du.where($"user_id" === "u1").select("user_segment").head().getString(0) == "casual")
@@ -37,14 +40,14 @@ class DimsSilverToGoldSpec extends SparkSpec {
 
   test("dim upsert: existing SKs preserved, new users continue from high-water mark") {
     val s = silver()
-    val existing = Dims.dimUser(s.where($"user_id" === "u1"))
-    val appended = Dims.dimUserUpsert(s, existing)
+    val existing = full(Dims.User, s.where($"user_id" === "u1"))
+    val appended = Dims.User.upsert(Dims.User.members(s), existing)
     assert(appended.count() == 2) // u2, u3 are new
     val newSks = appended.select("user_sk").as[Long].collect().sorted
     assert(newSks.forall(_ > 1L) && newSks.distinct.length == 2)
     // re-running the upsert with the updated dim adds nothing (idempotent)
     val dimAfter = existing.unionByName(appended)
-    assert(Dims.dimUserUpsert(s, dimAfter).count() == 0)
+    assert(Dims.User.upsert(Dims.User.members(s), dimAfter).count() == 0)
   }
 
   test("dim_user upsert is null-safe: null anonymous_id never re-inserts") {
@@ -53,10 +56,16 @@ class DimsSilverToGoldSpec extends SparkSpec {
         ts("2025-09-15 10:00:00")))
       .toDF("event_id", "user_id", "anonymous_id", "user_segment",
         "cooking_style", "ab_test_group", "kst_timestamp")
-    val existing = Dims.dimUser(s)
+    val existing = full(Dims.User, s)
     assert(existing.count() == 1)
     // plain-equality anti-join would treat ('u1', null) as new forever
-    assert(Dims.dimUserUpsert(s, existing).count() == 0)
+    assert(Dims.User.upsert(Dims.User.members(s), existing).count() == 0)
+  }
+
+  test("latest-per-user plans no aggregate: one row per user is already distinct") {
+    val plan = Dims.latestPerUser(silver()).queryExecution.optimizedPlan
+    val aggregates = plan.collect { case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }
+    assert(aggregates.isEmpty, s"latestPerUser plans an aggregate:\n$plan")
   }
 
   test("dim_time spine: hourly grain, correct weekend flags") {
@@ -70,17 +79,18 @@ class DimsSilverToGoldSpec extends SparkSpec {
     * dim_user lacks u3.
     */
   private def dims(s: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = (
-    Dims.dimUser(s.where($"user_id".isin("u1", "u2"))),
+    full(Dims.User, s.where($"user_id".isin("u1", "u2"))),
     s.where($"prop_recipe_id".isNotNull)
       .select($"prop_recipe_id".cast("string").as("recipe_id")).distinct()
       .withColumn("recipe_sk", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy("recipe_id")).cast("long")),
-    Dims.dimEvent(s), Dims.dimPage(s))
+    full(Dims.Event, s), full(Dims.Page, s))
 
   test("fact build: no fanout, SK-0 defaults on misses, metric expressions") {
     val s = silver()
     val (du, dr, de, dp) = dims(s)
-    val fact = SilverToGold.buildFact(s, du, dr, de, dp).cache()
+    val fact = SilverToGold.buildFact(s,
+      Map(Dims.User -> du, Dims.Recipe -> dr, Dims.Event -> de, Dims.Page -> dp)).cache()
 
     assert(fact.count() == 4) // left joins on unique dim keys never fan out
     // u3 not in dim_user → SK 0

@@ -270,7 +270,10 @@ class ScaleSpec extends SparkSpec {
     assert(scalable.agg(min("sk"), max("sk")).head() ==
       org.apache.spark.sql.Row(1L, n))
     // identical mapping to the global-window variant (SK = sort rank)
-    val window = Dims.dimFromColumns(df, Seq("k"), "sk")
+    val window = df.where($"k".isNotNull).distinct()
+      .withColumn("sk", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy("k")).cast("long"))
+      .select("sk", "k")
     assert(scalable.except(window).count() == 0)
     assert(window.except(scalable).count() == 0)
     // deterministic across runs

@@ -36,6 +36,52 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"), "dim join fell back to a shuffle join")
   }
 
+  test("broadcast-pinned joins hold by hint alone: fact dim joins and the ADC codebook") {
+    // Spark broadcasts a small side by its size whatever the hints say,
+    // so a dropped hint does not move the plans above. In a session this
+    // test owns, with size-based broadcast off, only a hint broadcasts.
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    def joins(df: org.apache.spark.sql.DataFrame): Seq[BaseJoinExec] =
+      (df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case j: BaseJoinExec => j }
+    def names(p: org.apache.spark.sql.execution.SparkPlan): Set[String] = p.output.map(_.name).toSet
+    def broadcastRight(j: BaseJoinExec, joinType: org.apache.spark.sql.catalyst.plans.JoinType) =
+      j match {
+        case b: BroadcastHashJoinExec => b.buildSide == BuildRight && b.joinType == joinType
+        case _ => false
+      }
+
+    // the fact build's four dim joins (DimJoin.leftJoin, as the tick and
+    // Bulk.run plan them) over a pinned silver: each broadcasts its dim
+    val silver = graft.runner.Pin(graft.pipeline.RefEventsAdapter.toSilver(
+      graft.Tables.load(s, sf, "events")))
+    val dims = graft.pipeline.Dims.All.map(d => d -> d.build(d.members(silver))).toMap
+    val factJoins = joins(graft.pipeline.SilverToGold.buildFact(silver, dims))
+    assert(factJoins.size == 4, factJoins.mkString("\n"))
+    graft.pipeline.Dims.All.foreach { d =>
+      val j = factJoins.filter(j => names(j.right).contains(d.join.sk))
+      assert(j.size == 1 && broadcastRight(j.head, LeftOuter),
+        s"${d.name}'s join does not broadcast the dim:\n${j.mkString("\n")}")
+    }
+
+    // q_ann_ivfpq's ADC table: the probes' sub-vectors meet the codebook
+    // (m, cell, cv) on m, the codebook broadcast (once per read of the
+    // ANN frame: the recall contract reads it twice)
+    val ivfpq = graft.SparkEntry.queries("q_ann_ivfpq")(s, sf)
+    val books = joins(ivfpq).filter(j => names(j.right).contains("cv") &&
+      names(j.left).contains("query_id"))
+    assert(books.nonEmpty && books.forall(broadcastRight(_, Inner)),
+      s"q_ann_ivfpq's codebook join does not broadcast the codebook:\n${books.mkString("\n")}")
+  }
+
   test("brute-force ANN broadcasts the query set, never shuffles the corpus") {
     val p = plan("q_ann_topk")
     assert(p.contains("BroadcastNestedLoopJoin BuildRight"))
@@ -89,8 +135,6 @@ class PlanSpec extends SparkSpec {
       "q_scd1_dim_user" -> "SK row_number over dim_user candidates",
       // W2: SKs for THIS BATCH's new keys only, above the high-water mark
       "q_dim_upsert" -> "new-key SK assignment (per-batch cardinality)",
-      // dim builds feeding the fact join (dim-candidate cardinality)
-      "q_fact_build" -> "dim SK assignment over dim candidates",
       // SK assignment when CONSTRUCTING the fixture dim whose attributes
       // the refresh then backfills (dim cardinality; the refresh itself
       // is a key-partitioned join with no window)

@@ -890,8 +890,7 @@ class MicroBatchSpec extends SparkSpec {
       // after the tick builds
       val silver = spark.read.parquet(mb.silverPath).where($"event_id".isin(ids: _*))
       val dim = (p: String) => spark.read.parquet(p)
-      val whole = graft.pipeline.SilverToGold.buildFact(silver, dim(mb.dimUserPath),
-        dim(mb.dimRecipePath), dim(mb.dimEventPath), dim(mb.dimPagePath))
+      val whole = graft.pipeline.SilverToGold.buildFact(silver, d => dim(d.path(wh, "")))
       assert(rows(spark.read.parquet(mb.factPath).where($"event_id".isin(ids: _*))
         .select(keys.map(col): _*)) == rows(whole.select(keys.map(col): _*)), s"tick $min")
     }
