@@ -567,20 +567,20 @@ object Bench {
       profile.write.mode("overwrite").parquet(s"$whDir/prof_plain")
       graft.pipeline.Bucketed.writeBucketed(fact, s"$db.fact_b", "user_id", cpus.toInt)
       graft.pipeline.Bucketed.writeBucketed(profile, s"$db.prof_b", "user_id", cpus.toInt)
-      val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+      // both joins plan in a session of their own (the catalog is
+      // shared), so the shared session's conf is never written
+      val js = graft.streaming.StreamTuning.ownSession(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
       try {
         releaseAll()
         measure("join_shuffle") { time { exec(
-          spark.read.parquet(s"$whDir/fact_plain").join(
-            spark.read.parquet(s"$whDir/prof_plain"), Seq("user_id"))) } }
+          js.read.parquet(s"$whDir/fact_plain").join(
+            js.read.parquet(s"$whDir/prof_plain"), Seq("user_id"))) } }
         measure("join_bucketed") { time { exec(
-          graft.pipeline.Bucketed.bucketJoin(spark,
+          graft.pipeline.Bucketed.bucketJoin(js,
             s"$db.fact_b", s"$db.prof_b", "user_id")) } }
       } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
         spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(whDir))
         releaseAll()

@@ -669,64 +669,109 @@ object TextOps {
       .select(col("doc_a").as("rep_a"), col("doc_b").as("rep_b"), col("jac"))
   }
 
-  /** Distributed connected components over an undirected edge list
-    * (src, dst) by iterative min-label propagation: every node's label
-    * converges to the smallest node id reachable from it. Each round is
-    * one hash join (edges × labels) plus a label-cardinality
-    * pointer-jumping self-join plus one groupBy, all keyed at edge
-    * cardinality — never corpus cardinality. The shortcut step
-    * (label(id) := label(label(id))) makes the round count logarithmic in
-    * the longest chain rather than linear — the same doubling idea as the
-    * alternating large-star/small-star algorithm (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond"), with simpler
-    * bookkeeping because labels here only ever shrink toward the
-    * component minimum. Labels are pinned per round (the iterated plan
-    * would otherwise double in depth each pass); convergence detection
-    * is a metric observed on that pin — the round's aggregation also
-    * counts labels that strictly shrank, so each round runs exactly one
-    * job (the r6 shape ran a separate label-sum action per round on top
-    * of it).
+  /** Rows one task holds for the iterative graph operators: 500k
+    * (long, long) edges ≈ 8 MB. A graph within it runs its whole
+    * iteration inside one task (union-find for [[connectedComponents]],
+    * GraphOps' ten PageRank rounds over arrays); past it, the rows split
+    * into tasks of this size and the iteration runs as distributed
+    * rounds, the only path that holds a graph no task can. The graphs of
+    * every scale factor here are far below it (sf0.1's embedding
+    * near-dup graph, the largest: ~15k edges).
+    */
+  private[queries] val TaskRows = 500000L
+
+  /** Connected components over an undirected edge list (src, dst): every
+    * node is labeled with the smallest node id reachable from it.
+    *
+    * The edges are pinned once (null ends dropped, the count observed)
+    * and split into tasks of at most [[TaskRows]] edges. Each task runs
+    * an array union-find over its edges ([[localComponents]]). With one
+    * task — every dup graph in this repo — its rows are the components.
+    * With more, each task's rows contract its share of the graph to stars
+    * (every node points at its local component minimum), and those
+    * edges, in both directions, feed distributed min-label propagation
+    * ([[labelRounds]]).
     * Returns (id, component) for every node appearing in `edges`.
     */
   private[queries] def connectedComponents(edges: DataFrame): DataFrame = {
-    // both directions in one pass over `edges` (a union runs their
-    // lineage twice); the count is observed on the pin. The null filter
-    // is a constraint the pin keeps (a generator passes none through):
-    // without it the rounds infer null filters that break exchange reuse.
-    val (sym0, nEdges) = Pin.counted(edges.select(inline(array(
-        struct(col("src"), col("dst")), struct(col("dst").as("src"), col("src").as("dst")))))
+    import edges.sparkSession.implicits._
+    val (pinned, nEdges) = Pin.counted(edges.select(col("src"), col("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull))
-    // Size the round frames' partitioning by edge count: after the
-    // exact-dedup collapse a dup graph is usually tiny, and at 32
-    // partitions every round pays ~32 near-empty tasks per stage — pure
-    // scheduler latency that dominated q_dup_clusters (r6: CC ≈ 4.6 s of
-    // a 7.5 s query on a 1.5k-node graph). 500k (long,long) rows ≈ 8 MB
-    // per task; graphs past parallelism × that keep the session's
-    // partitioning unchanged. A coalesce to 1 also spares the init's
-    // groupBy an exchange.
     val parts = math.max(1L, math.min(
-      numPartitions(sym0).toLong, nEdges / 500000L + 1)).toInt
-    val sym = sym0.coalesce(parts)
+      numPartitions(pinned).toLong, nEdges / TaskRows + 1)).toInt
+    val local = pinned.coalesce(parts).as[(Long, Long)]
+      .mapPartitions(localComponents).toDF("id", "component")
+    if (parts == 1) Pin(local)
+    else labelRounds(Pin(local.select(inline(array(
+      struct(col("id").as("src"), col("component").as("dst")),
+      struct(col("component").as("src"), col("id").as("dst")))))), parts)
+  }
+
+  /** Union-find over one task's edges: the task's distinct ids sorted in
+    * a primitive array (an id's index is its rank, found by binary
+    * search), an `Int` parent array, union by the smaller root and path
+    * halving, so every root is its component's minimum id. Emits
+    * (id, component) for each distinct id.
+    */
+  private def localComponents(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var ends = new Array[Long](1024)
+    var n = 0
+    edges.foreach { case (a, b) =>
+      if (n + 2 > ends.length) ends = java.util.Arrays.copyOf(ends, ends.length * 2)
+      ends(n) = a; ends(n + 1) = b; n += 2
+    }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    java.util.Arrays.sort(ids)
+    var m = 0
+    for (i <- 0 until n) if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+    val parent = Array.range(0, m)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def at(id: Long) = java.util.Arrays.binarySearch(ids, 0, m, id)
+    for (i <- 0 until n by 2) {
+      val (ra, rb) = (find(at(ends(i))), find(at(ends(i + 1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Iterator.range(0, m).map(i => (ids(i), ids(find(i))))
+  }
+
+  /** Distributed min-label propagation over a symmetric edge list
+    * (src, dst) split into `parts` tasks. Each round is one hash join
+    * (edges × labels) plus a label-cardinality pointer-jumping self-join
+    * plus one groupBy, all keyed at edge cardinality — never corpus
+    * cardinality. The shortcut step (label(id) := label(label(id)))
+    * makes the round count logarithmic in the longest chain rather than
+    * linear — the same doubling idea as the alternating
+    * large-star/small-star algorithm (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond"), with simpler bookkeeping
+    * because labels here only ever shrink toward the component minimum.
+    * Labels are pinned per round (the iterated plan would otherwise
+    * double in depth each pass); convergence is a metric observed on
+    * that pin — the round's aggregation also counts labels that strictly
+    * shrank, so each round runs exactly one job.
+    */
+  private def labelRounds(sym: DataFrame, parts: Int): DataFrame = {
     // Init fuses the first propagation round into the node-dedup shuffle
     // the init pays anyway: label(id) = min(id, min direct neighbor) —
-    // exactly what round 1 over identity labels would produce, one full
-    // round (join + checkpoint + convergence roundtrip) cheaper. Node
+    // exactly what round 1 over identity labels would produce. Node
     // count (fixed across rounds) is observed on the init pin.
     val (init, nNodes) = Pin.counted(sym.groupBy(col("src").as("id"))
       .agg(min(least(col("src"), col("dst"))).as("component"))
       .coalesce(parts))
     var labels = init
-    // When the dup graph is small enough (≪ executor memory — 1M
+    // When the label graph is small enough (≪ executor memory — 1M
     // (long,long) rows ≈ 16 MB), hint the label side broadcast so every
-    // round's join is map-side over the checkpointed edges: one shuffle
-    // per round (the groupBy) instead of three. Larger graphs keep the
+    // round's join is map-side over the pinned edges: one shuffle per
+    // round (the groupBy) instead of three. Larger graphs keep the
     // shuffled join — same plan shape, no driver risk.
     val broadcastLabels = nNodes <= 1000000
-    // One fused join per round: the static propagation edges plus the
-    // current label graph's pointer-jump edges (component(id) → id, so
-    // id inherits component(component(id)) — the doubling shortcut that
-    // makes the round count O(log chain) instead of O(chain); sf0.1's
-    // ~40-deep chains converge in 6 rounds instead of ~45). Messages
+    // One join per round: the static propagation edges plus the current
+    // label graph's pointer-jump edges (component(id) → id, so id
+    // inherits component(component(id)) — the doubling shortcut that
+    // makes the round count O(log chain) instead of O(chain)). Messages
     // along both edge kinds resolve through the SAME labels join. Each
     // id's incumbent label rides tagged through the groupBy so the round
     // emits both the new label (min over incumbent + messages — labels
@@ -745,28 +790,12 @@ object TextOps {
         .agg(min(col("component")).as("component"),
           min(when(col("is_prev"), col("component"))).as("prev"))
     }
-    val labelCols = Seq(col("id"), col("component"))
-    // Tiny graphs (the post-exact-dedup regime these queries live in)
-    // FUSE two propagation rounds per materialized job (r17): round A
-    // stays lazy inside round B's plan, halving the checkpoint-job count
-    // the loop pays — the dominant cost when each round's data fits one
-    // task. The lazy A subplan is referenced three times by B (pointer-
-    // jump edges, label join side, incumbent union), so the fusion
-    // triples A's in-job work — free at the gated size, a tax at scale,
-    // hence the edge-count gate (same 500k constant as the partition
-    // sizing above). Convergence is still exact: labels only ever
-    // shrink, rounds are idempotent at the fixpoint, and `changed`
-    // counts round B's strict shrinks — a pair whose A changed but B
-    // didn't has already converged, and a converged extra A-round emits
-    // the identical labels.
-    val fuseRounds = nEdges <= 500000L
     var changed = -1L
     while (changed != 0L) {
-      val base = if (fuseRounds) propagate(labels).select(labelCols: _*) else labels
-      val (next, m) = Pin.observed(propagate(base).coalesce(parts),
+      val (next, m) = Pin.observed(propagate(labels).coalesce(parts),
         coalesce(sum(when(col("component") < col("prev"), 1L).otherwise(0L)), lit(0L))
           .as("changed"))
-      labels = next.select(labelCols: _*)
+      labels = next.select(col("id"), col("component"))
       changed = m("changed").asInstanceOf[Long]
     }
     labels

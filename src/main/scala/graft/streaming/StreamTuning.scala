@@ -34,10 +34,17 @@ object StreamTuning {
     * so the override never touches the caller's session, where other
     * threads may be planning.
     */
-  def stateSession(spark: SparkSession): SparkSession = {
+  def stateSession(spark: SparkSession): SparkSession =
+    ownSession(spark, "spark.sql.shuffle.partitions" -> statePartitions(spark).toString)
+
+  /** A new session carrying the caller's modifiable settings plus
+    * `settings`; it shares the caller's catalog, and planning in it
+    * never writes the caller's conf.
+    */
+  def ownSession(spark: SparkSession, settings: (String, String)*): SparkSession = {
     val s = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) => if (s.conf.isModifiable(k)) s.conf.set(k, v) }
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions(spark).toString)
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
 }

@@ -363,14 +363,18 @@ class PlanSpec extends SparkSpec {
     val builds = Map(
       // the groups pin, the over-cap bucket aggregate, the edge pin
       // (candidates once each: no pair-dedup shuffle, no over-cap
-      // anti-join, one pass for both edge directions), initial labels
-      // and the fused label-propagation rounds, each joining the
-      // broadcast labels to the pinned edges
-      "q_dup_clusters" -> (27, 19),
-      // the graph pin (3 shuffles), then one page-keyed shuffle per
-      // round (10), each counted in the final and the initial plan, and
-      // the returned frame's sort
-      "q_pagerank" -> (27, 0),
+      // anti-join), the union-find pin (no exchange: the graph fits one
+      // task), the member assignment pin and the returned frame. (27, 19)
+      // → (11, 7) when the components moved into one task: the initial
+      // labels' groupBy and the label rounds (each a groupBy shuffle and
+      // a broadcast of the labels) left the build
+      "q_dup_clusters" -> (11, 7),
+      // the graph pin (3 shuffles, each counted in the final and the
+      // initial plan); the ten rounds and the sort run in the one task
+      // the pin is coalesced to. (27, 0) → (6, 0): the ten page-keyed
+      // round shuffles (counted twice each) and the returned frame's
+      // range-partitioning sort exchange left the build
+      "q_pagerank" -> (6, 0),
       // the corpus and query-set pins (no exchange), the two coarse
       // Lloyd passes, the pinned corpus assignment and training
       // residuals, the two PQ Lloyd passes (their means and codebook
@@ -533,7 +537,8 @@ class PlanSpec extends SparkSpec {
       }
       q -> run.plans.size
     }.toMap
-    // q_pagerank pins its graph and each of its ten rounds
-    assert(plansSeen("q_pagerank") >= 11, s"q_pagerank's pins were not seen: ${plansSeen("q_pagerank")}")
+    // q_ann_ivfpq pins its corpus and query set, its two coarse and two
+    // PQ Lloyd passes, the corpus assignment and the training residuals
+    assert(plansSeen("q_ann_ivfpq") >= 8, s"q_ann_ivfpq's pins were not seen: ${plansSeen("q_ann_ivfpq")}")
   }
 }

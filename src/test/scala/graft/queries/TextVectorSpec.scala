@@ -64,6 +64,16 @@ class TextVectorSpec extends SparkSpec {
     // empty edge list converges immediately to an empty labeling
     assert(TextOps.connectedComponents(
       Seq.empty[(Long, Long)].toDF("src", "dst")).isEmpty)
+    // edge inputs: a self-loop is a component of its own, a duplicate
+    // edge changes nothing, and an edge with a null end is dropped
+    // (its other end appears only if another edge names it)
+    val odd = Seq((Some(7L), Some(7L)), (Some(1L), Some(2L)), (Some(1L), Some(2L)),
+      (Some(2L), None), (None, Some(300L)), (Some(3L), Some(2L))).toDF("src", "dst")
+    val (oddGot, run) = graft.runner.TickProbe.during(spark)(
+      TextOps.connectedComponents(odd).as[(Long, Long)].collect().toMap)
+    assert(oddGot == Map(7L -> 7L, 1L -> 1L, 2L -> 1L, 3L -> 1L))
+    // a graph within one task takes no label round: no plan joins
+    assert(!run.plans.exists(_.contains("Join")), run.plans.mkString("\n"))
   }
 
   test("connected components at scale: 50k-edge random graph matches union-find") {
@@ -106,6 +116,60 @@ class TextVectorSpec extends SparkSpec {
     }
   }
 
+
+  test("connected components past one task: contracted stars, then label rounds") {
+    // 620k nodes over four range partitions: a chain broken after every
+    // 1000th id into segments, plus a chord from every 200th id to a
+    // pseudo-random node; segments whose index is a multiple of 5 take
+    // no chord, so they stay components of their own. ~621k edges are
+    // past TaskRows, so the edges split into two union-find tasks whose
+    // stars the label rounds join up.
+    val nNodes = 620000L
+    val ids = spark.range(0L, nNodes, 1L, 4)
+    def seg(c: org.apache.spark.sql.Column) = floor(c / 1000) % 5
+    val chain = ids.where($"id" % 1000 =!= 999 && $"id" < nNodes - 1)
+      .select($"id".as("src"), ($"id" + 1).as("dst"))
+    val chords = ids.where($"id" % 200 === 0)
+      .select($"id".as("src"), pmod(xxhash64($"id"), lit(nNodes)).as("dst"))
+      .where(seg($"src") =!= 0 && seg($"dst") =!= 0)
+    val edges = chain.unionByName(chords)
+    val edgeRows = edges.as[(Long, Long)].collect()
+    assert(edgeRows.length > TextOps.TaskRows)
+    // driver-side union-find: the root of a component is its minimum
+    val parent = Array.tabulate(nNodes.toInt)(identity)
+    def find(x: Int): Int = { var r = x; while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }; r }
+    edgeRows.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val (got, run) = graft.runner.TickProbe.during(spark)(
+      TextOps.connectedComponents(edges).as[(Long, Long)].collect())
+    assert(got.length == nNodes)
+    got.foreach { case (n, c) =>
+      assert(c == find(n.toInt), s"node $n: got $c, union-find says ${find(n.toInt)}")
+    }
+    assert(got.map(_._2).distinct.length > 1)
+    // the union-find ran per task, and label rounds joined its stars
+    assert(run.plans.exists(_.contains("MapPartitions")), run.plans.mkString("\n"))
+    assert(run.plans.count(_.contains("BroadcastHashJoin")) >= 1, run.plans.mkString("\n"))
+    run.plans.foreach { p =>
+      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
+    }
+  }
+
+  /** Spark jobs of each dup-cluster query at sf0.001, collected: the
+    * graph build and its pins, one union-find pin, the member expansion.
+    */
+  private val DupClusterJobBudgets = Map("q_dup_clusters" -> 21, "q_embed_dup_clusters" -> 14)
+
+  test("dup clusters: components in one task, within their job budgets") {
+    DupClusterJobBudgets.foreach { case (q, budget) =>
+      val (rows, p) = graft.runner.TickProbe.during(spark)(
+        graft.SparkEntry.queries(q)(spark, sf).collect())
+      assert(rows.nonEmpty)
+      assert(p.jobs <= budget, s"$q ran ${p.jobs} jobs:\n" + p.trail.mkString("\n"))
+    }
+  }
 
   test("minhash verify/expansion broadcasts are count-gated with an equi-join fallback") {
     // Production corpora where set-cardinality ≈ corpus cardinality must
