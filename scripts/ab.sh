@@ -3,11 +3,13 @@
 #
 #   scripts/ab.sh <rev> <workload> [pairs] [seconds]
 #
-# Exports <rev> with `git archive` into a scratch directory ("base")
-# and runs `python3 perfbench/run.py --trace 0` from that tree and from
-# this working tree ("head"), pair by pair with the same seed, alternating
-# which side runs first. Each tree builds itself on its first run, outside
-# the timed region. Prints each side's median and quartiles for every
+# Exports <rev> with `git archive` into a scratch directory ("base") and
+# copies this working tree (tracked files plus untracked files that are
+# not ignored) into another ("head"), so neither side starts with the
+# checkout's build outputs or earlier run artifacts. Runs
+# `python3 perfbench/run.py --trace 0` from both trees, pair by pair with
+# the same seed, alternating which side runs first. Each tree builds
+# itself on its first run, outside the timed region. Prints each side's median and quartiles for every
 # end-to-end metric of BENCHMARK.json and the pairs head won; a gain is
 # claimed only when head wins at least nine tenths of the pairs (ties
 # count for neither) and the medians differ by more than the distance
@@ -30,15 +32,19 @@ if [ $# -lt 2 ]; then
 fi
 rev=$1 workload=$2 pairs=${3:-10} seconds=${4:-5}
 seed0=${AB_SEED:-1}
-head=$(git rev-parse --show-toplevel)
+repo=$(git rev-parse --show-toplevel)
 scratch=${AB_SCRATCH:-$(mktemp -d)}
 base=$scratch/base
+head=$scratch/head
 out=$scratch/ab.jsonl
 mkdir -p "$scratch"
 : > "$out"
 
-mkdir -p "$base"
-git -C "$head" archive "$rev" | tar -x -C "$base"
+mkdir -p "$base" "$head"
+git -C "$repo" archive "$rev" | tar -x -C "$base"
+# a tracked file deleted in the working tree is listed but absent: skip it
+(cd "$repo" && git ls-files -z --cached --others --exclude-standard |
+  tar --null --files-from=- --ignore-failed-read -cf - 2>/dev/null) | tar -x -C "$head"
 
 for i in $(seq 0 $((pairs - 1))); do
   seed=$((seed0 + i))
@@ -58,7 +64,7 @@ for i in $(seq 0 $((pairs - 1))); do
   done
 done
 
-python3 - "$out" "$head/BENCHMARK.json" "$rev" "$workload" <<'EOF'
+python3 - "$out" "$repo/BENCHMARK.json" "$rev" "$workload" <<'EOF'
 import json, statistics, sys
 
 runs = [json.loads(l) for l in open(sys.argv[1]) if l.strip()]

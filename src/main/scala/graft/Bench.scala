@@ -73,22 +73,114 @@ object Bench {
       (if (f.length > 7) f(7) else 0L, f.take(8).sum)
     } catch { case _: Exception => (0L, 0L) }
 
+  /** The shared tick fixture: `dir`'s FIRST event day replicated `rep`×
+    * with distinct event_ids (a real 15-minute batch holds minutes of
+    * events, not a month — one day touches 1-2 partitions like
+    * production). Replica index `rep` rides along so callers can carve
+    * ticks out of the replica range.
+    */
+  def tickDay(spark: SparkSession, dir: String, rep: Int = 16): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val events0 = Tables.load(spark, dir, "events")
+    val day0 = events0.select(min(to_date(col("ts")))).head().getDate(0)
+    events0.where(to_date(col("ts")) === lit(day0))
+      .crossJoin(spark.range(rep).select(col("id").as("rep")))
+      .withColumn("event_id", col("event_id") * rep + col("rep"))
+  }
+
+  /** Continuous silver→gold composition: the gold stage
+    * ALONE — foreachBatch dim upserts + fact anti-join append + the
+    * maintained daily rollup — timed on its second AvailableNow drain,
+    * with bronze/silver pre-drained untimed so the number isolates what a
+    * deployed streaming gold job pays per micro-batch. The tick is
+    * [[tickDay]] with `rep` replicas (16 = the bench entry's tick, 160 =
+    * BenchScale's 10× tick), half per drain; the second half's event
+    * times advance one day past the first's, beyond the persisted
+    * watermark. Parity with the batch tick's output is MicroBatchSpec-
+    * pinned ("streaming gold twin maintains the identical fact AND
+    * rollup"). Returns (seconds, facts the timed drain appended, its
+    * report).
+    */
+  def streamingGoldDrain(spark: SparkSession, dir: String,
+                         rep: Int): (Double, Long, graft.runner.RunReport) = {
+    import org.apache.spark.sql.functions._
+    val staging = java.nio.file.Files.createTempDirectory("graft_bench_sgst").toString
+    val wh = java.nio.file.Files.createTempDirectory("graft_bench_sgwh").toString
+    val day = tickDay(spark, dir, rep)
+    def stage(df: DataFrame, sub: String): Unit =
+      graft.pipeline.RefEventsAdapter.toRawJson(df).write.text(s"$staging/$sub")
+    def drainIngest(): Unit = {
+      graft.streaming.StreamingIngest.runBronze(spark, s"$staging/*/part-*",
+        s"$wh/bronze", s"$wh/ckpt_b", "2025-09-15")
+      graft.streaming.StreamingIngest.runSilver(spark, s"$wh/bronze",
+        s"$wh/silver", s"$wh/ckpt_s")
+    }
+    def drainGold(): graft.runner.RunReport =
+      graft.streaming.StreamingIngest.runGold(spark, s"$wh/silver", wh,
+        s"$wh/ckpt_g", maintainRollup = true)
+    stage(day.where(col("rep") < rep / 2).drop("rep"), "b1")
+    drainIngest(); drainGold() // untimed seed
+    val factBefore = spark.read.parquet(s"$wh/fact_user_events").count()
+    stage(day.where(col("rep") >= rep / 2).drop("rep")
+      .withColumn("ts", col("ts") + expr("INTERVAL 1 DAY")), "b2")
+    drainIngest() // untimed: isolate the gold stage
+    val t0 = System.nanoTime()
+    val report = drainGold()
+    val t = (System.nanoTime() - t0) / 1e9
+    val appended = spark.read.parquet(s"$wh/fact_user_events").count() - factBefore
+    require(appended > 0, "streaming_gold drained nothing")
+    require(spark.read.parquet(s"$wh/agg_daily_events").count() > 0,
+      "streaming_gold maintained no rollup")
+    Seq(staging, wh).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    (t, appended, report)
+  }
+
+  /** Watermarked stream-stream interval join (StreamJoin) over `dir`'s
+    * clicks and purchases: one seeded AvailableNow drain untimed (creates
+    * checkpoints + join state), then the timed SECOND drain — the
+    * steady-state increment a deployment pays per tick, including
+    * state-store maintenance and watermark-driven eviction. Batch 2 is
+    * the same rows with fresh ids, shifted 1000 days: past the persisted
+    * watermark and past a 10× replica set's 400-day span, so its clicks
+    * and purchases match each other. Returns (seconds, joined rows
+    * appended).
+    */
+  def streamJoinDrain(spark: SparkSession, dir: String): (Double, Long) = {
+    import org.apache.spark.sql.functions._
+    val base = java.nio.file.Files.createTempDirectory("graft_bench_sj").toString
+    val eventsDir = s"$base/events"
+    val ev = Tables.load(spark, dir, "events")
+      .where(col("event_type").isin("click", "purchase"))
+      .select(col("event_id").cast("long").as("event_id"),
+        col("ts").cast("timestamp").as("ts"),
+        col("user_id").cast("long").as("user_id"),
+        col("event_type"), col("value").cast("double").as("value"))
+    ev.write.mode("append").parquet(eventsDir)
+    graft.streaming.StreamJoin.run(spark, eventsDir, s"$base/out", s"$base/ckpt")
+    val before = spark.read.parquet(s"$base/out").count()
+    ev.withColumn("ts", col("ts") + expr("INTERVAL 1000 DAYS"))
+      .withColumn("event_id", col("event_id") + lit(8000000000L))
+      .write.mode("append").parquet(eventsDir)
+    val t0 = System.nanoTime()
+    graft.streaming.StreamJoin.run(spark, eventsDir, s"$base/out", s"$base/ckpt")
+    val t = (System.nanoTime() - t0) / 1e9
+    val appended = spark.read.parquet(s"$base/out").count() - before
+    require(appended > 0, "stream_join drained nothing")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
+    (t, appended)
+  }
+
   def main(args: Array[String]): Unit = {
     val wallT0 = System.nanoTime()
     val loadStart = loadavg()
     val (steal0, jiffies0) = cpuJiffies()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = runner.RunnerSession.cpus
     // local-iteration filter: bench only these entries
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = runner.RunnerSession.build("graft.Bench")
     // Two KNOWN-benign warning floods would otherwise bury real signals in
     // the bench tail the driver captures: WindowExec's single-partition
     // warning (every hit is a documented bounded-cardinality dim/new-key
@@ -183,21 +275,6 @@ object Bench {
       t
     }
 
-    // Shared tick fixture: the sf's FIRST event day replicated 16× with
-    // distinct event_ids (a real 15-minute batch holds minutes of events,
-    // not a month — one day touches 1-2 partitions like production).
-    // Replica index `rep` rides along so callers can carve ticks out of
-    // the replica range.
-    def tickDay(dir: String = sfDir): DataFrame = {
-      import org.apache.spark.sql.functions._
-      val events0 = Tables.load(spark, dir, "events")
-      val day0 = events0.select(min(to_date(col("ts")))).head().getDate(0)
-      val rep = 16
-      events0.where(to_date(col("ts")) === lit(day0))
-        .crossJoin(spark.range(rep).select(col("id").as("rep")))
-        .withColumn("event_id", col("event_id") * rep + col("rep"))
-    }
-
     def stageInterval(staging: String, raw: DataFrame,
                       t: java.time.LocalDateTime): Unit = {
       val dir = graft.pipeline.StagingToBronze.stagingPathFor(staging, t)
@@ -231,7 +308,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       val staging = java.nio.file.Files.createTempDirectory("graft_bench_stg").toString
       val wh = java.nio.file.Files.createTempDirectory("graft_bench_tick_wh").toString
-      val day = tickDay(dir)
+      val day = tickDay(spark, dir)
       val t0 = java.time.LocalDateTime.of(2025, 9, 15, 10, 0)
       // tick 1: replicas [0, 8). tick 2: all-new [8, 16), or — redelivered
       // variant — [4, 12): four replicas re-staged byte-identical plus
@@ -365,7 +442,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       val staging = java.nio.file.Files.createTempDirectory("graft_bench_sstg").toString
       val wh = java.nio.file.Files.createTempDirectory("graft_bench_swh").toString
-      val day = tickDay()
+      val day = tickDay(spark, sfDir)
       def stage(df: DataFrame, sub: String): Unit =
         graft.pipeline.RefEventsAdapter.toRawJson(df).write.text(s"$staging/$sub")
       def drain(timed: graft.runner.StageTimer): Unit = {
@@ -402,48 +479,12 @@ object Bench {
     }
     measure("streaming_tick") { streamingTick() }
 
-    // Continuous silver→gold composition (VERDICT r8 #6): the gold stage
-    // ALONE — foreachBatch dim upserts + fact anti-join append + the
-    // maintained daily rollup — timed on its second AvailableNow drain,
-    // with bronze/silver pre-drained untimed so the number isolates what
-    // a deployed streaming gold job pays per micro-batch. Parity with
-    // the batch tick's output is MicroBatchSpec-pinned ("streaming gold
-    // twin maintains the identical fact AND rollup").
-    def streamingGold(): Double = {
-      import org.apache.spark.sql.functions._
-      val staging = java.nio.file.Files.createTempDirectory("graft_bench_sgst").toString
-      val wh = java.nio.file.Files.createTempDirectory("graft_bench_sgwh").toString
-      val day = tickDay()
-      def stage(df: DataFrame, sub: String): Unit =
-        graft.pipeline.RefEventsAdapter.toRawJson(df).write.text(s"$staging/$sub")
-      def drainIngest(): Unit = {
-        graft.streaming.StreamingIngest.runBronze(spark, s"$staging/*/part-*",
-          s"$wh/bronze", s"$wh/ckpt_b", "2025-09-15")
-        graft.streaming.StreamingIngest.runSilver(spark, s"$wh/bronze",
-          s"$wh/silver", s"$wh/ckpt_s")
-      }
-      def drainGold(): graft.runner.RunReport =
-        graft.streaming.StreamingIngest.runGold(spark, s"$wh/silver", wh,
-          s"$wh/ckpt_g", maintainRollup = true)
-      stage(day.where(col("rep") < 8).drop("rep"), "b1")
-      drainIngest(); drainGold() // untimed seed
-      val factBefore = spark.read.parquet(s"$wh/fact_user_events").count()
-      stage(day.where(col("rep") >= 8).drop("rep")
-        .withColumn("ts", col("ts") + expr("INTERVAL 1 DAY")), "b2")
-      drainIngest() // untimed: isolate the gold stage
-      var report = graft.runner.RunReport()
-      val t = time { report = drainGold() }
+    measure("streaming_gold") {
+      val (t, _, report) = streamingGoldDrain(spark, sfDir, rep = 16)
       recordStages("streaming_gold", report.stages)
-      require(spark.read.parquet(s"$wh/fact_user_events").count() > factBefore,
-        "bench streaming_gold drained nothing")
-      require(spark.read.parquet(s"$wh/agg_daily_events").count() > 0,
-        "bench streaming_gold maintained no rollup")
-      Seq(staging, wh).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
       releaseAll()
       t
     }
-    measure("streaming_gold") { streamingGold() }
 
     // Scheduled small-file compaction (CompactMain's in-process body):
     // build a 2-tick warehouse, then time ONLY compactSinks — the
@@ -458,7 +499,7 @@ object Bench {
       import org.apache.spark.sql.functions._
       val staging = java.nio.file.Files.createTempDirectory("graft_bench_cstg").toString
       val wh = java.nio.file.Files.createTempDirectory("graft_bench_cwh").toString
-      val day = tickDay()
+      val day = tickDay(spark, sfDir)
       val t0 = java.time.LocalDateTime.of(2025, 9, 15, 10, 0)
       val tick2 = day.where(col("rep") >= 8).drop("rep")
       stageInterval(staging, graft.pipeline.RefEventsAdapter.toRawJson(
@@ -507,39 +548,7 @@ object Bench {
     }
     measure("compact_sinks") { compactBench() }
 
-    // Watermarked stream-stream interval join (StreamJoin): drain one
-    // seeded batch untimed (creates checkpoints + join state), then
-    // time the SECOND AvailableNow drain — the steady-state increment a
-    // deployment pays per tick, including state-store maintenance and
-    // watermark-driven eviction.
-    def streamJoinBench(): Double = {
-      import org.apache.spark.sql.functions._
-      val base = java.nio.file.Files.createTempDirectory("graft_bench_sj").toString
-      val eventsDir = s"$base/events"
-      val ev = Tables.load(spark, sfDir, "events")
-        .where(col("event_type").isin("click", "purchase"))
-        .select(col("event_id").cast("long").as("event_id"),
-          col("ts").cast("timestamp").as("ts"),
-          col("user_id").cast("long").as("user_id"),
-          col("event_type"), col("value").cast("double").as("value"))
-      ev.write.mode("append").parquet(eventsDir)
-      graft.streaming.StreamJoin.run(spark, eventsDir, s"$base/out", s"$base/ckpt")
-      val before = spark.read.parquet(s"$base/out").count()
-      // batch 2: one day later (safely past the persisted watermark),
-      // fresh ids — its clicks and purchases must match each other
-      ev.withColumn("ts", col("ts") + expr("INTERVAL 1 DAY"))
-        .withColumn("event_id", col("event_id") + lit(1000000000L))
-        .write.mode("append").parquet(eventsDir)
-      val t = time {
-        graft.streaming.StreamJoin.run(spark, eventsDir, s"$base/out", s"$base/ckpt")
-      }
-      require(spark.read.parquet(s"$base/out").count() > before,
-        "bench stream_join drained nothing")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      releaseAll()
-      t
-    }
-    measure("stream_join") { streamJoinBench() }
+    measure("stream_join") { val t = streamJoinDrain(spark, sfDir)._1; releaseAll(); t }
 
     // Co-bucketed vs shuffle join on identical data: the same fact ×
     // per-user-profile equi-join read once from plain parquet (both
@@ -565,8 +574,8 @@ object Bench {
           sum(col("value")).as("total"))
       fact.write.mode("overwrite").parquet(s"$whDir/fact_plain")
       profile.write.mode("overwrite").parquet(s"$whDir/prof_plain")
-      graft.pipeline.Bucketed.writeBucketed(fact, s"$db.fact_b", "user_id", cpus.toInt)
-      graft.pipeline.Bucketed.writeBucketed(profile, s"$db.prof_b", "user_id", cpus.toInt)
+      graft.pipeline.Bucketed.writeBucketed(fact, s"$db.fact_b", "user_id", cpus)
+      graft.pipeline.Bucketed.writeBucketed(profile, s"$db.prof_b", "user_id", cpus)
       // both joins plan in a session of their own (the catalog is
       // shared), so the shared session's conf is never written
       val js = graft.streaming.StreamTuning.ownSession(spark,
@@ -681,7 +690,7 @@ object Bench {
     val loadEnd = loadavg()
     val (steal1, jiffies1) = cpuJiffies()
     val stealShare = (steal1 - steal0).toDouble / math.max(1L, jiffies1 - jiffies0)
-    val isContended = contended(loadStart, loadEnd, cpus.toInt, stealShare)
+    val isContended = contended(loadStart, loadEnd, cpus, stealShare)
     val headline = total(results.values.map(_.median))
     val wall = (System.nanoTime() - wallT0) / 1e9
     def fmtMap(m: Iterable[(String, String)]): String =

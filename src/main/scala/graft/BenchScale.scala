@@ -137,90 +137,10 @@ object BenchScale {
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
   }
 
-  /** Steady-state stream-stream interval-join drain (the Bench
-    * `stream_join` entry's twin, parameterized by tier dir): one
-    * seeded AvailableNow drain untimed, then the timed second drain
-    * over the tier's full click/purchase set. Batch 2 shifts 1000 days
-    * — past the 10× tier's 400-day replica span AND the persisted
-    * watermark, for both tiers. Returns (sec, joined rows appended).
-    */
-  private def streamJoinTier(spark: SparkSession, dir: String): (Double, Long) = {
-    val base = java.nio.file.Files.createTempDirectory("graft_scale_sj").toString
-    val eventsDir = s"$base/events"
-    val ev = Tables.load(spark, dir, "events")
-      .where(col("event_type").isin("click", "purchase"))
-      .select(col("event_id").cast("long").as("event_id"),
-        col("ts").cast("timestamp").as("ts"),
-        col("user_id").cast("long").as("user_id"),
-        col("event_type"), col("value").cast("double").as("value"))
-    ev.write.mode("append").parquet(eventsDir)
-    graft.streaming.StreamJoin.run(spark, eventsDir, s"$base/out", s"$base/ckpt")
-    val before = spark.read.parquet(s"$base/out").count()
-    ev.withColumn("ts", col("ts") + expr("INTERVAL 1000 DAYS"))
-      .withColumn("event_id", col("event_id") + lit(8000000000L))
-      .write.mode("append").parquet(eventsDir)
-    val t0 = System.nanoTime()
-    graft.streaming.StreamJoin.run(spark, eventsDir, s"$base/out", s"$base/ckpt")
-    val t = (System.nanoTime() - t0) / 1e9
-    val appended = spark.read.parquet(s"$base/out").count() - before
-    require(appended > 0, "scale stream_join drained nothing")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    (t, appended)
-  }
-
-  /** Streaming gold-stage drain (the Bench `streaming_gold` entry's
-    * twin): tick size scales with `rep` (16 = the Bench entry's tick;
-    * 160 = the 10× tick), bronze/silver pre-drained untimed so the
-    * timed number isolates the gold stage — dim upserts + fact
-    * anti-join append + maintained rollup. Returns (sec, facts
-    * appended by the timed drain).
-    */
-  private def streamingGoldTier(spark: SparkSession, dir: String,
-                                rep: Int): (Double, Long) = {
-    val staging = java.nio.file.Files.createTempDirectory("graft_scale_sg").toString
-    val wh = java.nio.file.Files.createTempDirectory("graft_scale_sgwh").toString
-    val events0 = Tables.load(spark, dir, "events")
-    val day0 = events0.select(min(to_date(col("ts")))).head().getDate(0)
-    val day = events0.where(to_date(col("ts")) === lit(day0))
-      .crossJoin(spark.range(rep).select(col("id").as("rep")))
-      .withColumn("event_id", col("event_id") * rep + col("rep"))
-    def stage(df: DataFrame, sub: String): Unit =
-      graft.pipeline.RefEventsAdapter.toRawJson(df).write.text(s"$staging/$sub")
-    def drainIngest(): Unit = {
-      graft.streaming.StreamingIngest.runBronze(spark, s"$staging/*/part-*",
-        s"$wh/bronze", s"$wh/ckpt_b", "2025-09-15")
-      graft.streaming.StreamingIngest.runSilver(spark, s"$wh/bronze",
-        s"$wh/silver", s"$wh/ckpt_s")
-    }
-    def drainGold(): Unit =
-      graft.streaming.StreamingIngest.runGold(spark, s"$wh/silver", wh,
-        s"$wh/ckpt_g", maintainRollup = true)
-    stage(day.where(col("rep") < rep / 2).drop("rep"), "b1")
-    drainIngest(); drainGold()
-    val factBefore = spark.read.parquet(s"$wh/fact_user_events").count()
-    stage(day.where(col("rep") >= rep / 2).drop("rep")
-      .withColumn("ts", col("ts") + expr("INTERVAL 1 DAY")), "b2")
-    drainIngest()
-    val t0 = System.nanoTime()
-    drainGold()
-    val t = (System.nanoTime() - t0) / 1e9
-    val appended = spark.read.parquet(s"$wh/fact_user_events").count() - factBefore
-    require(appended > 0, "scale streaming_gold drained nothing")
-    Seq(staging, wh).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
-    (t, appended)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = runner.RunnerSession.cpus
+    val spark = runner.RunnerSession.build("graft.BenchScale")
 
     // Local-iteration section filter: SPARK_GRAFT_SCALE_ONLY=ann (or a
     // comma list of: queries,stream,ann,bpe) runs just those sections
@@ -245,17 +165,20 @@ object BenchScale {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       System.gc()
     }
+    /** The median of [[Bench.Reps]] timed noop writes, and the output
+      * rows, observed on the timed writes: the denominator for judging
+      * pair-emitting ops, whose work scales with OUTPUT pairs.
+      */
     def timeQuery(name: String, dir: String): (Double, Long) = {
-      val runs = (1 to 2).map { _ =>
+      var rows = 0L
+      val secs = Seq.fill(Bench.Reps) {
         val t0 = System.nanoTime()
-        exec(queryFn(name)(spark, dir))
+        rows = runner.Pin.observing(queryFn(name)(spark, dir), runner.Pin.Rows)(exec)._2("n")
+          .asInstanceOf[Long]
         (System.nanoTime() - t0) / 1e9
       }
-      // untimed output cardinality — the denominator for judging
-      // pair-emitting ops, whose work scales with OUTPUT pairs
-      val rows = queryFn(name)(spark, dir).count()
       releaseAll()
-      (runs.min, rows)
+      (Bench.summarize(secs).median, rows)
     }
 
     // JIT warmup outside the timings
@@ -280,10 +203,10 @@ object BenchScale {
     // Gold-dashboard tier (VERDICT r14 #4): DAU.sql's star-join +
     // 4-level COUNT(DISTINCT) rollup — the reference's flagship query
     // shape — over a bulk-built warehouse at 1× and 10× fact rows.
-    // GoldE2E memoizes the warehouse per (session, dir), so of the two
-    // timed runs the first pays build + dashboard and the second
-    // dashboard-only; the reported MIN therefore isolates the DASHBOARD
-    // ratio (the build's own scale story is already measured as
+    // GoldE2E memoizes the warehouse per (session, dir), so of the timed
+    // runs the first pays build + dashboard and the rest dashboard-only;
+    // the reported median therefore isolates the DASHBOARD ratio (the
+    // build's own scale story is already measured as
     // medallion_e2e vs medallion_e2e_1m in the per-round Bench).
     val goldRows = (if (sectionOn("queries") &&
         onlyQueries.forall(_.contains("q_gold_dau"))) {
@@ -306,13 +229,13 @@ object BenchScale {
     // volume — state is watermark-bounded either way.
     val streamRows = (if (!sectionOn("stream")) Seq.empty else Seq(
       {
-        val (tb, nb) = streamJoinTier(spark, sfDir); releaseAll()
-        val (tx, nx) = streamJoinTier(spark, sf1); releaseAll()
+        val (tb, nb) = Bench.streamJoinDrain(spark, sfDir); releaseAll()
+        val (tx, nx) = Bench.streamJoinDrain(spark, sf1); releaseAll()
         ("stream_join", tb, tx, tx / tb, nb, nx)
       },
       {
-        val (tb, nb) = streamingGoldTier(spark, sfDir, rep = 16); releaseAll()
-        val (tx, nx) = streamingGoldTier(spark, sfDir, rep = 160); releaseAll()
+        val (tb, nb, _) = Bench.streamingGoldDrain(spark, sfDir, rep = 16); releaseAll()
+        val (tx, nx, _) = Bench.streamingGoldDrain(spark, sfDir, rep = 160); releaseAll()
         ("streaming_gold", tb, tx, tx / tb, nb, nx)
       }))
     streamRows.foreach { case (q, a, b, r, na, nb2) =>

@@ -12,32 +12,29 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the 60-bit md5 digests of every char
-  * `k`-gram of a text, optionally mod-p sampled, in ONE fused pass.
+  * `k`-gram of a text, in position order, in ONE fused pass.
   *
   * Bit-parity contract (pinned in WinnowFingerprintsSpec): each output
   * long equals `conv(substring(md5(substr(text, i, k)), 1, 15), 16, 10)`
   * — the unsigned big-endian value of the digest's first 15 hex nibbles
   * (7 full bytes + the high nibble of the 8th; max 2^60−1, exact in a
-  * long on both engines). `mod > 1` keeps only digests ≡ 0 (mod `mod`) —
-  * the content-defined sampling rule of q_substring_dup_sampled, applied
-  * BEFORE any per-gram allocation escapes the operator.
+  * long on both engines).
   *
   * Why native (same argument as [[WinnowFingerprints]]): the composable
   * form walks the higher-order-function interpreter per position and
   * pays md5's hex-string materialization plus conv's base-16 string
   * parse and a decimal re-parse per gram — three string allocations to
   * produce one long. This pass hashes each code-point slice once and
-  * assembles the long from the raw digest bytes; only kept longs are
-  * materialized. Gram extraction is code-point based, matching
-  * `substr`'s character semantics.
+  * assembles the long from the raw digest bytes. Gram extraction is
+  * code-point based, matching `substr`'s character semantics.
   *
   * Null/edge semantics: null text → null; fewer than one gram (text
   * shorter than k code points) → empty array.
   */
-case class GramDigests(child: Expression, k: Int, mod: Int)
+case class GramDigests(child: Expression, k: Int)
     extends UnaryExpression {
 
-  require(k > 0 && mod > 0)
+  require(k > 0)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -48,21 +45,21 @@ case class GramDigests(child: Expression, k: Int, mod: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   override def nullSafeEval(v: Any): Any =
-    GramDigests.compute(v.asInstanceOf[UTF8String], k, mod)
+    GramDigests.compute(v.asInstanceOf[UTF8String], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.GramDigests.compute($t, $k, $mod);")
+      s"${ev.value} = graft.functions.GramDigests.compute($t, $k);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object GramDigests {
-  /** Column API: 60-bit gram digests of a string column, mod-p sampled. */
-  def apply(text: Column, k: Int, mod: Int = 1): Column =
+  /** Column API: 60-bit gram digests of a string column. */
+  def apply(text: Column, k: Int): Column =
     graftbridge.toColumn(
-      GramDigests(graftbridge.toExpression(text), k, mod))
+      GramDigests(graftbridge.toExpression(text), k))
 
   private val md5Local: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
@@ -78,24 +75,19 @@ object GramDigests {
   /** One-pass gram hashing; called from both interpreted eval and the
     * generated code (keeps the operator inside whole-stage codegen).
     */
-  def compute(text: UTF8String, k: Int, mod: Int): GenericArrayData = {
+  def compute(text: UTF8String, k: Int): GenericArrayData = {
     val cp = text.toString.codePoints().toArray
     val nGrams = cp.length - k + 1
     if (nGrams <= 0) return new GenericArrayData(Array.empty[Any])
     val md = md5Local.get()
-    val out = new Array[Long](nGrams)
-    var n = 0
+    val out = new Array[Any](nGrams)
     var i = 0
     while (i < nGrams) {
       md.reset()
-      val v = head60(md.digest(
+      out(i) = head60(md.digest(
         new String(cp, i, k).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      if (mod == 1 || v % mod == 0) { out(n) = v; n += 1 }
       i += 1
     }
-    val kept = new Array[Any](n)
-    var j = 0
-    while (j < n) { kept(j) = out(j); j += 1 }
-    new GenericArrayData(kept)
+    new GenericArrayData(out)
   }
 }

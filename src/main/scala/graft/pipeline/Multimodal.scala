@@ -62,37 +62,6 @@ object Multimodal {
       sha2(col("payload"), 256).as("content_sha"),
       stubFeatures(col("payload")).as("features"))
 
-  /** Decoded-media record for the batch path. */
-  case class MediaFeatures(media_id: Long, n_bytes: Long, features: Array[Double])
-
-  /** Batch decode via mapPartitions — the Scala twin of a Pandas
-    * `mapInPandas` decode: one decoder instantiation per partition
-    * (codec/model init is expensive), rows streamed through it as an
-    * iterator so a partition never materializes in memory. The decode
-    * itself is the same clearly-marked STUB (content-hash projection);
-    * swap `decodeOne` for a real codec and the plumbing is unchanged.
-    */
-  def extractBatch(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition "decoder" init happens here, once
-        rows.map { case (id, payload) =>
-          MediaFeatures(id, payload.length.toLong, decodeOne(payload))
-        }
-      }
-      .toDF()
-  }
-
-  /** STUB single-payload decode (deterministic fake; see scaladoc). */
-  private def decodeOne(payload: Array[Byte]): Array[Double] = {
-    var h = 1125899906842597L
-    payload.foreach(b => h = 31 * h + b)
-    Array.tabulate(4)(i => ((h >>> (i * 16)) & 0xFFFFL).toDouble / 65535.0)
-  }
-
   // ---------------------------------------------------------------------
   // REAL decode path: image dimensions from container headers. Unlike
   // stubFeatures above, nothing here is faked — these are the actual
@@ -153,9 +122,9 @@ object Multimodal {
   }
 
   /** Header-decode stage: (media_id, payload) → (media_id, fmt, width,
-    * height), dropping unparseable payloads. Same shape as
-    * [[extractBatch]]: a narrow mapPartitions, payloads never leave the
-    * executors, rows streamed as an iterator.
+    * height), dropping unparseable payloads: a narrow mapPartitions (one
+    * decoder init per partition), payloads never leave the executors,
+    * rows streamed as an iterator.
     */
   def decodeImageMeta(media: DataFrame): DataFrame = {
     val spark = media.sparkSession

@@ -114,13 +114,7 @@ object TextOps {
     */
   private def bigramSurprise(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val split1 = substring(md5(concat(lit("graft-split-v1:"), $"doc_id".cast("string"))), 1, 1)
-    val isTrain = split1.isin("0", "1", "2", "3", "4", "5", "6", "7", "8", "9", "a", "b")
-    val planted = load(s, dir, "documents")
-      .select($"doc_id", isTrain.as("is_train"),
-        when(isTrain, $"text")
-          .otherwise(concat($"text", lit(" zzb"), $"doc_id".cast("string"))).as("text"))
-    val tok = planted.select($"doc_id", $"is_train",
+    val tok = heldOutPlanted(s, dir, " zzb").select($"doc_id", $"is_train",
       posexplode(split($"text", " ")).as(Seq("pos", "token")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"doc_id").orderBy($"pos")
@@ -396,7 +390,7 @@ object TextOps {
     */
   private val DirectVerifyPairBudget = 8000000L
 
-  /** q_substring_dup_sampled keep rate: a gram position survives iff its
+  /** The sampled substring queries' keep rate: a gram position survives iff its
     * 60-bit digest ≡ 0 (mod this) — gram-keyed shuffle volume and the
     * distinct-doc aggregate shrink ~8×, recall on real duplicated spans
     * stays ≈1 (content-defined selection; see the query's scaladoc).
@@ -426,6 +420,162 @@ object TextOps {
         lit(s"planted-variant namespace: doc_id must stay below $offset")
       ).cast("long"),
       lit(0L))).as("doc_id")
+
+  /** `base`'s (doc_id, text) rows, ids guarded below `offset`, plus a
+    * planted variant of every `every`-th doc: id doc_id + `offset`, text
+    * `variant` of its source's. A dedup query over this corpus is
+    * non-vacuous by construction: each variant must land with its source.
+    */
+  private def withVariants(base: DataFrame, offset: Long, every: Int,
+                           variant: Column): DataFrame = {
+    val docs = base.select(guardedDocId(offset), col("text"))
+    docs.unionByName(docs.where(col("doc_id") % every === 0)
+      .select((col("doc_id") + offset).as("doc_id"), variant.as("text")))
+  }
+
+  /** Char width of the substring queries' grams. */
+  private val GramK = 40
+
+  /** The substring queries' corpus: every doc plus a 200-char contiguous
+    * excerpt (chars 50-249) of every 10th doc, docs shorter than one gram
+    * dropped. Excerpt and source must flag each other's shared span.
+    */
+  private def excerptCorpus(s: SparkSession, dir: String): DataFrame =
+    withVariants(docsWide(s, dir), ExcerptVariantOffset, 10,
+      col("text").substr(lit(50), lit(200)))
+      .where(length(col("text")) >= GramK)
+
+  /** One row per kept [[GramK]]-gram position of `docs`: `p0` its 0-based
+    * start, `g` its 60-bit digest (15 hex digits of the md5) from the
+    * fused native GramDigests pass. Gram-keyed shuffles then move 8-byte
+    * longs, not 32-char strings (the string form measured ~2× slower
+    * end-to-end at sf0.1). `mod` 1 keeps every position; `mod` > 1 keeps
+    * a position iff its digest ≡ 0 (mod `mod`), a content-defined sample:
+    * the same gram text is kept or dropped in every doc.
+    */
+  private def gramRows(docs: DataFrame, mod: Int): DataFrame = {
+    val grams = docs.select(col("doc_id"),
+      posexplode(graft.functions.GramDigests(col("text"), GramK)).as(Seq("p0", "g")))
+    if (mod == 1) grams else grams.where(pmod(col("g"), lit(mod.toLong)) === 0L)
+  }
+
+  /** `onto` joined on `key` with `as`, the number of distinct docs among
+    * `rows` holding each key: key-keyed shuffles with map-side partials,
+    * never doc×doc.
+    */
+  private def withDocCount(onto: DataFrame, rows: DataFrame, key: String,
+                           as: String = "nd"): DataFrame =
+    onto.join(rows.groupBy(col(key)).agg(countDistinct(col("doc_id")).as(as)), key)
+
+  /** Per doc of `rows`: `n`, its rows, and `n_dup`, those whose `key`
+    * some other doc also holds. A doc without rows has no row here.
+    */
+  private def dupCounts(rows: DataFrame, key: String): DataFrame =
+    withDocCount(rows, rows, key).groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n"), sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_dup"))
+
+  /** Duplicate-span excision report over [[excerptCorpus]] from its gram
+    * positions sampled by `mod` (see [[gramRows]]): a kept position is
+    * flagged iff its gram appears in another doc, and each flagged
+    * position i claims chars [i, i+K-1]. The union of those intervals is
+    * computed per doc as gaps-and-islands over the sorted flagged
+    * positions (a new island starts when the gap exceeds K; island chars
+    * = last − first + K): one doc-keyed window over flagged positions
+    * only, never a per-char blowup. The gap rule is K at every `mod`,
+    * which keeps a sampled report contained in the exact one (see
+    * q_substring_strip_sampled).
+    */
+  private def substringStrip(s: SparkSession, dir: String, mod: Int): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.expressions.Window
+    val K = GramK
+    val docs = excerptCorpus(s, dir)
+    val grams = gramRows(docs, mod)
+    val flagged = withDocCount(grams, grams, "g").where($"nd" >= 2)
+      .select($"doc_id", ($"p0" + 1).as("pos"))
+    val w = Window.partitionBy($"doc_id").orderBy($"pos")
+    val islands = flagged
+      .withColumn("prev", lag($"pos", 1).over(w))
+      .withColumn("new_i",
+        when($"prev".isNull || $"pos" - $"prev" > K, 1L).otherwise(0L))
+      .withColumn("iid", sum($"new_i").over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .groupBy($"doc_id", $"iid")
+      .agg((max($"pos") - min($"pos") + K).as("island_chars"))
+      .groupBy($"doc_id")
+      .agg(count(lit(1)).as("n_islands"),
+        sum($"island_chars").as("covered_chars"))
+    val flaggedN = flagged.groupBy($"doc_id").agg(count(lit(1)).as("n_flagged"))
+    docs.select($"doc_id", length($"text").cast("long").as("n_chars"))
+      .join(flaggedN, Seq("doc_id"), "left")
+      .join(islands, Seq("doc_id"), "left")
+      .select($"doc_id", $"n_chars",
+        coalesce($"n_flagged", lit(0L)).as("n_flagged"),
+        coalesce($"n_islands", lit(0L)).as("n_islands"),
+        coalesce($"covered_chars", lit(0L)).as("covered_chars"),
+        ($"n_chars" - coalesce($"covered_chars", lit(0L))).as("clean_chars"))
+      .orderBy($"doc_id")
+  }
+
+  /** q_norm_dedup / q_keep_best's corpus: every doc plus a re-serialized
+    * variant (uppercased, " !!" appended) of every 7th doc, each row with
+    * `digest`, the md5 of its normalized text (lowercased, every
+    * non-[a-z0-9 ] run a space, whitespace collapsed). A variant's
+    * digest is its source's.
+    */
+  private def normCorpus(s: SparkSession, dir: String): DataFrame =
+    withVariants(load(s, dir, "documents"), NormVariantOffset, 7,
+      concat(upper(col("text")), lit(" !!")))
+      .withColumn("digest", md5(trim(regexp_replace(
+        regexp_replace(lower(col("text")), "[^a-z0-9 ]+", " "), " +", " "))))
+
+  /** The md5 split's routing digit, the first hex digit of
+    * md5("graft-split-v1:" || doc_id): 0-b train (75%), c-d val, e-f
+    * test. The same assignment on any engine or cluster layout (md5 is
+    * the cross-engine contract; no RNG, no partition dependence).
+    */
+  private def splitDigit: Column =
+    substring(md5(concat(lit("graft-split-v1:"), col("doc_id").cast("string"))), 1, 1)
+
+  /** `digit`, a [[splitDigit]], routes its doc to train. */
+  private def inTrain(digit: Column): Column =
+    digit.isin("0", "1", "2", "3", "4", "5", "6", "7", "8", "9", "a", "b")
+
+  /** The documents with `is_train`, and on every held-out doc the unique
+    * token `plant` || doc_id appended: out of the train vocabulary by
+    * construction, since train docs are untouched.
+    */
+  private def heldOutPlanted(s: SparkSession, dir: String, plant: String): DataFrame = {
+    val isTrain = inTrain(splitDigit)
+    load(s, dir, "documents")
+      .select(col("doc_id"), isTrain.as("is_train"),
+        when(isTrain, col("text"))
+          .otherwise(concat(col("text"), lit(plant), col("doc_id").cast("string"))).as("text"))
+  }
+
+  /** The 3-token shingles of a staged token array column `t`. Two
+    * performance rules meet here: the token array must be staged in its
+    * own projection (split() inside the transform lambda would re-run
+    * once per shingle index, quadratic per document), but the shingle
+    * ARRAY must not be staged as an aliased column below an explode
+    * (materializing it between operators instead of generating inline
+    * measured 6× slower), so an explode inlines this column.
+    */
+  private def shingles3: Column =
+    when(size(col("t")) >= 3,
+      transform(sequence(lit(1), size(col("t")) - 2),
+        i => array_join(slice(col("t"), i, lit(3)), " ")))
+      .otherwise(array().cast("array<string>"))
+
+  /** Whitespace-token frequencies: `tf` per (doc, token), and the same
+    * rows with `df`, the token's document frequency, joined on.
+    */
+  private def termFreqs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val tok = load(s, dir, "documents")
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+    val tf = tok.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
+    (tf, withDocCount(tf, tok, "token", "df"))
+  }
 
   /** Lookup sides at or under this row count are broadcast; above it the
     * join runs as a shuffled equi-join on its key — the same count-gated
@@ -1173,10 +1323,10 @@ object TextOps {
     // counts and sizes.
     "q_split_hash" -> { (s, dir) =>
       import s.implicits._
-      val h = substring(md5(concat(lit("graft-split-v1:"), $"doc_id".cast("string"))), 1, 1)
+      val h = splitDigit
       load(s, dir, "documents")
         .withColumn("split",
-          when(h.isin("0", "1", "2", "3", "4", "5", "6", "7", "8", "9", "a", "b"), "train")
+          when(inTrain(h), "train")
             .when(h.isin("c", "d"), "val")
             .otherwise("test"))
         .groupBy($"split", $"lang")
@@ -1220,24 +1370,12 @@ object TextOps {
     // deterministic stand-in for an external eval file.)
     "q_contamination" -> { (s, dir) =>
       import s.implicits._
-      // Two performance rules meet here: the token array must be staged
-      // in its own projection (split() inside the transform lambda would
-      // re-run once per shingle index — quadratic per document), but the
-      // gram ARRAY must NOT be staged as an aliased column below the
-      // explode (materializing it between operators instead of generating
-      // inline measured 6× slower) — so `grams` is inlined into each
-      // explode over the staged `t`.
-      val grams =
-        when(size($"t") >= 3,
-          transform(sequence(lit(1), size($"t") - 2),
-            i => array_join(slice($"t", i, lit(3)), " ")))
-          .otherwise(array().cast("array<string>"))
       val base = docsWide(s, dir)
         .select($"doc_id", split($"text", " ").as("t"))
       val evalGrams = base.where($"doc_id" % 97 === 0)
-        .select(explode(grams).as("gram")).distinct()
+        .select(explode(shingles3).as("gram")).distinct()
       base.where($"doc_id" % 97 =!= 0)
-        .select($"doc_id", explode(grams).as("gram"))
+        .select($"doc_id", explode(shingles3).as("gram"))
         .join(broadcast(evalGrams), Seq("gram"))
         .groupBy($"doc_id")
         .agg(countDistinct($"gram").as("n_shared_grams"))
@@ -1278,13 +1416,12 @@ object TextOps {
           size($"t").cast("long").as("n_tokens"),
           size(array_distinct($"t")).cast("long").as("n_uniq"),
           md5(array_join(array_sort(array_distinct($"t")), " ")).as("set_key"),
-          substring(md5(concat(lit("graft-split-v1:"), $"doc_id".cast("string"))), 1, 1).as("h")))
+          splitDigit.as("h")))
       val quality = d.where($"n_tokens" >= 30 && $"n_uniq" * 4 >= $"n_tokens")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("set_key").orderBy("doc_id")
       val deduped = quality.withColumn("rn", row_number().over(w)).where($"rn" === 1)
-      val train = deduped.where($"h".isin(
-        "0", "1", "2", "3", "4", "5", "6", "7", "8", "9", "a", "b"))
+      val train = deduped.where(inTrain($"h"))
       def stage(name: String, df: DataFrame) =
         df.agg(count(lit(1)).as("n_docs"), sum($"n_tokens").as("tokens_sum"))
           .withColumn("stage", lit(name))
@@ -1305,14 +1442,9 @@ object TextOps {
     // pretraining quality filter drops first.
     "q_repetition" -> { (s, dir) =>
       import s.implicits._
-      val grams =
-        when(size($"t") >= 3,
-          transform(sequence(lit(1), size($"t") - 2),
-            i => array_join(slice($"t", i, lit(3)), " ")))
-          .otherwise(array().cast("array<string>"))
       load(s, dir, "documents")
         .select($"doc_id", split($"text", " ").as("t"))
-        .select($"doc_id", grams.as("grams"))
+        .select($"doc_id", shingles3.as("grams"))
         .select($"doc_id",
           size($"grams").cast("long").as("n_grams"),
           size(array_distinct($"grams")).cast("long").as("n_distinct"))
@@ -1513,14 +1645,11 @@ object TextOps {
     // window — is identical either way and is what scales).
     "q_tfidf" -> { (s, dir) =>
       import s.implicits._
-      val docs = load(s, dir, "documents")
-      val tok = docs.select($"doc_id", explode(split($"text", " ")).as("token"))
-      val tf = tok.groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-      val dfreq = tok.groupBy($"token").agg(countDistinct($"doc_id").as("df"))
-      val n = docs.agg(count(lit(1)).as("n_docs"))
+      val (_, tfdf) = termFreqs(s, dir)
+      val n = load(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy(desc("score"), $"token")
-      tf.join(dfreq, "token")
+      tfdf
         .crossJoin(broadcast(n))
         .withColumn("score", $"tf" * $"n_docs" * 1.0 / $"df")
         .withColumn("rn", row_number().over(w))
@@ -1545,11 +1674,8 @@ object TextOps {
     // the DuckDB oracle, so scores are bit-identical.
     "q_bm25" -> { (s, dir) =>
       import s.implicits._
-      val docs = load(s, dir, "documents")
-      val tok = docs.select($"doc_id", explode(split($"text", " ")).as("token"))
-      val tf = tok.groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
+      val (tf, tfdf) = termFreqs(s, dir)
       val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
-      val dfreq = tok.groupBy($"token").agg(countDistinct($"doc_id").as("df"))
       val scalars = tf.agg(countDistinct($"doc_id").as("n_docs"),
         sum($"tf").as("s_tok"))
       val r = ($"dl" * $"n_docs").cast("double") / $"s_tok".cast("double")
@@ -1558,7 +1684,7 @@ object TextOps {
         (lit(2L) * $"df" + lit(1L)).cast("double")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id").orderBy(desc("score"), $"token")
-      tf.join(dfreq, "token")
+      tfdf
         .join(dl, "doc_id")
         .crossJoin(broadcast(scalars))
         .withColumn("score", idf * ((lit(22L) * $"tf").cast("double") / den))
@@ -1634,10 +1760,8 @@ object TextOps {
         .where(length($"text") >= 3)
         .select($"doc_id", $"lang",
           explode(graft.functions.CharNGrams($"text", 3)).as("gram"))
-      val trainHex = Seq("0", "1", "2", "3", "4", "5", "6", "7", "8", "9", "a", "b")
       val profile = grams
-        .where(substring(md5(concat(lit("graft-split-v1:"),
-          $"doc_id".cast("string"))), 1, 1).isin(trainHex: _*))
+        .where(inTrain(splitDigit))
         .groupBy($"lang".as("plang"), $"gram")
         .agg(count(lit(1)).as("cnt"))
         .withColumn("rn", row_number().over(
@@ -1686,14 +1810,9 @@ object TextOps {
         .where(length($"text") >= k + w - 1)
         .select($"doc_id", explode(
           graft.functions.WinnowFingerprints($"text", k, w)).as("fp"))
-      val shareCounts = fps.groupBy($"fp")
-        .agg(countDistinct($"doc_id").as("n_docs"))
-      fps.join(shareCounts, "fp")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_fp"),
-          sum(when($"n_docs" > 1, 1L).otherwise(0L)).as("n_shared"))
-        .select($"doc_id", $"n_fp", $"n_shared",
-          ($"n_shared" * 2 >= $"n_fp").as("substring_dup"))
+      dupCounts(fps, "fp")
+        .select($"doc_id", $"n".as("n_fp"), $"n_dup".as("n_shared"),
+          ($"n_dup" * 2 >= $"n").as("substring_dup"))
         .orderBy($"doc_id")
     },
 
@@ -1710,14 +1829,7 @@ object TextOps {
     // identical shape (and cost) to exact dedup, no extra shuffle.
     "q_norm_dedup" -> { (s, dir) =>
       import s.implicits._
-      val base = load(s, dir, "documents")
-        .select(guardedDocId(NormVariantOffset), $"text")
-      val variants = base.where($"doc_id" % 7 === 0)
-        .select(($"doc_id" + NormVariantOffset).as("doc_id"),
-          concat(upper($"text"), lit(" !!")).as("text"))
-      val norm = trim(regexp_replace(
-        regexp_replace(lower($"text"), "[^a-z0-9 ]+", " "), " +", " "))
-      val docs = base.unionByName(variants).withColumn("digest", md5(norm))
+      val docs = normCorpus(s, dir)
       val groups = docs.groupBy($"digest")
         .agg(min($"doc_id").as("rep_id"), count(lit(1)).as("group_n"))
       docs.join(groups, "digest")
@@ -1792,14 +1904,7 @@ object TextOps {
     // shape (and cost) to the min-id form.
     "q_keep_best" -> { (s, dir) =>
       import s.implicits._
-      val base = load(s, dir, "documents")
-        .select(guardedDocId(NormVariantOffset), $"text")
-      val variants = base.where($"doc_id" % 7 === 0)
-        .select(($"doc_id" + NormVariantOffset).as("doc_id"),
-          concat(upper($"text"), lit(" !!")).as("text"))
-      val norm = trim(regexp_replace(
-        regexp_replace(lower($"text"), "[^a-z0-9 ]+", " "), " +", " "))
-      val docs = base.unionByName(variants).withColumn("digest", md5(norm))
+      val docs = normCorpus(s, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"digest").orderBy(length($"text").desc, $"doc_id")
       docs
@@ -1845,200 +1950,78 @@ object TextOps {
     // of Lee et al. 2021's "Deduplicating Training Data Makes Language
     // Models Better" — q_winnow_fp is the sampled/fingerprint twin;
     // this is the exact per-position account): every char 40-gram of
-    // every doc, counted across DISTINCT docs; a doc's dup_ratio is the
-    // fraction of its positions whose 40-gram also appears in some
-    // OTHER doc. Non-vacuity is engineered: a 200-char contiguous
-    // excerpt (fresh id) of every 10th doc is unioned in — excerpt and
-    // source must flag each other's shared span. Scale: gram explosion
-    // is a narrow map (grams carried as 128-bit digests, not text); the
-    // only shuffles key on gram digest with map-side partial aggs —
-    // never doc×doc. At 100 TB the same plan runs on a stride/winnow
-    // sample of positions (bounded blowup); stride 1 is the exact
+    // every doc of [[excerptCorpus]] (the planted excerpts make it
+    // non-vacuous), counted across DISTINCT docs; a doc's dup_ratio is
+    // the fraction of its positions whose 40-gram also appears in some
+    // OTHER doc. Scale: gram explosion is a narrow map over digests
+    // ([[gramRows]]); the only shuffles key on gram digest with map-side
+    // partial aggs — never doc×doc. At 100 TB the same plan runs on a
+    // sample of positions (q_substring_dup_sampled); mod 1 is the exact
     // variant the oracle can check.
     "q_substring_dup" -> { (s, dir) =>
       import s.implicits._
-      val K = 40
-      val base = docsWide(s, dir)
-        .select(guardedDocId(ExcerptVariantOffset), $"text")
-      val excerpts = base.where($"doc_id" % 10 === 0)
-        .select(($"doc_id" + ExcerptVariantOffset).as("doc_id"),
-          $"text".substr(lit(50), lit(200)).as("text"))
-      val docs = base.unionByName(excerpts).where(length($"text") >= K)
-      // grams carried as 60-bit ints (15 hex digits of the md5) — the
-      // gram-keyed shuffles move 8-byte longs, not 32-char strings
-      // (the string form measured ~2× slower end-to-end at sf0.1) —
-      // computed by the fused native GramDigests pass (the composed
-      // transform+md5+conv form pays three string allocations per gram;
-      // bit-parity with it is spec-pinned)
-      val grams = docs.select($"doc_id",
-        explode(graft.functions.GramDigests($"text", K)).as("g"))
-      val nd = grams.groupBy($"g").agg(countDistinct($"doc_id").as("nd"))
-      grams.join(nd, "g")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when($"nd" >= 2, 1L).otherwise(0L)).as("n_dup"))
-        .withColumn("dup_ratio", $"n_dup" * 1.0 / $"n_grams")
+      dupCounts(gramRows(excerptCorpus(s, dir), 1), "g")
+        .select($"doc_id", $"n".as("n_grams"), $"n_dup",
+          ($"n_dup" * 1.0 / $"n").as("dup_ratio"))
         .orderBy($"doc_id")
     },
 
     // Duplicate-span EXCISION accounting — the surgery step of Lee et
     // al. 2021 (their pipeline REMOVES the duplicated spans, not just
-    // measures them): a position is covered iff its 40-gram appears in
-    // another doc; covered positions i each claim chars [i, i+39], and
-    // the union of those intervals is the text that would be cut. The
-    // union is computed relationally per doc as gaps-and-islands over
-    // the sorted flagged positions (a new island starts when the gap
-    // exceeds the gram width; island chars = last − first + 40) — one
-    // doc-keyed window over flagged positions only, never a per-char
-    // blowup. Output per doc: flagged-position count, islands, covered
+    // measures them): per doc, flagged-position count, islands, covered
     // chars, and the post-excision length — the number a curation run
-    // budgets against. Shares the gram-digest shuffle shape (and the
-    // planted excerpts' non-vacuity) with q_substring_dup.
-    "q_substring_strip" -> { (s, dir) =>
-      import s.implicits._
-      val K = 40
-      val base = docsWide(s, dir)
-        .select(guardedDocId(ExcerptVariantOffset), $"text")
-      val excerpts = base.where($"doc_id" % 10 === 0)
-        .select(($"doc_id" + ExcerptVariantOffset).as("doc_id"),
-          $"text".substr(lit(50), lit(200)).as("text"))
-      val docs = base.unionByName(excerpts).where(length($"text") >= K)
-      val grams = docs.select($"doc_id",
-        posexplode(graft.functions.GramDigests($"text", K)).as(Seq("p0", "g")))
-      val nd = grams.groupBy($"g").agg(countDistinct($"doc_id").as("nd"))
-      val flagged = grams.join(nd, "g").where($"nd" >= 2)
-        .select($"doc_id", ($"p0" + 1).as("pos"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"doc_id").orderBy($"pos")
-      val islands = flagged
-        .withColumn("prev", lag($"pos", 1).over(w))
-        .withColumn("new_i",
-          when($"prev".isNull || $"pos" - $"prev" > K, 1L).otherwise(0L))
-        .withColumn("iid", sum($"new_i").over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)))
-        .groupBy($"doc_id", $"iid")
-        .agg((max($"pos") - min($"pos") + K).as("island_chars"))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_islands"),
-          sum($"island_chars").as("covered_chars"))
-      val flaggedN = flagged.groupBy($"doc_id").agg(count(lit(1)).as("n_flagged"))
-      docs.select($"doc_id", length($"text").cast("long").as("n_chars"))
-        .join(flaggedN, Seq("doc_id"), "left")
-        .join(islands, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_chars",
-          coalesce($"n_flagged", lit(0L)).as("n_flagged"),
-          coalesce($"n_islands", lit(0L)).as("n_islands"),
-          coalesce($"covered_chars", lit(0L)).as("covered_chars"),
-          ($"n_chars" - coalesce($"covered_chars", lit(0L))).as("clean_chars"))
-        .orderBy($"doc_id")
-    },
+    // budgets against. The exact (mod 1) [[substringStrip]]; shares the
+    // gram-digest shuffle shape and the planted excerpts with
+    // q_substring_dup.
+    "q_substring_strip" -> { (s, dir) => substringStrip(s, dir, 1) },
 
     // SAMPLED substring duplication — the 100-TB variant of
-    // q_substring_dup, previously only documented there (VERDICT r9 #6):
-    // mod-p sampling on the GRAM DIGEST (keep a position iff digest ≡ 0
-    // mod [[SubstringSampleMod]]). Content-defined, so the SAME 40-gram
-    // text is kept or dropped identically in every document regardless
-    // of offset — a shared span of L chars carries ~(L-39)/p sampled
-    // grams, so real duplicated spans (the 200-char planted excerpts
-    // hold ~161 grams → miss probability (1-1/p)^161 ≈ 5e-10) survive
-    // while the gram-keyed shuffle and distinct-doc aggregate shrink by
-    // ~p×. No false positives by construction: every kept gram is a real
-    // gram, so sampled-flagged docs ⊆ exact-flagged docs — the
-    // containment + recall contract vs the exact op is pinned in
-    // TextVectorSpec; the oracle here recomputes the sampled pass
-    // exactly (the sampling key is the md5 digest both engines already
-    // agree on).
+    // q_substring_dup: mod-p sampling on the GRAM DIGEST
+    // (keep a position iff digest ≡ 0 mod [[SubstringSampleMod]]).
+    // Content-defined, so the SAME 40-gram text is kept or dropped
+    // identically in every document regardless of offset — a shared
+    // span of L chars carries ~(L-39)/p sampled grams, so real
+    // duplicated spans (the 200-char planted excerpts hold ~161 grams →
+    // miss probability (1-1/p)^161 ≈ 5e-10) survive while the
+    // gram-keyed shuffle and distinct-doc aggregate shrink by ~p×. No
+    // false positives by construction: every kept gram is a real gram,
+    // so sampled-flagged docs ⊆ exact-flagged docs — the containment +
+    // recall contract vs the exact op is pinned in TextVectorSpec; the
+    // oracle here recomputes the sampled pass exactly (the sampling key
+    // is the md5 digest both engines already agree on).
     "q_substring_dup_sampled" -> { (s, dir) =>
       import s.implicits._
-      val K = 40
-      val p = SubstringSampleMod
-      val base = docsWide(s, dir)
-        .select(guardedDocId(ExcerptVariantOffset), $"text")
-      val excerpts = base.where($"doc_id" % 10 === 0)
-        .select(($"doc_id" + ExcerptVariantOffset).as("doc_id"),
-          $"text".substr(lit(50), lit(200)).as("text"))
-      val docs = base.unionByName(excerpts).where(length($"text") >= K)
-      val kept = docs.select($"doc_id",
-        explode(graft.functions.GramDigests($"text", K, p)).as("g"))
-      val nd = kept.groupBy($"g").agg(countDistinct($"doc_id").as("nd"))
-      val perDoc = kept.join(nd, "g")
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_kept"),
-          sum(when($"nd" >= 2, 1L).otherwise(0L)).as("n_dup_kept"))
+      val docs = excerptCorpus(s, dir)
+      val perDoc = dupCounts(gramRows(docs, SubstringSampleMod), "g")
       // docs whose sampled positions all missed still appear, unflagged —
       // full-corpus coverage keeps the containment contract two-sided
       docs.select($"doc_id").join(perDoc, Seq("doc_id"), "left")
         .select($"doc_id",
-          coalesce($"n_kept", lit(0L)).as("n_kept"),
-          coalesce($"n_dup_kept", lit(0L)).as("n_dup_kept"),
-          (coalesce($"n_dup_kept", lit(0L)) >= 1L).as("has_dup"))
+          coalesce($"n", lit(0L)).as("n_kept"),
+          coalesce($"n_dup", lit(0L)).as("n_dup_kept"),
+          (coalesce($"n_dup", lit(0L)) >= 1L).as("has_dup"))
         .orderBy($"doc_id")
     },
 
-    // SAMPLED excision accounting — q_substring_strip composed over the
-    // mod-[[SubstringSampleMod]] digest-sampled gram positions (VERDICT
-    // r10 #6): positions whose kept 40-gram appears in another doc form
-    // gaps-and-islands with the SAME gap-K threshold as the exact op,
-    // and each island claims [first, last+39]. Keeping the threshold at
-    // K (not widening by the expected sampling stride) is what makes
-    // the containment contract PROVABLE: sampled flagged positions are
-    // a subset of exact flagged positions (content-defined sampling —
-    // a kept gram is kept in every doc, so its distinct-doc count is
-    // unchanged), and any two sampled positions within gap K belong to
-    // the same exact island, so every sampled island's interval nests
-    // inside one exact island's — per-doc covered_chars/n_flagged are
-    // each ≤ the exact op's, never >. The price is recall at span
-    // EDGES (~p/2 chars before the first kept gram) and the occasional
-    // intra-span gap > K ((1−1/p)^K ≈ 0.5% per position) splitting one
-    // island — TextVectorSpec pins containment exactly and ≥80%
-    // covered-chars recall on the planted 200-char excerpt docs. The
-    // gram-keyed shuffle and the doc-keyed window both shrink ~p×; at
-    // 100 TB this is the variant that runs (the exact op is the
-    // oracle-checkable stride-1 anchor).
-    "q_substring_strip_sampled" -> { (s, dir) =>
-      import s.implicits._
-      val K = 40
-      val p = SubstringSampleMod
-      val base = docsWide(s, dir)
-        .select(guardedDocId(ExcerptVariantOffset), $"text")
-      val excerpts = base.where($"doc_id" % 10 === 0)
-        .select(($"doc_id" + ExcerptVariantOffset).as("doc_id"),
-          $"text".substr(lit(50), lit(200)).as("text"))
-      val docs = base.unionByName(excerpts).where(length($"text") >= K)
-      // position-preserving sampling: full digest pass, mod filter on
-      // the digest — only kept (pos, gram) rows reach the shuffle
-      val kept = docs.select($"doc_id",
-        posexplode(graft.functions.GramDigests($"text", K)).as(Seq("p0", "g")))
-        .where(pmod($"g", lit(p.toLong)) === 0L)
-      val nd = kept.groupBy($"g").agg(countDistinct($"doc_id").as("nd"))
-      val flagged = kept.join(nd, "g").where($"nd" >= 2)
-        .select($"doc_id", ($"p0" + 1).as("pos"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"doc_id").orderBy($"pos")
-      val islands = flagged
-        .withColumn("prev", lag($"pos", 1).over(w))
-        .withColumn("new_i",
-          when($"prev".isNull || $"pos" - $"prev" > K, 1L).otherwise(0L))
-        .withColumn("iid", sum($"new_i").over(
-          w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)))
-        .groupBy($"doc_id", $"iid")
-        .agg((max($"pos") - min($"pos") + K).as("island_chars"))
-        .groupBy($"doc_id")
-        .agg(count(lit(1)).as("n_islands"),
-          sum($"island_chars").as("covered_chars"))
-      val flaggedN = flagged.groupBy($"doc_id").agg(count(lit(1)).as("n_flagged"))
-      docs.select($"doc_id", length($"text").cast("long").as("n_chars"))
-        .join(flaggedN, Seq("doc_id"), "left")
-        .join(islands, Seq("doc_id"), "left")
-        .select($"doc_id", $"n_chars",
-          coalesce($"n_flagged", lit(0L)).as("n_flagged"),
-          coalesce($"n_islands", lit(0L)).as("n_islands"),
-          coalesce($"covered_chars", lit(0L)).as("covered_chars"),
-          ($"n_chars" - coalesce($"covered_chars", lit(0L))).as("clean_chars"))
-        .orderBy($"doc_id")
-    },
+    // SAMPLED excision accounting — [[substringStrip]] over the
+    // mod-[[SubstringSampleMod]] digest-sampled gram positions, with the
+    // SAME gap-K island threshold as the exact op.
+    // Keeping the threshold at K (not widening by the expected sampling
+    // stride) is what makes the containment contract PROVABLE: sampled
+    // flagged positions are a subset of exact flagged positions
+    // (content-defined sampling — a kept gram is kept in every doc, so
+    // its distinct-doc count is unchanged), and any two sampled
+    // positions within gap K belong to the same exact island, so every
+    // sampled island's interval nests inside one exact island's —
+    // per-doc covered_chars/n_flagged are each ≤ the exact op's, never
+    // >. The price is recall at span EDGES (~p/2 chars before the first
+    // kept gram) and the occasional intra-span gap > K ((1−1/p)^K ≈ 0.5%
+    // per position) splitting one island — TextVectorSpec pins
+    // containment exactly and ≥80% covered-chars recall on the planted
+    // 200-char excerpt docs. The gram-keyed shuffle and the doc-keyed
+    // window both shrink ~p×; at 100 TB this is the variant that runs
+    // (the exact op is the oracle-checkable anchor).
+    "q_substring_strip_sampled" -> { (s, dir) => substringStrip(s, dir, SubstringSampleMod) },
 
     // Unigram-LM quality scoring — the integer-deterministic twin of the
     // CCNet/Wikipedia-LM perplexity filter: train unigram counts on the
@@ -2056,13 +2039,7 @@ object TextOps {
     // 1-row N frame is the only broadcast.
     "q_unigram_lm" -> { (s, dir) =>
       import s.implicits._
-      val split1 = substring(md5(concat(lit("graft-split-v1:"), $"doc_id".cast("string"))), 1, 1)
-      val isTrain = split1.isin("0", "1", "2", "3", "4", "5", "6", "7", "8", "9", "a", "b")
-      val planted = load(s, dir, "documents")
-        .select($"doc_id", isTrain.as("is_train"),
-          when(isTrain, $"text")
-            .otherwise(concat($"text", lit(" zzq"), $"doc_id".cast("string"))).as("text"))
-      val tok = planted.select($"doc_id", $"is_train",
+      val tok = heldOutPlanted(s, dir, " zzq").select($"doc_id", $"is_train",
         explode(split($"text", " ")).as("token"))
       val counts = tok.where($"is_train").groupBy($"token").agg(count(lit(1)).as("c"))
       val nTrain = counts.agg(sum($"c").as("n_train"))

@@ -9,12 +9,17 @@ import org.apache.spark.sql.SparkSession
   * replay DAG tasks): a user launches these exactly like the originals.
   */
 object RunnerSession {
+  /** Local worker threads and shuffle partitions: `SPARK_GRAFT_CPUS`,
+    * else the JVM's available processors.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   def build(app: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val s = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .appName(app)
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       // No session-global partitionOverwriteMode: every dynamic-overwrite
       // sink sets it as a write option (Warehouse.overwritePartitions), so

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The native GramDigests expression: bit-parity with the composed
-  * transform+md5+conv chain it replaced in q_substring_dup (and, with
-  * mod > 1, the filtered form in q_substring_dup_sampled), codegen
+  * transform+md5+conv chain it replaced in q_substring_dup, codegen
   * placement, and edge semantics.
   */
 class GramDigestsSpec extends SparkSpec {
@@ -29,20 +28,6 @@ class GramDigestsSpec extends SparkSpec {
       .where($"native" =!= $"hof")
       .count()
     assert(bad == 0, s"$bad docs diverged from the composed chain")
-  }
-
-  test("mod-p keeps exactly the digests ≡ 0 (mod p), in position order") {
-    val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .where(length($"text") >= k)
-    val bad = docs.select(
-        GramDigests($"text", k, 8).as("sampled"),
-        filter(composed($"text"), g => g % 8 === 0).as("hof"))
-      .where($"sampled" =!= $"hof")
-      .count()
-    assert(bad == 0, s"$bad docs diverged from the filtered composed chain")
-    // and the sampled form is non-vacuous on this corpus
-    val kept = docs.select(explode(GramDigests($"text", k, 8))).count()
-    assert(kept > 0)
   }
 
   test("runs inside whole-stage codegen; short/empty text yields empty array") {

@@ -370,19 +370,6 @@ class TextVectorSpec extends SparkSpec {
       .where($"f" < 0.0 || $"f" > 1.0).count() == 0)
   }
 
-  test("multimodal batch decode (mapPartitions) mirrors the columnar path's shape") {
-    val media = graft.pipeline.Multimodal.fromText(
-      Seq((1L, "hello world"), (2L, "other doc")).toDF("id", "t"), "id", "t")
-    val batch = graft.pipeline.Multimodal.extractBatch(media).cache()
-    assert(batch.columns.toSeq == Seq("media_id", "n_bytes", "features"))
-    assert(batch.count() == 2)
-    assert(batch.where(size($"features") =!= 4).count() == 0)
-    // byte lengths agree with the columnar metadata path
-    val meta = graft.pipeline.Multimodal.extract(media)
-      .select($"media_id", $"meta.n_bytes".as("n_bytes"))
-    assert(batch.select("media_id", "n_bytes").except(meta).count() == 0)
-  }
-
   test("winnowing guarantee: a >=23-char shared substring always yields a shared fp") {
     // k=8, w=16 → guarantee length k+w-1 = 23: any shared substring of
     // that length contains one full window of identical 8-grams, whose
